@@ -376,6 +376,9 @@ object Bench {
         }
       }
     }
+    // the last chunk's teardown window is over as well: the rendering of
+    // the artifacts below gets live stderr again
+    System.setErr(realErr)
     // 3-decimal seconds: the driver captures a bounded stdout TAIL — full
     // double precision across 120+ queries risks cutting the line's head
     // (both r6 and r7 lost the leading "total" field to exactly that).

@@ -3,57 +3,34 @@ package graft.plans
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, Cast, Coalesce, Divide, EvalMode, Expression, If, IsNull, Literal, Multiply, NamedExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
-import org.apache.spark.sql.types.{ByteType, DecimalType, DoubleType, FloatType, IntegerType, LongType, NumericType, ShortType}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 
-/** Materialized-view rollup rewrite: a registered summary table (per-group
-  * partial aggregates over a parquet base table) plus a Catalyst optimizer
-  * rule that rewrites matching `Aggregate` plans to re-aggregate the
-  * summary instead of scanning the base — the classic OLAP accelerator the
-  * reference's users get from Greenplum MVs over CDC-synced tables
-  * (reference: README.md:9,15), here as a `Rule[LogicalPlan]` so EVERY
-  * query phrased against the base table speeds up with zero query changes.
+/** Single-table materialized views: a registered summary table (per-group
+  * partial aggregates over one base table) that [[MvRewriteRule]] serves
+  * rollups from instead of scanning the base — the classic OLAP
+  * accelerator the reference's users get from Greenplum MVs over
+  * CDC-synced tables (reference: README.md:9,15), here as a
+  * `Rule[LogicalPlan]` so EVERY query phrased against the base table
+  * speeds up with zero query changes.
   *
-  * What rewrites: `Aggregate` whose grouping keys are group columns of
-  * the MV, registered DERIVED expressions (`day = cast(ts as date)` time
-  * hierarchies), or any deterministic EXPRESSION over those (month/year
-  * rollups from a day summary — grouping base rows by f(group cols)
-  * partitions exactly as grouping summary rows by f); whose aggregates
-  * are sum/avg/min/max/count over covered measure columns, count(*), or
-  * sum/avg/count/min/max over expressions of group columns (weighted by
-  * the summary's per-group cnt where the aggregate is additive); with
-  * Projects (attribute pruning and alias bindings, which are inlined to
-  * fixpoint) and Filters between the Aggregate and the base relation.
-  * Filter conjuncts must reference only group columns or derived
-  * expressions — plus, for a `cast(ts as date)` derived group, raw-ts
-  * bounds at exact session-TZ midnights (the form the optimizer rewrites
-  * day-range filters into), which convert back to day bounds under a
-  * fixed-offset zone. Anything else — distinct aggregates, FILTER
-  * clauses, measure references in grouping position or predicates —
-  * leaves the plan untouched: the rule must never widen semantics, only
-  * reroute them.
-  *
-  * Re-aggregation algebra (all decomposable): sum(x) → sum(s_x);
-  * count(*) → coalesce(sum(cnt), 0) (the coalesce covers the GLOBAL
-  * aggregate over an empty summary, where count must be 0 while sum is
-  * null); count(x) → coalesce(sum(c_x), 0); min/max(x) → min/max of the
-  * partial min/max; avg(x) → sum(s_x)/sum(c_x) at [[Average]]'s own
-  * internal types. Every rewritten output keeps the original alias AND
-  * exprId — parents reference outputs by exprId, so a fresh id would
-  * detach the subtree — and a Cast restores the original dataType when
-  * re-aggregation widens it (sum over decimal partials grows precision).
+  * A single-table MV is the one-table star with no joins
+  * ([[MvDef.asStar]]): [[StarMv]] builds its summary, refreshes it with
+  * the same signed-delta algebra and serves it through the same matcher
+  * (plain and ROLLUP/CUBE shapes, derived day groups, day-range filter
+  * recovery). What this object keeps is the single-table surface: ONE
+  * MV per base path ([[register]] replaces, [[unregister]] also drops the
+  * base's snapshot dir sets), the exact dir-set registry that versioned
+  * store snapshots are matched through, and the path-keyed build/refresh
+  * API.
   *
   * Scale: this is the 100 TB shape — the base scan (hours) happens once at
   * build; every rollup thereafter reads groups × partials rows (KB–MB).
   * Staleness is the caller's contract, as with any MV: rebuild after base
-  * loads, or unregister. [[MaterializedView.build]] unregisters before it
-  * recomputes so a rebuild can never be satisfied from its own stale
-  * summary.
+  * loads, refresh, or unregister. [[MaterializedView.build]] unregisters
+  * before it recomputes so a rebuild can never be satisfied from its own
+  * stale summary.
   *
   * Deployment: `GraftExtensions` injects [[MvRewriteRule]] for sessions
   * built with `spark.sql.extensions=graft.GraftExtensions`;
@@ -73,16 +50,25 @@ object MaterializedView {
     * base (name → SQL text, e.g. `"day" -> "cast(ts as date)"`) — the
     * time-hierarchy MV shape, where the base has no materialized day
     * column but every dashboard groups by one. The rewrite matches a query
-    * grouping by the same (analyzed) expression and reroutes it to the
-    * summary's column; the matching is against the post-analysis form, so
-    * a query phrasing the semantically-equal expression differently
-    * (`date(ts)` vs `cast(ts as date)` normalize alike; an optimizer
-    * rewrite that ELIMINATES the expression before our rule runs falls
-    * back to the base — correct, just unaccelerated).
+    * grouping by the same (optimized) expression and reroutes it to the
+    * summary's column; an optimizer rewrite that ELIMINATES the
+    * expression before our rule runs falls back to the base — correct,
+    * just unaccelerated.
     */
   final case class MvDef(basePath: String, groupCols: Seq[String],
       measureCols: Seq[String], summaryPath: String,
-      derivedGroups: Seq[(String, String)] = Nil)
+      derivedGroups: Seq[(String, String)] = Nil) {
+    /** The same MV as a one-table star: no joins, the plain group columns
+      * and measures qualified by the base path.
+      */
+    private[plans] def asStar: StarMv.StarMvDef = {
+      val derived = derivedGroups.map(_._1).toSet
+      StarMv.StarMvDef(tables = Seq(basePath), joins = Nil,
+        groupCols = groupCols.filterNot(derived).map(StarMv.QCol(basePath, _)),
+        measureCols = measureCols.map(StarMv.QCol(basePath, _)),
+        summaryPath = summaryPath, derivedGroups = derivedGroups)
+    }
+  }
 
   /** REGISTRY SCOPES: registries are keyed by the active session's
     * `spark.graft.mv.scope` tag (default `"global"`), so two sessions
@@ -214,9 +200,6 @@ object MaterializedView {
     dirRegistry.entrySet().removeIf(_.getValue.key == key)
     if (dirs.nonEmpty) registerDirs(dirs, basePath, stackedDirs)
   }
-  private[plans] def lookupDirs(dirs: Set[String]): Option[MvDef] =
-    Option(dirRegistry.get(dirs)).flatMap(r => Option(registry.get(r.key)))
-
   /** The raw base KEY a dir set is registered under — [[StarMv]]'s leaf
     * matching uses this to identify a store snapshot with the table path
     * a [[StarMv.StarMvDef]] names, without requiring a single-table MvDef
@@ -234,7 +217,10 @@ object MaterializedView {
   /** Compute the summary for (groupCols, measureCols) over the parquet
     * base, write it to `summaryPath`, and register the MV. One full base
     * scan with map-side partial aggregation — the one-time cost every
-    * later rollup amortizes.
+    * later rollup amortizes. `base` overrides the build scan's source for
+    * bases that aren't a single parquet path (a versioned store's
+    * snapshot registered for dir-set serving) — `basePath` is then purely
+    * the registry key.
     */
   def build(spark: SparkSession, basePath: String, groupCols: Seq[String],
       measureCols: Seq[String], summaryPath: String,
@@ -248,29 +234,15 @@ object MaterializedView {
       s"derived names ${derivedGroups.map(_._1)} must appear in $groupCols")
     // a stale registration for this base must not satisfy the build scan
     unregister(basePath)
-    val d0 = MvDef(basePath, groupCols, measureCols, summaryPath, derivedGroups)
-    // `base` overrides the build scan's source for bases that aren't a
-    // single parquet path (a versioned store's snapshot registered for
-    // dir-set serving) — `basePath` is then purely the registry key.
-    val baseDf = withDerived(base.getOrElse(spark.read.parquet(basePath)), d0)
-    val partials = measureCols.flatMap(m => Seq(
-      sum(col(m)).as(s"s_$m"), count(col(m)).as(s"c_$m"),
-      min(col(m)).as(s"mn_$m"), max(col(m)).as(s"mx_$m"))) :+
-      count(lit(1)).as("cnt")
-    baseDf.groupBy(groupCols.map(col): _*)
-      .agg(partials.head, partials.tail: _*)
-      .write.mode("overwrite").parquet(summaryPath)
-    register(d0)
-    d0
+    val d = MvDef(basePath, groupCols, measureCols, summaryPath, derivedGroups)
+    StarMv.materialize(spark, d.asStar, overrides(d, base))
+    register(d)
+    d
   }
 
-  /** Materialize an MV's derived group columns on a base/delta-shaped
-    * DataFrame — every maintenance path must compute deltas at the SAME
-    * granularity the summary was built at.
-    */
-  private[plans] def withDerived(df: DataFrame, d: MvDef): DataFrame =
-    d.derivedGroups.foldLeft(df) { case (acc, (name, sql)) =>
-      acc.withColumn(name, org.apache.spark.sql.functions.expr(sql)) }
+  private def overrides(d: MvDef,
+      base: Option[DataFrame]): Map[String, DataFrame] =
+    base.map(normalize(d.basePath) -> _).toMap
 
   /** Hook [[MvRewriteRule]] into an existing session (idempotent). */
   def install(spark: SparkSession): Unit = synchronized {
@@ -280,1046 +252,62 @@ object MaterializedView {
   }
 
   /** INCREMENTAL refresh for an insert-only delta: fold the delta's
-    * partials into the existing summary without rescanning the base —
-    * sum/count/cnt partials add, min/max partials min/max — and swap the
-    * registration to a new versioned path (`<summaryPath>_v<n>`). The old
-    * summary files stay untouched until the swap completes, so a reader
-    * planned against the old registration never sees half-written files,
-    * and a crashed refresh leaves the registry (and every future query) on
-    * the old, consistent version — the same atomic-commit posture as the
-    * table stores' `_current` manifest.
-    *
-    * Insert-only is a real contract, not a shortcut: under deletes the
-    * min/max partials are NOT maintainable from a summary (removing the
-    * row holding a group's min needs the base). A CDC pipeline with
-    * deletes rebuilds instead ([[build]]) or drops min/max from the MV.
-    * This is the maintenance path the reference's users get from
-    * `REFRESH MATERIALIZED VIEW` after each merge interval — here it costs
-    * one scan OF THE DELTA (batch-sized) plus a groups-sized merge, never
-    * a base rescan.
-    *
-    * Returns the updated definition. The delta must carry the MV's group
-    * and measure columns.
+    * partials into the existing summary without rescanning the base and
+    * swap the registration to the next versioned path — the maintenance
+    * the reference's users get from `REFRESH MATERIALIZED VIEW` after each
+    * merge interval, at the cost of one scan OF THE DELTA plus a
+    * groups-sized merge. The delta must carry the MV's group and measure
+    * columns. Under deletes use [[refreshDelta]].
     */
-  def refresh(spark: SparkSession, basePath: String, delta: DataFrame): MvDef = {
-    val d = lookup(normalize(basePath)).getOrElse(
-      throw new IllegalArgumentException(s"no MV registered for $basePath"))
-    val partials = d.measureCols.flatMap(m => Seq(
-      sum(col(m)).as(s"s_$m"), count(col(m)).as(s"c_$m"),
-      min(col(m)).as(s"mn_$m"), max(col(m)).as(s"mx_$m"))) :+
-      count(lit(1)).as("cnt")
-    val deltaSummary = withDerived(delta, d).groupBy(d.groupCols.map(col): _*)
-      .agg(partials.head, partials.tail: _*)
-    // per group ≤2 rows here (old summary + delta partial), so even the
-    // double-typed sum partials merge with ONE IEEE addition — no
-    // accumulation-order freedom
-    val mergeAggs = d.measureCols.flatMap(m => Seq(
-      sum(col(s"s_$m")).as(s"s_$m"), sum(col(s"c_$m")).as(s"c_$m"),
-      min(col(s"mn_$m")).as(s"mn_$m"), max(col(s"mx_$m")).as(s"mx_$m"))) :+
-      sum(col("cnt")).as("cnt")
-    val merged = spark.read.parquet(d.summaryPath)
-      .unionByName(deltaSummary)
-      .groupBy(d.groupCols.map(col): _*)
-      .agg(mergeAggs.head, mergeAggs.tail: _*)
-    // versioned path: never overwrite the summary a planned query may read
-    val base = d.summaryPath.replaceAll("_v\\d+$", "")
-    val next = d.summaryPath match {
-      case p if p == base => s"${base}_v1"
-      case p => s"$base" + "_v" + (p.substring(p.lastIndexOf("_v") + 2).toInt + 1)
-    }
-    merged.write.mode("overwrite").parquet(next)
-    val nd = d.copy(summaryPath = next)
-    register(nd)
-    MvUsage.recordMaintenance(nd.summaryPath)
-    nd
-  }
+  def refresh(spark: SparkSession, basePath: String, delta: DataFrame): MvDef =
+    refreshDelta(spark, basePath, delta, delta.limit(0))
 
   /** INCREMENTAL refresh for a general CDC batch: `inserts` appended to the
     * base and `deletes` removed from it (both carrying the MV's group and
     * measure columns; a delete row must restate the deleted row's values —
     * the CDC delete image). Call AFTER the batch has landed in the base:
-    * the min/max repair scan reads the CURRENT base.
-    *
-    * Maintenance per partial:
-    *   - `s_m`/`c_m`/`cnt` merge by SIGNED addition — old + insert partials
-    *     − delete partials, one fixed op sequence per group. Exact for
-    *     integer/decimal measures; float sums inherit the standard IVM
-    *     caveat that a−b+b need not bit-equal a (min/max never do
-    *     arithmetic, so they stay exact for every type).
-    *   - `mn_m`/`mx_m` are NOT maintainable from partials under deletes
-    *     (removing the row holding a group's min needs the base), so the
-    *     candidate min(old, insert) is kept only for groups the deletes
-    *     cannot have affected: a group is AFFECTED iff some deleted value
-    *     touches the stored extreme (del-min ≤ mn_m or del-max ≥ mx_m).
-    *     Affected groups' min/max are recomputed from the post-batch base
-    *     in ONE scan, column-pruned to group+measure columns and filtered
-    *     by a broadcast join on the (delete-batch-bounded) affected key
-    *     set; when the affected set is ≤ `recomputeKeyCap`, per-column IN
-    *     predicates are additionally pushed into the parquet scan so
-    *     row-group stats prune before the join even runs.
-    *   - a group whose `cnt` reaches 0 leaves the summary; a negative
-    *     `cnt` (deleting rows the base never had) fails loudly in-plan
-    *     rather than silently corrupting every later rollup.
-    *
-    * Cost: delta-sized partials + groups-sized merge + a pruned base scan
-    * proportional to the affected groups — never a full rebuild. Same
-    * versioned-path swap and crash posture as [[refresh]].
+    * the min/max repair scan reads the CURRENT base — `base`, when given
+    * (a store's post-batch snapshot), else the registered `basePath`.
+    * The algebra, its cost and its crash posture are
+    * [[StarMv.refreshTableDelta]]'s; the registered MV moves to the next
+    * summary generation only once it is written.
     */
   def refreshDelta(spark: SparkSession, basePath: String, inserts: DataFrame,
       deletes: DataFrame, recomputeKeyCap: Int = 1000,
       base: Option[DataFrame] = None): MvDef = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, concat, concat_ws, raise_error, when}
     val d = lookup(normalize(basePath)).getOrElse(
       throw new IllegalArgumentException(s"no MV registered for $basePath"))
-    val g = d.groupCols.map(col)
-    val old = spark.read.parquet(d.summaryPath)
-    val oldTypes = old.schema.map(f => f.name -> f.dataType).toMap
-
-    // appending cnt BEFORE the head/tail split keeps a count-only MV
-    // (empty measureCols) on the same code path as build()/refresh()
-    val insAggs = d.measureCols.flatMap(m => Seq(
-      sum(col(m)).as(s"s_$m"), count(col(m)).as(s"c_$m"),
-      min(col(m)).as(s"mn_$m"), max(col(m)).as(s"mx_$m"))) :+
-      count(lit(1)).as("cnt")
-    val insP = withDerived(inserts, d).groupBy(g: _*)
-      .agg(insAggs.head, insAggs.tail: _*)
-    // delete partials twice: signed (for the sum merge — min/max nulled so
-    // they can't contaminate the candidate extremes) and raw extremes (for
-    // affected-group detection)
-    val delAggs = d.measureCols.flatMap(m => Seq(
-      sum(col(m)).as(s"ds_$m"), count(col(m)).as(s"dc_$m"),
-      min(col(m)).as(s"dmn_$m"), max(col(m)).as(s"dmx_$m"))) :+
-      count(lit(1)).as("dcnt")
-    val delP = withDerived(deletes, d).groupBy(g: _*)
-      .agg(delAggs.head, delAggs.tail: _*)
-    val delSigned = delP.select(g ++ d.measureCols.flatMap(m => Seq(
-      (-col(s"ds_$m")).cast(oldTypes(s"s_$m")).as(s"s_$m"),
-      (-col(s"dc_$m")).as(s"c_$m"),
-      lit(null).cast(oldTypes(s"mn_$m")).as(s"mn_$m"),
-      lit(null).cast(oldTypes(s"mx_$m")).as(s"mx_$m"))) :+
-      (-col("dcnt")).as("cnt"): _*)
-
-    val mergeAggs = d.measureCols.flatMap(m => Seq(
-      sum(col(s"s_$m")).as(s"s_$m"), sum(col(s"c_$m")).as(s"c_$m"),
-      min(col(s"mn_$m")).as(s"mn_$m"), max(col(s"mx_$m")).as(s"mx_$m"))) :+
-      sum(col("cnt")).as("cnt")
-    val merged = old.unionByName(insP.selectExpr(old.columns.map(c => s"`$c`"): _*))
-      .unionByName(delSigned.selectExpr(old.columns.map(c => s"`$c`"): _*))
-      .groupBy(g: _*)
-      .agg(mergeAggs.head, mergeAggs.tail: _*)
-      .withColumn("cnt", when(col("cnt") < 0, raise_error(concat(
-        lit("refreshDelta: negative count for group ("),
-        concat_ws(",", g.map(_.cast("string")): _*),
-        lit(") — deletes reference rows the base never had"))))
-        .otherwise(col("cnt")))
-      .filter(col("cnt") > 0)
-
-    // affected = stored extreme possibly removed; detection against the OLD
-    // summary (the candidate min/max in `merged` still references values
-    // the batch may have deleted). NULL is a legal group-key value and SQL
-    // equi-joins never match NULL keys, so every maintenance join here is
-    // null-safe (<=>) — otherwise deleting the extreme of a NULL-keyed
-    // group would silently skip repair and serve stale min/max forever.
-    // A count-only MV (no measures) has no min/max to repair at all.
-    val affectedOpt = if (d.measureCols.isEmpty) None else {
-      val touched = d.measureCols.map(m =>
-        coalesce(col(s"dmn_$m") <= col(s"mn_$m"), lit(false)) ||
-          coalesce(col(s"dmx_$m") >= col(s"mx_$m"), lit(false)))
-        .reduce(_ || _)
-      Some(delP.join(old,
-          d.groupCols.map(gc => delP(gc) <=> old(gc)).reduce(_ && _), "inner")
-        .filter(touched).select(d.groupCols.map(delP(_)): _*).distinct().cache())
-    }
-    // ONE limited collect instead of count-then-collect (two actions → one,
-    // r15): ≤ cap rows decide both the emptiness check and the IN pushdown
-    // below; cap+1 rows mean "over cap", where the exact count was never
-    // used anyway. ≤ delete batch's groups either way.
-    val keyRowsOpt = affectedOpt.map(_.limit(recomputeKeyCap + 1).collect())
-    val nAffected = keyRowsOpt.map(_.length.toLong).getOrElse(0L)
-
-    val repaired = if (nAffected == 0) {
-      // no extreme touched — widen with the repair columns finalCols expects
-      merged.select(merged.columns.map(col) ++
-        (lit(null).cast("int").as("_aff") +:
-          d.measureCols.flatMap(m => Seq(
-            lit(null).cast(oldTypes(s"mn_$m")).as(s"r_mn_$m"),
-            lit(null).cast(oldTypes(s"mx_$m")).as(s"r_mx_$m")))): _*)
-    } else {
-      val affected = affectedOpt.get
-      // one pruned scan of the post-batch base: only group+measure columns,
-      // only affected groups. ≤ cap → per-column IN predicates pushed to
-      // the parquet footer stats; the broadcast join stays the exact gate.
-      // (an IN list can't express "or NULL", so columns whose affected keys
-      // include NULL skip the pushdown and rely on the semi join alone)
-      var scan = withDerived(base.getOrElse(spark.read.parquet(d.basePath)), d)
-        .select((d.groupCols ++ d.measureCols).map(col): _*)
-      if (nAffected <= recomputeKeyCap) {
-        val keyRows = keyRowsOpt.get // ≤ cap rows of group keys only
-        d.groupCols.zipWithIndex.foreach { case (gc, i) =>
-          val vals = keyRows.map(_.get(i)).distinct.toSeq
-          if (!vals.contains(null)) scan = scan.filter(col(gc).isin(vals: _*))
-        }
-      }
-      // rename the probe keys first: when the caller's `base`/`deletes`
-      // DataFrames share lineage, `affected`'s group attrs can be the very
-      // attribute instances the scan carries, and a same-attribute <=>
-      // only works through dataset-id disambiguation (with a "trivially
-      // true predicate" warning). Distinct names are unambiguous.
-      val affK = d.groupCols.foldLeft(affected)(
-        (df, gc) => df.withColumnRenamed(gc, s"_ck_$gc"))
-      val scanF = scan
-      val recomputed = scanF.join(broadcast(affK),
-          d.groupCols.map(gc => col(gc) <=> col(s"_ck_$gc")).reduce(_ && _),
-          "left_semi")
-        .groupBy(g: _*)
-        .agg(d.measureCols.flatMap(m => Seq(
-          min(col(m)).as(s"r_mn_$m"), max(col(m)).as(s"r_mx_$m"))).head,
-          d.measureCols.flatMap(m => Seq(
-            min(col(m)).as(s"r_mn_$m"), max(col(m)).as(s"r_mx_$m"))).tail: _*)
-      // attach joins: rename right-side keys so the null-safe condition is
-      // unambiguous; finalCols' select drops the _ak_/_rk_ columns again
-      val affT = d.groupCols.foldLeft(affected.withColumn("_aff", lit(1)))(
-        (df, gc) => df.withColumnRenamed(gc, s"_ak_$gc"))
-      val recT = d.groupCols.foldLeft(recomputed)(
-        (df, gc) => df.withColumnRenamed(gc, s"_rk_$gc"))
-      merged
-        .join(broadcast(affT),
-          d.groupCols.map(gc => col(gc) <=> col(s"_ak_$gc")).reduce(_ && _),
-          "left")
-        .join(broadcast(recT),
-          d.groupCols.map(gc => col(gc) <=> col(s"_rk_$gc")).reduce(_ && _),
-          "left")
-    }
-
-    val finalCols = g ++ d.measureCols.flatMap(m => Seq(
-      // a measure whose every value left the group must render NULL, not 0
-      when(col(s"c_$m") === 0, lit(null).cast(oldTypes(s"s_$m")))
-        .otherwise(col(s"s_$m")).as(s"s_$m"),
-      col(s"c_$m"),
-      when(col("_aff") === 1, col(s"r_mn_$m"))
-        .otherwise(when(col(s"c_$m") === 0,
-          lit(null).cast(oldTypes(s"mn_$m"))).otherwise(col(s"mn_$m")))
-        .as(s"mn_$m"),
-      when(col("_aff") === 1, col(s"r_mx_$m"))
-        .otherwise(when(col(s"c_$m") === 0,
-          lit(null).cast(oldTypes(s"mx_$m"))).otherwise(col(s"mx_$m")))
-        .as(s"mx_$m"))) :+ col("cnt")
-    val next = {
-      val b = d.summaryPath.replaceAll("_v\\d+$", "")
-      if (d.summaryPath == b) s"${b}_v1"
-      else b + "_v" + (d.summaryPath.substring(
-        d.summaryPath.lastIndexOf("_v") + 2).toInt + 1)
-    }
-    repaired.select(finalCols: _*).write.mode("overwrite").parquet(next)
-    affectedOpt.foreach(_.unpersist())
-    val nd = d.copy(summaryPath = next)
+    val next = StarMv.applyDelta(spark, d.asStar, d.basePath, inserts,
+      deletes, recomputeKeyCap, overrides(d, base))
+    val nd = d.copy(summaryPath = next.summaryPath)
     register(nd)
-    MvUsage.recordMaintenance(nd.summaryPath)
     nd
   }
 
   /** Apply a row-valued change feed (the
     * [[graft.operators.SnapshotDiff.changeFeed]] schema: base columns +
     * `_change` ∈ insert / delete / update_pre / update_post) as ONE
-    * incremental refresh: insert/update_post rows are summary inserts,
-    * delete/update_pre rows are summary deletes — an update contributes
-    * its pre-image to the subtraction and its post-image to the addition,
-    * which is exactly the signed-partial algebra [[refreshDelta]] runs.
-    *
-    * This closes the CDC→summary maintenance loop over a versioned store:
+    * incremental refresh — the CDC→summary loop over a versioned store:
     * merge the micro-batch, read
     * [[graft.sources.ParquetTableStore.changeFeedBetween]] across the
-    * merge's version step, hand it here — the summary stays convergent
-    * without ever rescanning the base. `base` overrides the min/max
-    * repair scan's source for bases that aren't a single parquet path
-    * (pass the store's post-batch snapshot); without it the registered
-    * `basePath` is read as usual.
-    *
-    * The feed is evaluated twice (insert and delete split) and therefore
-    * persisted for the span of this call — at steady state it is
-    * delta-sized by construction.
+    * merge's version step, hand it here with the post-batch snapshot as
+    * `base`.
     */
   def refreshFromFeed(spark: SparkSession, basePath: String, feed: DataFrame,
-      recomputeKeyCap: Int = 1000, base: Option[DataFrame] = None): MvDef = {
-    require(feed.columns.contains("_change"),
-      s"feed must carry a _change column (got ${feed.columns.toSeq}) — " +
-        "produce it with SnapshotDiff.changeFeed / changeFeedBetween")
-    val f = feed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val ins = f.filter(col("_change").isin("insert", "update_post"))
-        .drop("_change")
-      val del = f.filter(col("_change").isin("delete", "update_pre"))
-        .drop("_change")
-      refreshDelta(spark, basePath, ins, del, recomputeKeyCap, base)
-    } finally { f.unpersist(blocking = false); () }
-  }
+      recomputeKeyCap: Int = 1000, base: Option[DataFrame] = None): MvDef =
+    StarMv.splitFeed(feed)((ins, del) =>
+      refreshDelta(spark, basePath, ins, del, recomputeKeyCap, base))
 }
 
+/** The MV serving rule: every Aggregate goes through the one matcher,
+  * [[StarMv.tryRewrite]], over the single-table and star registries.
+  */
 object MvRewriteRule extends Rule[LogicalPlan] {
 
-  import MaterializedView.{MvDef, lookup}
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
+  override def apply(plan: LogicalPlan): LogicalPlan =
     if ((MaterializedView.isEmpty && StarMv.isEmpty) ||
       !conf.getConfString("spark.graft.mv.enabled", "true").toBoolean) plan
     else plan.transformUp {
-      case agg @ Aggregate(_, _, _, _) =>
-        tryRewrite(agg).orElse(tryRewriteExpand(agg))
-          .orElse(StarMv.tryRewrite(agg))
-          .orElse(StarMv.tryRewriteExpand(agg)).getOrElse(agg)
+      case agg: Aggregate => StarMv.tryRewrite(agg).getOrElse(agg)
     }
-  }
-
-  /** A stripped single-table base: its scan roots (for cost estimation)
-    * and the MvDef that serves it, resolved from either a plain parquet
-    * relation or a whole MOR-resolution subplan matched as one leaf
-    * ([[StoreResolvePlan]] — the single-table twin of the star rewrite's
-    * store-leaf matching).
-    */
-  private final case class BaseLeaf(roots: Seq[String], mv: MvDef)
-
-  /** child walk: collect Projects (attribute pruning AND alias bindings —
-    * the optimizer's PullOutGroupingExpressions extracts complex grouping
-    * expressions into `_groupingexpression` aliases below the Aggregate,
-    * and withColumn leaves named aliases) and Filters down to a single
-    * table leaf — a parquet LogicalRelation, or a MOR snapshot's whole
-    * resolution subplan (its inferred-not-null residue re-emitted as
-    * conds); anything else bails. Alias bindings are returned for the
-    * caller to inline — matching happens on the fully-inlined
-    * expressions, so an alias detour can't hide a matching (or a
-    * non-matching) shape.
-    */
-  private def strip(p: LogicalPlan): Option[
-      (Seq[Expression], Map[org.apache.spark.sql.catalyst.expressions.ExprId, Expression], BaseLeaf)] =
-    p match {
-      case rel: LogicalRelation => relationMv(rel).map { mv =>
-        (Nil, Map.empty, BaseLeaf(relationRoots(rel), mv)) }
-      case StoreResolvePlan(leaf) =>
-        lookup(MaterializedView.normalize(leaf.key)).map { mv =>
-          (leaf.extraFilters, Map.empty, BaseLeaf(leaf.roots.toSeq, mv)) }
-      case Project(pl, c) if pl.forall(e =>
-          e.isInstanceOf[AttributeReference] || e.isInstanceOf[Alias]) =>
-        strip(c).map { case (conds, aliases, rel) =>
-          (conds, aliases ++ pl.collect {
-            case a @ Alias(child, _) => a.exprId -> child }, rel)
-        }
-      case Filter(cond, c) =>
-        strip(c).map { case (conds, aliases, rel) =>
-          (cond +: conds, aliases, rel) }
-      case _ => None
-    }
-
-  private def relationRoots(rel: LogicalRelation): Seq[String] =
-    MaterializedView.fsRoots(rel.relation)
-
-  /** The MV serving this relation, two lookups: a single root matching a
-    * registered base path (the plain-parquet shape), else the FULL root
-    * set matching a registered snapshot dir set (a versioned store's
-    * snapshot — see [[MaterializedView.registerDirs]]).
-    */
-  private def relationMv(rel: LogicalRelation): Option[MvDef] = {
-    val roots = relationRoots(rel)
-    if (roots.isEmpty) None
-    else (if (roots.size == 1) lookup(roots.head) else None)
-      .orElse(MaterializedView.lookupDirs(roots.toSet))
-  }
-
-  /** The [[MvCost]] gate for one single-table candidate: refuse serving
-    * when the summary is provably no smaller than the base scan (an MV
-    * grouped by a near-unique key) — re-aggregating it would read no less
-    * than the query it replaces. Unknown counts serve.
-    */
-  private def worthIt(leaf: BaseLeaf): Boolean = {
-    val spark = SparkSession.active
-    MvCost.worthServing(spark, leaf.mv.summaryPath,
-      MvCost.leafSize(spark, leaf.mv.basePath, leaf.roots))
-  }
-
-  private def tryRewrite(agg: Aggregate): Option[LogicalPlan] = {
-    for {
-      (conds, aliases, leaf) <- strip(agg.child)
-      if worthIt(leaf)
-      plan <- rewriteWith(agg, conds, aliases, leaf.mv)
-    } yield { MvUsage.recordServe(leaf.mv.summaryPath); plan }
-  }
-
-  /** ROLLUP / CUBE / GROUPING SETS over a registered base: the analyzer
-    * plants an [[Expand]] below the Aggregate — one projection per grouping
-    * set, group columns nulled per set plus a distinct grouping-id literal
-    * — so the plain `strip` walk never reaches the relation. This path
-    * rebuilds the SAME Expand over the summary instead: each summary row
-    * replicates once per grouping set exactly as each base row did, so
-    * within every (grouping-set, keys) partition the decomposable algebra
-    * holds unchanged — sum(x)→sum(s_x), count(*)→sum(cnt), avg→Σs/Σc, and
-    * aggregates over expressions of the expanded group columns cnt-weight
-    * (Σ_base f = Σ_summary f·cnt needs no per-group constancy: it holds
-    * row-for-row under the replication). Aggregate outputs referencing the
-    * grouping-id (grouping()/grouping_id() compile to shifts over it) keep
-    * working because every non-measure Expand output attribute survives
-    * with its exprId; only measure passthroughs are swapped for partials.
-    * Derived-group and day-bound filter recovery are deliberately absent
-    * here (single-table shape only); such plans fall back to the base —
-    * correct, just unaccelerated.
-    */
-  private def tryRewriteExpand(agg: Aggregate): Option[LogicalPlan] =
-    agg.child match {
-      case ex: org.apache.spark.sql.catalyst.plans.logical.Expand =>
-        for {
-          (conds, aliases, leaf) <- strip(ex.child)
-          if worthIt(leaf)
-          plan <- rewriteExpandWith(agg, ex, conds, aliases, leaf.mv)
-        } yield { MvUsage.recordServe(leaf.mv.summaryPath); plan }
-      case _ => None
-    }
-
-  /** Per-position classification of an Expand's projection matrix. */
-  private[plans] sealed trait ExCol
-  /** same expression in every projection (measures, constants, pre-nulled
-    * group expressions) */
-  private[plans] final case class ExPass(e: Expression) extends ExCol
-  /** nulled in some projections, the same expression in the rest — a
-    * grouping-sets key column */
-  private[plans] final case class ExGrouped(e: Expression) extends ExCol
-  /** a distinct non-null literal per projection — the grouping id */
-  private[plans] case object ExGid extends ExCol
-
-  private[plans] def classifyExpand(
-      projs: Seq[Seq[Expression]], out: Seq[org.apache.spark.sql.catalyst.expressions.Attribute]): Option[Seq[ExCol]] = {
-    if (projs.isEmpty || projs.exists(_.size != out.size)) return None
-    val cols = out.indices.map { j =>
-      val colExprs = projs.map(_(j))
-      val allLits = colExprs.forall {
-        case Literal(v, t) => v != null &&
-          (t == LongType || t == IntegerType || t == ShortType || t == ByteType)
-        case _ => false
-      }
-      if (allLits &&
-        colExprs.map(_.asInstanceOf[Literal].value).distinct.size == colExprs.size)
-        Some(ExGid)
-      else {
-        val nonNull = colExprs.filter {
-          case Literal(null, _) => false
-          case _ => true
-        }
-        if (nonNull.isEmpty) None // a column nulled in EVERY set — refuse
-        else if (!nonNull.forall(_.semanticEquals(nonNull.head))) None
-        else if (nonNull.size == colExprs.size) Some(ExPass(nonNull.head))
-        else Some(ExGrouped(nonNull.head))
-      }
-    }
-    if (cols.exists(_.isEmpty)) None else Some(cols.map(_.get))
-  }
-
-  private def rewriteExpandWith(agg: Aggregate,
-      ex: org.apache.spark.sql.catalyst.plans.logical.Expand,
-      conds: Seq[Expression],
-      aliases: Map[org.apache.spark.sql.catalyst.expressions.ExprId, Expression],
-      mv: MvDef): Option[LogicalPlan] = {
-    import org.apache.spark.sql.catalyst.expressions.ExprId
-    def inline(e: Expression): Expression = inlineAliases(e, aliases)
-    val groupSet = mv.groupCols.toSet
-    val measureSet = mv.measureCols.toSet
-
-    val sumPlan = SparkSession.active.read.parquet(mv.summaryPath)
-      .queryExecution.analyzed
-    val byName = sumPlan.output.map(a => a.name -> a).toMap
-    def attrOf(name: String): Option[AttributeReference] =
-      byName.get(name).collect { case a: AttributeReference => a }
-
-    // a base-side expression (an Expand projection entry, a filter
-    // conjunct) rebound to the summary: after alias inlining every
-    // reference must be an MV group column
-    def toSummary(e0: Expression): Option[Expression] = {
-      val sub = inline(e0)
-      if (!sub.deterministic ||
-        sub.exists(_.isInstanceOf[AggregateExpression])) None
-      else {
-        val bound = sub.transform {
-          case a: AttributeReference => byName.getOrElse(a.name, a)
-        }
-        val ok = bound.references.forall(a =>
-          groupSet.contains(a.name) &&
-            byName.get(a.name).exists(_.exprId == a.exprId))
-        if (ok) Some(bound) else None
-      }
-    }
-
-    val cols = classifyExpand(ex.projections, ex.output).getOrElse(return None)
-
-    // bind every position: measures drop out (their partials ride along
-    // instead), everything else must rebind to the summary
-    val measureByOutId = scala.collection.mutable.Map[ExprId, String]()
-    val boundByIdx = scala.collection.mutable.Map[Int, Expression]()
-    cols.zipWithIndex.foreach {
-      case (ExGid, _) => ()
-      case (ExPass(e), j) => inline(e) match {
-        case a: AttributeReference if measureSet.contains(a.name) =>
-          measureByOutId(ex.output(j).exprId) = a.name
-        case _ => toSummary(e) match {
-          case Some(se) if se.dataType == ex.output(j).dataType =>
-            boundByIdx(j) = se
-          case _ => return None
-        }
-      }
-      case (ExGrouped(e), j) => toSummary(e) match {
-        case Some(se) if se.dataType == ex.output(j).dataType =>
-          boundByIdx(j) = se
-        case _ => return None
-      }
-    }
-    val keepIdx = ex.output.indices.filterNot(j =>
-      measureByOutId.contains(ex.output(j).exprId))
-    // attrs the rewritten aggregates may reference freely (everything the
-    // new Expand still emits with its original exprId)
-    val expandableIds: Set[ExprId] = keepIdx.map(ex.output(_).exprId).toSet
-    def refsOk(e: Expression): Boolean =
-      e.deterministic && !e.exists(_.isInstanceOf[AggregateExpression]) &&
-        e.references.forall(a => expandableIds.contains(a.exprId))
-
-    // groupings must survive on the new Expand's outputs untouched
-    if (!agg.groupingExpressions.forall(refsOk)) return None
-
-    // filter conjuncts below the Expand: deterministic, group-column-only,
-    // replayed on the summary before it expands
-    def splitConj(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => splitConj(l) ++ splitConj(r)
-      case x => Seq(x)
-    }
-    val condsSub = conds.flatMap(splitConj).map(toSummary)
-    if (condsSub.exists(_.isEmpty)) return None
-
-    def rewriteAggFunc(e: AggregateExpression): Option[Expression] =
-      e.aggregateFunction match {
-        case s: Sum if s.evalContext.evalMode == EvalMode.TRY => None
-        case s: Sum => s.child match {
-          case a: AttributeReference if measureByOutId.contains(a.exprId) =>
-            attrOf(s"s_${measureByOutId(a.exprId)}")
-              .map(p => Sum(p).toAggregateExpression())
-          case ge if refsOk(ge) => for {
-            cnt <- attrOf("cnt")
-            r <- sumOfGroupExpr(ge, cnt)
-          } yield r
-          case _ => None
-        }
-        case a: Average => a.child match {
-          case ar: AttributeReference if measureByOutId.contains(ar.exprId) =>
-            for {
-              s <- attrOf(s"s_${measureByOutId(ar.exprId)}")
-              c <- attrOf(s"c_${measureByOutId(ar.exprId)}")
-              r <- avgFromPartials(a, Sum(s).toAggregateExpression(),
-                Sum(c).toAggregateExpression())
-            } yield r
-          case ge if refsOk(ge) => for {
-            cnt <- attrOf("cnt")
-            r <- avgOfGroupExpr(a, ge, cnt)
-          } yield r
-          case _ => None
-        }
-        case m: Min => m.child match {
-          case a: AttributeReference if measureByOutId.contains(a.exprId) =>
-            attrOf(s"mn_${measureByOutId(a.exprId)}")
-              .map(p => Min(p).toAggregateExpression())
-          // extremes over expressions of the expanded keys need no
-          // weighting — the summary enumerates the same value set
-          case ge if refsOk(ge) => Some(e)
-          case _ => None
-        }
-        case m: Max => m.child match {
-          case a: AttributeReference if measureByOutId.contains(a.exprId) =>
-            attrOf(s"mx_${measureByOutId(a.exprId)}")
-              .map(p => Max(p).toAggregateExpression())
-          case ge if refsOk(ge) => Some(e)
-          case _ => None
-        }
-        case c: Count => c.children match {
-          case Seq(l: Literal) if l.value != null =>
-            attrOf("cnt").map(p => Coalesce(Seq(
-              Sum(p).toAggregateExpression(), Literal(0L))))
-          case Seq(a: AttributeReference) if measureByOutId.contains(a.exprId) =>
-            attrOf(s"c_${measureByOutId(a.exprId)}").map(p => Coalesce(Seq(
-              Sum(p).toAggregateExpression(), Literal(0L))))
-          case Seq(one) if refsOk(one) => for {
-            cnt <- attrOf("cnt")
-          } yield countOfGroupExpr(one, cnt)
-          case _ => None
-        }
-        case _ => None
-      }
-
-    def rewriteExpr(e: Expression): Option[Expression] = e match {
-      case ae @ AggregateExpression(_, _, false, None, _) => rewriteAggFunc(ae)
-      // DISTINCT over expanded key columns is multiplicity-free — the
-      // original aggregate keeps working verbatim on the rebuilt Expand
-      case ae @ AggregateExpression(c: Count, _, true, None, _)
-          if c.children.nonEmpty && c.children.forall(refsOk) => Some(ae)
-      case _: AggregateExpression => None
-      case a: AttributeReference if expandableIds.contains(a.exprId) => Some(a)
-      case l: Literal => Some(l)
-      case _ if e.children.nonEmpty =>
-        val rewritten = e.children.map(rewriteExpr)
-        if (rewritten.forall(_.isDefined))
-          Some(e.withNewChildren(rewritten.map(_.get)))
-        else None
-      case _ => None
-    }
-
-    def rewriteNamed(ne: NamedExpression): Option[NamedExpression] = ne match {
-      case a: AttributeReference if expandableIds.contains(a.exprId) => Some(a)
-      case al @ Alias(child, name) =>
-        rewriteExpr(child).map { c =>
-          val typed = if (c.dataType == al.dataType) c else Cast(c, al.dataType)
-          Alias(typed, name)(exprId = al.exprId)
-        }
-      case _ => None
-    }
-
-    val newResults = agg.aggregateExpressions.map(rewriteNamed)
-    if (newResults.exists(_.isEmpty)) return None
-
-    // partial/cnt attrs the rewritten aggregates actually read ride
-    // through every projection unchanged (the passthrough pattern)
-    val sumOutIds = sumPlan.outputSet
-    val usedPartials = newResults.flatMap(_.get.references)
-      .filter(sumOutIds.contains).distinct
-      .collect { case a: AttributeReference => a }
-
-    val filtered = condsSub.flatten.foldLeft(sumPlan)((p, c) => Filter(c, p))
-    val newOut = keepIdx.map(ex.output) ++ usedPartials
-    val newProjs = ex.projections.map { proj =>
-      keepIdx.map { j =>
-        cols(j) match {
-          case ExGid => proj(j)
-          case ExGrouped(_) => proj(j) match {
-            case Literal(null, dt) => Literal(null, dt)
-            case _ => boundByIdx(j)
-          }
-          case ExPass(_) => boundByIdx(j)
-        }
-      } ++ usedPartials
-    }
-    Some(Aggregate(agg.groupingExpressions, newResults.map(_.get),
-      org.apache.spark.sql.catalyst.plans.logical.Expand(
-        newProjs, newOut, filtered)))
-  }
-
-  /** Analyzed, name-rendered form of a registered derived-group SQL
-    * expression — resolved once against the base's schema (one footer
-    * read), then compared with query expressions via [[renderForm]].
-    */
-  private val derivedFormCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
-  private def derivedForm(basePath: String, sql: String): Option[String] = {
-    val rendered = derivedFormCache.computeIfAbsent((basePath, sql), { _ =>
-      scala.util.Try {
-        val analyzed = SparkSession.active.read.parquet(basePath)
-          .select(org.apache.spark.sql.functions.expr(sql))
-          .queryExecution.analyzed.expressions.head
-        renderForm(analyzed).getOrElse("")
-      }.getOrElse("") // unrenderable/unresolvable → never matches
-    })
-    Some(rendered).filter(_.nonEmpty)
-  }
-
-  /** When a derived group is exactly `cast(<tsCol> as date)`, the name of
-    * that timestamp column — the day-hierarchy case whose FILTERS the
-    * optimizer rewrites into raw-ts bounds (cast(ts as date) >= d becomes
-    * ts >= midnight(d) before this rule runs), which [[rewriteWith]]
-    * converts back to day bounds.
-    */
-  private val derivedTsColCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
-  private def derivedTsCol(basePath: String, sql: String): Option[String] = {
-    val name = derivedTsColCache.computeIfAbsent((basePath, sql), { _ =>
-      scala.util.Try {
-        val analyzed = SparkSession.active.read.parquet(basePath)
-          .select(org.apache.spark.sql.functions.expr(sql))
-          .queryExecution.analyzed.expressions.head
-        val stripped = analyzed match { case a: Alias => a.child; case x => x }
-        stripped match {
-          case Cast(a: AttributeReference,
-            org.apache.spark.sql.types.DateType, _, _) => a.name
-          case _ => ""
-        }
-      }.getOrElse("")
-    })
-    Some(name).filter(_.nonEmpty)
-  }
-
-  /** Day-hierarchy filter recovery, shared between the single-table and
-    * STAR rewrites: the optimizer rewrites `cast(ts as date) >= date d`
-    * into `ts >= timestamp midnight(d)` BEFORE our rules run, so a
-    * dashboard's day-range filter arrives as raw-ts bounds. A conjunct
-    * bounding ts at an exact session-TZ midnight converts back to the day
-    * bound (ts >= mid(d) ⇔ day >= d; ts < mid(d) ⇔ day < d) whenever the
-    * zone has a fixed offset — under DST a day's first instant need not
-    * be 00:00, so non-fixed zones refuse rather than risk an off-by-one
-    * day. `dayOfTs` maps a timestamp column NAME to its derived day
-    * column; `attrOf` resolves summary attributes by name.
-    */
-  private[plans] def tsBoundToDayShared(e: Expression,
-      dayOfTs: Map[String, String],
-      attrOf: String => Option[AttributeReference],
-      zoneIdStr: String): Option[Expression] = {
-    if (dayOfTs.isEmpty) return None
-    def dayAttr(a: AttributeReference): Option[AttributeReference] =
-      dayOfTs.get(a.name).flatMap(attrOf)
-    def midnightDate(l: Literal): Option[Literal] = l match {
-      case Literal(micros: Long, org.apache.spark.sql.types.TimestampType) =>
-        // zoned: only a fixed-offset session zone makes midnight(d) ⇔ d
-        val zone = scala.util.Try(
-          java.time.ZoneId.of(zoneIdStr)).getOrElse(return None)
-        if (!zone.getRules.isFixedOffset) return None
-        val zdt = java.time.Instant.EPOCH
-          .plus(micros, java.time.temporal.ChronoUnit.MICROS).atZone(zone)
-        if (zdt.toLocalTime == java.time.LocalTime.MIDNIGHT)
-          Some(Literal(zdt.toLocalDate.toEpochDay.toInt,
-            org.apache.spark.sql.types.DateType))
-        else None
-      case Literal(micros: Long, org.apache.spark.sql.types.TimestampNTZType) =>
-        // NTZ is pure wall-clock — cast(ntz as date) is its date part in
-        // EVERY zone, so the conversion is exact with no DST caveat
-        val ldt = java.time.LocalDateTime.ofEpochSecond(
-          java.lang.Math.floorDiv(micros, 1000000L),
-          (java.lang.Math.floorMod(micros, 1000000L) * 1000L).toInt,
-          java.time.ZoneOffset.UTC)
-        if (ldt.toLocalTime == java.time.LocalTime.MIDNIGHT)
-          Some(Literal(ldt.toLocalDate.toEpochDay.toInt,
-            org.apache.spark.sql.types.DateType))
-        else None
-      case _ => None
-    }
-    e match {
-      case org.apache.spark.sql.catalyst.expressions.IsNotNull(
-        a: AttributeReference) => dayAttr(a).map(
-          org.apache.spark.sql.catalyst.expressions.IsNotNull(_))
-      case org.apache.spark.sql.catalyst.expressions.GreaterThanOrEqual(
-        a: AttributeReference, l: Literal) =>
-        for (d <- dayAttr(a); dl <- midnightDate(l)) yield
-          org.apache.spark.sql.catalyst.expressions.GreaterThanOrEqual(d, dl)
-      case org.apache.spark.sql.catalyst.expressions.LessThan(
-        a: AttributeReference, l: Literal) =>
-        for (d <- dayAttr(a); dl <- midnightDate(l)) yield
-          org.apache.spark.sql.catalyst.expressions.LessThan(d, dl)
-      case org.apache.spark.sql.catalyst.expressions.LessThanOrEqual(
-        l: Literal, a: AttributeReference) =>
-        for (d <- dayAttr(a); dl <- midnightDate(l)) yield
-          org.apache.spark.sql.catalyst.expressions.GreaterThanOrEqual(d, dl)
-      case org.apache.spark.sql.catalyst.expressions.GreaterThan(
-        l: Literal, a: AttributeReference) =>
-        for (d <- dayAttr(a); dl <- midnightDate(l)) yield
-          org.apache.spark.sql.catalyst.expressions.LessThan(d, dl)
-      case _ => None
-    }
-  }
-
-  /** exprId/qualifier/alias-insensitive rendering for expression matching:
-    * two analyzed expressions over the same base match iff their SQL text
-    * matches after stripping the outer alias and attribute qualifiers.
-    */
-  private[plans] def renderForm(e: Expression): Option[String] = {
-    val noAlias = e match { case a: Alias => a.child; case x => x }
-    scala.util.Try(noAlias.transform {
-      case ar: AttributeReference => ar.withQualifier(Nil)
-    }.sql).toOption
-  }
-
-  /** avg(x) from the summary's (Σ s_x, Σ c_x): mirrors [[Average]]'s own
-    * evaluation — a decimal measure divides at Average's exact internal
-    * types (sum at decimal(p+10,s), count at decimal(20,0), result cast to
-    * Average.resultType), everything else at double — so a rerouted avg
-    * renders the value the base scan would. Float/double measures inherit
-    * the usual decomposition caveat (the base sums in row order, the
-    * summary pre-sums per group: equal in exact arithmetic, last-ulp free
-    * under IEEE — the same freedom sum(x) already has). TRY-mode averages
-    * refuse: their overflow-to-null points differ from the re-aggregated
-    * shape's.
-    */
-  private[plans] def avgFromPartials(a: Average, sumOfSums: Expression,
-      sumOfCounts: Expression): Option[Expression] =
-    if (a.evalMode == EvalMode.TRY) None
-    else a.child.dataType match {
-      // a.dataType IS Average.resultType (decimal(p+4,s+4) bounded);
-      // the internal sum buffer type is decimal(p+10,s) bounded
-      case dt: DecimalType =>
-        val sumType = DecimalType(math.min(dt.precision + 10, 38), dt.scale)
-        Some(Cast(Divide(Cast(sumOfSums, sumType),
-          Cast(sumOfCounts, DecimalType(20, 0))), a.dataType))
-      case _: NumericType => Some(Cast(Divide(Cast(sumOfSums, DoubleType),
-        Cast(sumOfCounts, DoubleType)), a.dataType))
-      case _ => None // interval averages keep their own algebra — refuse
-    }
-
-  /** sum/count/avg over an EXPRESSION OF GROUP COLUMNS, weighted by the
-    * summary's per-group `cnt`: f(group cols) is constant within a group,
-    * so Σ_base f = Σ_groups f·cnt, count_base(f) = Σ_{f≠null} cnt, and avg
-    * is their quotient. Integral f stays bit-exact (long arithmetic both
-    * ways); float/double inherit the reassociation caveat; decimal f
-    * refuses — mirroring the precision walk of f·cnt is not worth the rule
-    * surface.
-    */
-  private[plans] def sumOfGroupExpr(b: Expression,
-      cnt: AttributeReference): Option[Expression] =
-    b.dataType match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        Some(Sum(Multiply(Cast(b, LongType), cnt)).toAggregateExpression())
-      case DoubleType | FloatType =>
-        Some(Sum(Multiply(Cast(b, DoubleType), Cast(cnt, DoubleType)))
-          .toAggregateExpression())
-      case _ => None
-    }
-
-  private[plans] def countOfGroupExpr(b: Expression,
-      cnt: AttributeReference): Expression =
-    Coalesce(Seq(Sum(If(IsNull(b), Literal(0L), cnt)).toAggregateExpression(),
-      Literal(0L)))
-
-  private[plans] def avgOfGroupExpr(a: Average, b: Expression,
-      cnt: AttributeReference): Option[Expression] =
-    if (a.evalMode == EvalMode.TRY) None
-    else b.dataType match {
-      case dt: NumericType if !dt.isInstanceOf[DecimalType] =>
-        val w = Sum(Multiply(Cast(b, DoubleType), Cast(cnt, DoubleType)))
-          .toAggregateExpression()
-        val n = Sum(If(IsNull(b), Literal(0L), cnt)).toAggregateExpression()
-        Some(Cast(Divide(w, Cast(n, DoubleType)), a.dataType))
-      case _ => None
-    }
-
-  /** Inline collected Project aliases to fixpoint (stacked withColumns /
-    * PullOutGroupingExpressions chains), so matching always sees the
-    * base-column form of every expression.
-    */
-  private def inlineAliases(e: Expression,
-      aliases: Map[org.apache.spark.sql.catalyst.expressions.ExprId, Expression]): Expression = {
-    var cur = e
-    var i = 0
-    while (i < 10) {
-      val next = cur.transformUp {
-        case a: AttributeReference if aliases.contains(a.exprId) =>
-          aliases(a.exprId)
-      }
-      if (next.fastEquals(cur)) return cur
-      cur = next; i += 1
-    }
-    cur
-  }
-
-  private def rewriteWith(agg: Aggregate, conds: Seq[Expression],
-      aliases: Map[org.apache.spark.sql.catalyst.expressions.ExprId, Expression],
-      mv: MvDef): Option[LogicalPlan] = {
-    def inline(e: Expression): Expression = inlineAliases(e, aliases)
-    val groupSet = mv.groupCols.toSet
-    val measureSet = mv.measureCols.toSet
-
-    // analyzed summary relation with fresh attributes, mapped by name
-    val sumPlan = SparkSession.active.read.parquet(mv.summaryPath)
-      .queryExecution.analyzed
-    val byName = sumPlan.output.map(a => a.name -> a).toMap
-    def attrOf(name: String): Option[AttributeReference] =
-      byName.get(name).collect { case a: AttributeReference => a }
-
-    // derived-group matcher: query expression → summary attribute
-    val derivedByForm: Map[String, String] = mv.derivedGroups.flatMap {
-      case (name, sql) => derivedForm(mv.basePath, sql).map(_ -> name)
-    }.toMap
-    def derivedMatch(e: Expression): Option[AttributeReference] =
-      if (derivedByForm.isEmpty) None
-      else renderForm(e).flatMap(derivedByForm.get).flatMap(attrOf)
-
-    // a filter may reference plain group columns AND derived expressions;
-    // substitute matched derived subtrees by their summary column first,
-    // then every remaining reference must be a group column
-    def substituteDerived(cond: Expression): Expression = cond.transformDown {
-      case e if derivedMatch(e).isDefined => derivedMatch(e).get
-    }
-    // a grouping expression qualifies when, after alias inlining and
-    // derived substitution, EVERY leaf it references is a group column:
-    // grouping base rows by f(group cols) partitions exactly as grouping
-    // summary rows by the same f — the hierarchy-rollup case (month/year
-    // from a day summary, bucketed ranges of a group key) — so the
-    // decomposable re-aggregation stays correct. Non-deterministic or
-    // aggregate-bearing expressions never qualify.
-    def rewriteGrouping(e0: Expression): Option[Expression] = {
-      val sub = substituteDerived(inline(e0))
-      if (!sub.deterministic ||
-        sub.exists(_.isInstanceOf[AggregateExpression])) None
-      else {
-        val bound = sub.transform {
-          case a: AttributeReference => byName.getOrElse(a.name, a)
-        }
-        // every reference must be a summary GROUP attribute (plain or
-        // derived); a measure/partial column in grouping position would be
-        // a semantics change, not a rollup
-        val refsAreGroups = bound.references.forall(a =>
-          groupSet.contains(a.name) &&
-            byName.get(a.name).exists(_.exprId == a.exprId))
-        if (refsAreGroups) Some(bound) else None
-      }
-    }
-    val newGroupingsResolved = agg.groupingExpressions.map(rewriteGrouping)
-    val groupingsOk = newGroupingsResolved.forall(_.isDefined)
-    // day-hierarchy filter recovery: the optimizer rewrites
-    // `cast(ts as date) >= date d` into `ts >= timestamp midnight(d)`
-    // BEFORE this rule runs, so a dashboard's day-range filter arrives as
-    // raw-ts bounds. A conjunct bounding ts at an exact session-TZ
-    // midnight is equivalent to the day bound (ts >= mid(d) ⇔ day >= d;
-    // ts < mid(d) ⇔ day < d) whenever the zone has a fixed offset —
-    // under DST a day's first instant need not be 00:00, so non-fixed
-    // zones fall back rather than risk an off-by-one day.
-    val dayOfTs: Map[String, String] = mv.derivedGroups.flatMap {
-      case (name, sql) => derivedTsCol(mv.basePath, sql).map(_ -> name)
-    }.toMap
-    def splitConj(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => splitConj(l) ++ splitConj(r)
-      case x => Seq(x)
-    }
-    def tsBoundToDay(e: Expression): Option[Expression] =
-      MvRewriteRule.tsBoundToDayShared(e, dayOfTs, attrOf,
-        conf.sessionLocalTimeZone)
-    val conjuncts = conds.flatMap(c => splitConj(inline(c))).map { conj =>
-      val sub = substituteDerived(conj)
-      // determinism is required even for attribute-free conjuncts: a
-      // predicate like rand() < 0.1 applied per SUMMARY row would sample
-      // whole groups instead of base rows — a silent semantics change
-      val groupOnly = sub.deterministic && sub.collect {
-        case a: AttributeReference => groupSet.contains(a.name)
-      }.forall(identity)
-      if (groupOnly) Some(sub) else tsBoundToDay(conj)
-    }
-    if (!groupingsOk || conjuncts.exists(_.isEmpty)) return None
-    val condsSub = conjuncts.flatten
-
-    def rewriteAggFunc(e: AggregateExpression): Option[Expression] =
-      e.aggregateFunction match {
-        // TRY-mode sums refuse: try_sum's overflow-to-null point depends on
-        // per-row accumulation order, which the pre-summed partials erase
-        case s: Sum if s.evalContext.evalMode == EvalMode.TRY => None
-        case s: Sum => s.child match {
-          case a: AttributeReference if measureSet.contains(a.name) =>
-            attrOf(s"s_${a.name}").map(p => Sum(p).toAggregateExpression())
-          // sum over an expression of GROUP columns: constant per group,
-          // so the base total is the cnt-weighted total over summary rows
-          case ge => for {
-            b <- rewriteGrouping(ge)
-            cnt <- attrOf("cnt")
-            r <- sumOfGroupExpr(b, cnt)
-          } yield r
-        }
-        case a: Average => a.child match {
-          case ar: AttributeReference if measureSet.contains(ar.name) =>
-            for {
-              s <- attrOf(s"s_${ar.name}")
-              c <- attrOf(s"c_${ar.name}")
-              r <- avgFromPartials(a, Sum(s).toAggregateExpression(),
-                Sum(c).toAggregateExpression())
-            } yield r
-          case ge => for {
-            b <- rewriteGrouping(ge)
-            cnt <- attrOf("cnt")
-            r <- avgOfGroupExpr(a, b, cnt)
-          } yield r
-        }
-        case m: Min => m.child match {
-          case a: AttributeReference if measureSet.contains(a.name) =>
-            attrOf(s"mn_${a.name}").map(p => Min(p).toAggregateExpression())
-          // min over an expression of GROUP columns: the extreme over base
-          // rows equals the extreme over the distinct group combinations
-          // the summary holds — no arithmetic, any type, exact (the
-          // "earliest active day per type" dashboard shape)
-          case e => rewriteGrouping(e).map(b => Min(b).toAggregateExpression())
-        }
-        case m: Max => m.child match {
-          case a: AttributeReference if measureSet.contains(a.name) =>
-            attrOf(s"mx_${a.name}").map(p => Max(p).toAggregateExpression())
-          case e => rewriteGrouping(e).map(b => Max(b).toAggregateExpression())
-        }
-        case c: Count => c.children match {
-          case Seq(l: Literal) if l.value != null =>
-            attrOf("cnt").map(p => Coalesce(Seq(
-              Sum(p).toAggregateExpression(), Literal(0L))))
-          case Seq(a: AttributeReference) if measureSet.contains(a.name) =>
-            attrOf(s"c_${a.name}").map(p => Coalesce(Seq(
-              Sum(p).toAggregateExpression(), Literal(0L))))
-          // count over an expression of group columns (incl. count(NULL)):
-          // Σ cnt over summary rows where the expression is non-null
-          case Seq(one) => for {
-            b <- rewriteGrouping(one)
-            cnt <- attrOf("cnt")
-          } yield countOfGroupExpr(b, cnt)
-          case _ => None
-        }
-        case _ => None
-      }
-
-    def rewriteExpr(e: Expression): Option[Expression] = e match {
-      case ae @ AggregateExpression(_, _, false, None, _) => rewriteAggFunc(ae)
-      // COUNT(DISTINCT <group columns/expressions>) is EXACTLY answerable
-      // from the summary: the summary holds every distinct group
-      // combination, so distinct-counting group values over summary rows
-      // equals doing it over base rows (a finer summary grouping only adds
-      // rows the DISTINCT collapses). Distinct over measures stays refused
-      // — their per-row values are gone.
-      case AggregateExpression(c: Count, _, true, None, _)
-          if c.children.nonEmpty =>
-        val kids = c.children.map { e =>
-          val sub = substituteDerived(inline(e))
-          val bound = sub.transform {
-            case a: AttributeReference => byName.getOrElse(a.name, a)
-          }
-          val ok = sub.deterministic && bound.references.forall(a =>
-            groupSet.contains(a.name) &&
-              byName.get(a.name).exists(_.exprId == a.exprId))
-          if (ok) Some(bound) else None
-        }
-        if (kids.forall(_.isDefined))
-          Some(Count(kids.map(_.get)).toAggregateExpression(isDistinct = true))
-        else None
-      case _: AggregateExpression => None // other distinct / FILTER-clause aggs
-      case a: AttributeReference if groupSet.contains(a.name) =>
-        attrOf(a.name)
-      case e if derivedMatch(e).isDefined => derivedMatch(e)
-      case l: Literal => Some(l)
-      case _ if e.children.nonEmpty =>
-        val rewritten = e.children.map(rewriteExpr)
-        if (rewritten.forall(_.isDefined))
-          Some(e.withNewChildren(rewritten.map(_.get)))
-        else None
-      case _ => None
-    }
-
-    def rewriteNamed(ne: NamedExpression): Option[NamedExpression] = ne match {
-      case a: AttributeReference
-          if groupSet.contains(a.name) && !aliases.contains(a.exprId) =>
-        attrOf(a.name).map(p => Alias(p, a.name)(exprId = a.exprId))
-      case a: AttributeReference if aliases.contains(a.exprId) =>
-        // output attr that names a Project alias (e.g. a pulled-out
-        // grouping expression surfacing bare): rewrite its inlined form
-        rewriteExpr(inline(a)).map { c =>
-          val typed = if (c.dataType == a.dataType) c else Cast(c, a.dataType)
-          Alias(typed, a.name)(exprId = a.exprId)
-        }
-      case al @ Alias(child, name) =>
-        rewriteExpr(inline(child)).map { c =>
-          // re-aggregation can widen the type (decimal sum-of-sums grows
-          // precision); the output attribute must keep its original type
-          val typed = if (c.dataType == al.dataType) c else Cast(c, al.dataType)
-          Alias(typed, name)(exprId = al.exprId)
-        }
-      case _ => None
-    }
-
-    val newGroupings = newGroupingsResolved
-    val newResults = agg.aggregateExpressions.map(rewriteNamed)
-    if (newGroupings.exists(_.isEmpty) || newResults.exists(_.isEmpty)) None
-    else {
-      val child = condsSub.foldLeft(sumPlan) { (p, cond) =>
-        Filter(cond.transform {
-          case a: AttributeReference => byName.getOrElse(a.name, a)
-        }, p)
-      }
-      Some(Aggregate(newGroupings.map(_.get), newResults.map(_.get), child))
-    }
-  }
 }

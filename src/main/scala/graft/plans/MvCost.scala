@@ -213,7 +213,7 @@ object MvCost {
     ()
   }
 
-  /** Order star candidates cheapest-summary-first and drop those provably
+  /** Order candidates cheapest-summary-first and drop those provably
     * NOT worth serving ([[serves]]). When every kept candidate has a byte
     * size the order is by bytes; otherwise by rows; unknowns keep
     * registration order (sorted last) and always serve.
@@ -258,11 +258,4 @@ object MvCost {
 
   /** Byte-tier engagement floor — see [[serves]]. */
   private val minByteSignal = 1L << 20
-
-  /** The single-table gate: serve `mv` only when its summary is smaller
-    * than the base scan (or either side is unknown).
-    */
-  private[plans] def worthServing(spark: SparkSession, summaryPath: String,
-      baseSize: SizeEst): Boolean =
-    !enabled || serves(sizeOf(spark, summaryPath), baseSize)
 }

@@ -1,146 +1,66 @@
 package graft.plans
 
 import graft.plans.MaterializedView.MvDef
+import graft.plans.StarMv.StarMvDef
 import graft.sources.VersionedTableStore
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Durable, crash-safe maintenance of one materialized view over one
-  * CDC-synced [[ParquetTableStore]] — the streaming half of the
-  * summary-table story: the store merges micro-batches, [[sync]] applies
-  * each merge's row-valued change feed to the summary
-  * ([[MaterializedView.refreshFromFeed]]), and a tiny state file records
-  * (MV definition, synced store version) so a restarted pipeline resumes
-  * maintenance exactly where it stopped.
+/** Durable, crash-safe maintenance of one single-table materialized view
+  * over one CDC-synced [[VersionedTableStore]]: the store merges
+  * micro-batches, [[sync]] applies each merge's change feed to the
+  * summary, and a state file records (MV definition, synced store
+  * version) so a restarted pipeline resumes exactly where it stopped.
   *
-  * Why a state file: the signed-partial algebra of incremental refresh is
-  * NOT idempotent — applying one batch's feed twice double-subtracts its
-  * deletes — so "which store version has the summary absorbed" must
-  * survive the process. The protocol makes every crash window safe:
+  * The MV is the one-table star ([[MvDef.asStar]]), so the sync and
+  * commit protocol is [[StarMvMaintainer]]'s: refresh the next summary
+  * generation from the feed, re-arm snapshot serving, commit the state
+  * file with one atomic rename, gc old generations — and restore the
+  * committed registration when any step before the commit fails. What
+  * this class adds is the single-table face: the definition lives in
+  * [[MaterializedView]]'s per-base registry (so it is an [[MvDef]], equal
+  * to the one [[MaterializedView.build]] returned, up to its summary
+  * path), a sync refuses when another actor moved that registration, and
+  * the state file keeps its own format (keys `base`, `group`, `measure`,
+  * `summary`, `derived`, `storeVersion`).
   *
-  *  1. refresh writes the NEXT summary version dir (`<stem>_v<k+1>`,
-  *     `mode=overwrite`) — the state file still points at `_v<k>`;
-  *  2. the state file is atomically renamed to (def@`_v<k+1>`,
-  *     storeVersion) — THE commit point;
-  *  3. summary dirs two generations behind are gc'd.
-  *
-  * Crash before 2 re-runs the refresh from `_v<k>` on restart and
-  * overwrites the orphan `_v<k+1>` with identical content; crash after 2
-  * resumes cleanly. The store must retain enough versions to cover the
-  * sync gap (`retainedVersions >= 2` for per-batch syncing; more if syncs
-  * are less frequent than merges — [[ParquetTableStore.changeFeedBetween]]
-  * fails loudly when a version aged out).
-  *
-  * Scale: per sync, one delta-proportional full-outer join (the feed),
-  * delta-sized refresh partials, and at most one pruned repair scan —
-  * never a summary or base rebuild. Driver state is the MvDef and two
-  * longs.
-  *
-  * Single maintainer per MV, same writer contract as the store itself.
+  * The store must retain enough versions to cover the sync gap
+  * (`retainedVersions >= 2` for per-batch syncing; more if syncs are less
+  * frequent than merges — `changeFeedBetween` fails loudly when a
+  * version aged out). Single maintainer per MV, same writer contract as
+  * the store itself.
   */
-final class MvMaintainer private (
-    spark: SparkSession,
-    store: VersionedTableStore,
-    statePath: String,
-    // @volatile: attachMetrics' freshness probe reads these from the
-    // metrics server thread while sync() mutates them under `synchronized`
-    @volatile private var d: MvDef,
-    @volatile private var synced: Long) {
+final class MvMaintainer private (inner: StarMvMaintainer, template: MvDef) {
 
   /** Surface this summary's synced-vs-current version lag in the state
     * endpoint — see [[StarMvMaintainer.attachMetrics]].
     */
-  def attachMetrics(metrics: graft.obs.PipelineMetrics): Unit = {
-    val name = d.summaryPath.replaceAll("_v\\d+$", "")
-    metrics.registerMvFreshness(name, () =>
-      Map(MaterializedView.normalize(d.basePath) ->
-        (synced, store.currentVersion)))
-  }
+  def attachMetrics(metrics: graft.obs.PipelineMetrics): Unit =
+    inner.attachMetrics(metrics)
 
   /** The store version the summary currently reflects. */
-  def syncedVersion: Long = synced
+  def syncedVersion: Long = inner.syncedVersions.values.head
 
   /** The current MV definition (summary path advances per sync). */
-  def definition: MvDef = d
+  def definition: MvDef = template.copy(summaryPath = inner.definition.summaryPath)
 
   /** Absorb every store version committed since the last sync into the
     * summary, commit the state file, gc summary dirs older than
-    * `keepSummaries` generations. No-op when already current. Returns the
-    * post-sync definition.
+    * `keepSummaries` generations. A version-level no-op still re-arms
+    * serving (a MOR compaction moves the dir set without a new version).
+    * Returns the post-sync definition.
     */
-  def sync(recomputeKeyCap: Int = 1000, keepSummaries: Int = 2): MvDef =
-    syncTo(store.currentVersion, recomputeKeyCap, keepSummaries)
+  def sync(recomputeKeyCap: Int = 1000, keepSummaries: Int = 2): MvDef = {
+    inner.sync(recomputeKeyCap, keepSummaries); definition
+  }
 
   /** Sync to the version a [[graft.sources.SnapshotCatalog]] last
     * COMMITTED for this table instead of the store's current version —
-    * the single-table face of [[StarMvMaintainer.syncToBoundary]]: the
-    * summary then always reflects a catalog boundary, so rollups over
-    * `catalog.snapshot(table)` reroute while reads of versions past the
-    * boundary structurally fall back.
+    * see [[StarMvMaintainer.syncToBoundary]].
     */
   def syncToBoundary(catalog: graft.sources.SnapshotCatalog,
-      recomputeKeyCap: Int = 1000, keepSummaries: Int = 2): MvDef =
-    syncTo(catalog.current().getOrElse(store.spec.name,
-      throw new IllegalArgumentException(
-        s"catalog has no entry for table ${store.spec.name} — commit() " +
-          "the catalog at least once")),
-      recomputeKeyCap, keepSummaries)
-
-  private def syncTo(v: Long, recomputeKeyCap: Int,
-      keepSummaries: Int): MvDef =
-    synchronized {
-      if (v == synced) return d
-      require(v > synced,
-        s"store ${store.spec.name} is at version $v but the maintainer " +
-          s"already synced $synced — state file $statePath belongs to a " +
-          "different store lineage")
-      val feed = store.changeFeedBetween(synced, v)
-      // the signed algebra is NOT idempotent, so a refresh must start
-      // from the summary this maintainer COMMITTED — refuse if some other
-      // actor moved the registration (refreshing from an uncommitted
-      // summary would re-apply this feed on the already-refreshed state,
-      // double-subtracting its deletes)
-      val reg = MaterializedView.lookup(MaterializedView.normalize(d.basePath))
-      require(reg.contains(d),
-        s"registry for ${d.basePath} holds ${reg.map(_.summaryPath)} but " +
-          s"the maintainer committed ${d.summaryPath} — state file " +
-          s"$statePath is not the owner of this MV")
-      val nd = try {
-        val nd0 = MaterializedView.refreshFromFeed(spark, d.basePath, feed,
-          recomputeKeyCap, base = Some(store.snapshotAt(v)))
-        // serving first (in-process consistency: the refresh just
-        // registered the new definition, so the dir sets must move with
-        // it — queries over the NEW version's set reroute to the
-        // refreshed summary, every superseded set is dropped, and a
-        // time-travel read of an old version is never served the new
-        // summary), then the durable state commit; a crash between the
-        // two re-runs this sync idempotently.
-        MaterializedView.replaceDirs(nd0.basePath, store.dataDirsAt(v),
-            store.stackedDirsAt(v))
-        MvMaintainer.writeState(spark, statePath, nd0, v)
-        nd0
-      } catch {
-        // refreshFromFeed registers the refreshed def as it runs; if
-        // anything up to and including the state commit fails, restore
-        // the COMMITTED registration (and its serving dirs, best-effort)
-        // so the documented batch re-run re-applies the same feed against
-        // the state the state file actually points at — instead of
-        // double-applying it on the uncommitted summary
-        case t: Throwable =>
-          MaterializedView.register(d)
-          scala.util.Try(
-            MaterializedView.replaceDirs(d.basePath, store.dataDirsAt(synced),
-              store.stackedDirsAt(synced)))
-          throw t
-      }
-      val stale = MvMaintainer.olderSummaries(nd.summaryPath, keepSummaries)
-      d = nd
-      synced = v
-      val fs = new Path(statePath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      stale.foreach(p => fs.delete(new Path(p), true))
-      d
-    }
+      recomputeKeyCap: Int = 1000, keepSummaries: Int = 2): MvDef = {
+    inner.syncToBoundary(catalog, recomputeKeyCap, keepSummaries); definition
+  }
 }
 
 object MvMaintainer {
@@ -149,14 +69,9 @@ object MvMaintainer {
     * store's CURRENT version) and write the initial state file.
     */
   def create(spark: SparkSession, store: VersionedTableStore, d: MvDef,
-      statePath: String): MvMaintainer = {
-    MaterializedView.register(d)
-    val v = store.currentVersion
-    writeState(spark, statePath, d, v)
-    MaterializedView.replaceDirs(d.basePath, store.dataDirsAt(v),
-            store.stackedDirsAt(v))
-    new MvMaintainer(spark, store, statePath, d, v)
-  }
+      statePath: String): MvMaintainer =
+    new MvMaintainer(StarMvMaintainer.start(spark, Map(d.basePath -> store),
+      d.asStar, statePath, new Single(d)), d)
 
   /** Resume from a state file after a restart: re-registers the recorded
     * MvDef (the rewrite rule serves queries again immediately) and
@@ -164,16 +79,7 @@ object MvMaintainer {
     */
   def open(spark: SparkSession, store: VersionedTableStore,
       statePath: String): MvMaintainer = {
-    val p = new Path(statePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"no maintainer state at $statePath — create() first")
-    val in = fs.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val kv = body.linesIterator.filter(_.nonEmpty).map { l =>
-      val i = l.indexOf('\t'); l.substring(0, i) -> l.substring(i + 1)
-    }.toMap
-    def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
+    val kv = StarMvMaintainer.readState(spark, statePath)
     def list(s: String) = if (s.isEmpty) Nil else s.split(",", -1).toSeq.map(dec)
     val d = MvDef(
       basePath = dec(kv("base")),
@@ -184,32 +90,56 @@ object MvMaintainer {
         else kv("derived").split(",", -1).toSeq.map { pair =>
           val Array(n, sql) = pair.split("=", 2); (dec(n), dec(sql))
         })
-    MaterializedView.register(d)
-    val synced = kv("storeVersion").toLong
-    // re-arm snapshot serving when the synced version is still retained;
-    // if it aged out, serving stays off and the next sync() fails loudly
-    // (the feed needs that version too) — the rebuild signal.
-    scala.util.Try(
-      MaterializedView.replaceDirs(d.basePath, store.dataDirsAt(synced),
-        store.stackedDirsAt(synced)))
-    new MvMaintainer(spark, store, statePath, d, synced)
+    new MvMaintainer(StarMvMaintainer.resume(spark,
+      Map(d.basePath -> store), statePath, d.asStar,
+      Map(MaterializedView.normalize(d.basePath) -> kv("storeVersion").toLong),
+      new Single(d)), d)
   }
 
   private def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+  private def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
 
-  private[plans] def writeState(spark: SparkSession, statePath: String,
-      d: MvDef, storeVersion: Long): Unit = {
-    val body = Seq(
-      "base" -> enc(d.basePath),
-      "group" -> d.groupCols.map(enc).mkString(","),
-      "measure" -> d.measureCols.map(enc).mkString(","),
-      "summary" -> enc(d.summaryPath),
-      "derived" -> d.derivedGroups
-        .map { case (n, sql) => s"${enc(n)}=${enc(sql)}" }.mkString(","),
-      "storeVersion" -> storeVersion.toString)
-      .map { case (k, v) => s"$k\t$v" }.mkString("\n").getBytes("UTF-8")
-    graft.sources.AtomicFiles.write(
-      spark.sparkContext.hadoopConfiguration, new Path(statePath), body)
+  /** The single-table [[StarMvMaintainer.Registration]]: every committed
+    * generation of `template` is registered as an [[MvDef]] under its
+    * base path.
+    */
+  private final class Single(template: MvDef)
+      extends StarMvMaintainer.Registration {
+    private def mv(d: StarMvDef): MvDef =
+      template.copy(summaryPath = d.summaryPath)
+
+    def register(d: StarMvDef): Unit = MaterializedView.register(mv(d))
+
+    // the registry holds one MV per base, so re-registering replaces
+    def restore(failed: StarMvDef, committed: StarMvDef): Unit =
+      register(committed)
+
+    def refresh(spark: SparkSession, d: StarMvDef, table: String,
+        feed: DataFrame, recomputeKeyCap: Int,
+        overrides: Map[String, DataFrame]): StarMvDef = {
+      // the signed algebra is NOT idempotent, so a refresh must start
+      // from the summary this maintainer COMMITTED — refuse if some other
+      // actor moved the registration (refreshing from an uncommitted
+      // summary would re-apply this feed on the already-refreshed state,
+      // double-subtracting its deletes)
+      val reg = MaterializedView.lookup(MaterializedView.normalize(table))
+      require(reg.contains(mv(d)),
+        s"registry for ${template.basePath} holds ${reg.map(_.summaryPath)} " +
+          s"but the maintainer committed ${d.summaryPath} — its state file " +
+          "is not the owner of this MV")
+      MaterializedView.refreshFromFeed(spark, template.basePath, feed,
+        recomputeKeyCap, overrides.values.headOption).asStar
+    }
+
+    def state(d: StarMvDef, synced: Map[String, Long]): Seq[(String, String)] =
+      Seq(
+        "base" -> enc(template.basePath),
+        "group" -> template.groupCols.map(enc).mkString(","),
+        "measure" -> template.measureCols.map(enc).mkString(","),
+        "summary" -> enc(d.summaryPath),
+        "derived" -> template.derivedGroups
+          .map { case (n, sql) => s"${enc(n)}=${enc(sql)}" }.mkString(","),
+        "storeVersion" -> synced.values.head.toString)
   }
 
   /** Summary dirs of the same stem at least `keep` generations behind

@@ -10,8 +10,8 @@ import java.util.concurrent.atomic.AtomicLong
   * identity:
   *
   *  - `hits`: times the rewrite actually rerouted a query to the summary
-  *    (recorded at every serve decision in [[MvRewriteRule]] /
-  *    [[StarMv]]; approximate under re-optimization — an advisor signal,
+  *    (recorded at every serve decision in [[StarMv.tryRewrite]];
+  *    approximate under re-optimization — an advisor signal,
   *    not an audit log);
   *  - `maintEvents`: refresh/rebuild waves applied (each one rewrites
   *    the summary — the recurring cost serving must amortize).

@@ -5,20 +5,24 @@ import java.util.concurrent.CopyOnWriteArrayList
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, Cast, Coalesce, EqualTo, EvalMode, Expression, IsNotNull, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, Cast, Coalesce, Divide, EqualTo, EvalMode, ExprId, Expression, GreaterThan, GreaterThanOrEqual, If, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Multiply, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.Inner
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Filter, Join, LogicalPlan, Project}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, count, expr, lit, max, min, sum}
+import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, NumericType, ShortType, TimestampNTZType, TimestampType}
 
 /** Star-schema materialized views: a summary table pre-joining a fact with
   * its dimensions and pre-aggregating per group, plus a Catalyst rewrite
   * that reroutes a matching aggregate-over-join query to the summary — the
   * classic warehouse accelerator the reference's users get from Greenplum
   * summary tables over CDC-synced star schemas (reference: README.md:9,15).
-  * [[MaterializedView]] covers single-table rollups; this covers the
-  * fact⋈dimension shape (q73-style) where the join itself is the cost.
+  * This is the ONE materialized-view engine: a single-table
+  * [[MaterializedView.MvDef]] is the one-table star with no joins
+  * ([[MaterializedView.MvDef.asStar]]), built, refreshed and served by
+  * the same code as the fact⋈dimension shape (q73-style), where the join
+  * itself is the cost.
   *
   * Matching is EXACT on the relational algebra, not the plan shape: the
   * query's inner-equi-join tree is flattened to (leaf set, join-pair set)
@@ -26,10 +30,10 @@ import org.apache.spark.sql.functions.{col, count, expr, lit, max, min, sum}
   * and commutative, so any join order the optimizer picks still matches,
   * while a missing table, an extra table, an outer join, or a different
   * join key refuses. Because the summary IS `groupBy(groupCols)` over that
-  * exact join, matching queries re-aggregate it with the same decomposable
-  * algebra as the single-table rule (sum→sum, min/max→min/max of partials,
-  * count→sum of counts, avg→sum of sums over sum of counts at Average's
-  * own internal types) — no PK/FK or multiplicity reasoning needed.
+  * exact join, matching queries re-aggregate it with decomposable
+  * algebra (sum→sum, min/max→min/max of partials, count→sum of counts,
+  * avg→sum of sums over sum of counts at Average's own internal types) —
+  * no PK/FK or multiplicity reasoning needed.
   *
   * Filter conjuncts must be deterministic and reference only group columns
   * (replayed on the summary — a group column's value survives the groupBy,
@@ -41,12 +45,11 @@ import org.apache.spark.sql.functions.{col, count, expr, lit, max, min, sum}
   *
   * Measures are plain fact/dimension columns or registered DERIVED
   * expressions over the join (`revenue = price * (1 - discount)`), matched
-  * against the query's analyzed form exactly as
-  * [[MaterializedView.MvDef.derivedGroups]] matches derived groups.
+  * against the query's optimized form exactly as derived groups are.
   *
   * Maintenance: [[rebuild]] (Greenplum's non-incremental `REFRESH` posture)
   * or real join-delta IVM — [[refreshTableDelta]] applies one table's CDC
-  * batch via delta joins against the other tables (version-pinnable
+  * batch via one signed delta join against the other tables (version-pinnable
   * through `tableOverrides` for multi-table batches), and
   * [[StarMvMaintainer]] runs that loop durably over versioned stores'
   * change feeds.
@@ -255,8 +258,8 @@ object StarMv {
   }
 
   /** render-form of each derived measure, analyzed against the joined
-    * relation once per (summaryPath) and cached — the same
-    * exprId-insensitive matching [[MvRewriteRule]] uses for derived groups.
+    * relation once per (summaryPath) and cached — exprId-insensitive
+    * matching ([[renderForm]]) against the query's aggregate children.
     */
   private val derivedFormCache =
     new java.util.concurrent.ConcurrentHashMap[String, Map[String, String]]()
@@ -276,11 +279,15 @@ object StarMv {
     derivedGroupFormCache.computeIfAbsent(d.summaryPath, { _ =>
       renderedForms(spark, d, d.derivedGroups) })
 
+  /** Every derived SQL is analyzed against the tables read from their
+    * paths; a definition whose tables are pure registry keys (store
+    * snapshots passed as overrides) or whose SQL does not resolve simply
+    * matches nothing — never a build or serving failure.
+    */
   private def renderedForms(spark: SparkSession, d: StarMvDef,
       defs: Seq[(String, String)]): Map[String, String] =
     if (defs.isEmpty) Map.empty
-    else {
-      val joined = joinTables(spark, d)
+    else joinedForAnalysis(spark, d).toSeq.flatMap { joined =>
       defs.flatMap { case (name, sql) =>
         scala.util.Try {
           // OPTIMIZED form, not merely analyzed: the query-side
@@ -293,13 +300,17 @@ object StarMv {
             case Project(pl, _) => pl.head
             case other => other.expressions.head
           }
-          MvRewriteRule.renderForm(e)
+          renderForm(e)
         }.toOption.flatten.map(_ -> name)
-      }.toMap
-    }
+      }
+    }.toMap
+
+  private def joinedForAnalysis(spark: SparkSession,
+      d: StarMvDef): Option[DataFrame] =
+    scala.util.Try(joinTables(spark, d)).toOption
 
   /** derived groups that are exactly `cast(<ts> as date)`: ts column name
-    * → day group name, feeding the shared day-range filter recovery.
+    * → day group name, feeding the day-range filter recovery.
     */
   private val derivedTsCache =
     new java.util.concurrent.ConcurrentHashMap[String, Map[String, String]]()
@@ -307,8 +318,7 @@ object StarMv {
   private[plans] def derivedTsCols(spark: SparkSession, d: StarMvDef): Map[String, String] =
     derivedTsCache.computeIfAbsent(d.summaryPath, { _ =>
       if (d.derivedGroups.isEmpty) Map.empty
-      else {
-        val joined = joinTables(spark, d)
+      else joinedForAnalysis(spark, d).toSeq.flatMap { joined =>
         d.derivedGroups.flatMap { case (name, sql) =>
           scala.util.Try {
             val analyzed = joined.select(expr(sql).as("__dg"))
@@ -321,9 +331,29 @@ object StarMv {
               case _ => None
             }
           }.toOption.flatten.map(_ -> name)
-        }.toMap
-      }
+        }
+      }.toMap
     })
+
+  private def formCaches = Seq(derivedFormCache, derivedGroupFormCache,
+    derivedTsCache)
+
+  /** Drop a (re)built summary path's cached forms and sizes. */
+  private def retire(summaryPath: String): Unit = {
+    formCaches.foreach(_.remove(summaryPath))
+    MvCost.evict(summaryPath)
+  }
+
+  /** Move a refreshed summary's cached forms to its next path — a refresh
+    * changes neither the tables nor the derived SQL, so they are analyzed
+    * once per MV, not once per refresh — and drop the retired path's
+    * sizes. One entry per live path: a per-micro-batch maintainer leaks
+    * nothing.
+    */
+  private def advance(from: String, to: String): Unit = {
+    formCaches.foreach(c => Option(c.remove(from)).foreach(c.put(to, _)))
+    MvCost.evict(from)
+  }
 
   /** Fold the registered tables into one joined DataFrame, connecting one
     * new table per step; pairs whose tables are both already connected
@@ -379,11 +409,7 @@ object StarMv {
     * base join — correct, just unaccelerated for that window.
     */
   def rebuild(spark: SparkSession, d: StarMvDef): StarMvDef = {
-    val base = d.summaryPath.replaceAll("_v\\d+$", "")
-    val next =
-      if (d.summaryPath == base) s"${base}_v1"
-      else base + "_v" + (d.summaryPath.substring(
-        d.summaryPath.lastIndexOf("_v") + 2).toInt + 1)
+    val next = nextSummaryPath(d.summaryPath)
     unregister(d.summaryPath)
     MvUsage.recordMaintenance(next) // a rebuild is a (full) maintenance wave
     build(spark, d.copy(summaryPath = next))
@@ -397,18 +423,24 @@ object StarMv {
     * fact. `inserts`/`deletes` carry the changed table's columns (a delete
     * row restates the deleted row's values — the CDC delete image); call
     * AFTER the batch landed in that table (the min/max repair reads the
-    * CURRENT join).
+    * CURRENT join). A single-table MV is the no-join case: the "delta
+    * join" is the delta itself.
     *
-    * Maintenance algebra = [[MaterializedView.refreshDelta]]'s, lifted to
-    * the join: sum/count/cnt partials merge by signed addition; min/max
-    * are unmaintainable under deletes, so groups whose stored extreme a
-    * deleted value touches are recomputed from the post-batch join in one
-    * pruned pass (broadcast semi join on the batch-bounded affected key
-    * set; per-column IN pushdown under `recomputeKeyCap`). All
-    * maintenance joins are null-safe — NULL dimension values are legal
-    * group keys. A group whose cnt reaches 0 leaves the summary; negative
-    * cnt (deleting join rows that never existed) fails loudly in-plan.
-    * Same versioned-path swap and crash posture as [[rebuild]].
+    * Maintenance algebra: sum/count/cnt partials merge by SIGNED
+    * addition — old + insert partials − delete partials, one fixed op
+    * sequence per group (exact for integer/decimal measures; float sums
+    * inherit the standard IVM caveat that a−b+b need not bit-equal a).
+    * min/max are unmaintainable under deletes, so groups whose stored
+    * extreme a deleted value touches are recomputed from the post-batch
+    * join in one pruned pass (broadcast semi join on the batch-bounded
+    * affected key set; per-column IN pushdown under `recomputeKeyCap`).
+    * All maintenance joins are null-safe — NULL dimension values are
+    * legal group keys. A group whose cnt reaches 0 leaves the summary;
+    * negative cnt (deleting join rows that never existed) fails loudly
+    * in-plan. The next summary generation is written to a fresh
+    * versioned path (`<path>_v<n>`) and only then registered, so a
+    * planned reader never sees half-written files and a failed refresh
+    * leaves the registry on the old, consistent version.
     *
     * Changing a DIMENSION's join-key or group columns mid-stream is the
     * one shape this cannot maintain cheaply (it re-keys history) — batch
@@ -417,14 +449,32 @@ object StarMv {
     * restate the OLD dimension rows, and a simpler operational answer is
     * [[rebuild]].
     *
-    * Cost: two delta joins (delta × bounded dims — broadcast-sized in the
-    * star shape) + a groups-sized merge + a pruned recompute ∝ affected
-    * groups. Never a full re-join.
+    * Cost: one signed delta join (delta × bounded dims — broadcast-sized
+    * in the star shape) + a groups-sized merge + a pruned recompute ∝
+    * affected groups. Never a full re-join.
     */
   def refreshTableDelta(spark: SparkSession, d: StarMvDef, tablePath: String,
       inserts: DataFrame, deletes: DataFrame,
       recomputeKeyCap: Int = 1000,
       tableOverrides: Map[String, DataFrame] = Map.empty): StarMvDef = {
+    require(registry.contains(d), "refreshTableDelta needs the CURRENTLY " +
+      "registered definition (register/build first)")
+    val nd = applyDelta(spark, d, tablePath, inserts, deletes,
+      recomputeKeyCap, tableOverrides)
+    unregister(d.summaryPath)
+    register(nd)
+    nd
+  }
+
+  /** The refresh algebra of [[refreshTableDelta]], shared by every MV:
+    * writes the next summary generation, moves the old path's caches to
+    * it and returns the advanced definition. Registering it is the
+    * caller's.
+    */
+  private[plans] def applyDelta(spark: SparkSession, d: StarMvDef,
+      tablePath: String, inserts: DataFrame, deletes: DataFrame,
+      recomputeKeyCap: Int,
+      tableOverrides: Map[String, DataFrame]): StarMvDef = {
     import org.apache.spark.sql.functions.{broadcast, coalesce, concat, concat_ws, raise_error, when}
     val path = MaterializedView.normalize(tablePath)
     require(d.tables.map(MaterializedView.normalize).contains(path),
@@ -445,8 +495,6 @@ object StarMv {
     overrides.keys.foreach { p =>
       require(d.tables.map(MaterializedView.normalize).contains(p),
         s"override $p is not one of the MV's tables") }
-    require(registry.contains(d), "refreshTableDelta needs the CURRENTLY " +
-      "registered definition (register/build first)")
     // Lossless-integrity guards: the sub-join serving contract was proved
     // at build; a delta can break it two ways, both checked here at delta
     // cost and failing LOUDLY (rebuild, or drop the declaration) rather
@@ -637,49 +685,50 @@ object StarMv {
         .otherwise(when(col(s"c_$m") === 0,
           lit(null).cast(oldTypes(s"mx_$m"))).otherwise(col(s"mx_$m")))
         .as(s"mx_$m"))) :+ col("cnt")
-    val next = {
-      val b = d.summaryPath.replaceAll("_v\\d+$", "")
-      if (d.summaryPath == b) s"${b}_v1"
-      else b + "_v" + (d.summaryPath.substring(
-        d.summaryPath.lastIndexOf("_v") + 2).toInt + 1)
-    }
-    repaired.select(finalCols: _*).write.mode("overwrite").parquet(next)
-    affectedOpt.foreach(_.unpersist())
-    val nd = d.copy(summaryPath = next)
-    unregister(d.summaryPath)
-    // drop the RETIRED path's cached forms (the new path has none yet) —
-    // a per-micro-batch maintainer would otherwise leak one dead entry
-    // per sync in each cache for the session's lifetime
-    derivedFormCache.remove(d.summaryPath)
-    derivedGroupFormCache.remove(d.summaryPath)
-    derivedTsCache.remove(d.summaryPath)
-    register(nd)
-    MvUsage.recordMaintenance(nd.summaryPath)
-    nd
+    val next = nextSummaryPath(d.summaryPath)
+    try repaired.select(finalCols: _*).write.mode("overwrite").parquet(next)
+    finally affectedOpt.foreach(_.unpersist())
+    advance(d.summaryPath, next)
+    MvUsage.recordMaintenance(next)
+    d.copy(summaryPath = next)
+  }
+
+  /** The summary generation after `summaryPath`: `<stem>_v<n+1>`, the
+    * unversioned build path counting as generation 0.
+    */
+  private[plans] def nextSummaryPath(summaryPath: String): String = {
+    val stem = summaryBase(summaryPath)
+    if (summaryPath == stem) s"${stem}_v1"
+    else stem + "_v" + (summaryPath.substring(
+      summaryPath.lastIndexOf("_v") + 2).toInt + 1)
   }
 
   /** Apply a row-valued change feed on ONE registered table (the
     * [[graft.operators.SnapshotDiff.changeFeed]] schema) as one
     * incremental refresh: insert/update_post rows are the table's delta
-    * inserts, delete/update_pre its delta deletes — the star lift of
-    * [[MaterializedView.refreshFromFeed]]. The feed is persisted for the
-    * span of the call (both delta joins consume it).
+    * inserts, delete/update_pre its delta deletes — an update contributes
+    * its pre-image to the subtraction and its post-image to the addition.
     */
   def refreshTableFromFeed(spark: SparkSession, d: StarMvDef,
       tablePath: String, feed: DataFrame, recomputeKeyCap: Int = 1000,
-      tableOverrides: Map[String, DataFrame] = Map.empty): StarMvDef = {
+      tableOverrides: Map[String, DataFrame] = Map.empty): StarMvDef =
+    splitFeed(feed)((ins, del) => refreshTableDelta(spark, d, tablePath,
+      ins, del, recomputeKeyCap, tableOverrides))
+
+  /** Split a change feed into (inserts, deletes) for one refresh. The
+    * feed is persisted for the span of `body` (both sides of the signed
+    * delta read it) — at steady state it is delta-sized by construction.
+    */
+  private[plans] def splitFeed[T](feed: DataFrame)(
+      body: (DataFrame, DataFrame) => T): T = {
     require(feed.columns.contains("_change"),
       s"feed must carry a _change column (got ${feed.columns.toSeq}) — " +
         "produce it with SnapshotDiff.changeFeed / changeFeedBetween")
     val f = feed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val ins = f.filter(col("_change").isin("insert", "update_post"))
-        .drop("_change")
-      val del = f.filter(col("_change").isin("delete", "update_pre"))
-        .drop("_change")
-      refreshTableDelta(spark, d, tablePath, ins, del, recomputeKeyCap,
-        tableOverrides)
-    } finally { f.unpersist(blocking = false); () }
+    try body(
+      f.filter(col("_change").isin("insert", "update_post")).drop("_change"),
+      f.filter(col("_change").isin("delete", "update_pre")).drop("_change"))
+    finally { f.unpersist(blocking = false); () }
   }
 
   /** Compute and write the pre-joined summary, register the definition.
@@ -703,25 +752,30 @@ object StarMv {
       s"group/measure/derived names must be globally unique: $names")
     require(d.tables.map(MaterializedView.normalize).distinct.size ==
       d.tables.size, "duplicate table paths in star MV definition")
-    verifyLossless(spark, d, tableOverrides.map { case (p, df) =>
-      MaterializedView.normalize(p) -> df })
+    val overrides = tableOverrides.map { case (p, df) =>
+      MaterializedView.normalize(p) -> df }
+    verifyLossless(spark, d, overrides)
     unregister(d.summaryPath) // a stale twin must not satisfy the build scan
-    derivedFormCache.remove(d.summaryPath)
-    derivedGroupFormCache.remove(d.summaryPath)
-    derivedTsCache.remove(d.summaryPath)
-    derivedForms(spark, d) // analyze derived measures before the build scan
+    materialize(spark, d, overrides)
+    register(d)
+    d
+  }
+
+  /** Write `d`'s summary from its tables (`overrides`, keyed by normalized
+    * path, substitute table content — versioned-store snapshots — so the
+    * table paths can be pure registry keys; same contract as
+    * [[refreshTableDelta]]). Derived forms are analyzed first, against
+    * the paths: with store keys they just never match.
+    */
+  private[plans] def materialize(spark: SparkSession, d: StarMvDef,
+      overrides: Map[String, DataFrame]): Unit = {
+    retire(d.summaryPath)
+    derivedForms(spark, d) // analyze derived SQL before the build scan
     derivedGroupForms(spark, d)
     derivedTsCols(spark, d)
-    // `tableOverrides` substitutes table content (versioned-store
-    // snapshots) so the table paths can be pure registry keys — same
-    // contract as refreshTableDelta. Derived-measure form analysis above
-    // still reads the paths (it needs only schemas); pass real paths or
-    // no derivedMeasures when tables are stores.
-    val joined0 = joinTables(spark, d,
-      tableOverrides.map { case (pth, df) =>
-        MaterializedView.normalize(pth) -> df })
     val joined = (d.derivedMeasures ++ d.derivedGroups)
-      .foldLeft(joined0) { case (acc, (n, sql)) => acc.withColumn(n, expr(sql)) }
+      .foldLeft(joinTables(spark, d, overrides)) {
+        case (acc, (n, sql)) => acc.withColumn(n, expr(sql)) }
     val allMeasures = d.measureCols.map(_.name) ++ d.derivedMeasures.map(_._1)
     val partials = allMeasures.flatMap(m => Seq(
       sum(col(m)).as(s"s_$m"), count(col(m)).as(s"c_$m"),
@@ -730,8 +784,6 @@ object StarMv {
     joined.groupBy(d.groupNames.map(col): _*)
       .agg(partials.head, partials.tail: _*)
       .write.mode("overwrite").parquet(d.summaryPath)
-    register(d)
-    d
   }
 
   /** `CREATE MATERIALIZED VIEW … AS <query>`: derive the definition FROM
@@ -846,23 +898,8 @@ object StarMv {
       "every leaf must be a single-root parquet relation")
     val paths = pathed.map(_._2)
     require(paths.distinct.size == paths.size, "self-joins refuse")
-    val qcolOf: Map[org.apache.spark.sql.catalyst.expressions.ExprId, QCol] =
-      pathed.flatMap { case (rel, path) =>
-        // lower-cased like QCol.normalized: a warehouse leaf surfaces
-        // the catalog's case folding, definitions carry the user's
-        rel.output.map(a => a.exprId ->
-          QCol(path, a.name.toLowerCase(java.util.Locale.ROOT))) }.toMap
-    def inline(e: Expression): Expression = {
-      var cur = e; var i = 0
-      while (i < 10) {
-        val next = cur.transformUp {
-          case a: AttributeReference if flat.aliases.contains(a.exprId) =>
-            flat.aliases(a.exprId) }
-        if (next.fastEquals(cur)) return cur
-        cur = next; i += 1
-      }
-      cur
-    }
+    val qcolOf = qcolsOf(pathed)
+    def inline(e: Expression): Expression = inlineAliases(e, flat.aliases)
     def asPair(e: Expression): Option[(QCol, QCol)] = inline(e) match {
       case EqualTo(a: AttributeReference, b: AttributeReference)
           if qcolOf.contains(a.exprId) && qcolOf.contains(b.exprId) &&
@@ -891,7 +928,7 @@ object StarMv {
     val outAliasByForm: Map[String, String] = agg.aggregateExpressions.collect {
       case al @ Alias(child, name)
           if !child.exists(_.isInstanceOf[AggregateExpression]) =>
-        MvRewriteRule.renderForm(stripped(inline(child))).map(_ -> name)
+        renderForm(stripped(inline(child))).map(_ -> name)
     }.flatten.toMap
     val groupCols = Seq.newBuilder[QCol]
     val derivedGroups = Seq.newBuilder[(String, String)]
@@ -900,7 +937,7 @@ object StarMv {
         case a: AttributeReference if qcolOf.contains(a.exprId) =>
           groupCols += qcolOf(a.exprId)
         case e if e.deterministic =>
-          val form = MvRewriteRule.renderForm(stripped(e)).getOrElse(
+          val form = renderForm(stripped(e)).getOrElse(
             throw new IllegalArgumentException(
               s"unrenderable grouping expression: ${e.sql}"))
           derivedGroups += ((outAliasByForm.getOrElse(form, s"dg$i"),
@@ -930,7 +967,7 @@ object StarMv {
                   measures += qcolOf(a.exprId); ()
                 case e if groupOnly(e) => () // rides cnt at serve time
                 case e if e.deterministic =>
-                  val form = MvRewriteRule.renderForm(stripped(e)).getOrElse(
+                  val form = renderForm(stripped(e)).getOrElse(
                     throw new IllegalArgumentException(
                       s"unrenderable measure expression: ${e.sql}"))
                   if (!derivedMeasures.contains(form)) {
@@ -1117,31 +1154,42 @@ object StarMv {
     }
   }
 
-  private[plans] def tryRewrite(agg: Aggregate): Option[LogicalPlan] =
+  /** The ONE serving matcher behind [[MvRewriteRule]]: flatten the
+    * aggregate's input — below a ROLLUP / CUBE / GROUPING SETS
+    * [[Expand]], if the analyzer planted one — to its leaves, collect the
+    * registered summaries for that leaf set (the single-table MV of a
+    * one-leaf query, exact stars, lossless sub-join stars) and serve from
+    * the cheapest one that matches.
+    */
+  private[plans] def tryRewrite(agg: Aggregate): Option[LogicalPlan] = {
+    val (expand, input) = agg.child match {
+      case ex: Expand => (Some(ex), ex.child)
+      case c => (None, c)
+    }
     for {
-      flat <- flatten(agg.child)
-      // single-leaf shapes are MvRewriteRule's job first (it runs before
-      // us in the orElse chain) — but a bare-fact query can still be a
-      // lossless SUB-JOIN of a registered star, so they are matched here
-      if flat.leaves.nonEmpty
-      pathed <- Some(flat.leaves.flatMap(l => l.pathKey.map(l -> _)))
+      flat <- flatten(input)
+      pathed = flat.leaves.flatMap(l => l.pathKey.map(l -> _))
       if pathed.size == flat.leaves.size
       paths = pathed.map(_._2)
       if paths.distinct.size == paths.size // self-joins refuse
-      dp <- servable(pathed).view
-        .flatMap(d => rewriteWith(agg, flat, pathed, d).map(p => (d, p)))
+      (d, plan) <- servable(pathed).view
+        .flatMap(d => rewriteWith(agg, expand, flat, pathed, d).map(d -> _))
         .headOption
-    } yield { MvUsage.recordServe(dp._1.summaryPath); dp._2 }
+    } yield { MvUsage.recordServe(d.summaryPath); plan }
+  }
 
   /** Candidates for the query's leaf set, cheapest summary first, with
     * the [[MvCost]] gate applied: a summary no smaller than the leaves'
     * total scan rows refuses (re-aggregating it reads no less than the
-    * join it replaces — e.g. an MV grouped by a near-unique key). Ties
-    * and unknown counts keep registration order and serve.
+    * scan or join it replaces — e.g. an MV grouped by a near-unique key).
+    * Ties and unknown counts keep registration order and serve.
     */
   private def servable(pathed: Seq[(LeafRel, String)]): Seq[StarMvDef] = {
-    val cands = candidatesFor(
-      pathed.map(p => MaterializedView.normalize(p._2)).toSet)
+    val leaves = pathed.map(p => MaterializedView.normalize(p._2)).toSet
+    val single =
+      if (leaves.size == 1) MaterializedView.lookup(leaves.head).map(_.asStar)
+      else None
+    val cands = single.toSeq ++ candidatesFor(leaves)
     if (cands.isEmpty) return cands
     val spark = SparkSession.active
     val baseSize = pathed.map { case (l, key) =>
@@ -1150,362 +1198,56 @@ object StarMv {
     MvCost.orderAndGate(spark, cands, baseSize)
   }
 
-  /** ROLLUP / CUBE / GROUPING SETS over a registered star: the analyzer
-    * plants an [[org.apache.spark.sql.catalyst.plans.logical.Expand]]
-    * between the Aggregate and the JOIN TREE, so neither the flat star
-    * path above nor [[MvRewriteRule]]'s single-table Expand path reaches
-    * it. This is the star lift of `MvRewriteRule.tryRewriteExpand`: match
-    * the join tree below the Expand against a registered definition, then
-    * rebuild the SAME Expand over the summary — each summary row
-    * replicates once per grouping set exactly as each join row did, so
-    * the per-set partial re-aggregation algebra is unchanged.
+  /** Query attribute (exprId) → qualified column of its leaf, lower-cased
+    * like [[QCol.normalized]]: a warehouse leaf surfaces the catalog's
+    * case folding, definitions carry the user's.
     */
-  private[plans] def tryRewriteExpand(agg: Aggregate): Option[LogicalPlan] =
-    agg.child match {
-      case ex: org.apache.spark.sql.catalyst.plans.logical.Expand =>
-        for {
-          flat <- flatten(ex.child)
-          if flat.leaves.nonEmpty // single leaf = lossless sub-join rollup
-          pathed <- Some(flat.leaves.flatMap(l => l.pathKey.map(l -> _)))
-          if pathed.size == flat.leaves.size
-          paths = pathed.map(_._2)
-          if paths.distinct.size == paths.size
-          dp <- servable(pathed).view
-            .flatMap(d => rewriteExpandStar(agg, ex, flat, pathed, d)
-              .map(p => (d, p)))
-            .headOption
-        } yield { MvUsage.recordServe(dp._1.summaryPath); dp._2 }
-      case _ => None
+  private def qcolsOf(pathed: Seq[(LeafRel, String)]): Map[ExprId, QCol] =
+    pathed.flatMap { case (rel, path) =>
+      rel.output.map(a => a.exprId ->
+        QCol(path, a.name.toLowerCase(java.util.Locale.ROOT))) }.toMap
+
+  /** Equivalence classes of qualified columns under equi-join pairs. */
+  private final class UnionFind {
+    private val parent = scala.collection.mutable.Map[QCol, QCol]()
+    def find(x: QCol): QCol = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
     }
-
-  /** The Expand twin of [[rewriteWith]] — the join-matching prelude is
-    * deliberately duplicated from there (same canonicalization contract;
-    * see the comments in [[rewriteWith]]) and the Expand machinery mirrors
-    * `MvRewriteRule.rewriteExpandWith` with name-set lookups replaced by
-    * qualified-column lookups.
-    */
-  private def rewriteExpandStar(agg: Aggregate,
-      ex: org.apache.spark.sql.catalyst.plans.logical.Expand,
-      flat: Flat, pathed: Seq[(LeafRel, String)],
-      d: StarMvDef): Option[LogicalPlan] = {
-    import org.apache.spark.sql.catalyst.expressions.ExprId
-    val spark = SparkSession.active
-    val qcolOf: Map[ExprId, QCol] =
-      pathed.flatMap { case (rel, path) =>
-        // lower-cased like QCol.normalized: a warehouse leaf surfaces
-        // the catalog's case folding, definitions carry the user's
-        rel.output.map(a => a.exprId ->
-          QCol(path, a.name.toLowerCase(java.util.Locale.ROOT))) }.toMap
-
-    def inline(e: Expression): Expression = {
-      var cur = e
-      var i = 0
-      while (i < 10) {
-        val next = cur.transformUp {
-          case a: AttributeReference if flat.aliases.contains(a.exprId) =>
-            flat.aliases(a.exprId)
-        }
-        if (next.fastEquals(cur)) return cur
-        cur = next; i += 1
-      }
-      cur
+    def union(a: QCol, b: QCol): Unit = {
+      val (ra, rb) = (find(a), find(b)); if (ra != rb) { parent(ra) = rb; () }
     }
-
-    def asPair(e: Expression): Option[(QCol, QCol)] = e match {
-      case EqualTo(a: AttributeReference, b: AttributeReference) =>
-        for (qa <- qcolOf.get(a.exprId); qb <- qcolOf.get(b.exprId))
-          yield (qa, qb)
-      case _ => None
-    }
-    final class UnionFind {
-      private val parent = scala.collection.mutable.Map[QCol, QCol]()
-      def find(x: QCol): QCol = {
-        val p = parent.getOrElse(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      def union(a: QCol, b: QCol): Unit = {
-        val (ra, rb) = (find(a), find(b)); if (ra != rb) { parent(ra) = rb; () }
-      }
-      def connected(a: QCol, b: QCol): Boolean = find(a) == find(b)
-    }
-    val joinConjs = flat.joinConds.map(inline)
-    val joinPairs = joinConjs.map(asPair)
-    if (joinPairs.exists(_.isEmpty)) return None
-    val filterInl = flat.filters.map(inline)
-    val qc = new UnionFind
-    (joinPairs.flatten ++ filterInl.flatMap(asPair))
-      .foreach { case (a, b) => qc.union(a, b) }
-    val dc = new UnionFind
-    d.joins.foreach { case (a, b) => dc.union(a.normalized, b.normalized) }
-    // retained-only coverage — see the comment in rewriteWith
-    val retained = pathed.map(p => MaterializedView.normalize(p._2)).toSet
-    if (!d.joins.forall { case (a, b) =>
-      !(retained.contains(a.normalized.path) &&
-        retained.contains(b.normalized.path)) ||
-        qc.connected(a.normalized, b.normalized) }) return None
-    def impliedEq(e: Expression): Boolean =
-      asPair(e).exists { case (a, b) => dc.connected(a, b) }
-    val extraJoinConjs = joinConjs.filterNot(impliedEq)
-
-    val sumPlan = spark.read.parquet(d.summaryPath).queryExecution.analyzed
-    val byName = sumPlan.output.map(a => a.name -> a).toMap
-    def attrOf(name: String): Option[AttributeReference] =
-      byName.get(name).collect { case a: AttributeReference => a }
-    val dForms = derivedForms(spark, d)
-    val dgForms = derivedGroupForms(spark, d)
-    val dayOfTs = derivedTsCols(spark, d)
-
-    def derivedGroupMatch(e: Expression): Option[AttributeReference] =
-      if (dgForms.isEmpty) None
-      else MvRewriteRule.renderForm(e.transform {
-        case a: AttributeReference => a.withQualifier(Nil)
-      }).flatMap(dgForms.get).flatMap(attrOf)
-    def substituteDerivedGroups(e: Expression): Expression =
-      if (dgForms.isEmpty) e
-      else e.transformDown {
-        case x if derivedGroupMatch(x).isDefined => derivedGroupMatch(x).get
-      }
-
-    def rewriteGroupExpr(e0: Expression): Option[Expression] = {
-      val e1 = inline(e0)
-      if (!e1.deterministic || e1.exists(_.isInstanceOf[AggregateExpression]))
-        None
-      else {
-        val e = substituteDerivedGroups(e1)
-        var ok = true
-        val bound = e.transform {
-          case a: AttributeReference if !sumPlan.outputSet.contains(a) =>
-            qcolOf.get(a.exprId).flatMap(d.groupByQ.get).flatMap(attrOf)
-              .getOrElse { ok = false; a }
-        }
-        if (ok) Some(bound) else None
-      }
-    }
-
-    def measureName(child: Expression): Option[String] = inline(child) match {
-      case a: AttributeReference =>
-        qcolOf.get(a.exprId).flatMap(d.measureByQ.get)
-      case e =>
-        if (dForms.isEmpty) None
-        else MvRewriteRule.renderForm(e.transform {
-          case a: AttributeReference => a.withQualifier(Nil)
-        }).flatMap(dForms.get)
-    }
-
-    // classify the Expand's projection matrix and bind every position:
-    // measure passthroughs drop out (their partials ride along), grouping
-    // entries rebind to the summary's attribute space, and OTHER
-    // passthroughs (e.g. the factors of a derived measure the analyzer
-    // passes through separately — `f_price` for `sum(f_qty * f_price)`)
-    // stay UNBOUND: they also drop from the new Expand, and an aggregate
-    // child built from them must match a registered derived measure at
-    // the aggregate level below (or the rewrite refuses via refsOk).
-    val cols = MvRewriteRule.classifyExpand(ex.projections, ex.output)
-      .getOrElse(return None)
-    val measureByOutId = scala.collection.mutable.Map[ExprId, String]()
-    val boundByIdx = scala.collection.mutable.Map[Int, Expression]()
-    val baseExprByOutId = scala.collection.mutable.Map[ExprId, Expression]()
-    cols.zipWithIndex.foreach {
-      case (MvRewriteRule.ExGid, _) => ()
-      case (MvRewriteRule.ExPass(e), j) =>
-        baseExprByOutId(ex.output(j).exprId) = e
-        measureName(e) match {
-          case Some(m) => measureByOutId(ex.output(j).exprId) = m
-          case None => rewriteGroupExpr(e) match {
-            case Some(se) if se.dataType == ex.output(j).dataType =>
-              boundByIdx(j) = se
-            case _ => () // unbound passthrough — see above
-          }
-        }
-      case (MvRewriteRule.ExGrouped(e), j) =>
-        baseExprByOutId(ex.output(j).exprId) = e
-        rewriteGroupExpr(e) match {
-          case Some(se) if se.dataType == ex.output(j).dataType =>
-            boundByIdx(j) = se
-          case _ => return None // a grouping-set key MUST rebind
-        }
-    }
-    val keepIdx = ex.output.indices.filter(j =>
-      cols(j) == MvRewriteRule.ExGid || boundByIdx.contains(j))
-    val expandableIds: Set[ExprId] = keepIdx.map(ex.output(_).exprId).toSet
-
-    /** an aggregate child rendered back in BASE attribute space (Expand
-      * outputs replaced by the base-side expressions they pass through),
-      * so whole-child derived-measure matching can run */
-    def baseForm(child: Expression): Option[Expression] = {
-      var ok = true
-      val subbed = child.transform {
-        case a: AttributeReference if !qcolOf.contains(a.exprId) =>
-          baseExprByOutId.getOrElse(a.exprId, { ok = false; a })
-      }
-      if (ok) Some(subbed) else None
-    }
-
-    /** measure name for an aggregate child: a measure passthrough attr,
-      * or a whole expression matching a plain/derived measure in base
-      * space */
-    def measureOf(child: Expression): Option[String] = child match {
-      case a: AttributeReference if measureByOutId.contains(a.exprId) =>
-        Some(measureByOutId(a.exprId))
-      case _ => baseForm(child).flatMap(measureName)
-    }
-    def refsOk(e: Expression): Boolean =
-      e.deterministic && !e.exists(_.isInstanceOf[AggregateExpression]) &&
-        e.references.forall(a => expandableIds.contains(a.exprId))
-    if (!agg.groupingExpressions.forall(refsOk)) return None
-
-    // filters below the Expand (plus extra-constraint join conjuncts):
-    // implied equalities and join-key IsNotNulls drop, everything else
-    // replays as a group filter on the summary BEFORE it expands
-    val conj = (filterInl ++ extraJoinConjs).map { c =>
-      c match {
-        case _ if impliedEq(c) => Some(None)
-        case IsNotNull(a: AttributeReference)
-            if qcolOf.get(a.exprId).exists(d.joinKeySet.contains) =>
-          Some(None)
-        case _ => rewriteGroupExpr(c)
-          .orElse(MvRewriteRule.tsBoundToDayShared(inline(c), dayOfTs,
-            attrOf, spark.sessionState.conf.sessionLocalTimeZone))
-          .map(Some(_))
-      }
-    }
-    if (conj.exists(_.isEmpty)) return None
-    val keptConds = conj.flatten.flatten
-
-    def rewriteAggFunc(e: AggregateExpression): Option[Expression] =
-      e.aggregateFunction match {
-        case s: Sum if s.evalContext.evalMode == EvalMode.TRY => None
-        case s: Sum => measureOf(s.child)
-          .flatMap(m => attrOf(s"s_$m"))
-          .map(p => Sum(p).toAggregateExpression())
-          .orElse(s.child match {
-            case ge if refsOk(ge) => for {
-              cnt <- attrOf("cnt")
-              r <- MvRewriteRule.sumOfGroupExpr(ge, cnt)
-            } yield r
-            case _ => None
-          })
-        case a: Average => measureOf(a.child).flatMap { m =>
-          for {
-            s <- attrOf(s"s_$m")
-            c <- attrOf(s"c_$m")
-            r <- MvRewriteRule.avgFromPartials(a,
-              Sum(s).toAggregateExpression(), Sum(c).toAggregateExpression())
-          } yield r
-        }.orElse(a.child match {
-          case ge if refsOk(ge) => for {
-            cnt <- attrOf("cnt")
-            r <- MvRewriteRule.avgOfGroupExpr(a, ge, cnt)
-          } yield r
-          case _ => None
-        })
-        case m: Min => measureOf(m.child)
-          .flatMap(n => attrOf(s"mn_$n"))
-          .map(p => Min(p).toAggregateExpression())
-          .orElse(m.child match {
-            case ge if refsOk(ge) => Some(e)
-            case _ => None
-          })
-        case m: Max => measureOf(m.child)
-          .flatMap(n => attrOf(s"mx_$n"))
-          .map(p => Max(p).toAggregateExpression())
-          .orElse(m.child match {
-            case ge if refsOk(ge) => Some(e)
-            case _ => None
-          })
-        case c: Count => c.children match {
-          case Seq(l: Literal) if l.value != null =>
-            attrOf("cnt").map(p => Coalesce(Seq(
-              Sum(p).toAggregateExpression(), Literal(0L))))
-          case Seq(one) => measureOf(one).flatMap(n => attrOf(s"c_$n"))
-            .map(p => Coalesce(Seq(Sum(p).toAggregateExpression(), Literal(0L))))
-            .orElse(one match {
-              case _ if refsOk(one) => for {
-                cnt <- attrOf("cnt")
-              } yield MvRewriteRule.countOfGroupExpr(one, cnt)
-              case _ => None
-            })
-          case _ => None
-        }
-        case _ => None
-      }
-
-    def rewriteExpr(e: Expression): Option[Expression] = e match {
-      case ae @ AggregateExpression(_, _, false, None, _) => rewriteAggFunc(ae)
-      case ae @ AggregateExpression(c: Count, _, true, None, _)
-          if c.children.nonEmpty && c.children.forall(refsOk) => Some(ae)
-      case _: AggregateExpression => None
-      case a: AttributeReference if expandableIds.contains(a.exprId) => Some(a)
-      case l: Literal => Some(l)
-      case _ if e.children.nonEmpty =>
-        val rewritten = e.children.map(rewriteExpr)
-        if (rewritten.forall(_.isDefined))
-          Some(e.withNewChildren(rewritten.map(_.get)))
-        else None
-      case _ => None
-    }
-
-    def rewriteNamed(ne: NamedExpression): Option[NamedExpression] = ne match {
-      case a: AttributeReference if expandableIds.contains(a.exprId) => Some(a)
-      case al @ Alias(child, name) =>
-        rewriteExpr(child).map { c =>
-          val typed = if (c.dataType == al.dataType) c else Cast(c, al.dataType)
-          Alias(typed, name)(exprId = al.exprId)
-        }
-      case _ => None
-    }
-
-    val newResults = agg.aggregateExpressions.map(rewriteNamed)
-    if (newResults.exists(_.isEmpty)) return None
-
-    val sumOutIds = sumPlan.outputSet
-    val usedPartials = newResults.flatMap(_.get.references)
-      .filter(sumOutIds.contains).distinct
-      .collect { case a: AttributeReference => a }
-
-    val filtered = keptConds.foldLeft(sumPlan)((p, c) => Filter(c, p))
-    val newOut = keepIdx.map(ex.output) ++ usedPartials
-    val newProjs = ex.projections.map { proj =>
-      keepIdx.map { j =>
-        cols(j) match {
-          case MvRewriteRule.ExGid => proj(j)
-          case MvRewriteRule.ExGrouped(_) => proj(j) match {
-            case Literal(null, dt) => Literal(null, dt)
-            case _ => boundByIdx(j)
-          }
-          case MvRewriteRule.ExPass(_) => boundByIdx(j)
-        }
-      } ++ usedPartials
-    }
-    Some(Aggregate(agg.groupingExpressions, newResults.map(_.get),
-      org.apache.spark.sql.catalyst.plans.logical.Expand(
-        newProjs, newOut, filtered)))
+    def connected(a: QCol, b: QCol): Boolean = find(a) == find(b)
   }
 
-  private def rewriteWith(agg: Aggregate, flat: Flat,
+  /** Match `d` against the flattened query and re-aggregate its summary.
+    * One prelude serves both query shapes — leaf columns, alias inlining,
+    * join coverage, the summary's attributes, derived group/measure
+    * matching, filter replay — then a plain Aggregate re-aggregates the
+    * filtered summary directly, and an Expand is rebuilt over it. A
+    * single-table MV is the zero-join case: there are no pairs to cover
+    * and every query equality replays as a group filter.
+    *
+    * What rewrites: grouping keys that are group columns, derived groups
+    * (`day = cast(ts as date)`, matched by optimized render-form), or any
+    * deterministic expression over those (month/year rollups from a day
+    * summary — grouping base rows by f(group cols) partitions exactly as
+    * grouping summary rows by f); aggregates that are sum/avg/min/max/count
+    * over measures, count(*), or aggregates over expressions of group
+    * columns (cnt-weighted where additive); filter conjuncts over group
+    * columns, plus raw-ts bounds at exact midnights for a day group.
+    * Anything else — distinct aggregates over measures, FILTER clauses,
+    * measures in grouping position or predicates — leaves the plan
+    * untouched: the rule must never widen semantics, only reroute them.
+    * Every rewritten output keeps the original alias AND exprId (parents
+    * reference outputs by exprId), and a Cast restores the original type
+    * where re-aggregation widens it.
+    */
+  private def rewriteWith(agg: Aggregate, expand: Option[Expand], flat: Flat,
       pathed: Seq[(LeafRel, String)], d: StarMvDef): Option[LogicalPlan] = {
     val spark = SparkSession.active
-    // query attribute (exprId) → qualified column
-    val qcolOf: Map[org.apache.spark.sql.catalyst.expressions.ExprId, QCol] =
-      pathed.flatMap { case (rel, path) =>
-        // lower-cased like QCol.normalized: a warehouse leaf surfaces
-        // the catalog's case folding, definitions carry the user's
-        rel.output.map(a => a.exprId ->
-          QCol(path, a.name.toLowerCase(java.util.Locale.ROOT))) }.toMap
-
-    def inline(e: Expression): Expression = {
-      var cur = e
-      var i = 0
-      while (i < 10) {
-        val next = cur.transformUp {
-          case a: AttributeReference if flat.aliases.contains(a.exprId) =>
-            flat.aliases(a.exprId)
-        }
-        if (next.fastEquals(cur)) return cur
-        cur = next; i += 1
-      }
-      cur
-    }
+    val qcolOf = qcolsOf(pathed)
+    def inline(e: Expression): Expression = inlineAliases(e, flat.aliases)
 
     // Join canonicalization by EQUIVALENCE CLASSES, not literal pair sets:
     // the optimizer freely infers transitive equalities, reorders joins,
@@ -1521,21 +1263,10 @@ object StarMv {
           yield (qa, qb)
       case _ => None
     }
-    final class UnionFind {
-      private val parent = scala.collection.mutable.Map[QCol, QCol]()
-      def find(x: QCol): QCol = {
-        val p = parent.getOrElse(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      def union(a: QCol, b: QCol): Unit = {
-        val (ra, rb) = (find(a), find(b)); if (ra != rb) { parent(ra) = rb; () }
-      }
-      def connected(a: QCol, b: QCol): Boolean = find(a) == find(b)
-    }
     val joinConjs = flat.joinConds.map(inline)
     val joinPairs = joinConjs.map(asPair)
     if (joinPairs.exists(_.isEmpty)) return None // non-equi join conjunct
-    val filterInl = flat.filters.map(inline)
+    val filterInl = flat.filters.flatMap(c => splitConj(inline(c)))
     val qc = new UnionFind // everything the QUERY constrains equal
     (joinPairs.flatten ++ filterInl.flatMap(asPair))
       .foreach { case (a, b) => qc.union(a, b) }
@@ -1559,37 +1290,32 @@ object StarMv {
       asPair(e).exists { case (a, b) => dc.connected(a, b) }
     val extraJoinConjs = joinConjs.filterNot(impliedEq)
 
-    // summary relation, attributes by name
+    // summary relation with fresh attributes, mapped by name
     val sumPlan = spark.read.parquet(d.summaryPath).queryExecution.analyzed
     val byName = sumPlan.output.map(a => a.name -> a).toMap
     def attrOf(name: String): Option[AttributeReference] =
       byName.get(name).collect { case a: AttributeReference => a }
-
     val dForms = derivedForms(spark, d)
     val dgForms = derivedGroupForms(spark, d)
     val dayOfTs = derivedTsCols(spark, d)
+    def formOf(e: Expression, forms: Map[String, String]): Option[String] =
+      if (forms.isEmpty) None else renderForm(e).flatMap(forms.get)
+    // a query subtree whose render-form matches a derived group binds to
+    // the summary's column for it
+    val derivedGroupAttr: Expression => Option[Expression] =
+      e => formOf(e, dgForms).flatMap(attrOf)
 
-    // derived-group matcher: a query subtree whose optimized render-form
-    // matches a registered derived group binds to its summary column
-    def derivedGroupMatch(e: Expression): Option[AttributeReference] =
-      if (dgForms.isEmpty) None
-      else MvRewriteRule.renderForm(e.transform {
-        case a: AttributeReference => a.withQualifier(Nil)
-      }).flatMap(dgForms.get).flatMap(attrOf)
-    def substituteDerivedGroups(e: Expression): Expression =
-      if (dgForms.isEmpty) e
-      else e.transformDown {
-        case x if derivedGroupMatch(x).isDefined => derivedGroupMatch(x).get
-      }
-
-    // rewrite an expression tree whose leaves are group columns (plain or
-    // derived) into the summary's attribute space; None = not expressible
+    // an expression tree whose leaves are group columns (plain, or derived
+    // subtrees) rewritten into the summary's attribute space; None = not
+    // expressible. Non-deterministic or aggregate-bearing expressions
+    // never qualify.
     def rewriteGroupExpr(e0: Expression): Option[Expression] = {
       val e1 = inline(e0)
       if (!e1.deterministic || e1.exists(_.isInstanceOf[AggregateExpression]))
         None
       else {
-        val e = substituteDerivedGroups(e1)
+        val e = if (dgForms.isEmpty) e1
+          else e1.transformDown(Function.unlift(derivedGroupAttr))
         var ok = true
         val bound = e.transform {
           case a: AttributeReference if !sumPlan.outputSet.contains(a) =>
@@ -1600,133 +1326,403 @@ object StarMv {
       }
     }
 
+    // measure name of a base-space aggregate child: a measure column, or a
+    // whole expression matching a derived measure's render-form
+    def measureName(child: Expression): Option[String] = inline(child) match {
+      case a: AttributeReference =>
+        qcolOf.get(a.exprId).flatMap(d.measureByQ.get)
+      case e => formOf(e, dForms)
+    }
+
     // filter conjuncts (plus any extra-constraint join conjuncts):
     // implied equalities and join-key IsNotNulls are vacuous on the
     // summary and drop; everything else must replay as a group filter —
     // including raw-ts bounds the optimizer rewrote a day filter into,
-    // recovered to day bounds by the shared midnight conversion
-    val conj = (filterInl ++ extraJoinConjs).map { c =>
-      c match {
-        case _ if impliedEq(c) => Some(None) // the join itself — drop
-        case IsNotNull(a: AttributeReference)
-            if qcolOf.get(a.exprId).exists(d.joinKeySet.contains) =>
-          Some(None) // inner join output has no null keys — drop
-        case _ => rewriteGroupExpr(c)
-          .orElse(MvRewriteRule.tsBoundToDayShared(inline(c), dayOfTs,
-            attrOf, spark.sessionState.conf.sessionLocalTimeZone))
-          .map(Some(_))
-      }
+    // recovered to day bounds by the midnight conversion. Determinism is
+    // required even for attribute-free conjuncts: rand() < 0.1 applied per
+    // SUMMARY row would sample whole groups instead of base rows.
+    val conj = (filterInl ++ extraJoinConjs).map {
+      case c if impliedEq(c) => Some(None) // the join itself — drop
+      case IsNotNull(a: AttributeReference)
+          if qcolOf.get(a.exprId).exists(d.joinKeySet.contains) =>
+        Some(None) // inner join output has no null keys — drop
+      case c => rewriteGroupExpr(c)
+        .orElse(tsBoundToDay(c, dayOfTs, attrOf,
+          spark.sessionState.conf.sessionLocalTimeZone))
+        .map(Some(_))
     }
     if (conj.exists(_.isEmpty)) return None
-    val keptConds = conj.flatten.flatten
+    val summaryIn: LogicalPlan =
+      conj.flatten.flatten.foldLeft(sumPlan)((p, c) => Filter(c, p))
 
-    val newGroupings = agg.groupingExpressions.map(rewriteGroupExpr)
-    if (newGroupings.exists(_.isEmpty)) return None
-
-    def measureName(child: Expression): Option[String] = inline(child) match {
-      case a: AttributeReference =>
-        qcolOf.get(a.exprId).flatMap(d.measureByQ.get)
-      case e =>
-        if (dForms.isEmpty) None
-        else MvRewriteRule.renderForm(e.transform {
-          // render against base names so the form matches the build-side
-          // analysis of the derived-measure SQL
-          case a: AttributeReference => a.withQualifier(Nil)
-        }).flatMap(dForms.get)
-    }
-
-    def rewriteAggFunc(e: AggregateExpression): Option[Expression] =
-      e.aggregateFunction match {
-        case s: Sum if s.evalContext.evalMode == EvalMode.TRY => None // see MvRewriteRule
-        case s: Sum => measureName(s.child)
-          .flatMap(m => attrOf(s"s_$m"))
-          .map(p => Sum(p).toAggregateExpression())
-          // sum over an expression of group columns, cnt-weighted
-          .orElse(for {
-            b <- rewriteGroupExpr(s.child)
-            cnt <- attrOf("cnt")
-            r <- MvRewriteRule.sumOfGroupExpr(b, cnt)
-          } yield r)
-        case a: Average => measureName(a.child).flatMap { m =>
-          for {
-            s <- attrOf(s"s_$m")
-            c <- attrOf(s"c_$m")
-            r <- MvRewriteRule.avgFromPartials(a,
-              Sum(s).toAggregateExpression(), Sum(c).toAggregateExpression())
-          } yield r
-        }.orElse(for {
-          b <- rewriteGroupExpr(a.child)
-          cnt <- attrOf("cnt")
-          r <- MvRewriteRule.avgOfGroupExpr(a, b, cnt)
-        } yield r)
-        case m: Min => measureName(m.child).flatMap(n => attrOf(s"mn_$n"))
-          .map(p => Min(p).toAggregateExpression())
-          .orElse(rewriteGroupExpr(m.child)
-            .map(b => Min(b).toAggregateExpression()))
-        case m: Max => measureName(m.child).flatMap(n => attrOf(s"mx_$n"))
-          .map(p => Max(p).toAggregateExpression())
-          .orElse(rewriteGroupExpr(m.child)
-            .map(b => Max(b).toAggregateExpression()))
-        case c: Count => c.children match {
-          case Seq(l: Literal) if l.value != null =>
-            attrOf("cnt").map(p => Coalesce(Seq(
-              Sum(p).toAggregateExpression(), Literal(0L))))
-          case Seq(one) => measureName(one).flatMap(n => attrOf(s"c_$n"))
-            .map(p => Coalesce(Seq(Sum(p).toAggregateExpression(), Literal(0L))))
-            // count over an expression of group columns, cnt-weighted
+    // the re-aggregation algebra, shared by both shapes: `measureOf` names
+    // the partials an aggregate child reads; `groupOf` binds a child that
+    // is an expression of group columns, which is constant per summary
+    // row and so re-aggregates cnt-weighted (Σ_base f = Σ_summary f·cnt)
+    def rewriteResults(measureOf: Expression => Option[String],
+        groupOf: Expression => Option[Expression],
+        pre: Expression => Expression): Option[Seq[NamedExpression]] = {
+      def partial(prefix: String, child: Expression) =
+        measureOf(child).flatMap(m => attrOf(prefix + m))
+      def total(p: Expression): Expression =
+        Coalesce(Seq(Sum(p).toAggregateExpression(), Literal(0L)))
+      def rewriteAggFunc(e: AggregateExpression): Option[Expression] =
+        e.aggregateFunction match {
+          // TRY-mode sums refuse: try_sum's overflow-to-null point depends
+          // on per-row accumulation order, which the partials erase
+          case s: Sum if s.evalContext.evalMode == EvalMode.TRY => None
+          case s: Sum => partial("s_", s.child)
+            .map(p => Sum(p).toAggregateExpression())
             .orElse(for {
-              b <- rewriteGroupExpr(one)
+              b <- groupOf(s.child)
               cnt <- attrOf("cnt")
-            } yield MvRewriteRule.countOfGroupExpr(b, cnt))
+              r <- sumOfGroupExpr(b, cnt)
+            } yield r)
+          case a: Average => (for {
+              s <- partial("s_", a.child)
+              c <- partial("c_", a.child)
+              r <- avgFromPartials(a, Sum(s).toAggregateExpression(),
+                Sum(c).toAggregateExpression())
+            } yield r).orElse(for {
+              b <- groupOf(a.child)
+              cnt <- attrOf("cnt")
+              r <- avgOfGroupExpr(a, b, cnt)
+            } yield r)
+          // extremes over expressions of group columns need no weighting:
+          // the summary enumerates the same value set
+          case m: Min => partial("mn_", m.child).orElse(groupOf(m.child))
+            .map(x => Min(x).toAggregateExpression())
+          case m: Max => partial("mx_", m.child).orElse(groupOf(m.child))
+            .map(x => Max(x).toAggregateExpression())
+          case c: Count => c.children match {
+            // the coalesce covers the GLOBAL aggregate over an empty
+            // summary, where count must be 0 while sum is null
+            case Seq(l: Literal) if l.value != null => attrOf("cnt").map(total)
+            case Seq(one) => partial("c_", one).map(total)
+              .orElse(for {
+                b <- groupOf(one)
+                cnt <- attrOf("cnt")
+              } yield countOfGroupExpr(b, cnt))
+            case _ => None
+          }
           case _ => None
         }
-        case _ => None
-      }
 
-    def rewriteExpr(e: Expression): Option[Expression] = e match {
-      case ae @ AggregateExpression(_, _, false, None, _) => rewriteAggFunc(ae)
-      case AggregateExpression(c: Count, _, true, None, _)
-          if c.children.nonEmpty =>
-        // COUNT(DISTINCT group expressions) — exact on the summary, which
-        // holds every distinct group combination
-        val kids = c.children.map(rewriteGroupExpr)
-        if (kids.forall(_.isDefined))
-          Some(Count(kids.map(_.get)).toAggregateExpression(isDistinct = true))
-        else None
-      case _: AggregateExpression => None
-      case a: AttributeReference => rewriteGroupExpr(a)
-      case l: Literal => Some(l)
-      case _ if e.children.nonEmpty =>
-        // whole-subtree first: a derived group (`cast(ts as date)`) binds
-        // as a unit — its LEAF (raw ts) is not a group column
-        rewriteGroupExpr(e).orElse {
-          val rewritten = e.children.map(rewriteExpr)
-          if (rewritten.forall(_.isDefined))
-            Some(e.withNewChildren(rewritten.map(_.get)))
+      def rewriteExpr(e: Expression): Option[Expression] = e match {
+        case ae @ AggregateExpression(_, _, false, None, _) => rewriteAggFunc(ae)
+        // COUNT(DISTINCT group expressions) is exact on the summary, which
+        // holds every distinct group combination (a finer summary grouping
+        // only adds rows the DISTINCT collapses); distinct over measures
+        // stays refused — their per-row values are gone
+        case AggregateExpression(c: Count, _, true, None, _)
+            if c.children.nonEmpty =>
+          val kids = c.children.map(groupOf)
+          if (kids.forall(_.isDefined))
+            Some(Count(kids.map(_.get)).toAggregateExpression(isDistinct = true))
+          else None
+        case _: AggregateExpression => None // other distinct / FILTER aggs
+        case l: Literal => Some(l)
+        // whole subtree first: a derived group (`cast(ts as date)`) binds
+        // as a unit — its leaf (raw ts) is not a group column
+        case _ => groupOf(e).orElse {
+          val kids = e.children.map(rewriteExpr)
+          if (kids.nonEmpty && kids.forall(_.isDefined))
+            Some(e.withNewChildren(kids.map(_.get)))
           else None
         }
-      case _ => None
+      }
+
+      def named(c: Expression, name: String, id: ExprId,
+          dt: DataType): NamedExpression =
+        Alias(if (c.dataType == dt) c else Cast(c, dt), name)(exprId = id)
+      val out = agg.aggregateExpressions.map {
+        case a: AttributeReference => rewriteExpr(pre(a)).map {
+          case same: AttributeReference if same.exprId == a.exprId => same
+          case c => named(c, a.name, a.exprId, a.dataType)
+        }
+        case al @ Alias(child, name) =>
+          rewriteExpr(pre(child)).map(named(_, name, al.exprId, al.dataType))
+        case _ => None
+      }
+      if (out.forall(_.isDefined)) Some(out.map(_.get)) else None
     }
 
-    def rewriteNamed(ne: NamedExpression): Option[NamedExpression] = ne match {
-      case a: AttributeReference =>
-        rewriteExpr(inline(a)).map { c =>
-          val typed = if (c.dataType == a.dataType) c else Cast(c, a.dataType)
-          Alias(typed, a.name)(exprId = a.exprId)
+    // ROLLUP / CUBE / GROUPING SETS: rebuild the SAME Expand over the
+    // summary — each summary row replicates once per grouping set exactly
+    // as each base row did, so within every (grouping-set, keys) partition
+    // the decomposable algebra holds unchanged. Aggregate outputs
+    // referencing the grouping id keep working because every non-measure
+    // Expand output survives with its exprId; only measure passthroughs
+    // are swapped for partials.
+    def overExpand(ex: Expand): Option[LogicalPlan] = {
+      // bind every position of the projection matrix: measure passthroughs
+      // drop out (their partials ride along), grouping entries rebind to
+      // the summary's attribute space, and OTHER passthroughs (e.g. the
+      // factors of a derived measure the analyzer passes through
+      // separately — `f_price` for `sum(f_qty * f_price)`) stay UNBOUND:
+      // they drop from the new Expand too, and an aggregate child built
+      // from them must match a derived measure below (or refuse via refsOk)
+      val cols = classifyExpand(ex.projections, ex.output).getOrElse(return None)
+      val measureByOutId = scala.collection.mutable.Map[ExprId, String]()
+      val boundByIdx = scala.collection.mutable.Map[Int, Expression]()
+      val baseExprByOutId = scala.collection.mutable.Map[ExprId, Expression]()
+      def bind(e: Expression, j: Int): Boolean = rewriteGroupExpr(e) match {
+        case Some(se) if se.dataType == ex.output(j).dataType =>
+          boundByIdx(j) = se; true
+        case _ => false
+      }
+      cols.zipWithIndex.foreach {
+        case (ExGid, _) => ()
+        case (ExPass(e), j) =>
+          baseExprByOutId(ex.output(j).exprId) = e
+          measureName(e) match {
+            case Some(m) => measureByOutId(ex.output(j).exprId) = m
+            case None => bind(e, j); () // unbound passthrough — see above
+          }
+        case (ExGrouped(e), j) =>
+          baseExprByOutId(ex.output(j).exprId) = e
+          if (!bind(e, j)) return None // a grouping-set key MUST rebind
+      }
+      val keepIdx = ex.output.indices.filter(j =>
+        cols(j) == ExGid || boundByIdx.contains(j))
+      val expandableIds: Set[ExprId] = keepIdx.map(ex.output(_).exprId).toSet
+      def refsOk(e: Expression): Boolean =
+        e.deterministic && !e.exists(_.isInstanceOf[AggregateExpression]) &&
+          e.references.forall(a => expandableIds.contains(a.exprId))
+      if (!agg.groupingExpressions.forall(refsOk)) return None
+
+      // an aggregate child rendered back in BASE attribute space (Expand
+      // outputs replaced by the base-side expressions they pass through),
+      // so whole-child derived-measure matching can run
+      def baseForm(child: Expression): Option[Expression] = {
+        var ok = true
+        val subbed = child.transform {
+          case a: AttributeReference if !qcolOf.contains(a.exprId) =>
+            baseExprByOutId.getOrElse(a.exprId, { ok = false; a })
         }
-      case al @ Alias(child, name) =>
-        rewriteExpr(inline(child)).map { c =>
-          val typed = if (c.dataType == al.dataType) c else Cast(c, al.dataType)
-          Alias(typed, name)(exprId = al.exprId)
-        }
-      case _ => None
+        if (ok) Some(subbed) else None
+      }
+      def measureOf(child: Expression): Option[String] = child match {
+        case a: AttributeReference if measureByOutId.contains(a.exprId) =>
+          measureByOutId.get(a.exprId)
+        case _ => baseForm(child).flatMap(measureName)
+      }
+      val results = rewriteResults(measureOf, e => Some(e).filter(refsOk),
+        identity).getOrElse(return None)
+      // partial/cnt attrs the rewritten aggregates read ride through every
+      // projection unchanged (the passthrough pattern)
+      val usedPartials = results.flatMap(_.references)
+        .filter(sumPlan.outputSet.contains).distinct
+        .collect { case a: AttributeReference => a }
+      val newProjs = ex.projections.map { proj =>
+        keepIdx.map { j =>
+          cols(j) match {
+            case ExGid => proj(j)
+            case ExGrouped(_) => proj(j) match {
+              case Literal(null, dt) => Literal(null, dt)
+              case _ => boundByIdx(j)
+            }
+            case ExPass(_) => boundByIdx(j)
+          }
+        } ++ usedPartials
+      }
+      Some(Aggregate(agg.groupingExpressions, results,
+        Expand(newProjs, keepIdx.map(ex.output) ++ usedPartials, summaryIn)))
     }
 
-    val newResults = agg.aggregateExpressions.map(rewriteNamed)
-    if (newResults.exists(_.isEmpty)) None
-    else {
-      val child = keptConds.foldLeft(sumPlan)((p, c) => Filter(c, p))
-      Some(Aggregate(newGroupings.map(_.get), newResults.map(_.get), child))
+    expand match {
+      case Some(ex) => overExpand(ex)
+      case None =>
+        val groupings = agg.groupingExpressions.map(rewriteGroupExpr)
+        if (groupings.exists(_.isEmpty)) None
+        else rewriteResults(measureName, rewriteGroupExpr, inline)
+          .map(Aggregate(groupings.map(_.get), _, summaryIn))
     }
   }
+
+  /** Per-position classification of an Expand's projection matrix. */
+  private sealed trait ExCol
+  /** same expression in every projection (measures, constants, pre-nulled
+    * group expressions) */
+  private final case class ExPass(e: Expression) extends ExCol
+  /** nulled in some projections, the same expression in the rest — a
+    * grouping-sets key column */
+  private final case class ExGrouped(e: Expression) extends ExCol
+  /** a distinct non-null literal per projection — the grouping id */
+  private case object ExGid extends ExCol
+
+  private def classifyExpand(projs: Seq[Seq[Expression]],
+      out: Seq[Attribute]): Option[Seq[ExCol]] = {
+    if (projs.isEmpty || projs.exists(_.size != out.size)) return None
+    val cols = out.indices.map { j =>
+      val colExprs = projs.map(_(j))
+      val allLits = colExprs.forall {
+        case Literal(v, t) => v != null &&
+          (t == LongType || t == IntegerType || t == ShortType || t == ByteType)
+        case _ => false
+      }
+      if (allLits &&
+        colExprs.map(_.asInstanceOf[Literal].value).distinct.size == colExprs.size)
+        Some(ExGid)
+      else {
+        val nonNull = colExprs.filter {
+          case Literal(null, _) => false
+          case _ => true
+        }
+        if (nonNull.isEmpty) None // a column nulled in EVERY set — refuse
+        else if (!nonNull.forall(_.semanticEquals(nonNull.head))) None
+        else if (nonNull.size == colExprs.size) Some(ExPass(nonNull.head))
+        else Some(ExGrouped(nonNull.head))
+      }
+    }
+    if (cols.exists(_.isEmpty)) None else Some(cols.map(_.get))
+  }
+
+  /** Day-hierarchy filter recovery: the optimizer rewrites
+    * `cast(ts as date) >= date d` into `ts >= timestamp midnight(d)`
+    * BEFORE our rule runs, so a dashboard's day-range filter arrives as
+    * raw-ts bounds. A conjunct bounding ts at an exact session-TZ
+    * midnight converts back to the day bound (ts >= mid(d) ⇔ day >= d;
+    * ts < mid(d) ⇔ day < d) whenever the zone has a fixed offset — under
+    * DST a day's first instant need not be 00:00, so non-fixed zones
+    * refuse rather than risk an off-by-one day. `dayOfTs` maps a
+    * timestamp column NAME to its derived day column; `attrOf` resolves
+    * summary attributes by name.
+    */
+  private def tsBoundToDay(e: Expression, dayOfTs: Map[String, String],
+      attrOf: String => Option[AttributeReference],
+      zoneIdStr: String): Option[Expression] = {
+    if (dayOfTs.isEmpty) return None
+    def dayAttr(a: AttributeReference): Option[AttributeReference] =
+      dayOfTs.get(a.name).flatMap(attrOf)
+    def midnightDate(l: Literal): Option[Literal] = l match {
+      case Literal(micros: Long, TimestampType) =>
+        // zoned: only a fixed-offset session zone makes midnight(d) ⇔ d
+        val zone = scala.util.Try(
+          java.time.ZoneId.of(zoneIdStr)).getOrElse(return None)
+        if (!zone.getRules.isFixedOffset) return None
+        val zdt = java.time.Instant.EPOCH
+          .plus(micros, java.time.temporal.ChronoUnit.MICROS).atZone(zone)
+        if (zdt.toLocalTime == java.time.LocalTime.MIDNIGHT)
+          Some(Literal(zdt.toLocalDate.toEpochDay.toInt, DateType))
+        else None
+      case Literal(micros: Long, TimestampNTZType) =>
+        // NTZ is pure wall-clock — cast(ntz as date) is its date part in
+        // EVERY zone, so the conversion is exact with no DST caveat
+        val ldt = java.time.LocalDateTime.ofEpochSecond(
+          java.lang.Math.floorDiv(micros, 1000000L),
+          (java.lang.Math.floorMod(micros, 1000000L) * 1000L).toInt,
+          java.time.ZoneOffset.UTC)
+        if (ldt.toLocalTime == java.time.LocalTime.MIDNIGHT)
+          Some(Literal(ldt.toLocalDate.toEpochDay.toInt, DateType))
+        else None
+      case _ => None
+    }
+    e match {
+      case IsNotNull(a: AttributeReference) => dayAttr(a).map(IsNotNull(_))
+      case GreaterThanOrEqual(a: AttributeReference, l: Literal) =>
+        for (d <- dayAttr(a); dl <- midnightDate(l))
+          yield GreaterThanOrEqual(d, dl)
+      case LessThan(a: AttributeReference, l: Literal) =>
+        for (d <- dayAttr(a); dl <- midnightDate(l)) yield LessThan(d, dl)
+      case LessThanOrEqual(l: Literal, a: AttributeReference) =>
+        for (d <- dayAttr(a); dl <- midnightDate(l))
+          yield GreaterThanOrEqual(d, dl)
+      case GreaterThan(l: Literal, a: AttributeReference) =>
+        for (d <- dayAttr(a); dl <- midnightDate(l)) yield LessThan(d, dl)
+      case _ => None
+    }
+  }
+
+  /** exprId/qualifier/alias-insensitive rendering for expression matching:
+    * two analyzed expressions over the same base match iff their SQL text
+    * matches after stripping the outer alias and attribute qualifiers.
+    */
+  private[plans] def renderForm(e: Expression): Option[String] = {
+    val noAlias = e match { case a: Alias => a.child; case x => x }
+    scala.util.Try(noAlias.transform {
+      case ar: AttributeReference => ar.withQualifier(Nil)
+    }.sql).toOption
+  }
+
+  /** Inline collected Project aliases to fixpoint (stacked withColumns /
+    * PullOutGroupingExpressions chains), so matching always sees the
+    * base-column form of every expression.
+    */
+  private def inlineAliases(e: Expression,
+      aliases: Map[ExprId, Expression]): Expression = {
+    var cur = e
+    var i = 0
+    while (i < 10) {
+      val next = cur.transformUp {
+        case a: AttributeReference if aliases.contains(a.exprId) =>
+          aliases(a.exprId)
+      }
+      if (next.fastEquals(cur)) return cur
+      cur = next; i += 1
+    }
+    cur
+  }
+
+  /** avg(x) from the summary's (Σ s_x, Σ c_x): mirrors [[Average]]'s own
+    * evaluation — a decimal measure divides at Average's exact internal
+    * types (sum at decimal(p+10,s), count at decimal(20,0), result cast to
+    * Average.resultType), everything else at double — so a rerouted avg
+    * renders the value the base scan would. Float/double measures inherit
+    * the usual decomposition caveat (the base sums in row order, the
+    * summary pre-sums per group: equal in exact arithmetic, last-ulp free
+    * under IEEE — the same freedom sum(x) already has). TRY-mode averages
+    * refuse: their overflow-to-null points differ from the re-aggregated
+    * shape's.
+    */
+  private def avgFromPartials(a: Average, sumOfSums: Expression,
+      sumOfCounts: Expression): Option[Expression] =
+    if (a.evalMode == EvalMode.TRY) None
+    else a.child.dataType match {
+      // a.dataType IS Average.resultType (decimal(p+4,s+4) bounded);
+      // the internal sum buffer type is decimal(p+10,s) bounded
+      case dt: DecimalType =>
+        val sumType = DecimalType(math.min(dt.precision + 10, 38), dt.scale)
+        Some(Cast(Divide(Cast(sumOfSums, sumType),
+          Cast(sumOfCounts, DecimalType(20, 0))), a.dataType))
+      case _: NumericType => Some(Cast(Divide(Cast(sumOfSums, DoubleType),
+        Cast(sumOfCounts, DoubleType)), a.dataType))
+      case _ => None // interval averages keep their own algebra — refuse
+    }
+
+  /** sum/count/avg over an EXPRESSION OF GROUP COLUMNS, weighted by the
+    * summary's per-group `cnt`: f(group cols) is constant within a group,
+    * so Σ_base f = Σ_groups f·cnt, count_base(f) = Σ_{f≠null} cnt, and avg
+    * is their quotient. Integral f stays bit-exact (long arithmetic both
+    * ways); float/double inherit the reassociation caveat; decimal f
+    * refuses — mirroring the precision walk of f·cnt is not worth the rule
+    * surface.
+    */
+  private def sumOfGroupExpr(b: Expression,
+      cnt: AttributeReference): Option[Expression] =
+    b.dataType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        Some(Sum(Multiply(Cast(b, LongType), cnt)).toAggregateExpression())
+      case DoubleType | FloatType =>
+        Some(Sum(Multiply(Cast(b, DoubleType), Cast(cnt, DoubleType)))
+          .toAggregateExpression())
+      case _ => None
+    }
+
+  private def countOfGroupExpr(b: Expression,
+      cnt: AttributeReference): Expression =
+    Coalesce(Seq(Sum(If(IsNull(b), Literal(0L), cnt)).toAggregateExpression(),
+      Literal(0L)))
+
+  private def avgOfGroupExpr(a: Average, b: Expression,
+      cnt: AttributeReference): Option[Expression] =
+    if (a.evalMode == EvalMode.TRY) None
+    else b.dataType match {
+      case dt: NumericType if !dt.isInstanceOf[DecimalType] =>
+        val w = Sum(Multiply(Cast(b, DoubleType), Cast(cnt, DoubleType)))
+          .toAggregateExpression()
+        val n = Sum(If(IsNull(b), Literal(0L), cnt)).toAggregateExpression()
+        Some(Cast(Divide(w, Cast(n, DoubleType)), a.dataType))
+      case _ => None
+    }
 }

@@ -25,27 +25,35 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `snapshotAt(new)` / `snapshotAt(old)` accordingly. Every store must
   * retain enough versions to cover its sync gap.
   *
-  * Durability protocol = [[MvMaintainer]]'s, lifted: refresh writes the
-  * next summary version dir, then ONE atomic state-file rename commits
-  * (definition @ new summary path, per-table synced versions) — a crash
-  * before the rename re-runs the same refreshes from the same pinned
-  * versions and overwrites the orphan dirs; a crash after it resumes
-  * cleanly. Summary dirs two generations back are gc'd after the commit.
+  * Durability protocol (why a state file: the signed-partial algebra is
+  * NOT idempotent — applying one batch's feed twice double-subtracts its
+  * deletes — so "which store versions has the summary absorbed" must
+  * survive the process): refresh writes the next summary version dir,
+  * then ONE atomic state-file rename commits (definition @ new summary
+  * path, per-table synced versions) — a crash before the rename re-runs
+  * the same refreshes from the same pinned versions and overwrites the
+  * orphan dirs; a crash after it resumes cleanly. Summary dirs two
+  * generations back are gc'd after the commit.
+  *
+  * The same protocol keeps a single-table MV ([[MvMaintainer]]): a
+  * [[Registration]] says which registry the maintained definition lives
+  * in and how its state file renders.
   *
   * Registry contract (same as [[StarMv]]'s own): ONE maintained
   * definition per table set — a second definition over the same tables
   * would be served for queries whose leaves match this maintainer's
   * freshness, without reflecting it.
   *
-  * Scale per sync: per changed table, two delta joins (feed × the other
-  * tables — dimension sides broadcast in the star shape) + a groups-sized
-  * merge + at most one pruned repair join. Never a fact re-join; driver
-  * state is the definition and |tables| longs.
+  * Scale per sync: per changed table, one signed delta join (feed × the
+  * other tables — dimension sides broadcast in the star shape) + a
+  * groups-sized merge + at most one pruned repair join. Never a fact
+  * re-join; driver state is the definition and |tables| longs.
   */
 final class StarMvMaintainer private (
     spark: SparkSession,
     stores: Map[String, VersionedTableStore],
     statePath: String,
+    reg: StarMvMaintainer.Registration,
     // @volatile: attachMetrics' freshness probe reads these from the
     // metrics server thread while syncTo mutates them under `synchronized`
     @volatile private var d: StarMvDef,
@@ -129,9 +137,7 @@ final class StarMvMaintainer private (
         // the seq (the summary stays exactly right — resolution is
         // unchanged), so re-arm serving for the current layout instead
         // of leaving the reroute dead until the next real merge
-        tables.foreach(p =>
-          MaterializedView.replaceDirs(p, stores(p).dataDirsAt(current(p)),
-            stores(p).stackedDirsAt(current(p))))
+        tables.foreach(p => StarMvMaintainer.arm(stores(p), p, current(p)))
         return d
       }
       tables.foreach { p =>
@@ -152,8 +158,7 @@ final class StarMvMaintainer private (
                 if (j <= i) current(q) else synced(q))
             }.toMap
             val feed = stores(p).changeFeedBetween(synced(p), current(p))
-            nd = StarMv.refreshTableFromFeed(spark, nd, p, feed,
-              recomputeKeyCap, overrides)
+            nd = reg.refresh(spark, nd, p, feed, recomputeKeyCap, overrides)
           }
         }
         // serving first (in-process consistency: new dir sets → new
@@ -163,10 +168,8 @@ final class StarMvMaintainer private (
         // restore the committed registration, or every later sync()
         // would fail refreshTableDelta's currently-registered require —
         // wedging the maintainer until a process restart
-        tables.foreach(p =>
-          MaterializedView.replaceDirs(p, stores(p).dataDirsAt(current(p)),
-            stores(p).stackedDirsAt(current(p))))
-        StarMvMaintainer.writeState(spark, statePath, nd, current)
+        tables.foreach(p => StarMvMaintainer.arm(stores(p), p, current(p)))
+        StarMvMaintainer.writeState(spark, statePath, reg, nd, current)
       } catch {
         // a mid-sequence failure leaves refreshTableDelta's LAST
         // registration half-synced (some tables' deltas absorbed, not
@@ -174,11 +177,9 @@ final class StarMvMaintainer private (
         // dirs, best-effort), whose summary files are untouched until
         // the gc below, and let the caller retry
         case t: Throwable =>
-          StarMv.unregister(nd.summaryPath)
-          StarMv.register(d)
-          tables.foreach(p => scala.util.Try(
-            MaterializedView.replaceDirs(p, stores(p).dataDirsAt(synced(p)),
-              stores(p).stackedDirsAt(synced(p)))))
+          reg.restore(nd, d)
+          tables.foreach(p =>
+            scala.util.Try(StarMvMaintainer.arm(stores(p), p, synced(p))))
           throw t
       }
       // gc relative to the PREVIOUS committed summary, not the new head:
@@ -202,25 +203,55 @@ final class StarMvMaintainer private (
 
 object StarMvMaintainer {
 
+  /** Where a maintained definition is registered and how its state file
+    * renders: [[StarMv]]'s registry and the star codec, or — for
+    * [[MvMaintainer]] — the single-table registry and its own format.
+    */
+  private[plans] trait Registration {
+    def register(d: StarMvDef): Unit
+    /** undo a failed sync: `failed` was registered, `committed` was not */
+    def restore(failed: StarMvDef, committed: StarMvDef): Unit
+    def refresh(spark: SparkSession, d: StarMvDef, table: String,
+        feed: DataFrame, recomputeKeyCap: Int,
+        overrides: Map[String, DataFrame]): StarMvDef
+    def state(d: StarMvDef, synced: Map[String, Long]): Seq[(String, String)]
+  }
+
+  private object StarRegistration extends Registration {
+    def register(d: StarMvDef): Unit = StarMv.register(d)
+    def restore(failed: StarMvDef, committed: StarMvDef): Unit = {
+      StarMv.unregister(failed.summaryPath)
+      StarMv.register(committed)
+    }
+    def refresh(spark: SparkSession, d: StarMvDef, table: String,
+        feed: DataFrame, recomputeKeyCap: Int,
+        overrides: Map[String, DataFrame]): StarMvDef =
+      StarMv.refreshTableFromFeed(spark, d, table, feed, recomputeKeyCap,
+        overrides)
+    def state(d: StarMvDef,
+        synced: Map[String, Long]): Seq[(String, String)] =
+      StarMvCodec.renderDef(d) :+ ("syncedVersions" -> synced.toSeq.sorted
+        .map { case (t, v) => s"${StarMvCodec.enc(t)}=$v" }.mkString(","))
+  }
+
   /** Start maintaining `d` (already built via [[StarMv.build]] — its
     * summary reflects every store's CURRENT version), write the initial
     * state, and arm snapshot serving for the current dir sets. `stores`
     * is keyed by the definition's table paths.
     */
   def create(spark: SparkSession, stores: Map[String, VersionedTableStore],
-      d: StarMvDef, statePath: String): StarMvMaintainer = {
-    val byKey = stores.map { case (p, s) => MaterializedView.normalize(p) -> s }
-    val tables = d.tables.map(MaterializedView.normalize)
-    require(tables.toSet == byKey.keySet,
-      s"stores must cover exactly the MV's tables: ${tables.sorted} vs " +
-        s"${byKey.keySet.toSeq.sorted}")
-    StarMv.register(d)
-    val current = tables.map(p => p -> byKey(p).currentVersion).toMap
-    writeState(spark, statePath, d, current)
-    tables.foreach(p =>
-      MaterializedView.replaceDirs(p, byKey(p).dataDirsAt(current(p)),
-        byKey(p).stackedDirsAt(current(p))))
-    new StarMvMaintainer(spark, byKey, statePath, d, current)
+      d: StarMvDef, statePath: String): StarMvMaintainer =
+    start(spark, stores, d, statePath, StarRegistration)
+
+  private[plans] def start(spark: SparkSession,
+      stores: Map[String, VersionedTableStore], d: StarMvDef,
+      statePath: String, reg: Registration): StarMvMaintainer = {
+    val byKey = storesByKey(stores, d)
+    reg.register(d)
+    val current = byKey.map { case (p, s) => p -> s.currentVersion }
+    writeState(spark, statePath, reg, d, current)
+    byKey.foreach { case (p, s) => arm(s, p, current(p)) }
+    new StarMvMaintainer(spark, byKey, statePath, reg, d, current)
   }
 
   /** Resume from a state file after a restart: re-registers the recorded
@@ -231,45 +262,60 @@ object StarMvMaintainer {
     */
   def open(spark: SparkSession, stores: Map[String, VersionedTableStore],
       statePath: String): StarMvMaintainer = {
+    val kv = readState(spark, statePath)
+    val synced = kv("syncedVersions").split(",", -1).toSeq.filter(_.nonEmpty)
+      .map { pair =>
+        val Array(t, v) = pair.split("=", 2); StarMvCodec.dec(t) -> v.toLong
+      }.toMap
+    resume(spark, stores, statePath, StarMvCodec.parseDef(kv), synced,
+      StarRegistration)
+  }
+
+  private[plans] def resume(spark: SparkSession,
+      stores: Map[String, VersionedTableStore], statePath: String,
+      d: StarMvDef, synced: Map[String, Long],
+      reg: Registration): StarMvMaintainer = {
+    val byKey = storesByKey(stores, d)
+    reg.register(d)
+    byKey.foreach { case (p, s) => scala.util.Try(arm(s, p, synced(p))) }
+    new StarMvMaintainer(spark, byKey, statePath, reg, d, synced)
+  }
+
+  private def storesByKey(stores: Map[String, VersionedTableStore],
+      d: StarMvDef): Map[String, VersionedTableStore] = {
     val byKey = stores.map { case (p, s) => MaterializedView.normalize(p) -> s }
+    val tables = d.tables.map(MaterializedView.normalize)
+    require(tables.toSet == byKey.keySet,
+      s"stores must cover exactly the MV's tables: ${tables.sorted} vs " +
+        s"${byKey.keySet.toSeq.sorted}")
+    byKey
+  }
+
+  /** Make table `p`'s dir set at version `v` the one snapshot serving
+    * matches (fails when `v` aged out of the store's retention).
+    */
+  private def arm(store: VersionedTableStore, p: String, v: Long): Unit =
+    MaterializedView.replaceDirs(p, store.dataDirsAt(v), store.stackedDirsAt(v))
+
+  /** The `key<TAB>value` lines of a maintainer state file. */
+  private[plans] def readState(spark: SparkSession,
+      statePath: String): Map[String, String] = {
     val p = new Path(statePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(p), s"no maintainer state at $statePath — create() first")
     val in = fs.open(p)
     val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
-    val kv = body.linesIterator.filter(_.nonEmpty).map { l =>
+    body.linesIterator.filter(_.nonEmpty).map { l =>
       val i = l.indexOf('\t'); l.substring(0, i) -> l.substring(i + 1)
     }.toMap
-    def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-    def split(s: String): Seq[String] =
-      if (s.isEmpty) Nil else s.split(",", -1).toSeq
-    val d = StarMvCodec.parseDef(kv)
-    val synced = split(kv("syncedVersions")).map { pair =>
-      val Array(t, v) = pair.split("=", 2); dec(t) -> v.toLong }.toMap
-    val tables = d.tables.map(MaterializedView.normalize)
-    require(tables.toSet == byKey.keySet,
-      s"stores must cover exactly the MV's tables: ${tables.sorted} vs " +
-        s"${byKey.keySet.toSeq.sorted}")
-    StarMv.register(d)
-    tables.foreach { t =>
-      scala.util.Try(
-        MaterializedView.replaceDirs(t, byKey(t).dataDirsAt(synced(t)),
-          byKey(t).stackedDirsAt(synced(t))))
-    }
-    new StarMvMaintainer(spark, byKey, statePath, d, synced)
   }
 
   private def writeState(spark: SparkSession, statePath: String,
-      d: StarMvDef, synced: Map[String, Long]): Unit = {
-    val enc = StarMvCodec.enc _
-    val body = (StarMvCodec.renderDef(d) :+
-      ("syncedVersions" -> synced.toSeq.sorted
-        .map { case (t, v) => s"${enc(t)}=$v" }.mkString(",")))
-      .map { case (k, v) => s"$k\t$v" }.mkString("\n").getBytes("UTF-8")
-    graft.sources.AtomicFiles.write(
-      spark.sparkContext.hadoopConfiguration, new Path(statePath), body)
-  }
+      reg: Registration, d: StarMvDef, synced: Map[String, Long]): Unit =
+    graft.sources.AtomicFiles.write(spark.sparkContext.hadoopConfiguration,
+      new Path(statePath), reg.state(d, synced)
+        .map { case (k, v) => s"$k\t$v" }.mkString("\n").getBytes("UTF-8"))
 }
 
 /** The [[StarMv.StarMvDef]] ↔ state-file codec both durable maintainers

@@ -1328,7 +1328,7 @@ object RelationalQueries {
     }),
 
     // ── ROLLUP over the star through the Expand rewrite
-    // ([[graft.plans.StarMv.tryRewriteExpand]]): the analyzer plants an
+    // ([[graft.plans.StarMv.tryRewrite]]): the analyzer plants an
     // Expand between the Aggregate and the three-table join, the rule
     // matches the join tree below it against the registered star and
     // rebuilds the SAME Expand over the pre-joined summary — every tier

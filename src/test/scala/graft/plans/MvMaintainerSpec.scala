@@ -127,6 +127,35 @@ class MvMaintainerSpec extends SparkTestBase {
     } finally f.close()
   }
 
+  test("open() resumes a state file in the original single-table format") {
+    val f = new Fixture("legacy", 59)
+    try {
+      // the format every single-table maintainer has written: one
+      // key<TAB>value line per field, URL-encoded, the synced version last
+      val enc = (s: String) => java.net.URLEncoder.encode(s, "UTF-8")
+      val v = f.store.currentVersion
+      val state = new org.apache.hadoop.fs.Path(
+        tmpDir("mvm_legacy_old") + "/mv_state")
+      val fs = state.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val out = fs.create(state)
+      try out.write((s"base\t${enc(f.base)}\n" + "group\tg\n" +
+        "measure\tm\n" + s"summary\t${enc(f.mvDef.summaryPath)}\n" +
+        "derived\t\n" + s"storeVersion\t$v").getBytes("UTF-8"))
+      finally out.close()
+      MaterializedView.unregister(f.base) // a fresh process registers nothing
+      val m2 = MvMaintainer.open(spark, f.store, state.toString)
+      assert(m2.syncedVersion === v)
+      assert(m2.definition === f.mvDef)
+      assert(MaterializedView.lookup(MaterializedView.normalize(f.base))
+        .contains(f.mvDef))
+      f.mergeRandom()
+      m2.sync()
+      assert(scanPaths(f.rollup).forall(_.contains("mvm_legacy_sum")),
+        "the resumed maintainer must serve the rollup from its summary")
+      assert(f.values(f.rollup) === f.truth)
+    } finally f.close()
+  }
+
   test("crash between refresh and state commit: re-apply converges") {
     val f = new Fixture("crash", 37)
     try {

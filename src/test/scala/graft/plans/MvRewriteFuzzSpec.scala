@@ -108,30 +108,48 @@ class MvRewriteFuzzSpec extends SparkTestBase {
 
     val dayCol: () => Column = () => col("ts").cast("date").as("day")
     // mix of derived-matching shapes, plain-group shapes, and shapes that
-    // must fall through (finer truncation, raw ts, measure filters)
-    val groupPools: Seq[() => Seq[Column]] = Seq(
-      () => Seq(col("g"), dayCol()),
-      () => Seq(dayCol()),
-      () => Seq(col("g")),
-      () => Seq(date_trunc("hour", col("ts")).as("h")), // finer — no capture
-      () => Seq(col("ts")))                             // raw — no capture
+    // must fall through (finer truncation, raw ts, measure filters), each
+    // grouped plainly or as ROLLUP / CUBE (served through the Expand path)
+    val groupPools: Seq[(String, () => Seq[Column])] = Seq(
+      "group" -> (() => Seq(col("g"), dayCol())),
+      "group" -> (() => Seq(dayCol())),
+      "group" -> (() => Seq(col("g"))),
+      "group" -> (() => Seq(date_trunc("hour", col("ts")).as("h"))), // finer — no capture
+      "group" -> (() => Seq(col("ts"))),                             // raw — no capture
+      "rollup" -> (() => Seq(col("g"), dayCol())),
+      "cube" -> (() => Seq(col("g"), dayCol())),
+      "rollup" -> (() => Seq(dayCol())),
+      "cube" -> (() => Seq(col("g"))),
+      "rollup" -> (() => Seq(col("g"), col("ts"))))                  // raw — no capture
     val aggPool: Seq[Int => Column] = Seq(
       i => sum(col("m")).as(s"a$i"),
       i => count(lit(1)).as(s"a$i"),
       i => min(col("m")).as(s"a$i"),
       i => max(col("m")).as(s"a$i"),
       i => avg(col("m")).as(s"a$i"))  // decomposes to Σs/Σc
+    def midnight(day: Int) = new java.sql.Timestamp(86400000L * day)
     val filterPool: Seq[Option[Column]] = Seq(
-      None, Some(col("g") =!= "g0"), Some(col("m") > 0))
+      None, Some(col("g") =!= "g0"), Some(col("m") > 0),
+      // day ranges: on the derived day, and as the raw-ts midnight bounds
+      // the optimizer turns a day filter into
+      Some(col("ts").cast("date") >= lit(
+        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(20003)))),
+      Some(col("ts") >= lit(midnight(20004)) && col("ts") < lit(midnight(20008))))
 
     def runShape(seed: Int): DataFrame = {
       val r = new scala.util.Random(seed)
-      val groups = groupPools(r.nextInt(groupPools.size))()
+      val (how, groupCols) = groupPools(r.nextInt(groupPools.size))
+      val groups = groupCols()
       val aggs = (0 until 1 + r.nextInt(2)).map(i =>
         aggPool(r.nextInt(aggPool.size))(i))
       val filt = filterPool(r.nextInt(filterPool.size))
       val src = filt.foldLeft(spark.read.parquet(base))(_ filter _)
-      src.groupBy(groups: _*).agg(aggs.head, aggs.tail: _*)
+      val grouped = how match {
+        case "rollup" => src.rollup(groups: _*)
+        case "cube" => src.cube(groups: _*)
+        case _ => src.groupBy(groups: _*)
+      }
+      grouped.agg(aggs.head, aggs.tail: _*)
     }
 
     val shapes = (1 to 50).map(seed => seed -> snap(runShape(seed))).toMap
@@ -139,9 +157,11 @@ class MvRewriteFuzzSpec extends SparkTestBase {
       derivedGroups = Seq("day" -> "cast(ts as date)"))
     try {
       var rewrote = 0
+      var rewroteExpand = 0
       (1 to 50).foreach { seed =>
         val df = runShape(seed)
-        val usesSummary = df.queryExecution.optimizedPlan.collect {
+        val plan = df.queryExecution.optimizedPlan
+        val usesSummary = plan.collect {
           case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
             r.relation match {
               case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
@@ -150,10 +170,15 @@ class MvRewriteFuzzSpec extends SparkTestBase {
             }
         }.exists(identity)
         if (usesSummary) rewrote += 1
+        if (usesSummary && plan.exists(
+            _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Expand]))
+          rewroteExpand += 1
         assert(snap(df) == shapes(seed),
           s"seed=$seed diverged (rewritten=$usesSummary)")
       }
       assert(rewrote >= 10, s"only $rewrote/50 shapes rewrote — pool too weak")
+      assert(rewroteExpand >= 12,
+        s"only $rewroteExpand/50 ROLLUP/CUBE shapes rewrote — pool too weak")
     } finally MaterializedView.unregister(base)
   }
 

@@ -156,4 +156,34 @@ class StarMvDaySpec extends SparkTestBase {
       assert(on === off)
     } finally StarMv.unregister(d.summaryPath)
   }
+
+  test("a derived group over pure table keys builds and never matches") {
+    // the tables are registry keys with nothing behind them (store
+    // snapshots passed as overrides), so the derived SQL cannot be
+    // analyzed: the build must still succeed, and the group never matches
+    val (fk, dk) = (tmpDir("ssd_keys_fact") + "/absent",
+      tmpDir("ssd_keys_dim") + "/absent")
+    val fact = factRows.toDF("ts", "f_d", "v")
+    val d = StarMv.build(spark, StarMvDef(
+      tables = Seq(fk, dk),
+      joins = Seq((QCol(fk, "f_d"), QCol(dk, "d_k"))),
+      groupCols = Seq(QCol(dk, "seg")),
+      measureCols = Seq(QCol(fk, "v")),
+      summaryPath = tmpDir("ssd_keys_sum"),
+      derivedGroups = Seq("day" -> "cast(ts as date)")),
+      tableOverrides = Map(fk -> fact, dk -> dimRows.toDF("d_k", "seg")))
+    val single = MaterializedView.build(spark, fk, Seq("day"), Seq("v"),
+      tmpDir("ssd_keys_single"), Seq("day" -> "cast(ts as date)"),
+      base = Some(fact))
+    try {
+      assert(StarMv.derivedGroupForms(spark, d).isEmpty)
+      assert(StarMv.derivedGroupForms(spark, single.asStar).isEmpty)
+      val totals = spark.read.parquet(d.summaryPath)
+        .agg(sum(col("s_v")), sum(col("cnt"))).as[(Long, Long)].head()
+      assert(totals === ((factRows.map(_._3).sum, factRows.size.toLong)))
+    } finally {
+      StarMv.unregister(d.summaryPath)
+      MaterializedView.unregister(fk)
+    }
+  }
 }

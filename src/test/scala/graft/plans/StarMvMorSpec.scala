@@ -40,9 +40,25 @@ class StarMvMorSpec extends SparkTestBase {
   private val dimSchema = StructType(Seq(
     StructField("c_cust", LongType), StructField("seg", StringType)))
 
+  /** A maintained MV over a MOR fact store, as the compaction test drives
+    * it: the star [[Fixture]] or the single-table [[SingleFixture]].
+    */
+  private trait MorMv {
+    type Row
+    def factStore: MorTableStore
+    def mergeFact(deletes: Seq[Long], upserts: Seq[(Long, Long, Long)]): Unit
+    def sync(): Unit
+    def rollup: DataFrame
+    def values(df: DataFrame): Set[Row]
+    def truth: Set[Row]
+    def served(df: DataFrame): Boolean
+    def close(): Unit
+  }
+
   /** MOR fact; dim is MOR or CoW per `morDim`. */
   private final class Fixture(tag: String, seed: Int, morDim: Boolean,
-      compactThreshold: Int = 8) {
+      compactThreshold: Int = 8) extends MorMv {
+    type Row = (String, Long, Long, Long, Long)
     val rnd = new scala.util.Random(seed)
     var facts: Seq[(Long, Long, Long)] = (1L to 120L)
       .map(i => (i, 1L + rnd.nextInt(20), rnd.nextInt(100).toLong))
@@ -118,7 +134,59 @@ class StarMvMorSpec extends SparkTestBase {
         !resolvesWindowed(df)
     }
 
+    def sync(): Unit = { maintainer.sync(); () }
+
     def close(): Unit = StarMv.unregister(maintainer.definition.summaryPath)
+  }
+
+  /** MOR fact rolled up by `f_cust` through a single-table MV and its
+    * [[MvMaintainer]].
+    */
+  private final class SingleFixture(tag: String, seed: Int,
+      compactThreshold: Int) extends MorMv {
+    type Row = (Long, Long, Long, Long, Long)
+    val rnd = new scala.util.Random(seed)
+    var facts: Seq[(Long, Long, Long)] = (1L to 120L)
+      .map(i => (i, 1L + rnd.nextInt(20), rnd.nextInt(100).toLong))
+    val factStore = new MorTableStore(spark, tmpDir(s"smvm_${tag}_fs"),
+      TableSpec(s"public.smvm_${tag}_f", factSchema, Seq("o_id")), 4,
+      compactThreshold = compactThreshold)
+    factStore.init(facts.toDF("o_id", "f_cust", "v"))
+    val base = tmpDir(s"smvm_${tag}_base")
+    factStore.snapshot().write.mode("overwrite").parquet(base)
+    val mvDef = MaterializedView.build(spark, base, Seq("f_cust"), Seq("v"),
+      tmpDir(s"smvm_${tag}_sum"), base = Some(factStore.snapshot()))
+    val maintainer = MvMaintainer.create(spark, factStore, mvDef,
+      tmpDir(s"smvm_${tag}_state") + "/state")
+
+    def truth: Set[Row] = facts.groupBy(_._2).map { case (c, rs) =>
+      (c, rs.size.toLong, rs.map(_._3).sum, rs.map(_._3).min,
+        rs.map(_._3).max)
+    }.toSet
+
+    def rollup: DataFrame = factStore.snapshot().groupBy("f_cust")
+      .agg(count(lit(1)).as("n"), sum(col("v")).as("s"),
+        min(col("v")).as("mn"), max(col("v")).as("mx"))
+
+    def values(df: DataFrame): Set[Row] =
+      df.as[(Long, Long, Long, Long, Long)].collect().toSet
+
+    def mergeFact(deletes: Seq[Long], upserts: Seq[(Long, Long, Long)]): Unit = {
+      factStore.merge(CompactedBatch(deletes.toDF("o_id"),
+        upserts.toDF("o_id", "f_cust", "v")))
+      facts = facts.filterNot(r => deletes.contains(r._1))
+        .filterNot(r => upserts.exists(_._1 == r._1)) ++ upserts
+    }
+
+    def sync(): Unit = { maintainer.sync(); () }
+
+    def served(df: DataFrame): Boolean = {
+      val paths = scanPaths(df)
+      paths.nonEmpty && paths.forall(_.contains(s"smvm_${tag}_sum")) &&
+        !resolvesWindowed(df)
+    }
+
+    def close(): Unit = MaterializedView.unregister(base)
   }
 
   test("MOR fact + CoW dim: live-snapshot rollup serves from the summary") {
@@ -216,20 +284,27 @@ class StarMvMorSpec extends SparkTestBase {
   }
 
   test("compaction: serving pauses on the folded dir set, a no-op sync re-arms") {
-    val f = new Fixture("cpt", 41, morDim = false, compactThreshold = 2)
-    try {
-      f.mergeFact(deletes = Seq(1L), upserts = Seq((300L, 2L, 11L)))
-      f.maintainer.sync()
-      assert(f.served(f.rollup))
-      // fold every threshold-deep stack: dirs change, the seq does not
-      assert(f.factStore.compact() > 0, "compaction must fold some buckets")
-      assert(!f.served(f.rollup),
-        "post-compaction dir set must miss the registered set")
-      assert(f.values(f.rollup) === f.truth)
-      f.maintainer.sync() // version-level no-op, re-arms the dir sets
-      assert(f.served(f.rollup), "no-op sync must re-arm serving")
-      assert(f.values(f.rollup) === f.truth)
-    } finally f.close()
+    // the star MV and the single-table MV (the one-table star) share one
+    // maintainer protocol: both must re-arm serving on a no-op sync
+    val inputs: Seq[() => MorMv] = Seq(
+      () => new Fixture("cpt", 41, morDim = false, compactThreshold = 2),
+      () => new SingleFixture("cpts", 41, compactThreshold = 2))
+    inputs.foreach { input =>
+      val f = input()
+      try {
+        f.mergeFact(deletes = Seq(1L), upserts = Seq((300L, 2L, 11L)))
+        f.sync()
+        assert(f.served(f.rollup))
+        // fold every threshold-deep stack: dirs change, the seq does not
+        assert(f.factStore.compact() > 0, "compaction must fold some buckets")
+        assert(!f.served(f.rollup),
+          "post-compaction dir set must miss the registered set")
+        assert(f.values(f.rollup) === f.truth)
+        f.sync() // version-level no-op, re-arms the dir sets
+        assert(f.served(f.rollup), "no-op sync must re-arm serving")
+        assert(f.values(f.rollup) === f.truth)
+      } finally f.close()
+    }
   }
 
   test("single-table MV over a MOR store: MvMaintainer keeps it live and served") {

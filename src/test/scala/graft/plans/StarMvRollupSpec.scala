@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions._
 
 /** ROLLUP / CUBE / GROUPING SETS over a registered STAR
-  * ([[StarMv.tryRewriteExpand]]): the rebuilt Expand over the summary must
+  * ([[StarMv.tryRewrite]]): the rebuilt Expand over the summary must
   * reproduce the multi-set semantics exactly — every test compares the
   * served values against the SAME query with the rewrite disabled
   * (`spark.graft.mv.enabled=false`), and pins that the served plan scans
