@@ -220,10 +220,11 @@ object EntityResolution {
     // localCheckpointed (eager, batch-sized — this operator already runs
     // eagerly through CC), so nothing escapes that still references the
     // persists, and a long-lived session (q241's per-micro-batch
-    // foreachBatch) no longer accumulates pinned blocks per call. NOTE: a
-    // caller that persisted `registry` itself shares the cache entry —
-    // this releases it.
-    val reg = registry.persist(mem)
+    // foreachBatch) no longer accumulates pinned blocks per call. A
+    // registry the caller persisted itself is the caller's to release:
+    // it is neither re-pinned nor unpersisted here.
+    val ownsReg = registry.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val reg = if (ownsReg) registry.persist(mem) else registry
     val newSigs = signatures(newRecords, idCol, nameCol, blockKey).persist(mem)
     try {
       guardBlocks(newSigs, maxBlockSize, "increment")
@@ -256,7 +257,7 @@ object EntityResolution {
         } finally { residual.unpersist(blocking = false); () }
       } finally { adopted.unpersist(blocking = false); () }
     } finally {
-      reg.unpersist(blocking = false)
+      if (ownsReg) reg.unpersist(blocking = false)
       newSigs.unpersist(blocking = false); ()
     }
   }

@@ -37,6 +37,18 @@ import org.apache.spark.sql.functions.col
   * contract. A fully-completed batch replayed re-applies the idempotent
   * merges only (the signed refresh must never run twice).
   *
+  * Why this sequencing is its own and not [[StarMvMaintainer]]'s
+  * `syncTo`: that loop reads each table's feed from retained versions
+  * and pins every other table with `snapshotAt`, AFTER the merges. A
+  * warehouse table has no versions to pin or to diff, so the feed must
+  * be captured before its merge and the pinning must come from doing the
+  * merges one table at a time. Everything else is shared: the one MV
+  * registry, the ownership-checked refresh, and the state-file layer
+  * ([[StarMvMaintainer.readState]]/[[StarMvMaintainer.writeState]]/
+  * [[StarMvMaintainer.storesByKey]]), whose file carries this
+  * maintainer's batch progress (`lastCompleted`, `inProgress`, `done`,
+  * `completedSummary`) as its own lines.
+  *
   * Serving: the definition's table keys are
   * [[JdbcTableStore.servingKey]]s, which [[StarMv]]'s leaf matcher
   * resolves from live `snapshot()` scans — so warehouse rollups reroute
@@ -162,8 +174,7 @@ final class JdbcStarMaintainer private (
             } catch {
               case t: Throwable =>
                 done -= p
-                StarMv.unregister(nd.summaryPath)
-                StarMv.register(d)
+                StarMv.put(d, retired = Some(nd.summaryPath))
                 throw t
             }
             d = nd
@@ -245,7 +256,7 @@ final class JdbcStarMaintainer private (
 
   private def feedPath(batchId: Long, table: String): Path =
     new Path(new Path(root),
-      s"feeds/$batchId/${StarMvCodec.enc(table)}")
+      s"feeds/$batchId/${MvCatalog.enc(table)}")
 
   private def committed(dir: Path): Boolean = {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -269,11 +280,7 @@ object JdbcStarMaintainer {
     require(d.derivedMeasures.isEmpty && d.derivedGroups.isEmpty,
       "derived measures/groups need readable table paths for form " +
         "analysis — not available for JDBC identities")
-    val byKey = stores.map { case (p, s) => MaterializedView.normalize(p) -> s }
-    val tables = d.tables.map(MaterializedView.normalize)
-    require(tables.toSet == byKey.keySet,
-      s"stores must cover exactly the MV's tables: ${tables.sorted} vs " +
-        s"${byKey.keySet.toSeq.sorted}")
+    val byKey = StarMvMaintainer.storesByKey(stores, d)
     // a rebuilt maintainer over the same summary path must not inherit a
     // dead predecessor's pause (its state file is being overwritten too)
     StarMv.resumeServing(d.summaryPath)
@@ -290,47 +297,34 @@ object JdbcStarMaintainer {
     */
   def open(spark: SparkSession, stores: Map[String, JdbcTableStore],
       root: String): JdbcStarMaintainer = {
-    val byKey = stores.map { case (p, s) => MaterializedView.normalize(p) -> s }
-    val p = statePath(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"no maintainer state at $p — create() first")
-    val in = fs.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val kv = body.linesIterator.filter(_.nonEmpty).map { l =>
-      val i = l.indexOf('\t'); l.substring(0, i) -> l.substring(i + 1)
-    }.toMap
-    val d = StarMvCodec.parseDef(kv)
-    val tables = d.tables.map(MaterializedView.normalize)
-    require(tables.toSet == byKey.keySet,
-      s"stores must cover exactly the MV's tables: ${tables.sorted} vs " +
-        s"${byKey.keySet.toSeq.sorted}")
+    val (rec, kv) = StarMvMaintainer.readState(spark, statePath(root))
+    val d = rec.asStar
+    val byKey = StarMvMaintainer.storesByKey(stores, d)
     val lastCompleted = kv("lastCompleted").toLong
     val inProgress = kv.get("inProgress").filter(_.nonEmpty).map(_.toLong)
     val done = kv.get("done").filter(_.nonEmpty)
-      .map(_.split(",", -1).toSeq.map(StarMvCodec.dec).toSet)
+      .map(_.split(",", -1).toSeq.map(MvCatalog.dec).toSet)
       .getOrElse(Set.empty[String])
     val completedSummary = kv.get("completedSummary")
-      .map(StarMvCodec.dec).getOrElse(d.summaryPath)
+      .map(MvCatalog.dec).getOrElse(d.summaryPath)
     StarMv.register(d)
     if (inProgress.isDefined) StarMv.pauseServing(d.summaryPath)
     new JdbcStarMaintainer(spark, byKey, root, d, lastCompleted,
       inProgress, done, completedSummary)
   }
 
-  private def statePath(root: String): Path =
-    new Path(new Path(root), "_state")
+  private def statePath(root: String): String =
+    new Path(new Path(root), "_state").toString
 
+  /** The shared state file ([[StarMvMaintainer.writeState]]) with this
+    * maintainer's batch progress as its own lines.
+    */
   private def writeState(spark: SparkSession, root: String, d: StarMvDef,
       lastCompleted: Long, inProgress: Option[Long],
-      done: Set[String], completedSummary: String): Unit = {
-    val body = (StarMvCodec.renderDef(d) ++ Seq(
+      done: Set[String], completedSummary: String): Unit =
+    StarMvMaintainer.writeState(spark, statePath(root), d, Seq(
       "lastCompleted" -> lastCompleted.toString,
       "inProgress" -> inProgress.map(_.toString).getOrElse(""),
-      "done" -> done.toSeq.sorted.map(StarMvCodec.enc).mkString(","),
-      "completedSummary" -> StarMvCodec.enc(completedSummary)))
-      .map { case (k, v) => s"$k\t$v" }.mkString("\n").getBytes("UTF-8")
-    graft.sources.AtomicFiles.write(
-      spark.sparkContext.hadoopConfiguration, statePath(root), body)
-  }
+      "done" -> done.toSeq.sorted.map(MvCatalog.enc).mkString(","),
+      "completedSummary" -> MvCatalog.enc(completedSummary)))
 }

@@ -19,11 +19,11 @@ import org.apache.spark.sql.execution.datasources.HadoopFsRelation
   * ([[MvDef.asStar]]): [[StarMv]] builds its summary, refreshes it with
   * the same signed-delta algebra and serves it through the same matcher
   * (plain and ROLLUP/CUBE shapes, derived day groups, day-range filter
-  * recovery). What this object keeps is the single-table surface: ONE
-  * MV per base path ([[register]] replaces, [[unregister]] also drops the
-  * base's snapshot dir sets), the exact dir-set registry that versioned
-  * store snapshots are matched through, and the path-keyed build/refresh
-  * API.
+  * recovery), and [[StarMv]]'s one registry holds it next to the stars.
+  * What this object keeps is the single-table surface: ONE MV per base
+  * path ([[register]] replaces, [[unregister]] also drops the base's
+  * snapshot dir sets), the exact dir-set registry that versioned store
+  * snapshots are matched through, and the path-keyed build/refresh API.
   *
   * Scale: this is the 100 TB shape — the base scan (hours) happens once at
   * build; every rollup thereafter reads groups × partials rows (KB–MB).
@@ -57,39 +57,40 @@ object MaterializedView {
     */
   final case class MvDef(basePath: String, groupCols: Seq[String],
       measureCols: Seq[String], summaryPath: String,
-      derivedGroups: Seq[(String, String)] = Nil) {
+      derivedGroups: Seq[(String, String)] = Nil) extends MvDefinition {
     /** The same MV as a one-table star: no joins, the plain group columns
       * and measures qualified by the base path.
       */
-    private[plans] def asStar: StarMv.StarMvDef = {
+    private[plans] lazy val asStar: StarMv.StarMvDef = {
       val derived = derivedGroups.map(_._1).toSet
       StarMv.StarMvDef(tables = Seq(basePath), joins = Nil,
         groupCols = groupCols.filterNot(derived).map(StarMv.QCol(basePath, _)),
         measureCols = measureCols.map(StarMv.QCol(basePath, _)),
         summaryPath = summaryPath, derivedGroups = derivedGroups)
     }
+    private[plans] lazy val baseKey: Option[String] = Some(normalize(basePath))
+    private[plans] def withSummary(p: String): MvDef = copy(summaryPath = p)
   }
 
-  /** REGISTRY SCOPES: registries are keyed by the active session's
-    * `spark.graft.mv.scope` tag (default `"global"`), so two sessions
-    * that set distinct tags register and serve independently — the
-    * isolation boundary that makes a shared JVM (a test suite, a
-    * multi-tenant driver) safe without threading a catalog object through
-    * every call site. The default keeps today's JVM-global behavior:
-    * untagged sessions (including the streaming micro-batch clones, which
-    * copy the session conf) all share the `"global"` scope. The old
-    * register/unregister/lookup API is unchanged — it just resolves the
-    * active scope first. THREAD CONTRACT for non-default scopes: scope
-    * resolution reads the ACTIVE (thread-local, else default) session,
-    * so a tenant using a custom tag must run its registrations,
-    * maintainer syncs, and queries on threads where its session is
-    * active (`SparkSession.setActiveSession`) — a bare scheduler thread
-    * falls back to the default session's scope and would look up the
-    * wrong registry (loud for maintainers: the refresh's
+  /** REGISTRY SCOPES: the MV registry ([[StarMv.definitions]], which
+    * holds this object's MvDefs next to the stars) and the dir-set
+    * registry are keyed by the active session's `spark.graft.mv.scope`
+    * tag (default `"global"`), so two sessions that set distinct tags
+    * register and serve independently — the isolation boundary that
+    * makes a shared JVM (a test suite, a multi-tenant driver) safe
+    * without threading a catalog object through every call site. The
+    * default keeps today's JVM-global behavior: untagged sessions
+    * (including the streaming micro-batch clones, which copy the session
+    * conf) all share the `"global"` scope. The register/unregister/lookup
+    * API just resolves the active scope first. THREAD CONTRACT for
+    * non-default scopes: scope resolution reads the ACTIVE (thread-local,
+    * else default) session, so a tenant using a custom tag must run its
+    * registrations, maintainer syncs, and queries on threads where its
+    * session is active (`SparkSession.setActiveSession`) — a bare
+    * scheduler thread falls back to the default session's scope and would
+    * look up the wrong registry (loud for maintainers: the refresh's
     * currently-registered require misses).
     */
-  private val registries =
-    new ConcurrentHashMap[String, ConcurrentHashMap[String, MvDef]]()
   private val dirRegistries =
     new ConcurrentHashMap[String, ConcurrentHashMap[Set[String], DirReg]]()
 
@@ -119,42 +120,29 @@ object MaterializedView {
       case _ => Nil
     }
 
-  /** base path (scheme-stripped, absolute) → definition, within the
-    * active scope. Scheme-stripped matching means a file:/ and an hdfs:/
-    * path with identical string forms would collide — acceptable for a
-    * single-filesystem deployment, documented here for the day it isn't.
-    */
-  private def registry: ConcurrentHashMap[String, MvDef] =
-    registries.computeIfAbsent(scopeTag, _ => new ConcurrentHashMap())
-
   private[plans] def normalize(path: String): String =
     // a JDBC serving key ([[graft.sources.JdbcTableStore.servingKey]]) is
     // an identity, not a path — Path-normalizing it would mangle the URL
     if (path.startsWith("jdbc::")) path
     else new org.apache.hadoop.fs.Path(path).toUri.getPath
 
-  def register(d: MvDef): Unit = {
-    // a (re)written summary — and possibly a grown base — voids the cost
-    // model's cached row counts for both paths
-    MvCost.evict(d.summaryPath)
-    MvCost.evict(d.basePath)
-    registry.put(normalize(d.basePath), d); ()
-  }
+  /** Register `d` as THE MV of its base (scheme-stripped, absolute path),
+    * replacing the one registered there. Scheme-stripped matching means a
+    * file:/ and an hdfs:/ path with identical string forms would collide —
+    * acceptable for a single-filesystem deployment, documented here for
+    * the day it isn't.
+    */
+  def register(d: MvDef): Unit = StarMv.put(d)
   def unregister(basePath: String): Unit = {
     val key = normalize(basePath)
-    Option(registry.get(key)).foreach(d => MvCost.evict(d.summaryPath))
-    registry.remove(key)
-    dirRegistry.entrySet().removeIf(_.getValue.key == key)
-    ()
+    StarMv.drop(_.baseKey.contains(key))
+    replaceDirs(basePath, Nil)
   }
   /** Test hygiene: wipes EVERY scope, not just the active one. */
-  def clear(): Unit = { registries.clear(); dirRegistries.clear(); MvCost.clear() }
-  private[plans] def registered: Seq[MvDef] = {
-    import scala.jdk.CollectionConverters._
-    registry.values.asScala.toSeq
-  }
-  private[plans] def lookup(path: String): Option[MvDef] = Option(registry.get(path))
-  private[plans] def isEmpty: Boolean = registry.isEmpty
+  def clear(): Unit = { StarMv.clear(); dirRegistries.clear(); MvCost.clear() }
+  private[plans] def lookup(path: String): Option[MvDef] =
+    StarMv.definitions.collectFirst {
+      case d: MvDef if d.baseKey.contains(path) => d }
 
   /** Exact scan-root-set registry for snapshot serving: a versioned store's
     * snapshot reads the manifest's data DIRS (many roots, no single
@@ -165,7 +153,7 @@ object MaterializedView {
     * longer matches, and the query silently falls back to the base until
     * the maintainer syncs again. A time-travel read of an older version
     * misses the same way. Registered sets are bounded by the store's
-    * bucket count. Scoped like [[registry]].
+    * bucket count. Scoped like the MV registry.
     */
   private def dirRegistry: ConcurrentHashMap[Set[String], DirReg] =
     dirRegistries.computeIfAbsent(scopeTag, _ => new ConcurrentHashMap())
@@ -200,16 +188,10 @@ object MaterializedView {
     dirRegistry.entrySet().removeIf(_.getValue.key == key)
     if (dirs.nonEmpty) registerDirs(dirs, basePath, stackedDirs)
   }
-  /** The raw base KEY a dir set is registered under — [[StarMv]]'s leaf
-    * matching uses this to identify a store snapshot with the table path
-    * a [[StarMv.StarMvDef]] names, without requiring a single-table MvDef
-    * for it.
-    */
-  private[plans] def lookupDirKey(dirs: Set[String]): Option[String] =
-    Option(dirRegistry.get(dirs)).map(_.key)
-
-  /** Full registration record — [[StoreResolvePlan]] needs the stacked
-    * subset to validate which dirs may be matched without the Window.
+  /** The registration of an exact dir set: the base KEY [[StarMv]]'s leaf
+    * matching identifies a store snapshot by, and the stacked subset
+    * [[StoreResolvePlan]] validates the dirs matched without the Window
+    * against.
     */
   private[plans] def lookupDirReg(dirs: Set[String]): Option[DirReg] =
     Option(dirRegistry.get(dirs))
@@ -277,11 +259,8 @@ object MaterializedView {
       base: Option[DataFrame] = None): MvDef = {
     val d = lookup(normalize(basePath)).getOrElse(
       throw new IllegalArgumentException(s"no MV registered for $basePath"))
-    val next = StarMv.applyDelta(spark, d.asStar, d.basePath, inserts,
-      deletes, recomputeKeyCap, overrides(d, base))
-    val nd = d.copy(summaryPath = next.summaryPath)
-    register(nd)
-    nd
+    d.withSummary(StarMv.refresh(spark, d, d.basePath, inserts, deletes,
+      recomputeKeyCap, overrides(d, base)).summaryPath)
   }
 
   /** Apply a row-valued change feed (the
@@ -300,12 +279,12 @@ object MaterializedView {
 }
 
 /** The MV serving rule: every Aggregate goes through the one matcher,
-  * [[StarMv.tryRewrite]], over the single-table and star registries.
+  * [[StarMv.tryRewrite]], over the one MV registry.
   */
 object MvRewriteRule extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if ((MaterializedView.isEmpty && StarMv.isEmpty) ||
+    if (StarMv.isEmpty ||
       !conf.getConfString("spark.graft.mv.enabled", "true").toBoolean) plan
     else plan.transformUp {
       case agg: Aggregate => StarMv.tryRewrite(agg).getOrElse(agg)

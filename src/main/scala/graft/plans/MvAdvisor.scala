@@ -114,14 +114,9 @@ object MvAdvisor {
         losslessTables: Seq[String] = Nil): StarMvMaintainer = {
       val d = definition.copy(summaryPath = summaryPath,
         losslessTables = losslessTables)
-      val byKey = stores.map { case (p, s) =>
-        MaterializedView.normalize(p) -> s }
-      val tables = d.tables.map(MaterializedView.normalize)
-      require(tables.toSet == byKey.keySet,
-        s"stores must cover exactly the recommendation's tables: " +
-          s"${tables.sorted} vs ${byKey.keySet.toSeq.sorted}")
+      val byKey = StarMvMaintainer.storesByKey(stores, d)
       val built = StarMv.build(spark, d,
-        tableOverrides = tables.map(p => p -> byKey(p).snapshot()).toMap)
+        tableOverrides = byKey.map { case (p, s) => p -> s.snapshot() })
       StarMvMaintainer.create(spark, byKey, built, statePath)
     }
   }
@@ -169,9 +164,8 @@ object MvAdvisor {
     // (the serving deployment always has it), a served member's OPTIMIZED
     // plan scans the summary path — the one check that uses the actual
     // serving machinery instead of re-deriving servability here
-    val summaries = (StarMv.registered.map(_.summaryPath) ++
-      MaterializedView.registered.map(_.summaryPath))
-      .map(MaterializedView.normalize).toSet
+    val summaries = StarMv.definitions
+      .map(d => MaterializedView.normalize(d.summaryPath)).toSet
     val analyzed = workload.flatMap { case (i, q) =>
       if (summaries.nonEmpty && scanKeys(q).exists(summaries.contains)) None
       else scala.util.Try(StarMv.deriveDef(q, summaryPath = "")).toOption
@@ -211,13 +205,14 @@ object MvAdvisor {
       .take(k)
   }
 
-  /** Does a registered star definition already cover this candidate —
-    * same table set and join edges, group/measure/derived sets that are
-    * supersets of the candidate's (grain subsumption serves every
-    * member)? See the subtraction note in [[adviseIndexed]].
+  /** Does a registered definition — a star or a single-table MV, read as
+    * its one-table star — already cover this candidate: same table set
+    * and join edges, group/measure/derived sets that are supersets of the
+    * candidate's (grain subsumption serves every member)? See the
+    * subtraction note in [[adviseIndexed]].
     */
   private def alreadyCovered(c: StarMvDef): Boolean =
-    StarMv.registered.exists { r =>
+    StarMv.definitions.map(_.asStar).exists { r =>
       r.leafSet == c.leafSet && r.joinPairSet == c.joinPairSet &&
         c.groupCols.map(_.normalized).toSet
           .subsetOf(r.groupCols.map(_.normalized).toSet) &&
@@ -233,12 +228,7 @@ object MvAdvisor {
   private def scanKeys(q: DataFrame): Seq[String] =
     q.queryExecution.optimizedPlan.collect {
       case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.rootPaths.map(p =>
-              MaterializedView.normalize(p.toUri.getPath))
-          case _ => Seq.empty[String]
-        }
+        MaterializedView.fsRoots(r.relation)
     }.flatten
 
   private def shrinkGate(est: Long, base: Option[Long]): Boolean =
@@ -432,18 +422,11 @@ object MvAdvisor {
     */
   def adviseDrop(spark: SparkSession,
       workload: Seq[DataFrame]): Seq[DropAdvice] = {
-    val singles = MaterializedView.registered.map(d =>
-      (d.summaryPath, Seq(d.basePath), "single"))
-    val stars = StarMv.registered.map(d =>
-      (d.summaryPath, d.tables, "star"))
-    val all = singles ++ stars
+    val all = StarMv.definitions.map(d => (d.summaryPath, d.asStar.tables,
+      if (d.baseKey.isDefined) "single" else "star"))
     if (all.isEmpty) return Nil
-    val hitKeys: Seq[String] = workload.flatMap { q =>
-      q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          MaterializedView.fsRoots(r.relation)
-      }.flatten.map(p => MvUsage.key(p)).distinct
-    }
+    val hitKeys: Seq[String] =
+      workload.flatMap(q => scanKeys(q).map(MvUsage.key).distinct)
     val hitCount: Map[String, Long] =
       hitKeys.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
     all.map { case (path, bases, family) =>

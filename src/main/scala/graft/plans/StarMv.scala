@@ -1,8 +1,6 @@
 package graft.plans
 
-import java.util.concurrent.CopyOnWriteArrayList
-
-import scala.jdk.CollectionConverters._
+import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, Cast, Coalesce, Divide, EqualTo, EvalMode, ExprId, Expression, GreaterThan, GreaterThanOrEqual, If, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Multiply, NamedExpression}
@@ -12,6 +10,22 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Filter, J
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, count, expr, lit, max, min, sum}
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, NumericType, ShortType, TimestampNTZType, TimestampType}
+
+/** A registered MV definition, of either shape: a single-table
+  * [[MaterializedView.MvDef]] or a [[StarMv.StarMvDef]]. Both build,
+  * refresh and serve as a star ([[asStar]]); the shapes differ only in
+  * the registry slot they claim ([[baseKey]]) and in the codec that
+  * writes them down ([[MvCatalog]]).
+  */
+private[plans] trait MvDefinition {
+  def summaryPath: String
+  private[plans] def asStar: StarMv.StarMvDef
+  /** The normalized base path of a single-table MV — the registry holds
+    * one per base — or None for a star.
+    */
+  private[plans] def baseKey: Option[String]
+  private[plans] def withSummary(summaryPath: String): MvDefinition
+}
 
 /** Star-schema materialized views: a summary table pre-joining a fact with
   * its dimensions and pre-aggregating per group, plus a Catalyst rewrite
@@ -102,7 +116,10 @@ object StarMv {
       groupCols: Seq[QCol], measureCols: Seq[QCol], summaryPath: String,
       derivedMeasures: Seq[(String, String)] = Nil,
       losslessTables: Seq[String] = Nil,
-      derivedGroups: Seq[(String, String)] = Nil) {
+      derivedGroups: Seq[(String, String)] = Nil) extends MvDefinition {
+    private[plans] def asStar: StarMvDef = this
+    private[plans] def baseKey: Option[String] = None
+    private[plans] def withSummary(p: String): StarMvDef = copy(summaryPath = p)
     private[plans] lazy val leafSet: Set[String] =
       tables.map(MaterializedView.normalize).toSet
     private[plans] lazy val joinPairSet: Set[Set[QCol]] =
@@ -124,34 +141,53 @@ object StarMv {
       groupCols.map(_.name) ++ derivedGroups.map(_._1)
   }
 
-  /** Scoped like [[MaterializedView]]'s registries: keyed by the active
-    * session's `spark.graft.mv.scope` tag, default `"global"`.
+  /** THE registry of MV definitions, both shapes in one list, scoped by
+    * the active session's `spark.graft.mv.scope` tag (default
+    * `"global"`; see [[MaterializedView.scopeTag]]). Every reader —
+    * [[MvRewriteRule]], [[servable]], [[MvAdvisor]], [[MvCatalog]] — reads
+    * [[definitions]]; a write swaps the scope's whole list atomically, so
+    * a replacement is never observed half done.
     */
   private val registries = new java.util.concurrent.ConcurrentHashMap[
-    String, CopyOnWriteArrayList[StarMvDef]]()
+    String, AtomicReference[Vector[MvDefinition]]]()
 
-  private def registry: CopyOnWriteArrayList[StarMvDef] =
+  private def registry: AtomicReference[Vector[MvDefinition]] =
     registries.computeIfAbsent(MaterializedView.scopeTag,
-      _ => new CopyOnWriteArrayList[StarMvDef]())
+      _ => new AtomicReference(Vector.empty))
 
-  def register(d: StarMvDef): Unit = {
-    MvCost.evict(d.summaryPath) // a (re)written summary voids cached counts
-    val r = registry
-    // idempotent by summary path: build() registers, and a maintainer
-    // created over that build registers again — a duplicate entry would
-    // make candidatesFor evaluate the same definition twice per query
-    r.removeIf(_.summaryPath == d.summaryPath)
-    r.add(d); ()
+  private[plans] def definitions: Seq[MvDefinition] = registry.get
+
+  /** Register `d` in place of what it supersedes: the definition at its
+    * summary path (build registers, and a maintainer created over that
+    * build registers again — idempotent), the single-table MV on its base
+    * when `d` is one (one MV per base), and `retired` (the generation a
+    * refresh or a failed sync replaces).
+    */
+  private[plans] def put(d: MvDefinition, retired: Option[String] = None): Unit = {
+    // a (re)written summary — and possibly a grown base — voids cached counts
+    (d.summaryPath +: d.baseKey.toSeq).foreach(MvCost.evict)
+    registry.updateAndGet(_.filterNot(r => r.summaryPath == d.summaryPath ||
+      retired.contains(r.summaryPath) || r.baseKey.exists(d.baseKey.contains))
+      :+ d)
+    ()
   }
+
+  /** Remove every definition `p` selects, evicting their cached sizes. */
+  private[plans] def drop(p: MvDefinition => Boolean): Unit =
+    registry.getAndUpdate(_.filterNot(p)).filter(p)
+      .foreach(r => MvCost.evict(r.summaryPath))
+
+  def register(d: StarMvDef): Unit = put(d)
   def unregister(summaryPath: String): Unit = {
     MvCost.evict(summaryPath)
-    registry.removeIf(_.summaryPath == summaryPath); ()
+    drop(_.summaryPath == summaryPath)
   }
 
   /** Test hygiene: wipes EVERY scope, including serving pauses. */
   def clear(): Unit = { registries.clear(); pausedServing.clear() }
-  private[plans] def isEmpty: Boolean = registry.isEmpty
-  private[plans] def registered: Seq[StarMvDef] = registry.asScala.toSeq
+  private[plans] def isEmpty: Boolean = definitions.isEmpty
+  private[plans] def registered: Seq[StarMvDef] =
+    definitions.collect { case d: StarMvDef => d }
 
   /** Serving PAUSE set, keyed by the summary's base path (stable across
     * per-refresh `_v<n>` advances): a [[JdbcStarMaintainer]] mid-sequence
@@ -187,51 +223,38 @@ object StarMv {
     * are never candidates.
     */
   private[plans] def candidatesFor(leaves: Set[String]): Seq[StarMvDef] = {
-    val all = registry.asScala.toSeq
+    // single-table MVs first: on equal or unknown cost they serve
+    val all = definitions.sortBy(_.baseKey.isEmpty)
       .filterNot(d => pausedServing.contains(pauseKey(d.summaryPath)))
+      .map(_.asStar)
     val exact = all.filter(_.leafSet == leaves)
     val sub = all.filter(d => d.losslessSet.nonEmpty &&
       d.leafSet != leaves && leaves.subsetOf(d.leafSet) && peelsTo(d, leaves))
     exact ++ sub
   }
 
-  /** One outside-in peel step: a declared-lossless table whose remaining
-    * edges all reach ONE other table. Peeling it removes those edges —
-    * exactly the order [[verifyLossless]] proved 1:1 on the data.
+  /** Can `d` be peeled outside-in down to `retained` — every removed
+    * table declared lossless, in an order [[verifyLossless]] proved 1:1
+    * on the data?
     */
   private def peelsTo(d: StarMvDef, retained: Set[String]): Boolean = {
-    var removed = d.leafSet -- retained
-    if (!removed.subsetOf(d.losslessSet)) return false
-    var edges = d.joins.map { case (a, b) => (a.normalized, b.normalized) }
-    var progressed = true
-    while (removed.nonEmpty && progressed) {
-      progressed = false
-      removed.find { e =>
-        val touching = edges.filter { case (a, b) =>
-          a.path == e || b.path == e }
-        touching.nonEmpty && touching.map { case (a, b) =>
-          if (a.path == e) b.path else a.path }.distinct.size == 1
-      } match {
-        case Some(e) =>
-          edges = edges.filterNot { case (a, b) => a.path == e || b.path == e }
-          removed -= e; progressed = true
-        case None => ()
-      }
-    }
-    removed.isEmpty
+    val removed = d.leafSet -- retained
+    removed.subsetOf(d.losslessSet) && peelPlan(d, removed).isDefined
   }
 
-  /** The verification/guard plan behind `losslessTables`: peel every
-    * declared table outside-in over the FULL join graph, yielding
-    * (table, partner, (partnerCol, tableCol) pairs) per step. None if a
-    * declared table never reaches a single partner — e.g. a bridge table
-    * two retained tables both join (removing it would silently drop the
-    * transitive equality it enforces), or a member of a join cycle.
+  /** The verification/guard plan behind `losslessTables`: peel `tables`
+    * (the declared ones, or those a sub-join drops) outside-in over the
+    * FULL join graph — each step removes one table whose remaining edges
+    * all reach ONE other table, with those edges — yielding (table, partner,
+    * (partnerCol, tableCol) pairs) per step. None if a table never
+    * reaches a single partner — e.g. a bridge table two retained tables
+    * both join (removing it would silently drop the transitive equality
+    * it enforces), or a member of a join cycle.
     */
-  private[plans] def peelPlan(
-      d: StarMvDef): Option[Seq[(String, String, Seq[(QCol, QCol)])]] = {
+  private[plans] def peelPlan(d: StarMvDef,
+      tables: Set[String]): Option[Seq[(String, String, Seq[(QCol, QCol)])]] = {
     var edges = d.joins.map { case (a, b) => (a.normalized, b.normalized) }
-    var toPeel = d.losslessSet
+    var toPeel = tables
     val plan = Seq.newBuilder[(String, String, Seq[(QCol, QCol)])]
     var progressed = true
     while (toPeel.nonEmpty && progressed) {
@@ -456,13 +479,28 @@ object StarMv {
   def refreshTableDelta(spark: SparkSession, d: StarMvDef, tablePath: String,
       inserts: DataFrame, deletes: DataFrame,
       recomputeKeyCap: Int = 1000,
-      tableOverrides: Map[String, DataFrame] = Map.empty): StarMvDef = {
-    require(registry.contains(d), "refreshTableDelta needs the CURRENTLY " +
-      "registered definition (register/build first)")
-    val nd = applyDelta(spark, d, tablePath, inserts, deletes,
-      recomputeKeyCap, tableOverrides)
-    unregister(d.summaryPath)
-    register(nd)
+      tableOverrides: Map[String, DataFrame] = Map.empty): StarMvDef =
+    refresh(spark, d, tablePath, inserts, deletes, recomputeKeyCap,
+      tableOverrides).asStar
+
+  /** [[refreshTableDelta]] for a definition of either shape: the ONE
+    * ownership check — the signed algebra is not idempotent, so a refresh
+    * must start from the summary the registry holds (refreshing another
+    * generation would re-apply a feed on top of it, double-subtracting
+    * its deletes) — then [[applyDelta]], then the next generation
+    * replaces `d` in the registry.
+    */
+  private[plans] def refresh(spark: SparkSession, d: MvDefinition,
+      tablePath: String, inserts: DataFrame, deletes: DataFrame,
+      recomputeKeyCap: Int,
+      tableOverrides: Map[String, DataFrame]): MvDefinition = {
+    require(definitions.contains(d), s"the registry does not hold " +
+      s"${d.summaryPath}: a refresh needs the CURRENTLY registered " +
+      "definition (register/build first), and a maintainer whose state " +
+      "file records it is not the owner of this MV")
+    val nd = d.withSummary(applyDelta(spark, d.asStar, tablePath, inserts,
+      deletes, recomputeKeyCap, tableOverrides).summaryPath)
+    put(nd, retired = Some(d.summaryPath))
     nd
   }
 
@@ -503,7 +541,7 @@ object StarMv {
       def cur(p: String): DataFrame =
         overrides.getOrElse(p, spark.read.parquet(
           d.tables.find(t => MaterializedView.normalize(t) == p).get))
-      peelPlan(d).toSeq.flatten.foreach { case (e, partner, pairs) =>
+      peelPlan(d, d.losslessSet).toSeq.flatten.foreach { case (e, partner, pairs) =>
         val eKeys = pairs.map(_._2.name)
         val pKeys = pairs.map(_._1.name)
         if (partner == path && !inserts.isEmpty) {
@@ -696,11 +734,13 @@ object StarMv {
   /** The summary generation after `summaryPath`: `<stem>_v<n+1>`, the
     * unversioned build path counting as generation 0.
     */
-  private[plans] def nextSummaryPath(summaryPath: String): String = {
+  private[plans] def nextSummaryPath(summaryPath: String): String =
+    s"${summaryBase(summaryPath)}_v${generation(summaryPath) + 1}"
+
+  /** `n` of a `<stem>_v<n>` summary path; 0 for the unversioned build path. */
+  private[plans] def generation(summaryPath: String): Int = {
     val stem = summaryBase(summaryPath)
-    if (summaryPath == stem) s"${stem}_v1"
-    else stem + "_v" + (summaryPath.substring(
-      summaryPath.lastIndexOf("_v") + 2).toInt + 1)
+    if (stem == summaryPath) 0 else summaryPath.substring(stem.length + 2).toInt
   }
 
   /** Apply a row-valued change feed on ONE registered table (the
@@ -712,8 +752,15 @@ object StarMv {
   def refreshTableFromFeed(spark: SparkSession, d: StarMvDef,
       tablePath: String, feed: DataFrame, recomputeKeyCap: Int = 1000,
       tableOverrides: Map[String, DataFrame] = Map.empty): StarMvDef =
-    splitFeed(feed)((ins, del) => refreshTableDelta(spark, d, tablePath,
-      ins, del, recomputeKeyCap, tableOverrides))
+    refreshFromFeed(spark, d, tablePath, feed, recomputeKeyCap,
+      tableOverrides).asStar
+
+  /** [[refreshTableFromFeed]] for a definition of either shape. */
+  private[plans] def refreshFromFeed(spark: SparkSession, d: MvDefinition,
+      tablePath: String, feed: DataFrame, recomputeKeyCap: Int,
+      tableOverrides: Map[String, DataFrame]): MvDefinition =
+    splitFeed(feed)((ins, del) => refresh(spark, d, tablePath, ins, del,
+      recomputeKeyCap, tableOverrides))
 
   /** Split a change feed into (inserts, deletes) for one refresh. The
     * feed is persisted for the span of `body` (both sides of the signed
@@ -1017,7 +1064,7 @@ object StarMv {
     if (d.losslessTables.isEmpty) return
     require(d.losslessSet.subsetOf(d.leafSet),
       s"losslessTables not all registered tables: ${d.losslessTables}")
-    val plan = peelPlan(d).getOrElse(throw new IllegalArgumentException(
+    val plan = peelPlan(d, d.losslessSet).getOrElse(throw new IllegalArgumentException(
       "losslessTables must peel outside-in to a single partner each — a " +
         s"bridge or cycle member cannot be lossless: ${d.losslessTables}"))
     def tableDf(p: String): DataFrame =
@@ -1117,7 +1164,7 @@ object StarMv {
     if (roots.nonEmpty)
       // explicit dir-set registration wins (a one-bucket snapshot has a
       // single root that is a data dir, not the table's key)
-      MaterializedView.lookupDirKey(roots.toSet)
+      MaterializedView.lookupDirReg(roots.toSet).map(_.key)
         .orElse(if (roots.size == 1) Some(roots.head) else None)
     else jdbcKeyOf(rel.relation)
   }
@@ -1185,11 +1232,8 @@ object StarMv {
     * Ties and unknown counts keep registration order and serve.
     */
   private def servable(pathed: Seq[(LeafRel, String)]): Seq[StarMvDef] = {
-    val leaves = pathed.map(p => MaterializedView.normalize(p._2)).toSet
-    val single =
-      if (leaves.size == 1) MaterializedView.lookup(leaves.head).map(_.asStar)
-      else None
-    val cands = single.toSeq ++ candidatesFor(leaves)
+    val cands = candidatesFor(
+      pathed.map(p => MaterializedView.normalize(p._2)).toSet)
     if (cands.isEmpty) return cands
     val spark = SparkSession.active
     val baseSize = pathed.map { case (l, key) =>

@@ -1,9 +1,9 @@
 package graft.plans
 
-import graft.plans.StarMv.{QCol, StarMvDef}
+import graft.plans.StarMv.StarMvDef
 import graft.sources.VersionedTableStore
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Durable, crash-safe maintenance of a STAR materialized view over a set
   * of CDC-synced [[VersionedTableStore]]s (copy-on-write
@@ -35,9 +35,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * orphan dirs; a crash after it resumes cleanly. Summary dirs two
   * generations back are gc'd after the commit.
   *
-  * The same protocol keeps a single-table MV ([[MvMaintainer]]): a
-  * [[Registration]] says which registry the maintained definition lives
-  * in and how its state file renders.
+  * The same protocol keeps a single-table MV ([[MvMaintainer]]): the
+  * maintained definition is an [[MvDefinition]] of either shape, held in
+  * the one MV registry ([[StarMv.definitions]]) and written down by the
+  * one codec ([[MvCatalog.fields]]), so nothing here depends on the
+  * shape. The state file is the definition's fields plus
+  * `syncedVersions`; this object's state layer ([[readState]],
+  * [[writeState]], [[storesByKey]]) is also [[JdbcStarMaintainer]]'s.
   *
   * Registry contract (same as [[StarMv]]'s own): ONE maintained
   * definition per table set — a second definition over the same tables
@@ -53,10 +57,9 @@ final class StarMvMaintainer private (
     spark: SparkSession,
     stores: Map[String, VersionedTableStore],
     statePath: String,
-    reg: StarMvMaintainer.Registration,
     // @volatile: attachMetrics' freshness probe reads these from the
     // metrics server thread while syncTo mutates them under `synchronized`
-    @volatile private var d: StarMvDef,
+    @volatile private var d: MvDefinition,
     @volatile private var synced: Map[String, Long]) {
 
   /** Per-table store versions the summary currently reflects (keys are
@@ -83,7 +86,10 @@ final class StarMvMaintainer private (
   publishStats()
 
   /** The current definition (summary path advances per sync). */
-  def definition: StarMvDef = d
+  def definition: StarMvDef = d.asStar
+
+  /** The current definition in its registered shape. */
+  private[plans] def current: MvDefinition = d
 
   /** Surface this summary's per-table synced-vs-current version lag in
     * the state endpoint (`mv_freshness` in
@@ -93,7 +99,7 @@ final class StarMvMaintainer private (
     * summary's base path (stable across per-sync `_v<n>` advances).
     */
   def attachMetrics(metrics: graft.obs.PipelineMetrics): Unit = {
-    val name = d.summaryPath.replaceAll("_v\\d+$", "")
+    val name = StarMv.summaryBase(d.summaryPath)
     metrics.registerMvFreshness(name, () =>
       synced.map { case (p, v) => p -> (v, stores(p).currentVersion) })
   }
@@ -103,7 +109,7 @@ final class StarMvMaintainer private (
     * summary generations. No-op when every table is current.
     */
   def sync(recomputeKeyCap: Int = 1000, keepSummaries: Int = 2): StarMvDef =
-    syncTo(d.tables.map(MaterializedView.normalize)
+    syncTo(d.asStar.tables.map(MaterializedView.normalize)
       .map(p => p -> stores(p).currentVersion).toMap,
       recomputeKeyCap, keepSummaries)
 
@@ -129,7 +135,7 @@ final class StarMvMaintainer private (
   private def syncTo(target: Map[String, Long], recomputeKeyCap: Int,
       keepSummaries: Int): StarMvDef =
     synchronized {
-      val tables = d.tables.map(MaterializedView.normalize)
+      val tables = d.asStar.tables.map(MaterializedView.normalize)
       val current = target
       if (current == synced) {
         // version-level no-op, but the dir sets can still have moved: a
@@ -138,7 +144,7 @@ final class StarMvMaintainer private (
         // unchanged), so re-arm serving for the current layout instead
         // of leaving the reroute dead until the next real merge
         tables.foreach(p => StarMvMaintainer.arm(stores(p), p, current(p)))
-        return d
+        return definition
       }
       tables.foreach { p =>
         require(current(p) >= synced(p),
@@ -158,7 +164,8 @@ final class StarMvMaintainer private (
                 if (j <= i) current(q) else synced(q))
             }.toMap
             val feed = stores(p).changeFeedBetween(synced(p), current(p))
-            nd = reg.refresh(spark, nd, p, feed, recomputeKeyCap, overrides)
+            nd = StarMv.refreshFromFeed(spark, nd, p, feed, recomputeKeyCap,
+              overrides)
           }
         }
         // serving first (in-process consistency: new dir sets → new
@@ -169,7 +176,8 @@ final class StarMvMaintainer private (
         // would fail refreshTableDelta's currently-registered require —
         // wedging the maintainer until a process restart
         tables.foreach(p => StarMvMaintainer.arm(stores(p), p, current(p)))
-        StarMvMaintainer.writeState(spark, statePath, reg, nd, current)
+        StarMvMaintainer.writeState(spark, statePath, nd,
+          StarMvMaintainer.syncedLine(current))
       } catch {
         // a mid-sequence failure leaves refreshTableDelta's LAST
         // registration half-synced (some tables' deltas absorbed, not
@@ -177,7 +185,7 @@ final class StarMvMaintainer private (
         // dirs, best-effort), whose summary files are untouched until
         // the gc below, and let the caller retry
         case t: Throwable =>
-          reg.restore(nd, d)
+          StarMv.put(d, retired = Some(nd.summaryPath))
           tables.foreach(p =>
             scala.util.Try(StarMvMaintainer.arm(stores(p), p, synced(p))))
           throw t
@@ -197,42 +205,11 @@ final class StarMvMaintainer private (
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       stale.foreach(s => fs.delete(new Path(s), true))
       publishStats()
-      d
+      definition
     }
 }
 
 object StarMvMaintainer {
-
-  /** Where a maintained definition is registered and how its state file
-    * renders: [[StarMv]]'s registry and the star codec, or — for
-    * [[MvMaintainer]] — the single-table registry and its own format.
-    */
-  private[plans] trait Registration {
-    def register(d: StarMvDef): Unit
-    /** undo a failed sync: `failed` was registered, `committed` was not */
-    def restore(failed: StarMvDef, committed: StarMvDef): Unit
-    def refresh(spark: SparkSession, d: StarMvDef, table: String,
-        feed: DataFrame, recomputeKeyCap: Int,
-        overrides: Map[String, DataFrame]): StarMvDef
-    def state(d: StarMvDef, synced: Map[String, Long]): Seq[(String, String)]
-  }
-
-  private object StarRegistration extends Registration {
-    def register(d: StarMvDef): Unit = StarMv.register(d)
-    def restore(failed: StarMvDef, committed: StarMvDef): Unit = {
-      StarMv.unregister(failed.summaryPath)
-      StarMv.register(committed)
-    }
-    def refresh(spark: SparkSession, d: StarMvDef, table: String,
-        feed: DataFrame, recomputeKeyCap: Int,
-        overrides: Map[String, DataFrame]): StarMvDef =
-      StarMv.refreshTableFromFeed(spark, d, table, feed, recomputeKeyCap,
-        overrides)
-    def state(d: StarMvDef,
-        synced: Map[String, Long]): Seq[(String, String)] =
-      StarMvCodec.renderDef(d) :+ ("syncedVersions" -> synced.toSeq.sorted
-        .map { case (t, v) => s"${StarMvCodec.enc(t)}=$v" }.mkString(","))
-  }
 
   /** Start maintaining `d` (already built via [[StarMv.build]] — its
     * summary reflects every store's CURRENT version), write the initial
@@ -241,17 +218,17 @@ object StarMvMaintainer {
     */
   def create(spark: SparkSession, stores: Map[String, VersionedTableStore],
       d: StarMvDef, statePath: String): StarMvMaintainer =
-    start(spark, stores, d, statePath, StarRegistration)
+    start(spark, stores, d, statePath)
 
   private[plans] def start(spark: SparkSession,
-      stores: Map[String, VersionedTableStore], d: StarMvDef,
-      statePath: String, reg: Registration): StarMvMaintainer = {
+      stores: Map[String, VersionedTableStore], d: MvDefinition,
+      statePath: String): StarMvMaintainer = {
     val byKey = storesByKey(stores, d)
-    reg.register(d)
+    StarMv.put(d)
     val current = byKey.map { case (p, s) => p -> s.currentVersion }
-    writeState(spark, statePath, reg, d, current)
+    writeState(spark, statePath, d, syncedLine(current))
     byKey.foreach { case (p, s) => arm(s, p, current(p)) }
-    new StarMvMaintainer(spark, byKey, statePath, reg, d, current)
+    new StarMvMaintainer(spark, byKey, statePath, d, current)
   }
 
   /** Resume from a state file after a restart: re-registers the recorded
@@ -262,29 +239,37 @@ object StarMvMaintainer {
     */
   def open(spark: SparkSession, stores: Map[String, VersionedTableStore],
       statePath: String): StarMvMaintainer = {
-    val kv = readState(spark, statePath)
-    val synced = kv("syncedVersions").split(",", -1).toSeq.filter(_.nonEmpty)
-      .map { pair =>
-        val Array(t, v) = pair.split("=", 2); StarMvCodec.dec(t) -> v.toLong
-      }.toMap
-    resume(spark, stores, statePath, StarMvCodec.parseDef(kv), synced,
-      StarRegistration)
+    val (d, kv) = readState(spark, statePath)
+    resume(spark, stores, statePath, d, kv)
   }
 
   private[plans] def resume(spark: SparkSession,
       stores: Map[String, VersionedTableStore], statePath: String,
-      d: StarMvDef, synced: Map[String, Long],
-      reg: Registration): StarMvMaintainer = {
+      d: MvDefinition, kv: Map[String, String]): StarMvMaintainer = {
     val byKey = storesByKey(stores, d)
-    reg.register(d)
+    val synced = kv.get("syncedVersions") match {
+      case Some(vs) => vs.split(",", -1).toSeq.filter(_.nonEmpty).map { pair =>
+        val Array(t, v) = pair.split("=", 2); MvCatalog.dec(t) -> v.toLong
+      }.toMap
+      // a single-table maintainer's state file before the shared codec
+      case None => Map(byKey.keys.head -> kv("storeVersion").toLong)
+    }
+    StarMv.put(d)
     byKey.foreach { case (p, s) => scala.util.Try(arm(s, p, synced(p))) }
-    new StarMvMaintainer(spark, byKey, statePath, reg, d, synced)
+    new StarMvMaintainer(spark, byKey, statePath, d, synced)
   }
 
-  private def storesByKey(stores: Map[String, VersionedTableStore],
-      d: StarMvDef): Map[String, VersionedTableStore] = {
+  private def syncedLine(synced: Map[String, Long]): Seq[(String, String)] =
+    Seq("syncedVersions" -> synced.toSeq.sorted
+      .map { case (t, v) => s"${MvCatalog.enc(t)}=$v" }.mkString(","))
+
+  /** `stores` keyed by normalized table path, refused unless they cover
+    * exactly `d`'s tables — every maintainer's check against its stores.
+    */
+  private[plans] def storesByKey[S](stores: Map[String, S],
+      d: MvDefinition): Map[String, S] = {
     val byKey = stores.map { case (p, s) => MaterializedView.normalize(p) -> s }
-    val tables = d.tables.map(MaterializedView.normalize)
+    val tables = d.asStar.tables.map(MaterializedView.normalize)
     require(tables.toSet == byKey.keySet,
       s"stores must cover exactly the MV's tables: ${tables.sorted} vs " +
         s"${byKey.keySet.toSeq.sorted}")
@@ -297,71 +282,21 @@ object StarMvMaintainer {
   private def arm(store: VersionedTableStore, p: String, v: Long): Unit =
     MaterializedView.replaceDirs(p, store.dataDirsAt(v), store.stackedDirsAt(v))
 
-  /** The `key<TAB>value` lines of a maintainer state file. */
+  /** A maintainer state file: the recorded definition, and every
+    * `key<TAB>value` line (the maintainer's own progress lines included).
+    */
   private[plans] def readState(spark: SparkSession,
-      statePath: String): Map[String, String] = {
-    val p = new Path(statePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"no maintainer state at $statePath — create() first")
-    val in = fs.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    body.linesIterator.filter(_.nonEmpty).map { l =>
-      val i = l.indexOf('\t'); l.substring(0, i) -> l.substring(i + 1)
-    }.toMap
+      statePath: String): (MvDefinition, Map[String, String]) = {
+    val kv = MvCatalog.kv(MvCatalog.readText(spark, statePath,
+      s"no maintainer state at $statePath — create() first").linesIterator)
+    (MvCatalog.parse(kv), kv)
   }
 
-  private def writeState(spark: SparkSession, statePath: String,
-      reg: Registration, d: StarMvDef, synced: Map[String, Long]): Unit =
-    graft.sources.AtomicFiles.write(spark.sparkContext.hadoopConfiguration,
-      new Path(statePath), reg.state(d, synced)
-        .map { case (k, v) => s"$k\t$v" }.mkString("\n").getBytes("UTF-8"))
-}
-
-/** The [[StarMv.StarMvDef]] ↔ state-file codec both durable maintainers
-  * ([[StarMvMaintainer]], [[JdbcStarMaintainer]]) share: one
-  * `key<TAB>value` line per field, values URL-encoded element-wise.
-  */
-private[plans] object StarMvCodec {
-
-  def enc(s: String): String = java.net.URLEncoder.encode(s, "UTF-8")
-  def dec(s: String): String = java.net.URLDecoder.decode(s, "UTF-8")
-
-  def renderDef(d: StarMvDef): Seq[(String, String)] = {
-    def qcol(q: QCol) = s"${enc(q.path)}|${enc(q.name)}"
-    Seq(
-      "tables" -> d.tables.map(enc).mkString(","),
-      "joins" -> d.joins.map { case (a, b) => s"${qcol(a)}~${qcol(b)}" }
-        .mkString(","),
-      "groups" -> d.groupCols.map(qcol).mkString(","),
-      "measures" -> d.measureCols.map(qcol).mkString(","),
-      "summary" -> enc(d.summaryPath),
-      "derived" -> d.derivedMeasures
-        .map { case (n, sql) => s"${enc(n)}=${enc(sql)}" }.mkString(","),
-      "lossless" -> d.losslessTables.map(enc).mkString(","),
-      "derivedGroups" -> d.derivedGroups
-        .map { case (n, sql) => s"${enc(n)}=${enc(sql)}" }.mkString(","))
-  }
-
-  def parseDef(kv: Map[String, String]): StarMvDef = {
-    def split(s: String): Seq[String] =
-      if (s.isEmpty) Nil else s.split(",", -1).toSeq
-    def qcol(s: String): QCol = {
-      val Array(path, name) = s.split("\\|", 2); QCol(dec(path), dec(name))
-    }
-    StarMvDef(
-      tables = split(kv("tables")).map(dec),
-      joins = split(kv("joins")).map { pair =>
-        val Array(a, b) = pair.split("~", 2); (qcol(a), qcol(b)) },
-      groupCols = split(kv("groups")).map(qcol),
-      measureCols = split(kv("measures")).map(qcol),
-      summaryPath = dec(kv("summary")),
-      derivedMeasures = split(kv("derived")).map { pair =>
-        val Array(n, sql) = pair.split("=", 2); (dec(n), dec(sql)) },
-      // absent in pre-lossless state files → Nil (sub-join serving off,
-      // which is the conservative direction)
-      losslessTables = split(kv.getOrElse("lossless", "")).map(dec),
-      derivedGroups = split(kv.getOrElse("derivedGroups", "")).map { pair =>
-        val Array(n, sql) = pair.split("=", 2); (dec(n), dec(sql)) })
-  }
+  /** Commit a state file — `d`'s fields, then the maintainer's own
+    * progress lines — with one atomic rename.
+    */
+  private[plans] def writeState(spark: SparkSession, statePath: String,
+      d: MvDefinition, progress: Seq[(String, String)]): Unit =
+    MvCatalog.writeText(spark, statePath,
+      MvCatalog.render(MvCatalog.fields(d) ++ progress, "\n"))
 }

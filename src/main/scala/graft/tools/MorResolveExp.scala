@@ -20,6 +20,17 @@ object MorResolveExp {
     val nBase = args.headOption.map(_.toLong).getOrElse(2000000L)
     val layers = args.lift(1).map(_.toInt).getOrElse(3)
     val frac = args.lift(2).map(_.toDouble).getOrElse(0.15)
+    // multipliers COPRIME with nBase (and each id range < nBase/mult cycle):
+    // a shared factor would place duplicate (pk, _seq) rows in one layer —
+    // contract-violating input (CompactedBatch: one row per key per batch)
+    // on which every resolution variant tie-breaks arbitrarily. Layer i
+    // uses mults(i - 1), so both are checked before any work starts.
+    val mults = Seq(3L, 7L, 11L, 13L, 17L, 19L, 23L, 29L)
+    require(layers <= mults.size,
+      s"nDeltaLayers is at most ${mults.size} (one multiplier per layer): $layers")
+    val shared = mults.take(layers).filter(m => BigInt(m).gcd(nBase) != 1)
+    require(shared.isEmpty, s"nBase $nBase shares a factor with the layer " +
+      s"multipliers ${shared.mkString(", ")} — pick an nBase coprime with them")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -38,11 +49,6 @@ object MorResolveExp {
       .selectExpr("id AS pk", "id % 997 AS grp", "cast(id * 3 as double) AS v",
         "concat('payload_', cast(id % 10007 as string)) AS s",
         "'u' AS _op", "0L AS _seq")
-    // multipliers COPRIME with nBase (and each id range < nBase/mult cycle):
-    // a shared factor would place duplicate (pk, _seq) rows in one layer —
-    // contract-violating input (CompactedBatch: one row per key per batch)
-    // on which every resolution variant tie-breaks arbitrarily
-    val mults = Seq(3L, 7L, 11L, 13L, 17L, 19L, 23L, 29L)
     val deltas = (1 to layers).map { i =>
       spark.range((nBase * frac).toLong)
         .selectExpr(s"(id * ${mults(i - 1)}) % $nBase AS pk", "id % 997 AS grp",

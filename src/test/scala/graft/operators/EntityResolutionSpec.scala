@@ -103,6 +103,27 @@ class EntityResolutionSpec extends SparkTestBase {
       "entity-resolution persists must be released when the operators return")
   }
 
+  test("assignAgainst leaves a registry the caller persisted cached") {
+    // the operator pins (and releases) the registry only when the caller
+    // has not: unpersisting a caller's cache would silently turn its next
+    // reuse of the registry into a full recompute
+    val resolved = EntityResolution.resolve(
+      registry, "id", "name", col("blk"), 2, 10)
+    val regSigs = EntityResolution.signatures(registry, "id", "name", col("blk"))
+      .join(resolved.select("id", "cluster_id"), Seq("id"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val incs = Seq((10L, "ACME corp!", "a"), (12L, "Nova Labs", "n"))
+        .toDF("id", "name", "blk")
+      val out = EntityResolution.assignAgainst(
+        regSigs, incs, "id", "name", col("blk"), 2, 10)
+      assert(out.count() == 2L)
+      assert(regSigs.storageLevel ==
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
+        "the caller's persisted registry must still be cached")
+    } finally { regSigs.unpersist(); () }
+  }
+
   test("normalizeName strips case and punctuation only") {
     val out = registry.select(EntityResolution.normalizeName(col("name")).as("n"))
       .as[String].collect()

@@ -151,7 +151,27 @@ class MvAdvisorSpec extends SparkTestBase {
       val again = MvAdvisor.advise(spark, Seq(w0, w3), k = 2)
       assert(again.size === 1 && again.head.queryIdx === Seq(1),
         s"only the new tree recommends: $again")
-    } finally StarMv.unregister(d.summaryPath)
+      // with serving switched off (as for a maintained MV between a merge
+      // and its sync) no member's plan scans a summary, so only the
+      // structural subtraction can tell the family is covered — for a
+      // covering single-table MV exactly as for a covering star
+      def w5 = spark.read.parquet(fact).groupBy("f_reg")
+        .agg(sum(col("v")).as("s"))
+      assert(MvAdvisor.advise(spark, Seq(w5), k = 2).size === 1,
+        "an uncovered single-table family recommends")
+      MaterializedView.build(spark, fact, Seq("f_reg"), Seq("v"),
+        tmpDir("advsub_single_sum"))
+      spark.conf.set("spark.graft.mv.enabled", "false")
+      try {
+        assert(MvAdvisor.advise(spark, Seq(w0, w1), k = 2).isEmpty,
+          "a covering star is subtracted while serving is off")
+        assert(MvAdvisor.advise(spark, Seq(w5), k = 2).isEmpty,
+          "a covering single-table MV is subtracted while serving is off")
+      } finally spark.conf.set("spark.graft.mv.enabled", "true")
+    } finally {
+      StarMv.unregister(d.summaryPath)
+      MaterializedView.unregister(fact)
+    }
   }
 
   test("estimation tiers: registered NDVs price a candidate with no fact probe") {

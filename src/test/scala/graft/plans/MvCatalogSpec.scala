@@ -73,6 +73,73 @@ class MvCatalogSpec extends SparkTestBase {
     } finally { MaterializedView.unregister(base); StarMv.unregister(starSum) }
   }
 
+  test("a catalog file in the older format loads, serves, and round-trips once") {
+    MaterializedView.clear(); StarMv.clear()
+    val rnd = new scala.util.Random(11)
+    val base = tmpDir("mvc_old_base")
+    (1 to 300).map(_ => (s"g${rnd.nextInt(4)}", rnd.nextInt(100)))
+      .toDF("g", "m").write.mode("overwrite").parquet(base)
+    val f = tmpDir("mvc_old_fact"); val dm = tmpDir("mvc_old_dim")
+    (1 to 300).map(_ => (rnd.nextInt(5).toLong + 1, rnd.nextInt(50).toLong))
+      .toDF("f_d", "v").write.mode("overwrite").parquet(f)
+    (1 to 5).map(k => (k.toLong, s"s${k % 2}")).toDF("d_k", "seg")
+      .write.mode("overwrite").parquet(dm)
+    val mvSum = tmpDir("mvc_old_sum"); val starSum = tmpDir("mvc_old_star_sum")
+    MaterializedView.build(spark, base, Seq("g"), Seq("m"), mvSum)
+    StarMv.build(spark, StarMvDef(
+      tables = Seq(f, dm),
+      joins = Seq((QCol(f, "f_d"), QCol(dm, "d_k"))),
+      groupCols = Seq(QCol(dm, "seg")),
+      measureCols = Seq(QCol(f, "v")),
+      summaryPath = starSum,
+      derivedMeasures = Seq("dv" -> "v * 2")))
+    MaterializedView.clear(); StarMv.clear() // the restart
+    // the catalog as it was written before the shared codec: a `kind`
+    // per line, and the star's derived measures under `derivedMeasures`
+    val enc = (s: String) => java.net.URLEncoder.encode(s, "UTF-8")
+    def line(kv: (String, String)*) =
+      kv.map { case (k, v) => s"$k\t$v" }.mkString("\u0001")
+    val cat = tmpDir("mvc_old_cat") + "/catalog"
+    val text = Seq(
+      line("kind" -> "mv", "base" -> enc(base), "groups" -> "g",
+        "measures" -> "m", "summary" -> enc(mvSum), "derivedGroups" -> ""),
+      line("kind" -> "star", "tables" -> s"${enc(f)},${enc(dm)}",
+        "joins" -> s"${enc(f)}|f_d~${enc(dm)}|d_k",
+        "groups" -> s"${enc(dm)}|seg", "measures" -> s"${enc(f)}|v",
+        "summary" -> enc(starSum), "derivedMeasures" -> s"dv=${enc("v * 2")}",
+        "lossless" -> "", "derivedGroups" -> "")).mkString("\n")
+    MvCatalog.writeText(spark, cat, text)
+    def q1 = spark.read.parquet(base).groupBy("g")
+      .agg(sum(col("m")).as("sm"), count(lit(1)).as("n"))
+    def q2 = spark.read.parquet(f)
+      .join(spark.read.parquet(dm), col("f_d") === col("d_k"))
+      .groupBy("seg").agg(sum(col("v") * 2).as("s2"), max(col("v")).as("mx"))
+    spark.conf.set("spark.graft.mv.enabled", "false")
+    val (truth1, truth2) = try
+      (q1.as[(String, Long, Long)].collect().toSet,
+        q2.as[(String, Long, Long)].collect().toSet)
+    finally spark.conf.set("spark.graft.mv.enabled", "true")
+    try {
+      assert(MvCatalog.load(spark, cat) === ((2, Nil)))
+      def served() = {
+        assert(scanPaths(q1) == Seq(MaterializedView.normalize(mvSum)))
+        assert(scanPaths(q2) == Seq(MaterializedView.normalize(starSum)))
+        assert(q1.as[(String, Long, Long)].collect().toSet === truth1)
+        assert(q2.as[(String, Long, Long)].collect().toSet === truth2)
+      }
+      served()
+      val loaded = StarMv.definitions
+      val resaved = tmpDir("mvc_old_cat2") + "/catalog"
+      MvCatalog.save(spark, resaved)
+      MaterializedView.clear(); StarMv.clear()
+      assert(MvCatalog.load(spark, resaved) === ((2, Nil)))
+      assert(StarMv.definitions.toSet === loaded.toSet)
+      assert(StarMv.definitions.size === 2,
+        "each definition is restored exactly once")
+      served()
+    } finally { MaterializedView.unregister(base); StarMv.unregister(starSum) }
+  }
+
   test("load skips definitions whose summary files vanished") {
     MaterializedView.clear(); StarMv.clear()
     val rnd = new scala.util.Random(9)
