@@ -259,8 +259,9 @@ object MaterializedView {
       base: Option[DataFrame] = None): MvDef = {
     val d = lookup(normalize(basePath)).getOrElse(
       throw new IllegalArgumentException(s"no MV registered for $basePath"))
-    d.withSummary(StarMv.refresh(spark, d, d.basePath, inserts, deletes,
-      recomputeKeyCap, overrides(d, base)).summaryPath)
+    val contents = overrides(d, base)
+    d.withSummary(StarMv.refresh(spark, d, Seq((d.basePath, inserts, deletes)),
+      contents, contents, recomputeKeyCap).summaryPath)
   }
 
   /** Apply a row-valued change feed (the
@@ -274,8 +275,8 @@ object MaterializedView {
     */
   def refreshFromFeed(spark: SparkSession, basePath: String, feed: DataFrame,
       recomputeKeyCap: Int = 1000, base: Option[DataFrame] = None): MvDef =
-    StarMv.splitFeed(feed)((ins, del) =>
-      refreshDelta(spark, basePath, ins, del, recomputeKeyCap, base))
+    StarMv.splitFeeds(Seq(basePath -> feed)) { case Seq((_, ins, del)) =>
+      refreshDelta(spark, basePath, ins, del, recomputeKeyCap, base) }
 }
 
 /** The MV serving rule: every Aggregate goes through the one matcher,

@@ -422,6 +422,17 @@ object StarMv {
     joined
   }
 
+  /** The star's group and measure columns (derived ones evaluated) over
+    * the given table contents, plus `extra`.
+    */
+  private def starRows(spark: SparkSession, d: StarMvDef,
+      contents: Map[String, DataFrame], extra: Column*): DataFrame =
+    (d.derivedMeasures ++ d.derivedGroups).foldLeft(
+      joinTables(spark, d, contents)) {
+      case (acc, (n, sql)) => acc.withColumn(n, expr(sql)) }
+      .select((d.groupNames ++ d.measureCols.map(_.name) ++
+        d.derivedMeasures.map(_._1)).map(col) ++ extra: _*)
+
   /** Recompute the summary from the CURRENT base tables and swap the
     * registration to a fresh versioned path (`<path>_v<n>`) — the
     * post-CDC-merge refresh. The OLD registration is removed BEFORE the
@@ -480,68 +491,64 @@ object StarMv {
       inserts: DataFrame, deletes: DataFrame,
       recomputeKeyCap: Int = 1000,
       tableOverrides: Map[String, DataFrame] = Map.empty): StarMvDef =
-    refresh(spark, d, tablePath, inserts, deletes, recomputeKeyCap,
-      tableOverrides).asStar
+    refresh(spark, d, Seq((tablePath, inserts, deletes)), tableOverrides,
+      tableOverrides, recomputeKeyCap).asStar
 
-  /** [[refreshTableDelta]] for a definition of either shape: the ONE
-    * ownership check — the signed algebra is not idempotent, so a refresh
-    * must start from the summary the registry holds (refreshing another
-    * generation would re-apply a feed on top of it, double-subtracting
-    * its deletes) — then [[applyDelta]], then the next generation
-    * replaces `d` in the registry.
+  /** The refresh algebra of [[refreshTableDelta]], shared by every MV and
+    * every sync: folds the deltas of ALL `changes` (table path, inserts,
+    * deletes) into ONE next summary generation, moves the old path's
+    * caches to it, and registers the advanced definition in place of
+    * `registered`.
+    * It starts with the ONE ownership check: the signed algebra is not
+    * idempotent, so a refresh must start from the summary the registry
+    * holds (refreshing another generation would re-apply a feed on top of
+    * it, double-subtracting its deletes).
+    *
+    * `before`/`after` substitute table CONTENT without touching the
+    * definition (keys are table paths, values typically versioned-store
+    * snapshots before and after the batch; an absent key reads the
+    * table's path). Several changed tables telescope:
+    * J(T₁",T₂") − J(T₁,T₂) = Δ₁⋈T₂ + T₁"⋈Δ₂ — each change's delta joins
+    * the tables BEFORE it in definition order at `after` and the tables
+    * after it at `before`; joining everything at `after` would
+    * double-count Δ₁⋈Δ₂. The lossless guards and the min/max repair read
+    * `after`, the state the new summary represents. One change with
+    * `before` = `after` is the single-table refresh.
     */
-  private[plans] def refresh(spark: SparkSession, d: MvDefinition,
-      tablePath: String, inserts: DataFrame, deletes: DataFrame,
-      recomputeKeyCap: Int,
-      tableOverrides: Map[String, DataFrame]): MvDefinition = {
-    require(definitions.contains(d), s"the registry does not hold " +
-      s"${d.summaryPath}: a refresh needs the CURRENTLY registered " +
+  private[plans] def refresh(spark: SparkSession, registered: MvDefinition,
+      changes: Seq[(String, DataFrame, DataFrame)],
+      before: Map[String, DataFrame], after: Map[String, DataFrame],
+      recomputeKeyCap: Int): MvDefinition = {
+    require(definitions.contains(registered), s"the registry does not hold " +
+      s"${registered.summaryPath}: a refresh needs the CURRENTLY registered " +
       "definition (register/build first), and a maintainer whose state " +
       "file records it is not the owner of this MV")
-    val nd = d.withSummary(applyDelta(spark, d.asStar, tablePath, inserts,
-      deletes, recomputeKeyCap, tableOverrides).summaryPath)
-    put(nd, retired = Some(d.summaryPath))
-    nd
-  }
-
-  /** The refresh algebra of [[refreshTableDelta]], shared by every MV:
-    * writes the next summary generation, moves the old path's caches to
-    * it and returns the advanced definition. Registering it is the
-    * caller's.
-    */
-  private[plans] def applyDelta(spark: SparkSession, d: StarMvDef,
-      tablePath: String, inserts: DataFrame, deletes: DataFrame,
-      recomputeKeyCap: Int,
-      tableOverrides: Map[String, DataFrame]): StarMvDef = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, concat, concat_ws, raise_error, when}
-    val path = MaterializedView.normalize(tablePath)
-    require(d.tables.map(MaterializedView.normalize).contains(path),
-      s"$tablePath is not one of the MV's tables")
-    // `tableOverrides` substitutes table CONTENT without touching the
-    // definition (keys are table paths; values typically versioned-store
-    // snapshots). This is what makes MULTI-table batches sequence
-    // correctly: J(T₁",T₂") − J(T₁,T₂) = Δ₁⋈T₂ + T₁"⋈Δ₂ — each table's
-    // delta must join the PREVIOUS tables at their NEW state and the
-    // REMAINING tables at their OLD state, which only a caller holding
-    // both versions (StarMvMaintainer over versioned stores) can supply.
-    // Applying deltas sequentially with every path already merged on disk
-    // would instead double-count Δ₁⋈Δ₂. The overrides also feed the
-    // min/max repair join, which must see exactly the state the summary
-    // represents AFTER this delta.
-    val overrides = tableOverrides.map { case (p, df) =>
-      MaterializedView.normalize(p) -> df }
-    overrides.keys.foreach { p =>
-      require(d.tables.map(MaterializedView.normalize).contains(p),
-        s"override $p is not one of the MV's tables") }
+    val d = registered.asStar
+    import org.apache.spark.sql.functions.{broadcast, coalesce, concat, concat_ws, greatest, least, raise_error, when}
+    val tables = d.tables.map(MaterializedView.normalize)
+    def keyed(m: Map[String, DataFrame]) = m.map { case (p, df) =>
+      val n = MaterializedView.normalize(p)
+      require(tables.contains(n), s"override $p is not one of the MV's tables")
+      n -> df
+    }
+    val (pre, post) = (keyed(before), keyed(after))
+    val deltas = changes.map { case (t, ins, del) =>
+      val p = MaterializedView.normalize(t)
+      require(tables.contains(p), s"$t is not one of the MV's tables")
+      (p, ins, del)
+    }.sortBy(c => tables.indexOf(c._1))
+    require(deltas.map(_._1).distinct.size == deltas.size,
+      s"one change per table: ${deltas.map(_._1)}")
     // Lossless-integrity guards: the sub-join serving contract was proved
     // at build; a delta can break it two ways, both checked here at delta
-    // cost and failing LOUDLY (rebuild, or drop the declaration) rather
-    // than letting the summary silently serve wrong sub-join answers.
+    // cost against the post-batch tables and failing LOUDLY (rebuild, or
+    // drop the declaration) rather than letting the summary silently
+    // serve wrong sub-join answers.
     if (d.losslessSet.nonEmpty) {
       def cur(p: String): DataFrame =
-        overrides.getOrElse(p, spark.read.parquet(
-          d.tables.find(t => MaterializedView.normalize(t) == p).get))
-      peelPlan(d, d.losslessSet).toSeq.flatten.foreach { case (e, partner, pairs) =>
+        post.getOrElse(p, spark.read.parquet(d.tables(tables.indexOf(p))))
+      for ((path, inserts, deletes) <- deltas;
+           (e, partner, pairs) <- peelPlan(d, d.losslessSet).toSeq.flatten) {
         val eKeys = pairs.map(_._2.name)
         val pKeys = pairs.map(_._1.name)
         if (partner == path && !inserts.isEmpty) {
@@ -587,30 +594,26 @@ object StarMv {
     val allMeasures = d.measureCols.map(_.name) ++ d.derivedMeasures.map(_._1)
     val old = spark.read.parquet(d.summaryPath)
     val oldTypes = old.schema.map(f => f.name -> f.dataType).toMap
-    def deltaJoin(delta: DataFrame): DataFrame = {
-      val joined = joinTables(spark, d, overrides + (path -> delta))
-      (d.derivedMeasures ++ d.derivedGroups).foldLeft(joined) {
-        case (acc, (n, sql)) => acc.withColumn(n, expr(sql)) }
-    }
-    // ONE delta join for BOTH sides (r15, guide §1.2/§2.3): the insert and
-    // delete partials used to be two separate deltaJoin passes — and delP
-    // was consumed twice (affected detection + the merged write), so the
-    // delete-side join ran twice more. On a DIMENSION wave each of those
-    // passes joins the delta against the FULL fact snapshot (Δdim ⋈ fact is
-    // the expensive, unavoidable half of the IVM algebra) — three
-    // fact-sized passes where one suffices. Rows are tagged ±1, joined
-    // once, and ONE conditional aggregate produces both partial sets;
-    // `when(_sgn = ...)` yields NULL for the other side's rows, which
-    // sum/count/min/max skip, so each column equals its old
-    // inserts-only/deletes-only aggregate exactly. Groups present on only
-    // one side now emit an all-null/zero row for the other — the
+    // ONE signed delta join per refresh: every change's insert and delete
+    // rows are tagged ±1 and joined once — against the tables before it at
+    // NEW and after it at OLD (the telescoping pins) — and the union of
+    // all changes' join rows feeds ONE conditional aggregate producing
+    // both partial sets; `when(_sgn = ...)` yields NULL for the other
+    // side's rows, which sum/count/min/max skip. Groups present on only
+    // one side emit an all-null/zero row for the other — the
     // union+re-aggregate merge below is invariant to those (sum/min/max
-    // ignore NULL, cnt adds 0). The groups-sized result is
-    // localCheckpointed so its three consumers (affected probe, key
-    // collect, merged write) never re-run the join.
+    // ignore NULL, cnt adds 0). On a DIMENSION change the join runs
+    // against the FULL fact snapshot, so the groups-sized result is
+    // persisted for its three consumers (affected probe, key collect,
+    // merged write) — the join never re-runs.
     val sgn = col("_graft_sgn")
-    val both = inserts.withColumn("_graft_sgn", lit(1))
-      .unionByName(deletes.withColumn("_graft_sgn", lit(-1)))
+    val signed = deltas.map { case (p, inserts, deletes) =>
+      val i = tables.indexOf(p)
+      val pins = tables.zipWithIndex.flatMap { case (q, j) =>
+        (if (j < i) post else pre).get(q).map(q -> _) }.toMap
+      starRows(spark, d, pins + (p -> inserts.withColumn("_graft_sgn", lit(1))
+        .unionByName(deletes.withColumn("_graft_sgn", lit(-1)))), sgn)
+    }.reduce(_ unionByName _)
     def side(m: String, s: Int) = when(sgn === s, col(m))
     val bothAggs = allMeasures.flatMap(m => Seq(
       sum(side(m, 1)).as(s"s_$m"), count(side(m, 1)).as(s"c_$m"),
@@ -619,116 +622,120 @@ object StarMv {
       min(side(m, -1)).as(s"dmn_$m"), max(side(m, -1)).as(s"dmx_$m"))) ++ Seq(
       sum(when(sgn === 1, 1L).otherwise(0L)).as("cnt"),
       sum(when(sgn === -1, 1L).otherwise(0L)).as("dcnt"))
-    val combined = deltaJoin(both).groupBy(g: _*)
-      .agg(bothAggs.head, bothAggs.tail: _*)
-      .localCheckpoint()
-    val insP = combined.select(gNames.map(col) ++ allMeasures.flatMap(m => Seq(
-      col(s"s_$m"), col(s"c_$m"), col(s"mn_$m"), col(s"mx_$m"))) :+
-      col("cnt"): _*)
-    val delP = combined.select(gNames.map(col) ++ allMeasures.flatMap(m => Seq(
-      col(s"ds_$m"), col(s"dc_$m"), col(s"dmn_$m"), col(s"dmx_$m"))) :+
-      col("dcnt"): _*)
-    val delSigned = delP.select(g ++ allMeasures.flatMap(m => Seq(
-      (-col(s"ds_$m")).cast(oldTypes(s"s_$m")).as(s"s_$m"),
-      (-col(s"dc_$m")).as(s"c_$m"),
-      lit(null).cast(oldTypes(s"mn_$m")).as(s"mn_$m"),
-      lit(null).cast(oldTypes(s"mx_$m")).as(s"mx_$m"))) :+
-      (-col("dcnt")).as("cnt"): _*)
-    val mergeAggs = allMeasures.flatMap(m => Seq(
-      sum(col(s"s_$m")).as(s"s_$m"), sum(col(s"c_$m")).as(s"c_$m"),
-      min(col(s"mn_$m")).as(s"mn_$m"), max(col(s"mx_$m")).as(s"mx_$m"))) :+
-      sum(col("cnt")).as("cnt")
-    val merged = old.unionByName(insP.selectExpr(old.columns.map(c => s"`$c`"): _*))
-      .unionByName(delSigned.selectExpr(old.columns.map(c => s"`$c`"): _*))
-      .groupBy(g: _*)
-      .agg(mergeAggs.head, mergeAggs.tail: _*)
-      .withColumn("cnt", when(col("cnt") < 0, raise_error(concat(
-        lit("refreshTableDelta: negative count for group ("),
-        concat_ws(",", g.map(_.cast("string")): _*),
-        lit(") — deletes reference join rows that never existed"))))
-        .otherwise(col("cnt")))
-      .filter(col("cnt") > 0)
-
-    val affectedOpt = if (allMeasures.isEmpty) None else {
-      val touched = allMeasures.map(m =>
-        coalesce(col(s"dmn_$m") <= col(s"mn_$m"), lit(false)) ||
-          coalesce(col(s"dmx_$m") >= col(s"mx_$m"), lit(false)))
-        .reduce(_ || _)
-      Some(delP.join(old,
-          gNames.map(n => delP(n) <=> old(n)).reduce(_ && _), "inner")
-        .filter(touched).select(gNames.map(delP(_)): _*).distinct().cache())
-    }
-    // ONE limited collect instead of count-then-collect (two actions → one,
-    // r15): ≤ cap rows decide both the emptiness check and the IN pushdown
-    // below; cap+1 rows mean "over cap", where the exact count was never
-    // used anyway.
-    val keyRowsOpt = affectedOpt.map(_.limit(recomputeKeyCap + 1).collect())
-    val nAffected = keyRowsOpt.map(_.length.toLong).getOrElse(0L)
-
-    val repaired = if (nAffected == 0) {
-      merged.select(merged.columns.map(col) ++
-        (lit(null).cast("int").as("_aff") +:
-          allMeasures.flatMap(m => Seq(
-            lit(null).cast(oldTypes(s"mn_$m")).as(s"r_mn_$m"),
-            lit(null).cast(oldTypes(s"mx_$m")).as(s"r_mx_$m")))): _*)
-    } else {
-      val affected = affectedOpt.get
-      var scan = joinTables(spark, d, overrides)
-      scan = (d.derivedMeasures ++ d.derivedGroups).foldLeft(scan) {
-        case (acc, (n, sql)) => acc.withColumn(n, expr(sql)) }
-      scan = scan.select((gNames ++ allMeasures).map(col): _*)
-      if (nAffected <= recomputeKeyCap) {
-        val keyRows = keyRowsOpt.get
-        gNames.zipWithIndex.foreach { case (gc, i) =>
-          val vals = keyRows.map(_.get(i)).distinct.toSeq
-          if (!vals.contains(null)) scan = scan.filter(col(gc).isin(vals: _*))
-        }
-      }
-      // rename the probe keys before joining: `affected`'s group attrs can
-      // be the VERY SAME attribute instances as the repair scan's (both
-      // sides derive from the caller's override DataFrames), and a
-      // same-attribute <=> only works through dataset-id disambiguation —
-      // with a "trivially true predicate" warning. Distinct names make the
-      // join unambiguous by construction.
-      val affK = gNames.foldLeft(affected)(
-        (df, gc) => df.withColumnRenamed(gc, s"_ck_$gc"))
-      val scanF = scan
-      val recomputed = scanF.join(broadcast(affK),
-          gNames.map(n => col(n) <=> col(s"_ck_$n")).reduce(_ && _),
-          "left_semi")
-        .groupBy(g: _*)
-        .agg(allMeasures.flatMap(m => Seq(
-          min(col(m)).as(s"r_mn_$m"), max(col(m)).as(s"r_mx_$m"))).head,
-          allMeasures.flatMap(m => Seq(
-            min(col(m)).as(s"r_mn_$m"), max(col(m)).as(s"r_mx_$m"))).tail: _*)
-      val affT = gNames.foldLeft(affected.withColumn("_aff", lit(1)))(
-        (df, gc) => df.withColumnRenamed(gc, s"_ak_$gc"))
-      val recT = gNames.foldLeft(recomputed)(
-        (df, gc) => df.withColumnRenamed(gc, s"_rk_$gc"))
-      merged
-        .join(broadcast(affT),
-          gNames.map(gc => col(gc) <=> col(s"_ak_$gc")).reduce(_ && _), "left")
-        .join(broadcast(recT),
-          gNames.map(gc => col(gc) <=> col(s"_rk_$gc")).reduce(_ && _), "left")
-    }
-    val finalCols = g ++ allMeasures.flatMap(m => Seq(
-      when(col(s"c_$m") === 0, lit(null).cast(oldTypes(s"s_$m")))
-        .otherwise(col(s"s_$m")).as(s"s_$m"),
-      col(s"c_$m"),
-      when(col("_aff") === 1, col(s"r_mn_$m"))
-        .otherwise(when(col(s"c_$m") === 0,
-          lit(null).cast(oldTypes(s"mn_$m"))).otherwise(col(s"mn_$m")))
-        .as(s"mn_$m"),
-      when(col("_aff") === 1, col(s"r_mx_$m"))
-        .otherwise(when(col(s"c_$m") === 0,
-          lit(null).cast(oldTypes(s"mx_$m"))).otherwise(col(s"mx_$m")))
-        .as(s"mx_$m"))) :+ col("cnt")
+    val scope = new graft.operators.CacheScope
     val next = nextSummaryPath(d.summaryPath)
-    try repaired.select(finalCols: _*).write.mode("overwrite").parquet(next)
-    finally affectedOpt.foreach(_.unpersist())
+    try {
+      val combined = scope.own(signed.groupBy(g: _*)
+        .agg(bothAggs.head, bothAggs.tail: _*)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val insP = combined.select(gNames.map(col) ++ allMeasures.flatMap(m =>
+        Seq(col(s"s_$m"), col(s"c_$m"), col(s"mn_$m"), col(s"mx_$m"))) :+
+        col("cnt"): _*)
+      val delSigned = combined.select(g ++ allMeasures.flatMap(m => Seq(
+        (-col(s"ds_$m")).cast(oldTypes(s"s_$m")).as(s"s_$m"),
+        (-col(s"dc_$m")).as(s"c_$m"),
+        lit(null).cast(oldTypes(s"mn_$m")).as(s"mn_$m"),
+        lit(null).cast(oldTypes(s"mx_$m")).as(s"mx_$m"))) :+
+        (-col("dcnt")).as("cnt"): _*)
+      val mergeAggs = allMeasures.flatMap(m => Seq(
+        sum(col(s"s_$m")).as(s"s_$m"), sum(col(s"c_$m")).as(s"c_$m"),
+        min(col(s"mn_$m")).as(s"mn_$m"), max(col(s"mx_$m")).as(s"mx_$m"))) :+
+        sum(col("cnt")).as("cnt")
+      val merged = old.unionByName(insP).unionByName(delSigned)
+        .groupBy(g: _*)
+        .agg(mergeAggs.head, mergeAggs.tail: _*)
+        .withColumn("cnt", when(col("cnt") < 0, raise_error(concat(
+          lit("refreshTableDelta: negative count for group ("),
+          concat_ws(",", g.map(_.cast("string")): _*),
+          lit(") — deletes reference join rows that never existed"))))
+          .otherwise(col("cnt")))
+        .filter(col("cnt") > 0)
+
+      // a deleted extreme needs repair when it reaches the extreme of old
+      // ∪ INSERTED partials, not of old alone: with several changed
+      // tables, T₁"⋈Δ₂⁻ can delete a join row Δ₁⋈T₂ inserted in the same
+      // refresh, in a group the old summary never held
+      val affectedOpt = if (allMeasures.isEmpty) None else {
+        val o = old.select(g ++ allMeasures.flatMap(m => Seq(
+          col(s"mn_$m").as(s"omn_$m"), col(s"mx_$m").as(s"omx_$m"))): _*)
+        val touched = allMeasures.map(m =>
+          coalesce(col(s"dmn_$m") <= least(col(s"omn_$m"), col(s"mn_$m")),
+            lit(false)) ||
+            coalesce(col(s"dmx_$m") >= greatest(col(s"omx_$m"), col(s"mx_$m")),
+              lit(false)))
+          .reduce(_ || _)
+        Some(scope.own(combined.join(o,
+            gNames.map(n => combined(n) <=> o(n)).reduce(_ && _), "left")
+          .filter(touched).select(gNames.map(combined(_)): _*).distinct()
+          .cache()))
+      }
+      // ONE limited collect instead of count-then-collect (two actions →
+      // one, r15): ≤ cap rows decide both the emptiness check and the IN
+      // pushdown below; cap+1 rows mean "over cap", where the exact count
+      // was never used anyway.
+      val keyRowsOpt = affectedOpt.map(_.limit(recomputeKeyCap + 1).collect())
+      val nAffected = keyRowsOpt.map(_.length.toLong).getOrElse(0L)
+
+      val repaired = if (nAffected == 0) {
+        merged.select(merged.columns.map(col) ++
+          (lit(null).cast("int").as("_aff") +:
+            allMeasures.flatMap(m => Seq(
+              lit(null).cast(oldTypes(s"mn_$m")).as(s"r_mn_$m"),
+              lit(null).cast(oldTypes(s"mx_$m")).as(s"r_mx_$m")))): _*)
+      } else {
+        val affected = affectedOpt.get
+        var scan = starRows(spark, d, post)
+        if (nAffected <= recomputeKeyCap) {
+          val keyRows = keyRowsOpt.get
+          gNames.zipWithIndex.foreach { case (gc, i) =>
+            val vals = keyRows.map(_.get(i)).distinct.toSeq
+            if (!vals.contains(null)) scan = scan.filter(col(gc).isin(vals: _*))
+          }
+        }
+        // rename the probe keys before joining: `affected`'s group attrs
+        // can be the VERY SAME attribute instances as the repair scan's
+        // (both sides derive from the caller's override DataFrames), and a
+        // same-attribute <=> only works through dataset-id disambiguation
+        // — with a "trivially true predicate" warning. Distinct names make
+        // the join unambiguous by construction.
+        val affK = gNames.foldLeft(affected)(
+          (df, gc) => df.withColumnRenamed(gc, s"_ck_$gc"))
+        val repairAggs = allMeasures.flatMap(m => Seq(
+          min(col(m)).as(s"r_mn_$m"), max(col(m)).as(s"r_mx_$m")))
+        val recomputed = scan.join(broadcast(affK),
+            gNames.map(n => col(n) <=> col(s"_ck_$n")).reduce(_ && _),
+            "left_semi")
+          .groupBy(g: _*)
+          .agg(repairAggs.head, repairAggs.tail: _*)
+        val affT = gNames.foldLeft(affected.withColumn("_aff", lit(1)))(
+          (df, gc) => df.withColumnRenamed(gc, s"_ak_$gc"))
+        val recT = gNames.foldLeft(recomputed)(
+          (df, gc) => df.withColumnRenamed(gc, s"_rk_$gc"))
+        merged
+          .join(broadcast(affT),
+            gNames.map(gc => col(gc) <=> col(s"_ak_$gc")).reduce(_ && _), "left")
+          .join(broadcast(recT),
+            gNames.map(gc => col(gc) <=> col(s"_rk_$gc")).reduce(_ && _), "left")
+      }
+      val finalCols = g ++ allMeasures.flatMap(m => Seq(
+        when(col(s"c_$m") === 0, lit(null).cast(oldTypes(s"s_$m")))
+          .otherwise(col(s"s_$m")).as(s"s_$m"),
+        col(s"c_$m"),
+        when(col("_aff") === 1, col(s"r_mn_$m"))
+          .otherwise(when(col(s"c_$m") === 0,
+            lit(null).cast(oldTypes(s"mn_$m"))).otherwise(col(s"mn_$m")))
+          .as(s"mn_$m"),
+        when(col("_aff") === 1, col(s"r_mx_$m"))
+          .otherwise(when(col(s"c_$m") === 0,
+            lit(null).cast(oldTypes(s"mx_$m"))).otherwise(col(s"mx_$m")))
+          .as(s"mx_$m"))) :+ col("cnt")
+      repaired.select(finalCols: _*).write.mode("overwrite").parquet(next)
+    } finally scope.release()
     advance(d.summaryPath, next)
     MvUsage.recordMaintenance(next)
-    d.copy(summaryPath = next)
+    val nd = registered.withSummary(next)
+    put(nd, retired = Some(d.summaryPath))
+    nd
   }
 
   /** The summary generation after `summaryPath`: `<stem>_v<n+1>`, the
@@ -752,30 +759,33 @@ object StarMv {
   def refreshTableFromFeed(spark: SparkSession, d: StarMvDef,
       tablePath: String, feed: DataFrame, recomputeKeyCap: Int = 1000,
       tableOverrides: Map[String, DataFrame] = Map.empty): StarMvDef =
-    refreshFromFeed(spark, d, tablePath, feed, recomputeKeyCap,
-      tableOverrides).asStar
+    refreshFromFeeds(spark, d, Seq(tablePath -> feed), tableOverrides,
+      tableOverrides, recomputeKeyCap).asStar
 
-  /** [[refreshTableFromFeed]] for a definition of either shape. */
-  private[plans] def refreshFromFeed(spark: SparkSession, d: MvDefinition,
-      tablePath: String, feed: DataFrame, recomputeKeyCap: Int,
-      tableOverrides: Map[String, DataFrame]): MvDefinition =
-    splitFeed(feed)((ins, del) => refresh(spark, d, tablePath, ins, del,
-      recomputeKeyCap, tableOverrides))
-
-  /** Split a change feed into (inserts, deletes) for one refresh. The
-    * feed is persisted for the span of `body` (both sides of the signed
-    * delta read it) — at steady state it is delta-sized by construction.
+  /** [[refreshTableFromFeed]] for a definition of either shape and any
+    * number of changed tables (table path, feed) — ONE [[refresh]].
     */
-  private[plans] def splitFeed[T](feed: DataFrame)(
-      body: (DataFrame, DataFrame) => T): T = {
-    require(feed.columns.contains("_change"),
+  private[plans] def refreshFromFeeds(spark: SparkSession, d: MvDefinition,
+      feeds: Seq[(String, DataFrame)], before: Map[String, DataFrame],
+      after: Map[String, DataFrame], recomputeKeyCap: Int): MvDefinition =
+    splitFeeds(feeds)(refresh(spark, d, _, before, after, recomputeKeyCap))
+
+  /** Split each (table, change feed) into (table, inserts, deletes) for
+    * one refresh. The feeds are persisted for the span of `body` (both
+    * sides of the signed delta read them) — at steady state they are
+    * delta-sized by construction.
+    */
+  private[plans] def splitFeeds[T](feeds: Seq[(String, DataFrame)])(
+      body: Seq[(String, DataFrame, DataFrame)] => T): T = {
+    feeds.foreach { case (_, feed) => require(feed.columns.contains("_change"),
       s"feed must carry a _change column (got ${feed.columns.toSeq}) — " +
-        "produce it with SnapshotDiff.changeFeed / changeFeedBetween")
-    val f = feed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try body(
+        "produce it with SnapshotDiff.changeFeed / changeFeedBetween") }
+    val held = feeds.map { case (p, feed) =>
+      p -> feed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) }
+    try body(held.map { case (p, f) => (p,
       f.filter(col("_change").isin("insert", "update_post")).drop("_change"),
-      f.filter(col("_change").isin("delete", "update_pre")).drop("_change"))
-    finally { f.unpersist(blocking = false); () }
+      f.filter(col("_change").isin("delete", "update_pre")).drop("_change")) })
+    finally held.foreach(_._2.unpersist(blocking = false))
   }
 
   /** Compute and write the pre-joined summary, register the definition.
@@ -820,9 +830,7 @@ object StarMv {
     derivedForms(spark, d) // analyze derived SQL before the build scan
     derivedGroupForms(spark, d)
     derivedTsCols(spark, d)
-    val joined = (d.derivedMeasures ++ d.derivedGroups)
-      .foldLeft(joinTables(spark, d, overrides)) {
-        case (acc, (n, sql)) => acc.withColumn(n, expr(sql)) }
+    val joined = starRows(spark, d, overrides)
     val allMeasures = d.measureCols.map(_.name) ++ d.derivedMeasures.map(_._1)
     val partials = allMeasures.flatMap(m => Seq(
       sum(col(m)).as(s"s_$m"), count(col(m)).as(s"c_$m"),

@@ -15,14 +15,15 @@ import org.apache.spark.sql.SparkSession
   * queries that join the LIVE snapshots reroute to the summary while each
   * leaf's dir set still matches its last synced version.
   *
-  * Multi-table sequencing (the part a naive loop gets wrong): with two
-  * changed tables, J(T₁",T₂") − J(T₁,T₂) = Δ₁⋈T₂ + T₁"⋈Δ₂ — each table's
-  * feed must join the already-applied tables at their NEW versions and
-  * the not-yet-applied ones at their OLD versions; joining everything at
+  * One sync is ONE refresh ([[StarMv.refresh]]): every changed
+  * table's feed folds into one signed delta join, one affected-group
+  * probe, one min/max repair and one summary generation. With two
+  * changed tables, J(T₁",T₂") − J(T₁,T₂) = Δ₁⋈T₂ + T₁"⋈Δ₂ — each feed
+  * joins the tables before it in definition order at their NEW versions
+  * and the ones after it at their OLD versions; joining everything at
   * its merged on-disk state would double-count Δ₁⋈Δ₂. The versioned
-  * stores make the correct pinning expressible: [[sync]] walks the MV's
-  * tables in definition order and passes `tableOverrides` built from
-  * `snapshotAt(new)` / `snapshotAt(old)` accordingly. Every store must
+  * stores make the pinning expressible: [[sync]] hands the refresh each
+  * table's `snapshotAt(old)` and `snapshotAt(new)`. Every store must
   * retain enough versions to cover its sync gap.
   *
   * Durability protocol (why a state file: the signed-partial algebra is
@@ -31,8 +32,8 @@ import org.apache.spark.sql.SparkSession
   * survive the process): refresh writes the next summary version dir,
   * then ONE atomic state-file rename commits (definition @ new summary
   * path, per-table synced versions) — a crash before the rename re-runs
-  * the same refreshes from the same pinned versions and overwrites the
-  * orphan dirs; a crash after it resumes cleanly. Summary dirs two
+  * the same refresh from the same pinned versions and overwrites the
+  * orphan dir; a crash after it resumes cleanly. Summary dirs two
   * generations back are gc'd after the commit.
   *
   * The same protocol keeps a single-table MV ([[MvMaintainer]]): the
@@ -48,10 +49,11 @@ import org.apache.spark.sql.SparkSession
   * would be served for queries whose leaves match this maintainer's
   * freshness, without reflecting it.
   *
-  * Scale per sync: per changed table, one signed delta join (feed × the
-  * other tables — dimension sides broadcast in the star shape) + a
-  * groups-sized merge + at most one pruned repair join. Never a fact
-  * re-join; driver state is the definition and |tables| longs.
+  * Scale per sync: one signed delta join (each changed table's feed ×
+  * the other tables — dimension sides broadcast in the star shape) + a
+  * groups-sized merge + at most one pruned repair join, whatever the
+  * number of changed tables. Never a fact re-join; driver state is the
+  * definition and |tables| longs.
   */
 final class StarMvMaintainer private (
     spark: SparkSession,
@@ -152,53 +154,36 @@ final class StarMvMaintainer private (
             s"already synced ${synced(p)} — state file $statePath belongs " +
             "to a different store lineage")
       }
-      var nd = d
+      // ONE refresh per sync, however many tables changed
+      val changed = tables.filter(p => current(p) != synced(p))
+      val after = tables.map(p => p -> stores(p).snapshotAt(current(p))).toMap
+      val nd = StarMv.refreshFromFeeds(spark, d,
+        changed.map(p => p -> stores(p).changeFeedBetween(synced(p), current(p))),
+        after ++ changed.map(p => p -> stores(p).snapshotAt(synced(p))),
+        after, recomputeKeyCap)
       try {
-        tables.zipWithIndex.foreach { case (p, i) =>
-          if (current(p) != synced(p)) {
-            // applied tables (j < i) pin NEW, remaining (j > i) pin OLD;
-            // this table pins NEW for the repair join (the state the
-            // summary represents AFTER its delta)
-            val overrides = tables.zipWithIndex.map { case (q, j) =>
-              q -> stores(q).snapshotAt(
-                if (j <= i) current(q) else synced(q))
-            }.toMap
-            val feed = stores(p).changeFeedBetween(synced(p), current(p))
-            nd = StarMv.refreshFromFeed(spark, nd, p, feed, recomputeKeyCap,
-              overrides)
-          }
-        }
         // serving first (in-process consistency: new dir sets → new
         // summary), then the durable commit; a crash between the two
-        // re-runs this sync idempotently from the old state. These two
-        // steps sit INSIDE the try: a transient failure here must also
-        // restore the committed registration, or every later sync()
-        // would fail refreshTableDelta's currently-registered require —
-        // wedging the maintainer until a process restart
+        // re-runs this sync idempotently from the old state. A transient
+        // failure here restores the committed registration (and its
+        // serving dirs, best-effort), whose summary files are untouched
+        // until the gc below, or every later sync() would fail the
+        // refresh's currently-registered require — wedging the maintainer
+        // until a process restart
         tables.foreach(p => StarMvMaintainer.arm(stores(p), p, current(p)))
         StarMvMaintainer.writeState(spark, statePath, nd,
           StarMvMaintainer.syncedLine(current))
       } catch {
-        // a mid-sequence failure leaves refreshTableDelta's LAST
-        // registration half-synced (some tables' deltas absorbed, not
-        // all) — restore the pre-sync registration (and its serving
-        // dirs, best-effort), whose summary files are untouched until
-        // the gc below, and let the caller retry
         case t: Throwable =>
           StarMv.put(d, retired = Some(nd.summaryPath))
           tables.foreach(p =>
             scala.util.Try(StarMvMaintainer.arm(stores(p), p, synced(p))))
           throw t
       }
-      // gc relative to the PREVIOUS committed summary, not the new head:
-      // one sync advances one path generation PER CHANGED TABLE, so a
-      // head-based count would delete the last committed generation right
-      // after any multi-table sync — breaking the "a query planned
-      // against it keeps evaluating" contract. keepSummaries counts
-      // COMMITTED generations: 2 (default) retains the previous committed
-      // one plus everything after it.
+      // the previous committed generation always survives, so a query
+      // planned against it keeps evaluating
       val stale = MvMaintainer.olderSummaries(
-        d.summaryPath, (keepSummaries - 1).max(1))
+        nd.summaryPath, keepSummaries.max(2))
       d = nd
       synced = current
       val fs = new Path(statePath)

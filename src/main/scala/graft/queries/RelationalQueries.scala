@@ -1252,8 +1252,8 @@ object RelationalQueries {
     // pre-joined summary over 90% of lineitem ⋈ orders ⋈ customer, land a
     // CDC batch on the FACT copy (insert the %10 tail, delete every
     // %13 row — extremes included, so the min/max repair path runs), fold
-    // it with [[graft.plans.StarMv.refreshTableDelta]] — TWO delta-sized
-    // joins plus a pruned repair, never a fact re-join — then roll up
+    // it with [[graft.plans.StarMv.refreshTableDelta]] — ONE signed
+    // delta-sized join plus a pruned repair, never a fact re-join — then roll up
     // through the rewrite. The oracle is the POST-BATCH three-table join:
     // a refresh that lost, double-counted, or failed to repair an extreme
     // hash-fails. At 100 TB this is the REFRESH MATERIALIZED VIEW cadence

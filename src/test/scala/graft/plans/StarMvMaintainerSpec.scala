@@ -38,7 +38,8 @@ class StarMvMaintainerSpec extends SparkTestBase {
   private val dimSchema = StructType(Seq(
     StructField("c_cust", LongType), StructField("seg", StringType)))
 
-  private final class Fixture(tag: String, seed: Int) {
+  private final class Fixture(tag: String, seed: Int,
+      lossless: Boolean = false) {
     val rnd = new scala.util.Random(seed)
     var facts: Seq[(Long, Long, Long)] = (1L to 120L)
       .map(i => (i, 1L + rnd.nextInt(20), rnd.nextInt(100).toLong))
@@ -67,7 +68,8 @@ class StarMvMaintainerSpec extends SparkTestBase {
       joins = Seq((QCol(factKey, "f_cust"), QCol(dimKey, "c_cust"))),
       groupCols = Seq(QCol(dimKey, "seg")),
       measureCols = Seq(QCol(factKey, "v")),
-      summaryPath = tmpDir(s"smv_${tag}_sum")))
+      summaryPath = tmpDir(s"smv_${tag}_sum"),
+      losslessTables = if (lossless) Seq(dimKey) else Nil))
     val statePath = tmpDir(s"smv_${tag}_state") + "/state"
     val maintainer = StarMvMaintainer.create(spark,
       Map(factKey -> factStore, dimKey -> dimStore), mvDef, statePath)
@@ -107,6 +109,11 @@ class StarMvMaintainerSpec extends SparkTestBase {
     def close(): Unit = StarMv.unregister(maintainer.definition.summaryPath)
   }
 
+  private def exists(path: String): Boolean =
+    org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+      .exists(new org.apache.hadoop.fs.Path(path))
+
   test("overlapping fact+dim deltas sequence correctly (no double count)") {
     val f = new Fixture("seq", 17)
     try {
@@ -127,9 +134,15 @@ class StarMvMaintainerSpec extends SparkTestBase {
       f.mergeDim(
         deletes = Seq(7L),
         upserts = Seq((21L, "s_new"), (3L, "s4")))
+      val built = f.maintainer.definition.summaryPath
       f.maintainer.sync()
       assert(f.values(f.rollup) === f.truth,
         "post-sync star summary must equal the recomputed join truth")
+      // both tables changed, yet the sync wrote ONE summary generation,
+      // and the previous committed one survives the gc
+      assert(f.maintainer.definition.summaryPath ===
+        StarMv.nextSummaryPath(built))
+      assert(exists(built), "the previous committed generation must survive")
       assert(scanPaths(f.rollup).forall(_.contains("smv_seq_sum")),
         "post-sync rollup must serve from the refreshed summary")
 
@@ -138,6 +151,77 @@ class StarMvMaintainerSpec extends SparkTestBase {
         upserts = Seq((210L, 10L, 99L)))
       f.maintainer.sync()
       assert(f.values(f.rollup) === f.truth)
+
+      // the extreme-repair trap: segment s_lonely holds no facts, so the
+      // old summary has no row for it; one sync inserts two facts into it
+      // and moves one of their customers out again — the fact feed's
+      // insert (Δfact⋈dim_old) is deleted by the dim feed's
+      // (fact_new⋈Δdim) in the same refresh, taking the group's min along
+      f.mergeDim(deletes = Nil, upserts = Seq((31L, "s_lonely"), (32L, "s_lonely")))
+      f.maintainer.sync()
+      f.mergeFact(deletes = Nil, upserts = Seq((220L, 31L, 5L), (221L, 32L, 9L)))
+      f.mergeDim(deletes = Nil, upserts = Seq((31L, "s_x")))
+      f.maintainer.sync()
+      assert(f.values(f.rollup) === f.truth)
+      assert(f.values(f.rollup).filter(_._1 == "s_lonely") ===
+        Set(("s_lonely", 1L, 9L, 9L, 9L)))
+      assert(scanPaths(f.rollup).forall(_.contains("smv_seq_sum")))
+    } finally f.close()
+  }
+
+  test("lossless star: a two-table sync is guarded against the post-sync tables") {
+    val f = new Fixture("lossless", 23, lossless = true)
+    try {
+      // the new fact row's customer arrives in the SAME sync: it has no
+      // match in the dim's OLD version, but the summary serves the NEW one
+      f.mergeFact(deletes = Nil, upserts = Seq((300L, 26L, 13L)))
+      f.mergeDim(deletes = Nil, upserts = Seq((26L, "s_new")))
+      f.maintainer.sync()
+      assert(f.values(f.rollup) === f.truth)
+      assert(scanPaths(f.rollup).forall(_.contains("smv_lossless_sum")))
+
+      // a fact row whose customer is missing AFTER the sync is refused,
+      // and the committed registration stays in place
+      val committed = f.maintainer.definition
+      f.mergeFact(deletes = Nil, upserts = Seq((301L, 99L, 4L)))
+      val e = intercept[IllegalArgumentException] { f.maintainer.sync() }
+      assert(e.getMessage.contains("no match in lossless table"))
+      assert(f.maintainer.definition === committed)
+      assert(StarMv.registered.contains(committed))
+      // the customer lands: the next sync absorbs both merges
+      f.mergeDim(deletes = Nil, upserts = Seq((99L, "s_late")))
+      f.maintainer.sync()
+      assert(f.values(f.rollup) === f.truth)
+    } finally f.close()
+  }
+
+  test("a sync releases every RDD it persists, refused or not") {
+    val f = new Fixture("release", 31, lossless = true)
+    try {
+      def persisted = spark.sparkContext.getPersistentRDDs.keySet
+      val before = persisted
+      f.mergeFact(deletes = Seq(2L), upserts = Seq((300L, 6L, 13L)))
+      f.mergeDim(deletes = Nil, upserts = Seq((4L, "s_m")))
+      f.maintainer.sync()
+      assert(f.values(f.rollup) === f.truth)
+      assert(persisted -- before === Set.empty, "a sync left RDDs persisted")
+      // refused by a lossless guard, before the delta join
+      f.mergeFact(deletes = Nil, upserts = Seq((301L, 99L, 4L)))
+      intercept[IllegalArgumentException] { f.maintainer.sync() }
+      assert(persisted -- before === Set.empty,
+        "a guard-refused sync left RDDs persisted")
+      // refused in the summary write (deletes of join rows that never
+      // existed drive a group's count negative)
+      val ghosts = (1L to 500L).map(i => (1000L + i, 1L, 5L))
+        .toDF("o_id", "f_cust", "v")
+      intercept[Exception] {
+        StarMv.refreshTableDelta(spark, f.maintainer.definition, f.factKey,
+          ghosts.limit(0), ghosts, tableOverrides = Map(
+            f.factKey -> f.factStore.snapshot(),
+            f.dimKey -> f.dimStore.snapshot()))
+      }
+      assert(persisted -- before === Set.empty,
+        "a refresh refused in its write left RDDs persisted")
     } finally f.close()
   }
 
