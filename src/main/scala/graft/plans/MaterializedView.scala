@@ -217,8 +217,8 @@ object MaterializedView {
     // a stale registration for this base must not satisfy the build scan
     unregister(basePath)
     val d = MvDef(basePath, groupCols, measureCols, summaryPath, derivedGroups)
-    StarMv.materialize(spark, d.asStar, overrides(d, base))
-    register(d)
+    StarMv.put(d, schema = Some(
+      StarMv.materialize(spark, d.asStar, overrides(d, base))))
     d
   }
 

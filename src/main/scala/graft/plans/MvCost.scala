@@ -43,9 +43,6 @@ import org.apache.spark.sql.SparkSession
   *  3. UNKNOWN — no registered stats and nothing probed. Serving
   *     proceeds (at that scale a groups-sized summary is almost always
   *     the win) and candidate ordering falls back to registration order.
-  *
-  * Kill switch: `spark.graft.mv.costBased=false` restores the pre-cost
-  * behavior (first matching candidate, no refusal).
   */
 object MvCost {
 
@@ -117,9 +114,6 @@ object MvCost {
   private[plans] def clear(): Unit = {
     registered.clear(); footerCache.clear(); registeredNdv.clear()
   }
-
-  private[plans] def enabled: Boolean =
-    SparkSession.active.conf.get("spark.graft.mv.costBased", "true").toBoolean
 
   /** Size under `path` (a summary dir or a table key): registered size,
     * else cached footer probe.
@@ -202,9 +196,10 @@ object MvCost {
     probed
   }
 
-  /** Evict a retired summary path from the caches (refresh moves to a new
-    * versioned path — mirror of the derived-form cache eviction). Also
-    * drops the path's mtime-suffixed footer entries.
+  /** Evict a (re)written or retired summary path from the caches — a
+    * refresh moves to a new versioned path, so the old one's sizes would
+    * otherwise pile up ([[StarMv.put]] evicts both). Also drops the
+    * path's mtime-suffixed footer entries.
     */
   private[plans] def evict(path: String): Unit = {
     val key = MaterializedView.normalize(path)
@@ -219,10 +214,8 @@ object MvCost {
     * registration order (sorted last) and always serve.
     */
   private[plans] def orderAndGate(spark: SparkSession,
-      cands: Seq[StarMv.StarMvDef],
-      baseSize: SizeEst): Seq[StarMv.StarMvDef] = {
-    if (!enabled || cands.size <= 0) return cands
-    val withSize = cands.map(d => d -> sizeOf(spark, d.summaryPath))
+      cands: Seq[StarMv.Entry], baseSize: SizeEst): Seq[StarMv.Entry] = {
+    val withSize = cands.map(e => e -> sizeOf(spark, e.summaryPath))
     val kept = withSize.filter { case (_, s) => serves(s, baseSize) }
     val byBytes = kept.forall(_._2.bytes.isDefined)
     kept.sortBy { case (_, s) =>

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Filter, Join, LogicalPlan, Project}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, count, expr, lit, max, min, sum}
-import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, NumericType, ShortType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, NumericType, ShortType, StructType, TimestampNTZType, TimestampType}
 
 /** A registered MV definition, of either shape: a single-table
   * [[MaterializedView.MvDef]] or a [[StarMv.StarMvDef]]. Both build,
@@ -63,10 +63,11 @@ private[plans] trait MvDefinition {
   *
   * Maintenance: [[rebuild]] (Greenplum's non-incremental `REFRESH` posture)
   * or real join-delta IVM — [[refreshTableDelta]] applies one table's CDC
-  * batch via one signed delta join against the other tables (version-pinnable
-  * through `tableOverrides` for multi-table batches), and
-  * [[StarMvMaintainer]] runs that loop durably over versioned stores'
-  * change feeds.
+  * batch via one signed delta join against the other tables, [[refresh]]
+  * folds every changed table's batch into ONE summary generation (each
+  * delta pinned to the tables `before`/`after` it), and
+  * [[StarMvMaintainer]] runs that once per sync, durably, over versioned
+  * stores' change feeds.
   *
   * Scale: the build pays the big shuffle join ONCE; every rollup after
   * reads |groups| summary rows instead of re-joining the fact. At 100 TB
@@ -145,37 +146,91 @@ object StarMv {
     * the active session's `spark.graft.mv.scope` tag (default
     * `"global"`; see [[MaterializedView.scopeTag]]). Every reader —
     * [[MvRewriteRule]], [[servable]], [[MvAdvisor]], [[MvCatalog]] — reads
-    * [[definitions]]; a write swaps the scope's whole list atomically, so
-    * a replacement is never observed half done.
+    * [[definitions]] or the [[Entry]]s behind them; a write swaps the
+    * scope's whole list atomically, so a replacement is never observed
+    * half done.
     */
   private val registries = new java.util.concurrent.ConcurrentHashMap[
-    String, AtomicReference[Vector[MvDefinition]]]()
+    String, AtomicReference[Vector[Entry]]]()
 
-  private def registry: AtomicReference[Vector[MvDefinition]] =
+  private def registry: AtomicReference[Vector[Entry]] =
     registries.computeIfAbsent(MaterializedView.scopeTag,
       _ => new AtomicReference(Vector.empty))
 
-  private[plans] def definitions: Seq[MvDefinition] = registry.get
+  /** One registered definition with what serving needs of it: the schema
+    * of its current summary generation — None when it could not be read,
+    * which leaves the entry registered but never a candidate — and its
+    * derived [[Forms]]. Serving and refresh read the summary through
+    * `schema`, so neither pays a Parquet schema inference.
+    */
+  private[plans] final case class Entry(definition: MvDefinition,
+      schema: Option[StructType], forms: Forms) {
+    def summaryPath: String = definition.summaryPath
+    def star: StarMvDef = definition.asStar
+    /** The summary as a DataFrame, read with the carried schema. */
+    def summary(spark: SparkSession): DataFrame = schema.fold(
+      spark.read.parquet(summaryPath))(spark.read.schema(_).parquet(summaryPath))
+  }
+
+  /** Render-forms of a definition's derived SQL, matched exprId-
+    * insensitively ([[renderForm]]) against the query: derived measure
+    * form → name, derived group form → name, and the derived groups that
+    * are exactly `cast(<ts> as date)` as ts column name → day group name
+    * (the day-range filter recovery, [[tsBoundToDay]]).
+    */
+  private[plans] final case class Forms(measures: Map[String, String],
+      groups: Map[String, String], dayOfTs: Map[String, String])
+
+  private[plans] def definitions: Seq[MvDefinition] =
+    registry.get.map(_.definition)
+
+  private[plans] def entries: Seq[Entry] = registry.get
 
   /** Register `d` in place of what it supersedes: the definition at its
     * summary path (build registers, and a maintainer created over that
     * build registers again — idempotent), the single-table MV on its base
     * when `d` is one (one MV per base), and `retired` (the generation a
     * refresh or a failed sync replaces).
+    *
+    * `schema` is the summary's as its writer just wrote it; without one,
+    * a re-put of a registered summary path keeps that entry's schema and
+    * any other put reads it once. A replaced entry over the same tables
+    * and derived SQL hands over its forms (a refresh, a restore, an
+    * idempotent re-put); otherwise they are analyzed here, once.
     */
-  private[plans] def put(d: MvDefinition, retired: Option[String] = None): Unit = {
-    // a (re)written summary — and possibly a grown base — voids cached counts
-    (d.summaryPath +: d.baseKey.toSeq).foreach(MvCost.evict)
-    registry.updateAndGet(_.filterNot(r => r.summaryPath == d.summaryPath ||
-      retired.contains(r.summaryPath) || r.baseKey.exists(d.baseKey.contains))
-      :+ d)
+  private[plans] def put(d: MvDefinition, retired: Option[String] = None,
+      schema: Option[StructType] = None): Unit = {
+    val spark = SparkSession.active
+    def replaces(r: Entry) = r.summaryPath == d.summaryPath ||
+      retired.contains(r.summaryPath) ||
+      r.definition.baseKey.exists(d.baseKey.contains)
+    val prior = registry.get.filter(replaces)
+    val summarySchema = schema match {
+      // a schema-given read infers nothing, and hands the schema back as
+      // serving will see it: every field nullable
+      case Some(written) =>
+        Some(spark.read.schema(written).parquet(d.summaryPath).schema)
+      case None => prior.find(_.summaryPath == d.summaryPath).map(_.schema)
+        .getOrElse(scala.util.Try(spark.read.parquet(d.summaryPath).schema)
+          .toOption)
+    }
+    val star = d.asStar
+    val forms = prior.find(r => r.star.tables == star.tables &&
+        r.star.derivedMeasures == star.derivedMeasures &&
+        r.star.derivedGroups == star.derivedGroups)
+      .fold(formsOf(spark, star))(_.forms)
+    val entry = Entry(d, summarySchema, forms)
+    // a (re)written summary — and possibly a grown base — voids cached
+    // counts, and so does retiring a generation
+    (d.summaryPath +: (d.baseKey.toSeq ++ retired)).foreach(MvCost.evict)
+    registry.updateAndGet(_.filterNot(replaces) :+ entry)
     ()
   }
 
   /** Remove every definition `p` selects, evicting their cached sizes. */
   private[plans] def drop(p: MvDefinition => Boolean): Unit =
-    registry.getAndUpdate(_.filterNot(p)).filter(p)
-      .foreach(r => MvCost.evict(r.summaryPath))
+    registry.getAndUpdate(_.filterNot(e => p(e.definition)))
+      .filter(e => p(e.definition)).foreach(e => MvCost.evict(e.summaryPath))
 
   def register(d: StarMvDef): Unit = put(d)
   def unregister(summaryPath: String): Unit = {
@@ -220,16 +275,18 @@ object StarMv {
     * leaf-set matches first (no multiplicity reasoning needed), then
     * SUB-JOIN matches — defs whose extra tables are all declared lossless
     * and peel outside-in down to `leaves` ([[peelsTo]]). Paused summaries
-    * are never candidates.
+    * and summaries whose schema could not be read are never candidates.
     */
-  private[plans] def candidatesFor(leaves: Set[String]): Seq[StarMvDef] = {
+  private[plans] def candidatesFor(leaves: Set[String]): Seq[Entry] = {
     // single-table MVs first: on equal or unknown cost they serve
-    val all = definitions.sortBy(_.baseKey.isEmpty)
-      .filterNot(d => pausedServing.contains(pauseKey(d.summaryPath)))
-      .map(_.asStar)
-    val exact = all.filter(_.leafSet == leaves)
-    val sub = all.filter(d => d.losslessSet.nonEmpty &&
-      d.leafSet != leaves && leaves.subsetOf(d.leafSet) && peelsTo(d, leaves))
+    val all = entries.sortBy(_.definition.baseKey.isEmpty).filter(e =>
+      e.schema.isDefined && !pausedServing.contains(pauseKey(e.summaryPath)))
+    val exact = all.filter(_.star.leafSet == leaves)
+    val sub = all.filter { e =>
+      val d = e.star
+      d.losslessSet.nonEmpty && d.leafSet != leaves &&
+        leaves.subsetOf(d.leafSet) && peelsTo(d, leaves)
+    }
     exact ++ sub
   }
 
@@ -252,130 +309,71 @@ object StarMv {
     * it enforces), or a member of a join cycle.
     */
   private[plans] def peelPlan(d: StarMvDef,
-      tables: Set[String]): Option[Seq[(String, String, Seq[(QCol, QCol)])]] = {
-    var edges = d.joins.map { case (a, b) => (a.normalized, b.normalized) }
+      tables: Set[String]): Option[Seq[(String, String, Seq[(QCol, QCol)])]] =
+    Some(peel(d.joins, tables, _ => true)).filter(_.size == tables.size)
+
+  /** The outside-in peel loop behind [[peelPlan]] and [[detectLossless]]:
+    * repeatedly remove one of `tables` whose remaining edges all reach one
+    * partner and whose step `accept` admits, until none does. Returns the
+    * steps taken, in order.
+    */
+  private def peel(joins: Seq[(QCol, QCol)], tables: Set[String],
+      accept: ((String, String, Seq[(QCol, QCol)])) => Boolean
+  ): Seq[(String, String, Seq[(QCol, QCol)])] = {
+    var edges = joins.map { case (a, b) => (a.normalized, b.normalized) }
     var toPeel = tables
     val plan = Seq.newBuilder[(String, String, Seq[(QCol, QCol)])]
-    var progressed = true
-    while (toPeel.nonEmpty && progressed) {
-      progressed = false
-      toPeel.find { e =>
-        val touching = edges.filter { case (a, b) =>
-          a.path == e || b.path == e }
-        touching.nonEmpty && touching.map { case (a, b) =>
-          if (a.path == e) b.path else a.path }.distinct.size == 1
-      } match {
-        case Some(e) =>
-          val touching = edges.filter { case (a, b) =>
-            a.path == e || b.path == e }
-          val partner = touching.map { case (a, b) =>
-            if (a.path == e) b.path else a.path }.head
-          plan += ((e, partner, touching.map { case (a, b) =>
-            if (a.path == e) (b, a) else (a, b) }))
-          edges = edges.filterNot { case (a, b) => a.path == e || b.path == e }
-          toPeel -= e; progressed = true
-        case None => ()
+    var step: Option[(String, String, Seq[(QCol, QCol)])] = None
+    do {
+      step = toPeel.iterator.flatMap { e =>
+        val pairs = edges.collect {
+          case (a, b) if b.path == e => (a, b)
+          case (a, b) if a.path == e => (b, a)
+        }
+        val partners = pairs.map(_._1.path).distinct
+        if (partners.size == 1) Some((e, partners.head, pairs)) else None
+      }.find(accept)
+      step.foreach { case s @ (e, _, _) =>
+        plan += s
+        edges = edges.filterNot { case (a, b) => a.path == e || b.path == e }
+        toPeel -= e
       }
-    }
-    if (toPeel.isEmpty) Some(plan.result()) else None
+    } while (step.isDefined)
+    plan.result()
   }
 
-  /** render-form of each derived measure, analyzed against the joined
-    * relation once per (summaryPath) and cached — exprId-insensitive
-    * matching ([[renderForm]]) against the query's aggregate children.
+  /** `d`'s [[Forms]], from ONE analysis of its joined tables. A definition
+    * whose tables are pure registry keys (store snapshots passed as
+    * overrides) or whose SQL does not resolve simply matches nothing —
+    * never a build or serving failure.
     */
-  private val derivedFormCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, String]]()
-
-  private[plans] def derivedForms(spark: SparkSession, d: StarMvDef): Map[String, String] =
-    derivedFormCache.computeIfAbsent(d.summaryPath, { _ =>
-      renderedForms(spark, d, d.derivedMeasures) })
-
-  /** render-form → derived-GROUP name, same mechanism as [[derivedForms]]
-    * but for the grouping side — a query expression whose optimized form
-    * matches binds to the summary's derived group column.
-    */
-  private val derivedGroupFormCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, String]]()
-
-  private[plans] def derivedGroupForms(spark: SparkSession, d: StarMvDef): Map[String, String] =
-    derivedGroupFormCache.computeIfAbsent(d.summaryPath, { _ =>
-      renderedForms(spark, d, d.derivedGroups) })
-
-  /** Every derived SQL is analyzed against the tables read from their
-    * paths; a definition whose tables are pure registry keys (store
-    * snapshots passed as overrides) or whose SQL does not resolve simply
-    * matches nothing — never a build or serving failure.
-    */
-  private def renderedForms(spark: SparkSession, d: StarMvDef,
-      defs: Seq[(String, String)]): Map[String, String] =
-    if (defs.isEmpty) Map.empty
-    else joinedForAnalysis(spark, d).toSeq.flatMap { joined =>
+  private def formsOf(spark: SparkSession, d: StarMvDef): Forms = {
+    val joined =
+      if (d.derivedMeasures.isEmpty && d.derivedGroups.isEmpty) None
+      else scala.util.Try(joinTables(spark, d)).toOption
+    // (name, optimized, analyzed) per derived SQL. The OPTIMIZED form is
+    // what matches: the query-side expression has already been through
+    // constant folding / decimal canonicalization when our rule runs. The
+    // analyzed one still shows the `cast(ts as date)` of a day group.
+    def analyzed(defs: Seq[(String, String)]) = joined.toSeq.flatMap { j =>
       defs.flatMap { case (name, sql) =>
         scala.util.Try {
-          // OPTIMIZED form, not merely analyzed: the query-side
-          // expression this must match has already been through constant
-          // folding / decimal canonicalization when our rule runs, so
-          // the registered form must take the same trip
-          val opt = joined.select(expr(sql).as("__dm"))
-            .queryExecution.optimizedPlan
-          val e = opt match {
+          val qe = j.select(expr(sql).as("__d")).queryExecution
+          val opt = qe.optimizedPlan match {
             case Project(pl, _) => pl.head
             case other => other.expressions.head
           }
-          renderForm(e)
-        }.toOption.flatten.map(_ -> name)
+          (name, opt, qe.analyzed.expressions.head match {
+            case a: Alias => a.child; case x => x })
+        }.toOption
       }
-    }.toMap
-
-  private def joinedForAnalysis(spark: SparkSession,
-      d: StarMvDef): Option[DataFrame] =
-    scala.util.Try(joinTables(spark, d)).toOption
-
-  /** derived groups that are exactly `cast(<ts> as date)`: ts column name
-    * → day group name, feeding the day-range filter recovery.
-    */
-  private val derivedTsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, String]]()
-
-  private[plans] def derivedTsCols(spark: SparkSession, d: StarMvDef): Map[String, String] =
-    derivedTsCache.computeIfAbsent(d.summaryPath, { _ =>
-      if (d.derivedGroups.isEmpty) Map.empty
-      else joinedForAnalysis(spark, d).toSeq.flatMap { joined =>
-        d.derivedGroups.flatMap { case (name, sql) =>
-          scala.util.Try {
-            val analyzed = joined.select(expr(sql).as("__dg"))
-              .queryExecution.analyzed.expressions.head
-            val stripped = analyzed match {
-              case a: Alias => a.child; case x => x }
-            stripped match {
-              case Cast(a: AttributeReference,
-                org.apache.spark.sql.types.DateType, _, _) => Some(a.name)
-              case _ => None
-            }
-          }.toOption.flatten.map(_ -> name)
-        }
-      }.toMap
-    })
-
-  private def formCaches = Seq(derivedFormCache, derivedGroupFormCache,
-    derivedTsCache)
-
-  /** Drop a (re)built summary path's cached forms and sizes. */
-  private def retire(summaryPath: String): Unit = {
-    formCaches.foreach(_.remove(summaryPath))
-    MvCost.evict(summaryPath)
-  }
-
-  /** Move a refreshed summary's cached forms to its next path — a refresh
-    * changes neither the tables nor the derived SQL, so they are analyzed
-    * once per MV, not once per refresh — and drop the retired path's
-    * sizes. One entry per live path: a per-micro-batch maintainer leaks
-    * nothing.
-    */
-  private def advance(from: String, to: String): Unit = {
-    formCaches.foreach(c => Option(c.remove(from)).foreach(c.put(to, _)))
-    MvCost.evict(from)
+    }
+    def byForm(xs: Seq[(String, Expression, Expression)]) =
+      xs.flatMap { case (name, opt, _) => renderForm(opt).map(_ -> name) }.toMap
+    val groups = analyzed(d.derivedGroups)
+    Forms(byForm(analyzed(d.derivedMeasures)), byForm(groups), groups.collect {
+      case (name, _, Cast(a: AttributeReference, DateType, _, _)) => a.name -> name
+    }.toMap)
   }
 
   /** Fold the registered tables into one joined DataFrame, connecting one
@@ -496,8 +494,8 @@ object StarMv {
 
   /** The refresh algebra of [[refreshTableDelta]], shared by every MV and
     * every sync: folds the deltas of ALL `changes` (table path, inserts,
-    * deletes) into ONE next summary generation, moves the old path's
-    * caches to it, and registers the advanced definition in place of
+    * deletes) into ONE next summary generation and registers the advanced
+    * definition, with the schema it was written at, in place of
     * `registered`.
     * It starts with the ONE ownership check: the signed algebra is not
     * idempotent, so a refresh must start from the summary the registry
@@ -519,7 +517,8 @@ object StarMv {
       changes: Seq[(String, DataFrame, DataFrame)],
       before: Map[String, DataFrame], after: Map[String, DataFrame],
       recomputeKeyCap: Int): MvDefinition = {
-    require(definitions.contains(registered), s"the registry does not hold " +
+    val entry = entries.find(_.definition == registered)
+    require(entry.isDefined, s"the registry does not hold " +
       s"${registered.summaryPath}: a refresh needs the CURRENTLY registered " +
       "definition (register/build first), and a maintainer whose state " +
       "file records it is not the owner of this MV")
@@ -592,7 +591,7 @@ object StarMv {
     val g = d.groupNames.map(col)
     val gNames = d.groupNames
     val allMeasures = d.measureCols.map(_.name) ++ d.derivedMeasures.map(_._1)
-    val old = spark.read.parquet(d.summaryPath)
+    val old = entry.get.summary(spark)
     val oldTypes = old.schema.map(f => f.name -> f.dataType).toMap
     // ONE signed delta join per refresh: every change's insert and delete
     // rows are tagged ±1 and joined once — against the tables before it at
@@ -624,7 +623,7 @@ object StarMv {
       sum(when(sgn === -1, 1L).otherwise(0L)).as("dcnt"))
     val scope = new graft.operators.CacheScope
     val next = nextSummaryPath(d.summaryPath)
-    try {
+    val written = try {
       val combined = scope.own(signed.groupBy(g: _*)
         .agg(bothAggs.head, bothAggs.tail: _*)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -729,12 +728,13 @@ object StarMv {
           .otherwise(when(col(s"c_$m") === 0,
             lit(null).cast(oldTypes(s"mx_$m"))).otherwise(col(s"mx_$m")))
           .as(s"mx_$m"))) :+ col("cnt")
-      repaired.select(finalCols: _*).write.mode("overwrite").parquet(next)
+      val out = repaired.select(finalCols: _*)
+      out.write.mode("overwrite").parquet(next)
+      out.schema
     } finally scope.release()
-    advance(d.summaryPath, next)
     MvUsage.recordMaintenance(next)
     val nd = registered.withSummary(next)
-    put(nd, retired = Some(d.summaryPath))
+    put(nd, retired = Some(d.summaryPath), schema = Some(written))
     nd
   }
 
@@ -813,32 +813,46 @@ object StarMv {
       MaterializedView.normalize(p) -> df }
     verifyLossless(spark, d, overrides)
     unregister(d.summaryPath) // a stale twin must not satisfy the build scan
-    materialize(spark, d, overrides)
-    register(d)
+    put(d, schema = Some(materialize(spark, d, overrides)))
     d
   }
 
   /** Write `d`'s summary from its tables (`overrides`, keyed by normalized
     * path, substitute table content — versioned-store snapshots — so the
     * table paths can be pure registry keys; same contract as
-    * [[refreshTableDelta]]). Derived forms are analyzed first, against
-    * the paths: with store keys they just never match.
+    * [[refreshTableDelta]]) and return the schema it was written at.
     */
   private[plans] def materialize(spark: SparkSession, d: StarMvDef,
-      overrides: Map[String, DataFrame]): Unit = {
-    retire(d.summaryPath)
-    derivedForms(spark, d) // analyze derived SQL before the build scan
-    derivedGroupForms(spark, d)
-    derivedTsCols(spark, d)
+      overrides: Map[String, DataFrame]): StructType = {
     val joined = starRows(spark, d, overrides)
     val allMeasures = d.measureCols.map(_.name) ++ d.derivedMeasures.map(_._1)
     val partials = allMeasures.flatMap(m => Seq(
       sum(col(m)).as(s"s_$m"), count(col(m)).as(s"c_$m"),
       min(col(m)).as(s"mn_$m"), max(col(m)).as(s"mx_$m"))) :+
       count(lit(1)).as("cnt")
-    joined.groupBy(d.groupNames.map(col): _*)
+    val summary = joined.groupBy(d.groupNames.map(col): _*)
       .agg(partials.head, partials.tail: _*)
-      .write.mode("overwrite").parquet(d.summaryPath)
+    summary.write.mode("overwrite").parquet(d.summaryPath)
+    summary.schema
+  }
+
+  /** The maximal set of tables PROVABLY lossless for the given join
+    * graph: peel greedily outside-in, keeping each candidate only when
+    * its single-partner shape holds and the data checks pass (unique
+    * join keys; every partner row matched). The same checks
+    * [[verifyLossless]] runs on declarations — here used to DISCOVER the
+    * declaration, so `fromQuery(..., autoLossless = true)` gets sub-join
+    * serving with zero schema knowledge from the caller. Cost: one
+    * dim-sized aggregate + one partner anti-join per candidate, paid once
+    * next to the build's fact-sized join itself.
+    */
+  private def detectLossless(spark: SparkSession, tables: Seq[String],
+      joins: Seq[(QCol, QCol)]): Seq[String] = {
+    val normToOrig = tables.map(t => MaterializedView.normalize(t) -> t).toMap
+    peel(joins, normToOrig.keySet, { case (e, partner, pairs) =>
+      losslessFailure(spark.read.parquet(e), spark.read.parquet(partner),
+        e, partner, pairs).isEmpty
+    }).map(step => normToOrig(step._1))
   }
 
   /** `CREATE MATERIALIZED VIEW … AS <query>`: derive the definition FROM
@@ -863,56 +877,6 @@ object StarMv {
     * match, so the registered query (and every sibling it implies) is
     * served from the summary immediately after this returns.
     */
-  /** The maximal set of tables PROVABLY lossless for the given join
-    * graph: peel greedily outside-in, keeping each candidate only when
-    * its single-partner shape holds and the data checks pass (unique
-    * join keys; every partner row matched). The same checks
-    * [[verifyLossless]] runs on declarations — here used to DISCOVER the
-    * declaration, so `fromQuery(..., autoLossless = true)` gets sub-join
-    * serving with zero schema knowledge from the caller. Cost: one
-    * dim-sized aggregate + one partner anti-join per candidate, paid once
-    * next to the build's fact-sized join itself.
-    */
-  private def detectLossless(spark: SparkSession, tables: Seq[String],
-      joins: Seq[(QCol, QCol)]): Seq[String] = {
-    var edges = joins.map { case (a, b) => (a.normalized, b.normalized) }
-    val normToOrig = tables.map(t => MaterializedView.normalize(t) -> t).toMap
-    var candidates = tables.map(MaterializedView.normalize).toSet
-    val detected = Seq.newBuilder[String]
-    var progressed = true
-    while (progressed) {
-      progressed = false
-      candidates.find { e =>
-        val touching = edges.filter { case (a, b) =>
-          a.path == e || b.path == e }
-        touching.nonEmpty && touching.map { case (a, b) =>
-          if (a.path == e) b.path else a.path }.distinct.size == 1 && {
-          val pairs = touching.map { case (a, b) =>
-            if (a.path == e) (b, a) else (a, b) }
-          val partner = pairs.head._1.path
-          val eDf = spark.read.parquet(e)
-          val pDf = spark.read.parquet(partner)
-          val eKeys = pairs.map(_._2.name)
-          val pKeys = pairs.map(_._1.name)
-          eDf.groupBy(eKeys.map(col): _*)
-            .agg(count(lit(1)).as("_n")).filter(col("_n") > 1)
-            .limit(1).isEmpty &&
-          pDf.select(pKeys.map(col): _*).join(
-            eDf.select(eKeys.map(col): _*),
-            pKeys.zip(eKeys).map { case (p, k) => col(p) === col(k) }
-              .reduce(_ && _), "left_anti").limit(1).isEmpty
-        }
-      } match {
-        case Some(e) =>
-          detected += normToOrig(e)
-          edges = edges.filterNot { case (a, b) => a.path == e || b.path == e }
-          candidates -= e; progressed = true
-        case None => ()
-      }
-    }
-    detected.result()
-  }
-
   def fromQuery(spark: SparkSession, query: DataFrame, summaryPath: String,
       losslessTables: Seq[String] = Nil,
       autoLossless: Boolean = false): StarMvDef = {
@@ -1059,13 +1023,10 @@ object StarMv {
   }
 
   /** Prove every `losslessTables` declaration against the data, in peel
-    * order: per peeled table its join key combination must be UNIQUE, and
-    * every partner row must MATCH (non-null keys included — a null key
-    * falls out of the anti-join as an orphan). Each check is one
-    * dimension-sized aggregate plus one partner-scan anti-join, paid once
-    * at build next to the fact-sized summary join itself. A failed check
-    * refuses the whole build: a summary registered with an unprovable
-    * declaration would silently serve wrong sub-join answers.
+    * order, with [[losslessFailure]]'s two checks per peeled table — paid
+    * once at build next to the fact-sized summary join itself. A failed
+    * check refuses the whole build: a summary registered with an
+    * unprovable declaration would silently serve wrong sub-join answers.
     */
   private def verifyLossless(spark: SparkSession, d: StarMvDef,
       overrides: Map[String, DataFrame]): Unit = {
@@ -1078,22 +1039,35 @@ object StarMv {
     def tableDf(p: String): DataFrame =
       overrides.getOrElse(p, spark.read.parquet(p))
     plan.foreach { case (e, partner, pairs) =>
-      val eDf = tableDf(e)
-      val pDf = tableDf(partner)
-      val eKeys = pairs.map(_._2.name)
-      val pKeys = pairs.map(_._1.name)
-      val dup = eDf.groupBy(eKeys.map(col): _*)
-        .agg(count(lit(1)).as("_n")).filter(col("_n") > 1).limit(1)
-      require(dup.isEmpty, s"losslessTables: $e is not unique on " +
-        s"(${eKeys.mkString(", ")}) — the extension can duplicate join rows")
-      val orphan = pDf.select(pKeys.map(col): _*).join(
-        eDf.select(eKeys.map(col): _*),
-        pKeys.zip(eKeys).map { case (p, k) => col(p) === col(k) }
-          .reduce(_ && _), "left_anti").limit(1)
-      require(orphan.isEmpty, s"losslessTables: $partner has rows with no " +
-        s"match in $e on (${pKeys.mkString(", ")}) — the extension drops " +
-        "join rows (null or dangling keys)")
+      val failure = losslessFailure(tableDf(e), tableDf(partner), e, partner,
+        pairs)
+      require(failure.isEmpty, s"losslessTables: ${failure.get}")
     }
+  }
+
+  /** The two data checks that prove table `e` (`eDf`) a lossless 1:1
+    * extension of `partner` (`pDf`) on `pairs` (partnerCol, eCol): `e` is
+    * UNIQUE on its join keys, and every partner row MATCHES one (a null
+    * key falls out of the anti-join as an orphan). One dimension-sized
+    * aggregate plus one partner-scan anti-join. The failed check's
+    * reason, or None.
+    */
+  private def losslessFailure(eDf: DataFrame, pDf: DataFrame, e: String,
+      partner: String, pairs: Seq[(QCol, QCol)]): Option[String] = {
+    val eKeys = pairs.map(_._2.name)
+    val pKeys = pairs.map(_._1.name)
+    val dup = eDf.groupBy(eKeys.map(col): _*)
+      .agg(count(lit(1)).as("_n")).filter(col("_n") > 1).limit(1)
+    val orphan = pDf.select(pKeys.map(col): _*).join(
+      eDf.select(eKeys.map(col): _*),
+      pKeys.zip(eKeys).map { case (p, k) => col(p) === col(k) }
+        .reduce(_ && _), "left_anti").limit(1)
+    if (!dup.isEmpty) Some(s"$e is not unique on (${eKeys.mkString(", ")})" +
+      " — the extension can duplicate join rows")
+    else if (!orphan.isEmpty) Some(s"$partner has rows with no match in $e " +
+      s"on (${pKeys.mkString(", ")}) — the extension drops join rows (null " +
+      "or dangling keys)")
+    else None
   }
 
   // ───────────────────────── rewrite machinery ─────────────────────────
@@ -1227,10 +1201,10 @@ object StarMv {
       if pathed.size == flat.leaves.size
       paths = pathed.map(_._2)
       if paths.distinct.size == paths.size // self-joins refuse
-      (d, plan) <- servable(pathed).view
-        .flatMap(d => rewriteWith(agg, expand, flat, pathed, d).map(d -> _))
+      (e, plan) <- servable(pathed).view
+        .flatMap(e => rewriteWith(agg, expand, flat, pathed, e).map(e -> _))
         .headOption
-    } yield { MvUsage.recordServe(d.summaryPath); plan }
+    } yield { MvUsage.recordServe(e.summaryPath); plan }
   }
 
   /** Candidates for the query's leaf set, cheapest summary first, with
@@ -1239,7 +1213,7 @@ object StarMv {
     * scan or join it replaces — e.g. an MV grouped by a near-unique key).
     * Ties and unknown counts keep registration order and serve.
     */
-  private def servable(pathed: Seq[(LeafRel, String)]): Seq[StarMvDef] = {
+  private def servable(pathed: Seq[(LeafRel, String)]): Seq[Entry] = {
     val cands = candidatesFor(
       pathed.map(p => MaterializedView.normalize(p._2)).toSet)
     if (cands.isEmpty) return cands
@@ -1296,8 +1270,9 @@ object StarMv {
     * where re-aggregation widens it.
     */
   private def rewriteWith(agg: Aggregate, expand: Option[Expand], flat: Flat,
-      pathed: Seq[(LeafRel, String)], d: StarMvDef): Option[LogicalPlan] = {
+      pathed: Seq[(LeafRel, String)], entry: Entry): Option[LogicalPlan] = {
     val spark = SparkSession.active
+    val d = entry.star
     val qcolOf = qcolsOf(pathed)
     def inline(e: Expression): Expression = inlineAliases(e, flat.aliases)
 
@@ -1342,14 +1317,13 @@ object StarMv {
       asPair(e).exists { case (a, b) => dc.connected(a, b) }
     val extraJoinConjs = joinConjs.filterNot(impliedEq)
 
-    // summary relation with fresh attributes, mapped by name
-    val sumPlan = spark.read.parquet(d.summaryPath).queryExecution.analyzed
+    // summary relation with fresh attributes, mapped by name — read with
+    // the entry's schema, so planning infers none
+    val sumPlan = entry.summary(spark).queryExecution.analyzed
     val byName = sumPlan.output.map(a => a.name -> a).toMap
     def attrOf(name: String): Option[AttributeReference] =
       byName.get(name).collect { case a: AttributeReference => a }
-    val dForms = derivedForms(spark, d)
-    val dgForms = derivedGroupForms(spark, d)
-    val dayOfTs = derivedTsCols(spark, d)
+    val Forms(dForms, dgForms, dayOfTs) = entry.forms
     def formOf(e: Expression, forms: Map[String, String]): Option[String] =
       if (forms.isEmpty) None else renderForm(e).flatMap(forms.get)
     // a query subtree whose render-form matches a derived group binds to

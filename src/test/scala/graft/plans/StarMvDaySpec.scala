@@ -176,8 +176,10 @@ class StarMvDaySpec extends SparkTestBase {
       tmpDir("ssd_keys_single"), Seq("day" -> "cast(ts as date)"),
       base = Some(fact))
     try {
-      assert(StarMv.derivedGroupForms(spark, d).isEmpty)
-      assert(StarMv.derivedGroupForms(spark, single.asStar).isEmpty)
+      def groupForms(summaryPath: String) = StarMv.entries
+        .find(_.summaryPath == summaryPath).get.forms.groups
+      assert(groupForms(d.summaryPath).isEmpty)
+      assert(groupForms(single.summaryPath).isEmpty)
       val totals = spark.read.parquet(d.summaryPath)
         .agg(sum(col("s_v")), sum(col("cnt"))).as[(Long, Long)].head()
       assert(totals === ((factRows.map(_._3).sum, factRows.size.toLong)))
