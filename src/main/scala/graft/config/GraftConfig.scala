@@ -55,11 +55,14 @@ final case class SourceConfig(
   * `etc/config.properties` schema, parsed with the same keys, defaults and
   * fail-fast checks (reference: Config.java:89-138, README.md:99-105).
   *
-  * Thread-pool sizes (`pipeline/transform/merge.thread_pool.size`,
-  * `loader.*`) are parsed for config-file parity but are ADVISORY here:
-  * Spark's scheduler owns parallelism, so they carry no execution semantics —
-  * the knobs that do are `merge.interval` (micro-batch trigger, T1) and
-  * `merge.batch.size` (`maxOffsetsPerTrigger` back-pressure, R2).
+  * The knobs with execution semantics are `merge.interval` (micro-batch
+  * trigger, T1), `merge.batch.size` (`maxOffsetsPerTrigger` back-pressure,
+  * R2) and `loader.conn_pool.size`, which caps how many mapped tables one
+  * micro-batch merges concurrently (the reference's loader pool; see
+  * [[graft.streaming.CdcPipeline.applyBatch]]). The other thread-pool sizes
+  * (`pipeline/transform/merge.thread_pool.size`, `loader.task_queue.size`)
+  * are parsed for config-file parity but are ADVISORY here: Spark's
+  * scheduler owns that parallelism.
   */
 final case class GraftConfig(
     target: ConnectionConfig,
@@ -158,7 +161,8 @@ object GraftConfig {
       pipelinePoolSize = getPosInt("pipeline.thread_pool.size", 5),
       transformPoolSize = getPosInt("transform.thread_pool.size", 10),
       mergePoolSize = getPosInt("merge.thread_pool.size", 10),
-      loaderConnSize = getPosInt("loader.conn_pool.size", 10),
+      loaderConnSize = getPosInt("loader.conn_pool.size",
+        graft.streaming.CdcPipeline.DefaultLoaders),
       loaderTaskQueueSize = getPosInt("loader.task_queue.size", 2),
       reporter = get("metrics.reporter").getOrElse("console"),
       reportIntervalSec = getPosInt("metrics.reporter.console.interval", 15),
@@ -234,9 +238,10 @@ object GraftBoot {
 
   /** Start one source's stream: the configured Kafka connection, or — when
     * `<name>.replay.dir` is set — the file-replay twin over archived Maxwell
-    * JSON (offline-testable, and the disaster-recovery path). Kafka needs
-    * the spark-sql-kafka connector and a reachable broker — see the Kafka
-    * verification boundary note in SURVEY.md §8.
+    * JSON (offline-testable, and the disaster-recovery path). Either way
+    * `loader.conn_pool.size` caps the tables a batch merges at once. Kafka
+    * needs the spark-sql-kafka connector and a reachable broker — see the
+    * Kafka verification boundary note in SURVEY.md §8.
     */
   def startSource(
       spark: SparkSession,
@@ -247,7 +252,8 @@ object GraftBoot {
       checkpointDir: String): StreamingQuery = source.replayDir match {
     case Some(dir) =>
       graft.streaming.CdcPipeline.fileMaxwellStream(
-        spark, dir, registry, stores, checkpointDir, cfg.trigger)
+        spark, dir, registry, stores, checkpointDir, cfg.trigger,
+        loaders = cfg.loaderConnSize)
     case None => startKafka(spark, cfg, source, registry, stores, checkpointDir)
   }
 
@@ -255,7 +261,7 @@ object GraftBoot {
     * requires the spark-sql-kafka connector and a reachable broker — see the
     * Kafka verification boundary note in SURVEY.md §8). `merge.interval`
     * becomes the micro-batch trigger, `merge.batch.size` the
-    * `maxOffsetsPerTrigger` cap.
+    * `maxOffsetsPerTrigger` cap, `loader.conn_pool.size` the loader cap.
     */
   def startKafka(
       spark: SparkSession,
@@ -267,13 +273,14 @@ object GraftBoot {
     case SourceType.Maxwell =>
       graft.streaming.CdcPipeline.kafkaMaxwellStream(
         spark, source.kafkaServer, source.topic, registry, stores,
-        checkpointDir, cfg.trigger, cfg.batchSize.toLong)
+        checkpointDir, cfg.trigger, cfg.batchSize.toLong,
+        loaders = cfg.loaderConnSize)
     case SourceType.Debezium =>
       graft.streaming.CdcPipeline.kafkaDebeziumStream(
         spark, source.kafkaServer, s"${java.util.regex.Pattern.quote(source.topic)}\\..+",
         registry, stores, checkpointDir, cfg.trigger, cfg.batchSize.toLong,
         // the exact namespace, so a dotted topic.prefix still routes (the
         // parser's default first-segment strip would mis-key every event)
-        namespace = Some(source.topic))
+        namespace = Some(source.topic), loaders = cfg.loaderConnSize)
   }
 }

@@ -542,50 +542,58 @@ object StarMv {
     // at build; a delta can break it two ways, both checked here at delta
     // cost against the post-batch tables and failing LOUDLY (rebuild, or
     // drop the declaration) rather than letting the summary silently
-    // serve wrong sub-join answers.
+    // serve wrong sub-join answers. Every check is a `limit(1)` probe
+    // tagged with its index; ONE collect over their union runs them all,
+    // and the first failing check in order names the refusal. An empty
+    // delta side makes its probes empty.
     if (d.losslessSet.nonEmpty) {
-      def cur(p: String): DataFrame =
-        post.getOrElse(p, spark.read.parquet(d.tables(tables.indexOf(p))))
+      val curs = scala.collection.mutable.Map.empty[String, DataFrame]
+      def cur(p: String): DataFrame = curs.getOrElseUpdate(p,
+        post.getOrElse(p, spark.read.parquet(d.tables(tables.indexOf(p)))))
+      val checks = scala.collection.mutable.ArrayBuffer.empty[(DataFrame, String)]
       for ((path, inserts, deletes) <- deltas;
            (e, partner, pairs) <- peelPlan(d, d.losslessSet).toSeq.flatten) {
         val eKeys = pairs.map(_._2.name)
         val pKeys = pairs.map(_._1.name)
-        if (partner == path && !inserts.isEmpty) {
+        if (partner == path) {
           // new partner rows must still match the extension exactly once
-          val orphan = inserts.select(pKeys.map(col): _*).join(
+          checks += inserts.select(pKeys.map(col): _*).join(
             cur(e).select(eKeys.map(col): _*),
             pKeys.zip(eKeys).map { case (p2, k) => col(p2) === col(k) }
-              .reduce(_ && _), "left_anti").limit(1)
-          require(orphan.isEmpty, s"refreshTableDelta: inserted $partner " +
-            s"rows have no match in lossless table $e — rebuild or drop " +
-            "the losslessTables declaration")
+              .reduce(_ && _), "left_anti") ->
+            (s"refreshTableDelta: inserted $partner rows have no match in " +
+              s"lossless table $e — rebuild or drop the losslessTables " +
+              "declaration")
         }
         if (e == path) {
-          if (!inserts.isEmpty) {
-            // the extension must stay unique — checked DELTA-SIZED: only
-            // the inserted key combinations can newly violate uniqueness
-            // (the rest was proved at build / the previous refresh), so
-            // restrict the aggregate to them via a semi join first
-            val insKeys = inserts.select(eKeys.map(col): _*).distinct()
-            val dup = cur(e).join(insKeys, eKeys, "left_semi")
-              .groupBy(eKeys.map(col): _*)
-              .agg(count(lit(1)).as("_n")).filter(col("_n") > 1).limit(1)
-            require(dup.isEmpty, s"refreshTableDelta: $e is no longer " +
-              s"unique on (${eKeys.mkString(", ")}) — rebuild or drop the " +
+          // the extension must stay unique — checked DELTA-SIZED: only
+          // the inserted key combinations can newly violate uniqueness
+          // (the rest was proved at build / the previous refresh), so
+          // restrict the aggregate to them via a semi join first
+          val insKeys = inserts.select(eKeys.map(col): _*).distinct()
+          checks += cur(e).join(insKeys, eKeys, "left_semi")
+            .groupBy(eKeys.map(col): _*)
+            .agg(count(lit(1)).as("_n")).filter(col("_n") > 1) ->
+            (s"refreshTableDelta: $e is no longer unique on " +
+              s"(${eKeys.mkString(", ")}) — rebuild or drop the " +
               "losslessTables declaration")
-          }
-          if (!deletes.isEmpty) { // deleted keys must not orphan partners
-            val goneKeys = deletes.select(eKeys.map(col): _*).distinct()
-              .exceptAll(cur(e).select(eKeys.map(col): _*).distinct())
-            val pDf = cur(partner)
-            val orphaned = pDf.join(goneKeys,
-              pKeys.zip(eKeys).map { case (p2, k) => pDf(p2) === goneKeys(k) }
-                .reduce(_ && _), "left_semi").limit(1)
-            require(orphaned.isEmpty, s"refreshTableDelta: deleting keys " +
-              s"from lossless table $e orphans $partner rows — rebuild or " +
-              "drop the losslessTables declaration")
-          }
+          // deleted keys must not orphan partners
+          val goneKeys = deletes.select(eKeys.map(col): _*).distinct()
+            .exceptAll(cur(e).select(eKeys.map(col): _*).distinct())
+          val pDf = cur(partner)
+          checks += pDf.join(goneKeys,
+            pKeys.zip(eKeys).map { case (p2, k) => pDf(p2) === goneKeys(k) }
+              .reduce(_ && _), "left_semi") ->
+            (s"refreshTableDelta: deleting keys from lossless table $e " +
+              s"orphans $partner rows — rebuild or drop the losslessTables " +
+              "declaration")
         }
+      }
+      if (checks.nonEmpty) {
+        val failed = checks.zipWithIndex.map { case ((probe, _), i) =>
+          probe.limit(1).select(lit(i).as("_graft_check"))
+        }.reduce(_ union _).collect().map(_.getInt(0))
+        require(failed.isEmpty, checks(failed.min)._2)
       }
     }
     val g = d.groupNames.map(col)

@@ -10,29 +10,39 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** End-to-end CDC sync wiring — the Spark-native equivalent of the
   * reference's poll → transform → dispatch → merge → load pipeline
-  * (reference: PipeLine.java:99-117, Scheduler.java:44-91). Thread pools,
-  * bounded queues, back-pressure and offset bookkeeping all collapse into
-  * Structured Streaming: micro-batch trigger ≙ `merge.interval`,
-  * `maxOffsetsPerTrigger` ≙ `merge.batch.size` back-pressure, the checkpoint
-  * WAL + idempotent merge ≙ the in-order barrier-gated offset commit C1
-  * (reference: KafkaPipeLine.java:69-83,146-189) — replaying a batch after a
-  * crash re-applies the same delete+upsert, which is idempotent, giving the
-  * same effectively-once guarantee.
+  * (reference: PipeLine.java:99-117, Scheduler.java:44-91). Bounded queues,
+  * back-pressure and offset bookkeeping collapse into Structured Streaming:
+  * micro-batch trigger ≙ `merge.interval`, `maxOffsetsPerTrigger` ≙
+  * `merge.batch.size` back-pressure, and every stream's `loaders` ≙ the
+  * loader pool's `loader.conn_pool.size` (see [[applyBatch]]); the
+  * checkpoint WAL + idempotent merge ≙ the in-order barrier-gated offset
+  * commit C1 (reference: KafkaPipeLine.java:69-83,146-189) — replaying a
+  * batch after a crash re-applies the same delete+upsert, which is
+  * idempotent, giving the same effectively-once guarantee.
   */
 object CdcPipeline {
 
+  /** bireme's `loader.conn_pool.size` default (reference: Config.java:91-102):
+    * the most tables one batch merges at once.
+    */
+  val DefaultLoaders = 10
+
   /** Apply one micro-batch of normalized events to every mapped table:
     * typed projection → per-PK compaction → merge. The groupBy inside
-    * compaction shuffles each table's slice independently; tables are
-    * processed sequentially per batch like the reference's per-table loaders.
+    * compaction shuffles each table's slice independently, and each table's
+    * merge is its own atomic, idempotent commit, so the tables load
+    * concurrently — up to `loaders` at once, like the reference's per-table
+    * ChangeLoaders on a pool of `loader.conn_pool.size` (reference:
+    * Context.java:86-95). A replay re-applies every table whatever order
+    * they finished in. See [[runLoaders]] for the thread contract.
     *
-    * Few tables (< `stagingThreshold`): the batch is persisted once and each
-    * table filters the cached rows. Many tables (bireme-scale maps run
-    * hundreds, Config.java:242-272): per-table filters would launch hundreds
-    * of jobs over the full batch, so instead ONE pass writes the batch to a
-    * `mappedTable`-partitioned staging dir and every table's merge reads only
-    * its own partition directory (Catalyst prunes the scan to
-    * `mappedTable=<target>`).
+    * Few tables (< `stagingThreshold`): the batch is persisted and computed
+    * once, before the loaders start, and each table filters the cached rows.
+    * Many tables (bireme-scale maps run hundreds, Config.java:242-272):
+    * per-table filters would launch hundreds of jobs over the full batch, so
+    * instead ONE pass writes the batch to a `mappedTable`-partitioned staging
+    * dir and every table's merge reads only its own partition directory
+    * (Catalyst prunes the scan to `mappedTable=<target>`).
     */
   def applyBatch(
       events: DataFrame,
@@ -41,8 +51,13 @@ object CdcPipeline {
       flavor: Projection.Flavor = Projection.Maxwell,
       stagingThreshold: Int = 8,
       stagingDir: Option[String] = None,
-      driftHook: Option[(String, String, Long) => Unit] = None): Unit = {
+      driftHook: Option[(String, String, Long) => Unit] = None,
+      loaders: Int = DefaultLoaders): Unit = {
+    require(loaders >= 1, s"loaders must be positive, got $loaders")
     val targets = registry.targets
+    val spark = events.sparkSession
+    def load(df: DataFrame): Unit =
+      runLoaders(spark.sparkContext, targets, loaders)(applyTo(df, _))
     def applyTo(df: DataFrame, target: String): Unit = {
       // the merge consumes the compacted batch in several jobs; cache the
       // per-key aggregate for the span of this table's merge
@@ -62,10 +77,9 @@ object CdcPipeline {
     if (targets.size < stagingThreshold) {
       // One pass over the (possibly Kafka-backed) batch feeds every table.
       events.persist()
-      try { detectDrift(events); targets.foreach(applyTo(events, _)) }
+      try { materialize(events); detectDrift(events); load(events) }
       finally events.unpersist()
     } else {
-      val spark = events.sparkSession
       // Staging must live on a SHARED filesystem: a driver-local java.io
       // temp dir only works single-node (executors would each write their
       // own node-local copy and the read-back would silently see a partial
@@ -80,11 +94,74 @@ object CdcPipeline {
         // partition column's type.
         val staged = spark.read.schema(events.schema).parquet(staging)
         detectDrift(staged)
-        targets.foreach(applyTo(staged, _))
+        load(staged)
       } finally {
         val p = new org.apache.hadoop.fs.Path(staging)
         p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       }
+    }
+  }
+
+  /** Compute a persisted DataFrame's cache in ONE job. The first query over
+    * an unloaded cache submits that job itself (adaptive execution's
+    * table-cache stage), but loaders planning at once would each find it
+    * unloaded and submit one; computing it first keeps one job per batch
+    * and one computation of each partition on any cluster.
+    */
+  private def materialize(df: DataFrame): Unit =
+    df.select("*").queryExecution.withCachedData.collectFirst {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+        r.cacheBuilder.cachedColumnBuffers
+    }.foreach(rdd => df.sparkSession.sparkContext.runJob(rdd, (_: Iterator[_]) => ()))
+
+  /** Run `load` once per target on up to `loaders` threads named
+    * `graft-loader-<i>`, each taking the next target until none is left.
+    * One target, or a cap of 1, runs inline on the calling thread.
+    *
+    * The calling (stream) thread creates the loaders, so they inherit its
+    * Spark local properties — the micro-batch id, the query's job group
+    * (`stop()` cancels their jobs with the batch's) — and its active
+    * session. This returns or throws only after every loader has returned:
+    * a failure stops the loaders taking new targets, and the first failure
+    * is rethrown with the others attached as suppressed. Interrupted (a
+    * query `stop()`), it cancels the loaders' jobs, interrupts and joins
+    * them, then rethrows — no merge commits after its batch has failed.
+    */
+  private def runLoaders(sc: org.apache.spark.SparkContext,
+      targets: Seq[String], loaders: Int)(load: String => Unit): Unit = {
+    val n = math.min(loaders, targets.size)
+    if (n <= 1) { targets.foreach(load); return }
+    val tag = s"graft-loaders-${java.util.UUID.randomUUID()}"
+    val next = new java.util.concurrent.atomic.AtomicInteger(0)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val cancelled = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val threads = (0 until n).map { i =>
+      val t = new Thread(() => {
+        sc.addJobTag(tag)
+        var j = next.getAndIncrement()
+        while (j < targets.size && failures.isEmpty && !cancelled.get) {
+          try load(targets(j)) catch { case e: Throwable => failures.add(e) }
+          j = next.getAndIncrement()
+        }
+      }, s"graft-loader-$i")
+      t.setDaemon(true)
+      t
+    }
+    threads.foreach(_.start())
+    try threads.foreach(_.join())
+    catch {
+      case e: InterruptedException =>
+        cancelled.set(true)
+        sc.cancelJobsWithTag(tag, "micro-batch interrupted")
+        threads.foreach(_.interrupt())
+        threads.foreach { t =>
+          while (t.isAlive) try t.join() catch { case _: InterruptedException => () }
+        }
+        throw e
+    }
+    Option(failures.poll()).foreach { first =>
+      failures.forEach(first.addSuppressed(_))
+      throw first
     }
   }
 
@@ -113,9 +190,10 @@ object CdcPipeline {
       registry: TableRegistry,
       stores: Map[String, TableStore],
       stagingDir: Option[String] = None,
-      driftHook: Option[(String, String, Long) => Unit] = None): Unit =
+      driftHook: Option[(String, String, Long) => Unit] = None,
+      loaders: Int = DefaultLoaders): Unit =
     applyBatch(MaxwellParser.events(batch, registry, col("offset")), registry, stores,
-      stagingDir = stagingDir, driftHook = driftHook)
+      stagingDir = stagingDir, driftHook = driftHook, loaders = loaders)
 
   /** Debezium twin of [[applyMaxwellKafkaBatch]]: topic supplies routing.
     * `namespace` (when known) strips the exact — possibly dotted — topic
@@ -126,11 +204,13 @@ object CdcPipeline {
       registry: TableRegistry,
       stores: Map[String, TableStore],
       stagingDir: Option[String] = None,
-      namespace: Option[String] = None): Unit =
+      namespace: Option[String] = None,
+      loaders: Int = DefaultLoaders): Unit =
     applyBatch(
       DebeziumParser.events(batch, registry, col("offset"), col("topic"),
         namespace = namespace),
-      registry, stores, Projection.Debezium, stagingDir = stagingDir)
+      registry, stores, Projection.Debezium, stagingDir = stagingDir,
+      loaders = loaders)
 
   /** Maxwell-over-Kafka sync, the reference's primary deployment
     * (reference: Bireme.java:188-218). `seq = offset` gives per-key total
@@ -155,7 +235,8 @@ object CdcPipeline {
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
       maxOffsetsPerTrigger: Long = 50000L,
-      postBatch: Option[Long => Unit] = None): StreamingQuery = {
+      postBatch: Option[Long => Unit] = None,
+      loaders: Int = DefaultLoaders): StreamingQuery = {
     sweepStaging(spark, checkpointDir)
     val raw = spark.readStream.format("kafka")
       .option("kafka.bootstrap.servers", bootstrapServers)
@@ -169,7 +250,7 @@ object CdcPipeline {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         applyMaxwellKafkaBatch(batch, registry, stores,
-          stagingDir = Some(s"$checkpointDir/_graft_batch_staging"))
+          stagingDir = Some(s"$checkpointDir/_graft_batch_staging"), loaders = loaders)
         postBatch.foreach(_(batchId)) // see fileMaxwellStream's hook contract
       }
       .start()
@@ -226,7 +307,8 @@ object CdcPipeline {
       trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
       maxFilesPerTrigger: Int = 1000,
       driftMetrics: Option[graft.obs.PipelineMetrics] = None,
-      postBatch: Option[Long => Unit] = None): StreamingQuery = {
+      postBatch: Option[Long => Unit] = None,
+      loaders: Int = DefaultLoaders): StreamingQuery = {
     sweepStaging(spark, checkpointDir)
     // Back-pressure for the bulk-replay case, the file twin of the Kafka
     // paths' maxOffsetsPerTrigger: without a cap a replay dir's ENTIRE
@@ -245,7 +327,7 @@ object CdcPipeline {
           val ordered = sequenceReplayBatch(batch, batchId, scope)
           applyBatch(MaxwellParser.events(ordered, registry, col("_seq")), registry, stores,
             stagingDir = Some(s"$checkpointDir/_graft_batch_staging"),
-            driftHook = driftMetrics.map(m => m.recordDrift _))
+            driftHook = driftMetrics.map(m => m.recordDrift _), loaders = loaders)
           // runs AFTER every table's merge committed, INSIDE the batch (a
           // failure here fails the batch, and the replay re-runs both the
           // idempotent merges and the hook): where a SnapshotCatalog
@@ -344,7 +426,8 @@ object CdcPipeline {
       trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
       maxOffsetsPerTrigger: Long = 50000L,
       namespace: Option[String] = None,
-      postBatch: Option[Long => Unit] = None): StreamingQuery = {
+      postBatch: Option[Long => Unit] = None,
+      loaders: Int = DefaultLoaders): StreamingQuery = {
     sweepStaging(spark, checkpointDir)
     val raw = spark.readStream.format("kafka")
       .option("kafka.bootstrap.servers", bootstrapServers)
@@ -361,7 +444,7 @@ object CdcPipeline {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         applyDebeziumKafkaBatch(batch, registry, stores,
           stagingDir = Some(s"$checkpointDir/_graft_batch_staging"),
-          namespace = namespace)
+          namespace = namespace, loaders = loaders)
         postBatch.foreach(_(batchId)) // see fileMaxwellStream's hook contract
       }
       .start()

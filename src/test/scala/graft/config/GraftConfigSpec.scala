@@ -177,4 +177,54 @@ class GraftConfigSpec extends SparkTestBase {
     assert(store.snapshot().collect().map(r => r.getInt(0) -> r.getString(1)).toMap ==
       Map(1 -> "a2", 2 -> "b"))
   }
+
+  test("loader.conn_pool.size reaches the stream: it caps the tables merged at once") {
+    import graft.model.{TableRegistry, TableSpec}
+    import org.apache.spark.sql.types._
+    val specs = Seq("public.a", "public.b").map { t =>
+      t -> TableSpec(t, StructType(Seq(StructField("id", IntegerType))), Seq("id"))
+    }.toMap
+    val registry = TableRegistry(Map("demo.a" -> "public.a", "demo.b" -> "public.b"), specs)
+    // the threads each merge ran on: inline on the stream thread at a cap of
+    // 1, on `graft-loader-*` threads above it
+    def mergeThreads(poolSize: Int): Set[String] = {
+      val dir = tmpDir(s"cfgpool$poolSize")
+      val in = tmpDir(s"cfgpool$poolSize-in")
+      Files.write(Paths.get(in, "b0.json"), Seq(
+        """{"database":"demo","table":"a","type":"insert","ts":1,"data":{"id":1}}""",
+        """{"database":"demo","table":"b","type":"insert","ts":1,"data":{"id":2}}""")
+        .mkString("\n").getBytes("UTF-8"))
+      val cfg = GraftConfig.load(writeFixture(dir,
+        s"""target.url = jdbc:derby:memory:unused
+           |data_source = maxwell1
+           |maxwell1.type = maxwell
+           |maxwell1.replay.dir = $in
+           |merge.interval = 1000
+           |loader.conn_pool.size = $poolSize
+           |""".stripMargin,
+        Map("maxwell1" -> "demo.a = public.a\ndemo.b = public.b\n")))
+      assert(cfg.loaderConnSize == poolSize)
+      val threads = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val stores = specs.map { case (t, sp) =>
+        val under = new ParquetTableStore(spark, tmpDir(s"cfgpool$poolSize-$t"), sp, 2)
+        t -> (new graft.sources.TableStore {
+          def spec = under.spec
+          def snapshot() = under.snapshot()
+          def merge(b: graft.operators.CompactedBatch): Unit = {
+            threads.add(Thread.currentThread.getName); under.merge(b)
+          }
+        }: graft.sources.TableStore)
+      }
+      val q = GraftBoot.startSource(spark, cfg, cfg.sources.head, registry, stores,
+        tmpDir(s"cfgpool$poolSize-ckpt"))
+      try q.processAllAvailable() finally q.stop()
+      assert(stores.values.map(_.snapshot().count()).sum == 2L)
+      import scala.jdk.CollectionConverters._
+      threads.asScala.toSet
+    }
+    val inline = mergeThreads(1)
+    assert(inline.size == 1 && !inline.head.startsWith("graft-loader"), inline)
+    val pooled = mergeThreads(2)
+    assert(pooled.nonEmpty && pooled.forall(_.startsWith("graft-loader")), pooled)
+  }
 }

@@ -253,4 +253,55 @@ class StarMvSubJoinSpec extends SparkTestBase {
       assert(on === off)
     } finally StarMv.unregister(d.summaryPath)
   }
+
+  test("a two-table lossless sync runs its guards as ONE action") {
+    val (f, m, _, _, d) = setup("fused")
+    // actions run during the sync: the fused guard collect (its one output
+    // column is `_graft_check`), and any per-check `isEmpty` probe
+    val guards = new java.util.concurrent.atomic.AtomicInteger
+    val probes = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(fn: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = qe.analyzed.output.map(_.name) match {
+        case Seq("_graft_check") => guards.incrementAndGet(); ()
+        case Seq("guard_spec_flush") => flushed.countDown()
+        case _ => if (fn == "isEmpty") { probes.incrementAndGet(); () }
+      }
+      def onFailure(fn: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    var cur = d.summaryPath
+    try {
+      // one batch lands on the fact AND the mid table: legal fact rows in
+      // and out, one new mid row under an existing outer key
+      val insF = Seq(("f1", 3L, 7L), ("f0", 13L, 11L)).toDF("f_flag", "f_m", "v")
+      val delF = factRows.filter(_._3 % 9 == 0).toDF("f_flag", "f_m", "v")
+      val insM = Seq((13L, 2L, "seg1")).toDF("m_k", "m_o", "seg")
+      val delM = spark.emptyDataset[(Long, Long, String)].toDF("m_k", "m_o", "seg")
+      val before = Map(f -> factRows.toDF("f_flag", "f_m", "v"),
+        m -> midRows.toDF("m_k", "m_o", "seg"))
+      (factRows.filterNot(_._3 % 9 == 0) ++ Seq(("f1", 3L, 7L), ("f0", 13L, 11L)))
+        .toDF("f_flag", "f_m", "v").write.mode("overwrite").parquet(f)
+      (midRows :+ ((13L, 2L, "seg1"))).toDF("m_k", "m_o", "seg")
+        .write.mode("overwrite").parquet(m)
+      spark.listenerManager.register(listener)
+      val next = try {
+        val n = StarMv.refresh(spark, d, Seq((f, insF, delF), (m, insM, delM)),
+          before, Map.empty, recomputeKeyCap = 1000)
+        spark.range(1).toDF("guard_spec_flush").collect()
+        assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        n
+      } finally spark.listenerManager.unregister(listener)
+      cur = next.summaryPath
+      assert(guards.get == 1, s"${guards.get} guard actions")
+      assert(probes.get == 0, s"${probes.get} isEmpty probes")
+      def q = spark.read.parquet(f)
+        .join(spark.read.parquet(m), col("f_m") === col("m_k"))
+        .groupBy("f_flag", "seg")
+        .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"))
+      val (on, off) = servedRows(q, cur)
+      assert(on === off)
+    } finally StarMv.unregister(cur)
+  }
 }
