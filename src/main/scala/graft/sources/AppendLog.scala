@@ -768,18 +768,13 @@ final class AppendLog(
     */
   def create(): Unit = if (!exists) commitManifest(Nil)
 
-  /** Sweep staging leftovers and dirs/zone files no manifest references —
+  /** Sweep crash leftovers and dirs/zone files no manifest references —
     * run at the start of every mutation (deferred one generation so lazy
     * readers of the previous manifest stay evaluable, as in the store).
+    * The table dir and `data/` take the bucketed stores' sweep.
     */
   private def gcUnreferenced(live: Set[String]): Unit = {
-    if (fs.exists(tablePath)) fs.listStatus(tablePath).foreach { st =>
-      if (st.getPath.getName.startsWith(".staging_"))
-        fs.delete(st.getPath, true)
-    }
-    if (fs.exists(dataPath)) fs.listStatus(dataPath).foreach { st =>
-      if (!live.contains(st.getPath.getName)) fs.delete(st.getPath, true)
-    }
+    BucketedStore.sweep(fs, tablePath, live)
     if (fs.exists(zonesPath)) fs.listStatus(zonesPath).foreach { st =>
       if (!live.contains(st.getPath.getName)) fs.delete(st.getPath, false)
     }
@@ -868,8 +863,7 @@ final class AppendLog(
       zoneCache.put(dir, zones) // the consolidated write reads it back hot
     }
     fs.mkdirs(dataPath)
-    require(fs.rename(staging, new Path(dataPath, dir)),
-      s"staging rename failed for batch $dir")
+    AtomicFiles.moveStaged(fs, staging, new Path(dataPath, dir), s"batch $dir")
     dir
   }
 
@@ -1323,8 +1317,8 @@ final class AppendLog(
       }
       val target = new Path(dataPath, dir)
       fs.mkdirs(target)
-      require(fs.rename(new Path(staging, f), new Path(target, f)),
-        s"recluster rename failed for $f")
+      AtomicFiles.moveStaged(fs, new Path(staging, f), new Path(target, f),
+        s"recluster file $f")
       dir
     }.toSeq
     fs.delete(staging, true)

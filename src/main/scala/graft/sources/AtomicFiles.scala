@@ -1,15 +1,17 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 
 /** One shared write-temp-then-rename helper for every small state file in
-  * the engine (store manifests aside, which carry their own token
-  * protocol): the rename IS the commit point, so a reader never observes
-  * a half-flushed record and a crash mid-write leaves only an orphaned
-  * temp file. Duplicating this block per call site is how one of them
-  * (the catalog's boundary history) shipped without it — keep the
-  * atomicity contract in exactly one place.
+  * the engine — the store manifests (`_current`, `_v<n>`), the `_spec`
+  * identity records, the catalog boundaries, stats records and the MV
+  * state files all commit through [[write]]: the rename IS the commit
+  * point, so a reader never observes a half-flushed record and a crash
+  * mid-write leaves only an orphaned temp file (swept by the single
+  * writer, see [[BucketedStore.sweep]]). Duplicating this block per call
+  * site is how one of them (the catalog's boundary history) shipped
+  * without it — keep the atomicity contract in exactly one place.
   */
 object AtomicFiles {
 
@@ -27,4 +29,22 @@ object AtomicFiles {
     FileContext.getFileContext(tmp.toUri, conf)
       .rename(tmp, path, Options.Rename.OVERWRITE)
   }
+
+  /** When `name` is a temp [[write]] left behind (killed between the
+    * temp write and its rename), the name of the file it was for:
+    * `._current.tmp.<nanos>` → `_current`.
+    */
+  def tempTarget(name: String): Option[String] = name match {
+    case Temp(target) => Some(target)
+    case _ => None
+  }
+  private val Temp = raw"\.(.+)\.tmp\.\d+".r
+
+  /** Move a staged file or dir into place. A failed rename fails loudly,
+    * before any manifest can name the target — publishing an entry for a
+    * dir that never moved would make every later read of it fail.
+    */
+  def moveStaged(fs: FileSystem, from: Path, to: Path, what: String): Unit =
+    require(fs.rename(from, to),
+      s"staging rename failed for $what ($from -> $to)")
 }

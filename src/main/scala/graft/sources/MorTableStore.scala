@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.model.TableSpec
 import graft.operators.CompactedBatch
-import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -37,16 +36,19 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *     hash on, so the exchange is the one a CoW merge pays anyway — paid
   *     at read time, per the MOR bargain.
   *
-  * Same crash-safety protocol as the CoW store: staged write → per-bucket
-  * rename into `data/` → ONE atomic `_current` rename as the commit point;
-  * unreferenced dirs from crashed merges are invisible and swept by the
-  * next merge/compact. Single writer by contract. Time travel / retained
-  * versions are deliberately NOT offered here — that is the CoW store's
-  * feature (its manifests share immutable bucket dirs across versions;
-  * a MOR stack mutates per merge and would retain every delta forever).
+  * Same on-disk layer and crash-safety protocol as the CoW store
+  * ([[BucketedStore]]): staged write → per-bucket rename into `data/` →
+  * ONE atomic `_current` rename as the commit point; crash leftovers are
+  * invisible and swept by the next merge or compaction. Single writer by
+  * contract. Time travel / retained versions are deliberately NOT offered
+  * here — that is the CoW store's feature (its manifests share immutable
+  * bucket dirs across versions; a MOR stack mutates per merge and would
+  * retain every delta forever).
   *
-  * Manifest format: optional `#buckets=<n>` header, then
-  * `bucket<TAB>dir1,dir2,…` — the dir STACK in apply order (base first).
+  * Manifest: `#buckets=` header, optional `#feedfloor=<seq>` (the
+  * newest compaction's fold seq — see [[changeFeedSince]]; absent on
+  * pre-feature manifests, where the floor falls back to a conservative
+  * per-bucket estimate), then the bucket → dir STACK lines (base first).
   * Dir names are `<bucket>-<seq>-<token>`; `_seq` inside the files is the
   * authoritative resolution order, the name only seeds [[nextSeq]].
   */
@@ -57,7 +59,8 @@ final class MorTableStore(
     numBuckets: Int = 64,
     compactThreshold: Int = 8,
     autoCompact: Boolean = false)
-  extends VersionedTableStore {
+  extends BucketedStore(spark, root, numBuckets) {
+  import BucketedStore.Manifest
   require(compactThreshold >= 2,
     s"compactThreshold must be >= 2, got $compactThreshold")
 
@@ -75,58 +78,14 @@ final class MorTableStore(
     */
   def versionWindow: Int = Int.MaxValue
 
-  private val tablePath = new Path(root, spec.name.replace('.', '_'))
-  private val dataPath = new Path(tablePath, "data")
-  private val manifestPath = new Path(tablePath, "_current")
-  private def hadoopConf = spark.sparkContext.hadoopConfiguration
-  private def fs = tablePath.getFileSystem(hadoopConf)
-
-  private def bucketCol = pmod(hash(spec.pkCols.map(col): _*), lit(numBuckets))
+  protected def specRec = StoreSpecIO.Rec(
+    kind = "mor", name = spec.name, schema = spec.schema,
+    pk = spec.pkCols, buckets = numBuckets,
+    compactThreshold = compactThreshold)
 
   /** spec schema + the MOR metadata columns the delta files carry. */
   private val fileSchema = StructType(spec.schema.fields.toSeq :+
     StructField("_op", StringType) :+ StructField("_seq", LongType))
-
-  def exists: Boolean = fs.exists(manifestPath)
-
-  /** Manifest: `#buckets=` header, optional `#feedfloor=<seq>` (the
-    * newest compaction's fold seq — see [[changeFeedSince]]; absent on
-    * pre-feature manifests, where the floor falls back to a conservative
-    * per-bucket estimate), then `bucket<TAB>dir,dir,…` stack lines.
-    */
-  private def readManifest(): (Map[Int, Seq[String]], Option[Int], Option[Long]) =
-    if (!fs.exists(manifestPath)) (Map.empty, None, None)
-    else {
-      val in = fs.open(manifestPath)
-      val body =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val lines = body.split("\n").filter(_.nonEmpty)
-      val header = lines.find(_.startsWith("#buckets="))
-        .map(_.stripPrefix("#buckets=").toInt)
-      val floor = lines.find(_.startsWith("#feedfloor="))
-        .map(_.stripPrefix("#feedfloor=").toLong)
-      val entries = lines.filterNot(_.startsWith("#")).map { l =>
-        val Array(b, dirs) = l.split("\t", 2)
-        b.toInt -> dirs.split(",").toSeq
-      }.toMap
-      (entries, header, floor)
-    }
-
-  private def commitManifest(manifest: Map[Int, Seq[String]],
-      feedFloor: Long): Unit = {
-    // durable identity record for catalog reopening (see StoreSpecIO);
-    // one exists-probe per commit
-    StoreSpecIO.ensure(hadoopConf, tablePath, StoreSpecIO.Rec(
-      kind = "mor", name = spec.name, schema = spec.schema,
-      pk = spec.pkCols, buckets = numBuckets,
-      compactThreshold = compactThreshold))
-    val body = (Seq(s"#buckets=$numBuckets", s"#feedfloor=$feedFloor") ++
-      manifest.toSeq.sortBy(_._1)
-        .map { case (b, ds) => s"$b\t${ds.mkString(",")}" })
-      .mkString("\n").getBytes("UTF-8")
-    AtomicFiles.write(hadoopConf, manifestPath, body)
-  }
 
   /** The oldest `fromSeq` [[changeFeedSince]] can serve: compaction folds
     * per-row history at-or-below its fold seq, so feeds must start at or
@@ -136,62 +95,35 @@ final class MorTableStore(
     * the max such seq (a never-compacted table with all-seq-0 bases
     * yields 0 — full history).
     */
-  private def feedFloorOf(manifest: Map[Int, Seq[String]],
-      recorded: Option[Long]): Long =
-    recorded.getOrElse {
-      val firstSeqs = manifest.values.flatMap(_.headOption)
-        .map(_.split("-")(1).toLong)
+  private def feedFloorOf(m: Manifest): Long =
+    m.headers.get("feedfloor").map(_.toLong).getOrElse {
+      val firstSeqs = m.stacks.values.flatMap(_.headOption).map(dirSeqOf)
       if (firstSeqs.isEmpty) 0L else firstSeqs.max
     }
-
-  private def gcUnreferenced(manifest: Map[Int, Seq[String]]): Unit = {
-    if (!fs.exists(dataPath)) return
-    val live = manifest.values.flatten.toSet
-    fs.listStatus(dataPath).foreach { st =>
-      if (!live.contains(st.getPath.getName)) fs.delete(st.getPath, true)
-    }
-  }
 
   /** Next `_seq`: one past the largest seq any referenced dir carries in
     * its `<bucket>-<seq>-<token>` name. Bounded driver work (manifest is
     * already in memory); no data read.
     */
-  private def nextSeq(manifest: Map[Int, Seq[String]]): Long = {
-    val seqs = manifest.values.flatten.map(_.split("-")(1).toLong)
+  private def nextSeq(m: Manifest): Long = {
+    val seqs = m.dirs.map(dirSeqOf)
     if (seqs.isEmpty) 0L else seqs.max + 1L
   }
 
-  /** Stage-write `rows` (already carrying `_op`/`_seq`) partitioned by pk
-    * bucket, rename each bucket file set into `data/` as
-    * `<bucket>-<seq>-<token>`, return bucket → dir. PK-sorted within each
-    * bucket for footer-stats point lookups, same as the CoW store.
+  private def commit(stacks: Map[Int, Seq[String]], feedFloor: Long): Unit =
+    commitManifest(stacks, "feedfloor" -> feedFloor)
+
+  /** Stage-write `rows` (already carrying `_op`/`_seq`) as one delta dir
+    * per touched bucket, named `<bucket>-<seq>-<token>` (a bucket's seq
+    * from `seqOf`, else `seq`). PK-sorted within each bucket for
+    * footer-stats point lookups, same as the CoW store.
     */
   private def writeBucketDirs(rows: DataFrame, seq: Long,
-      seqOf: Map[Int, Long] = Map.empty): Map[Int, String] = {
-    val token = System.nanoTime()
-    val staging = new Path(tablePath, s".staging_$token")
-    rows.withColumn("_bucket", bucketCol)
-      .repartition(col("_bucket"))
-      .sortWithinPartitions(col("_bucket") +: spec.pkCols.map(col): _*)
-      .write.mode("overwrite").partitionBy("_bucket")
-      .parquet(staging.toString)
-    fs.mkdirs(dataPath)
-    val written = fs.listStatus(staging)
-      .filter(_.getPath.getName.startsWith("_bucket="))
-      .map { st =>
-        val b = st.getPath.getName.stripPrefix("_bucket=").toInt
-        val dir = s"$b-${seqOf.getOrElse(b, seq)}-$token"
-        require(fs.rename(st.getPath, new Path(dataPath, dir)),
-          s"staging rename failed for bucket $b (${st.getPath} -> $dir)")
-        b -> dir
-      }.toMap
-    fs.delete(staging, true)
-    written
-  }
+      seqOf: Map[Int, Long] = Map.empty): Map[Int, String] =
+    writeBuckets(rows, spec.pkCols, Map.empty)(
+      (b, token) => s"$b-${seqOf.getOrElse(b, seq)}-$token")
 
-  private def readDirs(dirs: Seq[String]): DataFrame =
-    spark.read.schema(fileSchema)
-      .parquet(dirs.map(d => new Path(dataPath, d).toString): _*)
+  private def readDirs(dirs: Seq[String]): DataFrame = readParquet(dirs, fileSchema)
 
   /** Newest-wins resolution of a delta stack: max `_seq` per pk, survivors
     * are the upserts. Within one seq a pk appears at most once (the
@@ -222,10 +154,10 @@ final class MorTableStore(
 
   /** Full load: one resolved base stack per bucket at seq 0. */
   def init(df: DataFrame): Unit = {
-    gcUnreferenced(readManifest()._1)
+    gcUnreferenced(readManifest())
     val rows = df.select(spec.dataCols.map(col): _*)
       .withColumn("_op", lit("u")).withColumn("_seq", lit(0L))
-    commitManifest(writeBucketDirs(rows, 0L).map { case (b, d) => b -> Seq(d) },
+    commit(writeBucketDirs(rows, 0L).map { case (b, d) => b -> Seq(d) },
       feedFloor = 0L)
   }
 
@@ -252,9 +184,7 @@ final class MorTableStore(
       else None,
       if (stacked.nonEmpty) Some(resolve(readDirs(stacked.flatten)))
       else None).flatten
-    if (parts.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], spec.schema)
+    if (parts.isEmpty) emptyFrame(spec.schema)
     else parts.reduce(_ unionByName _)
   }
 
@@ -267,7 +197,7 @@ final class MorTableStore(
     * (`rollup(col("a"), col("b"))`), which carry untagged refs. Same
     * workaround as for any composed view in stock Spark.
     */
-  def snapshot(): DataFrame = resolveStacks(readManifest()._1.values.toSeq)
+  def snapshot(): DataFrame = resolveStacks(readManifest().stacks.values.toSeq)
 
   // ── versioned surface: the delta `_seq` IS the version ──────────────────
 
@@ -277,8 +207,8 @@ final class MorTableStore(
     * [[VersionedTableStore]] name). Fails loudly before [[init]].
     */
   def currentVersion: Long = {
-    val (manifest, _, _) = readManifest()
-    require(manifest.nonEmpty,
+    val manifest = readManifest()
+    require(manifest.stacks.nonEmpty,
       s"table ${spec.name} has no committed version yet — init() first")
     nextSeq(manifest) - 1L
   }
@@ -287,9 +217,9 @@ final class MorTableStore(
     * the stacks retain full history until a fold advances the floor.
     */
   def history(): Seq[Long] = {
-    val (manifest, _, floorRec) = readManifest()
-    if (manifest.isEmpty) Seq.empty
-    else feedFloorOf(manifest, floorRec) to (nextSeq(manifest) - 1L)
+    val manifest = readManifest()
+    if (manifest.stacks.isEmpty) Seq.empty
+    else feedFloorOf(manifest) to (nextSeq(manifest) - 1L)
   }
 
   /** Time-travel read: the table as of seq `version` — each bucket's
@@ -297,24 +227,16 @@ final class MorTableStore(
     * newest-wins. History below the compaction floor is folded and fails
     * loudly (compact less aggressively, or re-baseline the reader).
     */
-  def snapshotAt(version: Long): DataFrame = {
-    val (manifest, _, floorRec) = readManifest()
-    requireReadable(manifest, floorRec, version)
-    resolveStacks(manifest.values
-      .map(_.filter(dirSeqOf(_) <= version)).filter(_.nonEmpty).toSeq)
-  }
+  def snapshotAt(version: Long): DataFrame =
+    resolveStacks(readableAt(version).filter(_.nonEmpty))
 
   /** Absolute dir paths a [[snapshotAt]] of `version` scans — the stack
     * prefixes at-or-below it. What [[graft.plans.StarMvMaintainer]]
     * registers per sync so rollups over the live [[snapshot]] serve from
     * the maintained summary while the manifest still matches.
     */
-  def dataDirsAt(version: Long): Seq[String] = {
-    val (manifest, _, floorRec) = readManifest()
-    requireReadable(manifest, floorRec, version)
-    manifest.values.flatten.filter(dirSeqOf(_) <= version).toSeq.sorted
-      .map(d => new Path(dataPath, d).toString)
-  }
+  def dataDirsAt(version: Long): Seq[String] =
+    absolute(readableAt(version).flatten)
 
   /** Dirs of buckets whose stack (truncated at `version`) is ≥ 2 deep —
     * the branches of a [[snapshotAt]] read that carry the resolution
@@ -322,67 +244,36 @@ final class MorTableStore(
     * over any of these (a raw `_op = 'u'` scan of a stacked bucket still
     * holds superseded key versions).
     */
-  override def stackedDirsAt(version: Long): Seq[String] = {
-    val (manifest, _, floorRec) = readManifest()
-    requireReadable(manifest, floorRec, version)
-    manifest.values.map(_.filter(dirSeqOf(_) <= version))
-      .filter(_.lengthCompare(1) > 0).flatten.toSeq.sorted
-      .map(d => new Path(dataPath, d).toString)
-  }
+  override def stackedDirsAt(version: Long): Seq[String] =
+    absolute(readableAt(version).filter(_.lengthCompare(1) > 0).flatten)
 
-  private def requireReadable(manifest: Map[Int, Seq[String]],
-      floorRec: Option[Long], version: Long): Unit = {
-    require(manifest.nonEmpty,
+  /** Every bucket's stack truncated to the dirs committed at-or-below
+    * `version`; fails loudly outside the readable window.
+    */
+  private def readableAt(version: Long): Seq[Seq[String]] = {
+    val manifest = readManifest()
+    require(manifest.stacks.nonEmpty,
       s"table ${spec.name} has no committed version yet — init() first")
     val cur = nextSeq(manifest) - 1L
-    val floor = feedFloorOf(manifest, floorRec)
+    val floor = feedFloorOf(manifest)
     require(version >= floor && version <= cur,
       s"table ${spec.name} cannot serve version $version — the readable " +
         s"window is [$floor, $cur] (compaction folds history below the floor)")
+    manifest.stacks.values.map(_.filter(dirSeqOf(_) <= version)).toSeq
   }
 
-  // ── ANALYZE-style per-column statistics (shared codec, see CoW twin) ────
-
-  private def statsPath(v: Long) = new Path(tablePath, s"_stats_v$v")
-
-  /** Per-column statistics of the CURRENT seq, persisted `_stats_v<seq>`
-    * — the MOR twin of [[ParquetTableStore.analyze]] (one resolved-
-    * snapshot scan pair via [[TableStatsIO]]). Older stats records are
-    * dropped on write: MOR seqs advance every merge, so unbounded records
-    * would litter the table dir (the newest is the only one [[stats]]
-    * serves anyway).
+  /** The shared analyze, then older stats records are dropped: MOR seqs
+    * advance every merge, so unbounded records would litter the table dir
+    * (the newest is the only one [[stats]] serves anyway). MOR data bytes
+    * include superseded delta rows still in the stacks — the honest cost
+    * of SCANNING this snapshot (resolution reads them all), which is
+    * exactly what the byte tier prices.
     */
-  def analyze(): TableStats = {
-    val ver = currentVersion
-    val (nRows, colStats) = TableStatsIO.compute(snapshotAt(ver), spec.dataCols)
-    // NOTE: MOR data bytes include superseded delta rows still in the
-    // stacks — the honest cost of SCANNING this snapshot (resolution
-    // reads them all), which is exactly what the byte tier prices
-    val bytes = TableStatsIO.dataBytes(hadoopConf, dataDirsAt(ver))
-    AtomicFiles.write(hadoopConf, statsPath(ver),
-      TableStatsIO.render(ver, nRows, colStats, Some(bytes)))
-    statsVersions().filter(_ != ver)
+  override def analyze(): TableStats = {
+    val st = super.analyze()
+    statsVersions().filter(_ != st.version)
       .foreach(v => fs.delete(statsPath(v), false))
-    TableStats(ver, nRows, colStats, staleBy = 0L, bytes = Some(bytes))
-  }
-
-  private def statsVersions(): Seq[Long] =
-    if (!fs.exists(tablePath)) Seq.empty
-    else fs.listStatus(tablePath).map(_.getPath.getName)
-      .filter(n => n.startsWith("_stats_v") && n.drop(8).forall(_.isDigit))
-      .map(_.drop(8).toLong).toSeq
-
-  /** Newest persisted stats + staleness in merges; None before the first
-    * [[analyze]].
-    */
-  def stats(): Option[TableStats] = {
-    val versions = statsVersions()
-    if (versions.isEmpty) return None
-    val v = versions.max
-    val in = fs.open(statsPath(v))
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    Some(TableStatsIO.parse(body, v, staleBy = currentVersion - v))
+    st
   }
 
   /** Row-valued change feed across (fromVersion, toVersion] — the bounded
@@ -392,23 +283,21 @@ final class MorTableStore(
     * and [[graft.operators.SnapshotDiff.changeFeed]] nets them.
     */
   def changeFeedBetween(fromVersion: Long, toVersion: Long): DataFrame = {
-    val (manifest, _, floorRec) = readManifest()
+    val manifest = readManifest()
     val cur = nextSeq(manifest) - 1L
     require(fromVersion >= 0 && fromVersion <= toVersion && toVersion <= cur,
       s"changeFeedBetween needs 0 <= from <= to <= $cur, got " +
         s"($fromVersion, $toVersion)")
-    val floor = feedFloorOf(manifest, floorRec)
+    val floor = feedFloorOf(manifest)
     require(fromVersion >= floor,
       s"table ${spec.name} compacted its history up to seq $floor — a feed " +
         s"from $fromVersion cannot reconstruct pre-images; re-baseline the " +
         "consumer (full read) or compact less aggressively")
-    val touched = manifest.filter(_._2.exists { d =>
+    val touched = manifest.stacks.filter(_._2.exists { d =>
       val sq = dirSeqOf(d); sq > fromVersion && sq <= toVersion })
     if (touched.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(spec.schema.fields.toSeq :+
-          StructField("_change", StringType)))
+      return emptyFrame(StructType(spec.schema.fields.toSeq :+
+        StructField("_change", StringType)))
     val stack = readDirs(touched.values.flatten
       .filter(dirSeqOf(_) <= toVersion).toSeq)
     // ONE scan + ONE pk-keyed aggregate for both images (r14, guide §2.4):
@@ -453,13 +342,7 @@ final class MorTableStore(
     * appended to those buckets' stacks. Nothing existing is rewritten.
     */
   def merge(batch: CompactedBatch): Unit = {
-    val (manifest, manifestBuckets, floor) = readManifest()
-    manifestBuckets.foreach { b =>
-      require(b == numBuckets,
-        s"table ${spec.name} was written with $b buckets but this store " +
-          s"was constructed with $numBuckets — use the original count")
-    }
-    gcUnreferenced(manifest)
+    val manifest = openForWrite()
     val pk = spec.pkCols
     val nonPk = spec.dataCols.filterNot(pk.contains)
     val tombstones = nonPk.foldLeft(batch.deletes.select(pk.map(col): _*)) {
@@ -471,10 +354,10 @@ final class MorTableStore(
     val rows = upserts.unionByName(tombstones).withColumn("_seq", lit(seq))
     val written = writeBucketDirs(rows, seq)
     if (written.isEmpty) return
-    val next = manifest ++ written.map { case (b, d) =>
-      b -> (manifest.getOrElse(b, Seq.empty) :+ d)
+    val next = manifest.stacks ++ written.map { case (b, d) =>
+      b -> (manifest.stacks.getOrElse(b, Seq.empty) :+ d)
     }
-    commitManifest(next, feedFloorOf(manifest, floor))
+    commit(next, feedFloorOf(manifest))
     // Self-compaction policy (`autoCompact = true`): fold threshold-deep
     // stacks right after the merge COMMITS — the batch is already durable
     // and visible, so a crash mid-compaction costs nothing (the next
@@ -508,10 +391,10 @@ final class MorTableStore(
     * of buckets compacted.
     */
   def compact(keepNewest: Int = 0): Int = {
-    val (manifest, _, floor) = readManifest()
+    val manifest = openForWrite()
     // fold the prefix only when it still collapses ≥2 dirs — rewriting a
     // lone base dir would churn data for nothing
-    val targets = manifest
+    val targets = manifest.stacks
       .filter(_._2.lengthCompare(compactThreshold) >= 0)
       .map { case (b, ds) => b -> ds.dropRight(keepNewest) }
       .filter(_._2.lengthCompare(2) >= 0)
@@ -535,7 +418,7 @@ final class MorTableStore(
     // at-or-below each bucket's cut is gone; the recorded floor advances
     // to the HIGHEST folded seq so changeFeedSince fails loudly instead
     // of serving a reconstruction that silently misses pre-images.
-    val next = manifest.flatMap { case (b, ds) =>
+    val next = manifest.stacks.flatMap { case (b, ds) =>
       if (!targets.contains(b)) Some(b -> ds)
       else {
         val kept = if (keepNewest == 0) Nil else ds.takeRight(keepNewest)
@@ -543,7 +426,7 @@ final class MorTableStore(
         if (stack.isEmpty) None else Some(b -> stack)
       }
     }
-    commitManifest(next, feedFloor = math.max(feedFloorOf(manifest, floor), cut))
+    commit(next, feedFloor = math.max(feedFloorOf(manifest), cut))
     targets.size
   }
 
@@ -551,18 +434,15 @@ final class MorTableStore(
     * [[compact]] (bounded: one manifest read, no data access).
     */
   def stackDepths(): Map[Int, Int] =
-    readManifest()._1.map { case (b, ds) => b -> ds.size }
+    readManifest().stacks.map { case (b, ds) => b -> ds.size }
 
   /** Newest committed `_seq` — the cursor a change-feed consumer records
     * after each read. Manifest-only (no data access).
     */
-  def currentSeq: Long = nextSeq(readManifest()._1) - 1L
+  def currentSeq: Long = nextSeq(readManifest()) - 1L
 
   /** Oldest `fromSeq` [[changeFeedSince]] can currently serve. */
-  def feedFloor: Long = {
-    val (manifest, _, floor) = readManifest()
-    feedFloorOf(manifest, floor)
-  }
+  def feedFloor: Long = feedFloorOf(readManifest())
 
   /** Row-valued change feed since `fromSeq` (exclusive — pass the
     * [[currentSeq]] recorded at the previous read): full pre/post images
@@ -581,7 +461,7 @@ final class MorTableStore(
     * consumer's cadence) so feeds are read before their history folds.
     */
   def changeFeedSince(fromSeq: Long): DataFrame =
-    changeFeedBetween(fromSeq, nextSeq(readManifest()._1) - 1L)
+    changeFeedBetween(fromSeq, currentSeq)
 
   /** Bucket-pruned point lookup — [[ParquetTableStore.snapshotForKeys]]'
     * MOR twin: the key set resolves to bucket ids (one bounded aggregate),
@@ -596,22 +476,10 @@ final class MorTableStore(
   def snapshotForKeys(keys: DataFrame): DataFrame = {
     val pk = spec.pkCols
     val keyDf = keys.select(pk.map(col): _*)
-    val affected = keyDf
-      .select(pmod(hash(pk.map(col): _*), lit(numBuckets)).as("_bucket"))
+    val affected = keyDf.select(bucketCol.as("_bucket"))
       .distinct().collect().map(_.getInt(0)).toSet
-    val (manifest, _, _) = readManifest()
-    val hit = manifest.filter(e => affected(e._1))
-    if (hit.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], spec.schema)
-    val (flat, stacked) = hit.values.partition(_.lengthCompare(1) == 0)
-    val parts = Seq(
-      if (flat.nonEmpty)
-        Some(readDirs(flat.flatten.toSeq).filter(col("_op") === "u")
-          .select(spec.dataCols.map(col): _*))
-      else None,
-      if (stacked.nonEmpty) Some(resolve(readDirs(stacked.flatten.toSeq)))
-      else None).flatten
-    parts.reduce(_ unionByName _).join(keyDf.hint("broadcast"), pk, "left_semi")
+    val hit = readManifest().stacks.filter(e => affected(e._1)).values.toSeq
+    if (hit.isEmpty) emptyFrame(spec.schema)
+    else resolveStacks(hit).join(keyDf.hint("broadcast"), pk, "left_semi")
   }
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.model.TableSpec
 import graft.operators.CompactedBatch
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -240,12 +240,11 @@ private[sources] object TableStatsIO {
 
 /** Parquet-backed store, hash-bucketed by primary key, committed via an
   * atomic manifest pointer (the reference's single-transaction apply, L4).
-  *
-  * Layout:
+  * Layout, manifest codec, staged writer, gc sweep and stats records are
+  * the shared [[BucketedStore]] layer; this class is the copy-on-write
+  * merge and read algebra on top of it, plus retained versions:
   * {{{
-  *   root/<table>/_current           — the manifest: "bucket<TAB>dirName" lines
   *   root/<table>/_v<seq>            — retained version manifests (time travel)
-  *   root/<table>/data/<dir>/ (parquet files) — one immutable dir per bucket version
   * }}}
   *
   * Time travel: every commit also records its manifest as `_v<seq>`; a
@@ -311,7 +310,7 @@ final class ParquetTableStore(
     inFilterLimit: Long = 1024L,
     val retainedVersions: Int = 1,
     clusterCols: Seq[String] = Nil)
-  extends VersionedTableStore {
+  extends BucketedStore(spark, root, numBuckets) {
   def versionWindow: Int = retainedVersions
   require(retainedVersions >= 1,
     s"retainedVersions must be >= 1, got $retainedVersions")
@@ -319,48 +318,10 @@ final class ParquetTableStore(
     s"clusterCols ${clusterCols.filterNot(spec.dataCols.contains)} are not " +
       s"columns of ${spec.name} (${spec.dataCols})")
 
-  private val tablePath = new Path(root, spec.name.replace('.', '_'))
-  private val dataPath = new Path(tablePath, "data")
-  private val manifestPath = new Path(tablePath, "_current")
-  private def hadoopConf = spark.sparkContext.hadoopConfiguration
-  private def fs = tablePath.getFileSystem(hadoopConf)
-
-  private def bucketOf(keyCols: Seq[Column]): Column =
-    pmod(hash(keyCols: _*), lit(numBuckets))
-
-  private def withBucket(df: DataFrame): DataFrame =
-    df.withColumn("_bucket", bucketOf(spec.pkCols.map(df(_))))
-
-  def exists: Boolean = fs.exists(manifestPath)
-
-  // ── manifest: bucket -> immutable dir name under data/ ──────────────────
-
-  /** Manifest lines: an optional `#buckets=<n>` header (atomic with the
-    * layout it describes — a side file could desynchronize from the
-    * manifest on crash) followed by `bucket<TAB>dirName` entries. Returns
-    * (entries, header bucket count); pre-header manifests parse with
-    * `None` and adopt the header at their next commit.
-    */
-  private def readManifestAt(path: Path): (Map[Int, String], Option[Int]) =
-    if (!fs.exists(path)) (Map.empty, None)
-    else {
-      val in = fs.open(path)
-      try {
-        val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .filter(_.nonEmpty).toSeq
-        val buckets = lines.find(_.startsWith("#buckets="))
-          .map(_.stripPrefix("#buckets=").toInt)
-        val entries = lines.filterNot(_.startsWith("#"))
-          .map { line => val Array(b, d) = line.split('\t'); b.toInt -> d }
-          .toMap
-        (entries, buckets)
-      } finally in.close()
-    }
-
-  private def readManifestFull(): (Map[Int, String], Option[Int]) =
-    readManifestAt(manifestPath)
-
-  private def readManifest(): Map[Int, String] = readManifestFull()._1
+  protected def specRec = StoreSpecIO.Rec(
+    kind = "cow", name = spec.name, schema = spec.schema,
+    pk = spec.pkCols, buckets = numBuckets, retained = retainedVersions,
+    cluster = clusterCols)
 
   // ── version manifests: _v<seq> files enabling time-travel reads ─────────
 
@@ -384,18 +345,22 @@ final class ParquetTableStore(
     throw new IllegalStateException(
       s"table ${spec.name} has no committed version yet — init() first"))
 
+  /** The manifest of a retained version; fails loudly when it aged out. */
+  private def manifestOfVersion(v: Long): BucketedStore.Manifest = {
+    val p = versionPath(v)
+    require(fs.exists(p),
+      s"table ${spec.name} has no retained version $v " +
+        s"(retained: ${history().mkString(",")}) — raise retainedVersions " +
+        "on the writing store to keep more history")
+    readManifestAt(p)
+  }
+
   /** Commit wall-clock of a retained version (epoch millis) as recorded
     * in its `_v` manifest header; None for versions committed before the
     * `#ts=` header existed.
     */
-  def versionTimestamp(version: Long): Option[Long] = {
-    val p = versionPath(version)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .find(_.startsWith("#ts=")).map(_.stripPrefix("#ts=").toLong)
-    finally in.close()
-  }
+  def versionTimestamp(version: Long): Option[Long] =
+    readManifestAt(versionPath(version)).headers.get("ts").map(_.toLong)
 
   /** Resolve `TIMESTAMP AS OF`: the newest RETAINED version whose commit
     * wall-clock is ≤ `tsMicros` (the DSv2 timestamp unit). Fails loudly
@@ -425,14 +390,8 @@ final class ParquetTableStore(
     * manifest resolves now, files evaluate at action time; a version aged
     * out of retention by later merges fails the read loudly here.
     */
-  def snapshotAt(version: Long): DataFrame = {
-    val p = versionPath(version)
-    require(fs.exists(p),
-      s"table ${spec.name} has no retained version $version " +
-        s"(retained: ${history().mkString(",")}) — raise retainedVersions " +
-        "on the writing store to keep more history")
-    readDirs(readManifestAt(p)._1.values.toSeq)
-  }
+  def snapshotAt(version: Long): DataFrame =
+    readDirs(manifestOfVersion(version).dirs.toSeq)
 
   /** Absolute data-dir paths the manifest of `version` references — the
     * exact scan roots a [[snapshotAt]] (or, for the current version,
@@ -442,14 +401,8 @@ final class ParquetTableStore(
     * ([[graft.plans.MaterializedView.registerDirs]]). Bounded by the
     * bucket count.
     */
-  def dataDirsAt(version: Long): Seq[String] = {
-    val p = versionPath(version)
-    require(fs.exists(p),
-      s"table ${spec.name} has no retained version $version " +
-        s"(retained: ${history().mkString(",")})")
-    readManifestAt(p)._1.values.toSeq.sorted
-      .map(d => new Path(dataPath, d).toString)
-  }
+  def dataDirsAt(version: Long): Seq[String] =
+    absolute(manifestOfVersion(version).dirs)
 
   /** The two versions' data restricted to buckets whose manifest entry
     * CHANGED between them — the bucket-pruned inputs every version diff
@@ -465,19 +418,11 @@ final class ParquetTableStore(
       toVersion: Long): (DataFrame, DataFrame) = {
     require(fromVersion < toVersion,
       s"version diff needs fromVersion < toVersion, got $fromVersion >= $toVersion")
-    def manifestOf(v: Long): Map[Int, String] = {
-      val p = versionPath(v)
-      require(fs.exists(p),
-        s"table ${spec.name} has no retained version $v " +
-          s"(retained: ${history().mkString(",")}) — raise retainedVersions " +
-          "on the writing store to keep more history")
-      readManifestAt(p)._1
-    }
-    val a = manifestOf(fromVersion)
-    val b = manifestOf(toVersion)
-    val changed = (a.keySet ++ b.keySet).filter(k => a.get(k) != b.get(k))
-    (readDirs(changed.toSeq.flatMap(a.get)),
-      readDirs(changed.toSeq.flatMap(b.get)))
+    val a = manifestOfVersion(fromVersion)
+    val b = manifestOfVersion(toVersion)
+    val changed = (a.stacks.keySet ++ b.stacks.keySet)
+      .filter(k => a.stacks.get(k) != b.stacks.get(k))
+    (readDirs(a.dirsOf(changed)), readDirs(b.dirsOf(changed)))
   }
 
   /** Change feed between two retained versions: every key added / removed /
@@ -519,21 +464,11 @@ final class ParquetTableStore(
     * Each manifest also records the commit WALL-CLOCK (`#ts=<millis>`) —
     * what `TIMESTAMP AS OF` resolves against ([[versionAtTimestamp]]);
     * pre-feature manifests parse without it (those versions are simply
-    * not timestamp-addressable). The durable `_spec` identity record
-    * ([[StoreSpecIO]] — what lets a catalog reopen this store in any
-    * session) is ensured on every commit, one exists-probe.
+    * not timestamp-addressable).
     */
-  private def commitManifest(manifest: Map[Int, String]): Unit = {
-    StoreSpecIO.ensure(hadoopConf, tablePath, StoreSpecIO.Rec(
-      kind = "cow", name = spec.name, schema = spec.schema,
-      pk = spec.pkCols, buckets = numBuckets, retained = retainedVersions,
-      cluster = clusterCols))
-    val body = (Seq(s"#buckets=$numBuckets",
-      s"#ts=${System.currentTimeMillis()}") ++
-      manifest.toSeq.sorted.map { case (b, d) => s"$b\t$d" })
-      .mkString("\n").getBytes("UTF-8")
+  private def commit(manifest: Map[Int, Seq[String]]): Unit = {
     val nextVersion = history().lastOption.getOrElse(0L) + 1
-    AtomicFiles.write(hadoopConf, manifestPath, body)
+    val body = commitManifest(manifest, "ts" -> System.currentTimeMillis())
     // the history record is best-effort ORDER-wise (a crash between the
     // two writes loses the version from history, never the data) but must
     // still be ATOMIC content-wise: snapshotAt/dataDirsAt/changeFeedBetween
@@ -542,30 +477,14 @@ final class ParquetTableStore(
     AtomicFiles.write(hadoopConf, versionPath(nextVersion), body)
   }
 
-  /** Drop data/ directories no manifest references: leftovers of crashed
-    * merges (staged-but-never-published) or of published merges that crashed
-    * before cleanup. Safe under the single-writer contract.
+  /** The shared sweep, plus version retention: prune _v manifests (and
+    * their stats records) beyond the newest `retainedVersions`, then
+    * protect every data dir any SURVIVING version still references — the
+    * time-travel window. With the default retention of 1 the survivors
+    * reference exactly the current layout and behavior matches the
+    * original one-generation contract.
     */
-  private def gcUnreferenced(manifest: Map[Int, String]): Unit = {
-    // stale .staging_* dirs: a merge killed between its parquet write and
-    // its own cleanup leaves a full staged copy behind, and the data/ scan
-    // below never sees it. Under the single-writer contract any staging
-    // dir present when gc runs is dead (this merge hasn't created its own).
-    if (fs.exists(tablePath)) {
-      fs.listStatus(tablePath).foreach { st =>
-        val n = st.getPath.getName
-        // .staging_*: a merge killed between its parquet write and cleanup;
-        // _current.tmp.*: a commit killed between manifest write and rename
-        // — neither is ever referenced again, and nothing else sweeps them
-        if (n.startsWith(".staging_") || n.startsWith("_current.tmp."))
-          fs.delete(st.getPath, true)
-      }
-    }
-    // Version retention: prune _v manifests beyond the newest
-    // `retainedVersions`, then protect every data dir any SURVIVING version
-    // still references — the time-travel window. With the default
-    // retention of 1 the survivors reference exactly the current layout
-    // and behavior matches the original one-generation contract.
+  override protected def gcUnreferenced(m: BucketedStore.Manifest): Unit = {
     val versions = history()
     val (expired, retained) =
       versions.splitAt((versions.size - retainedVersions).max(0))
@@ -573,88 +492,44 @@ final class ParquetTableStore(
       fs.delete(versionPath(v), false)
       fs.delete(statsPath(v), false) // stats of an expired version are dead
     }
-    val retainedDirs: Set[String] =
-      retained.flatMap(v => readManifestAt(versionPath(v))._1.values).toSet
-    if (fs.exists(dataPath)) {
-      val live = manifest.values.toSet ++ retainedDirs
-      fs.listStatus(dataPath).foreach { st =>
-        if (!live.contains(st.getPath.getName)) fs.delete(st.getPath, true)
-      }
-    }
+    BucketedStore.sweep(fs, tablePath,
+      m.dirs.toSet ++ retained.flatMap(v => readManifestAt(versionPath(v)).dirs))
   }
 
   /** Write `df` bucketed under data/ as fresh immutable dirs named
-    * `<bucket>-<token>`; returns bucket -> dirName for buckets that got rows.
+    * `<bucket>-<token>`, as one-dir stacks.
     *
-    * The pre-write `repartition(_bucket)` makes each bucket ONE task's
-    * output (one file), instead of `partitionBy` fanning every shuffle
-    * partition across every bucket — without it a merge at P shuffle
-    * partitions writes up to P tiny files per bucket, and at 10⁴⁺ buckets
-    * the file count explodes quadratically with cluster size.
+    * PK-sorted within each bucket file (footer-stats skip scans for
+    * snapshotForKeys' pushed In filter), plus Parquet-level bloom filters
+    * on each key column for the case stats cannot cover: a probe key
+    * INSIDE a row group's min/max range but absent — the reader drops the
+    * group on the bloom test without decoding it.
+    *
+    * CLUSTERED layout (`clusterCols` nonempty — the OPTIMIZE/CLUSTER BY
+    * tier): the within-bucket sort leads with the cluster columns
+    * instead, so a 100 TB bucket file's row groups carry tight min/max
+    * ranges on the clustering dimension (a time column under a retention
+    * or dashboard range scan — deleteWhere's probe pass and any pushed
+    * range predicate then skip row groups instead of decoding the
+    * bucket). PK point lookups keep the bloom filters (exact membership
+    * per row group); what they give up is the pk-stat skip scan — choose
+    * the layout by the dominant read pattern. Same cost either way: the
+    * sort rides the bucket exchange.
     */
-  private def writeBucketDirs(df: DataFrame): Map[Int, String] = {
-    val token = System.nanoTime()
-    val staging = new Path(tablePath, s".staging_$token")
-    // PK-sorted within each bucket file: the parquet writer then records
-    // tight per-row-group min/max stats on the key columns, so a pushed
-    // key predicate (snapshotForKeys' In filter) skips whole row groups
-    // instead of decoding them — the micro-index a 100 TB point lookup
-    // needs. Sorting rides the same exchange the repartition already pays.
-    // Parquet-level bloom filters on each key column cover the case stats
-    // cannot: a probe key INSIDE a row group's min/max range but absent —
-    // the reader drops the group on the bloom test without decoding it.
-    //
-    // CLUSTERED layout (`clusterCols` nonempty — the OPTIMIZE/CLUSTER BY
-    // tier): the within-bucket sort leads with the cluster columns
-    // instead, so a 100 TB bucket file's row groups carry tight min/max
-    // ranges on the clustering dimension (a time column under a retention
-    // or dashboard range scan — deleteWhere's probe pass and any pushed
-    // range predicate then skip row groups instead of decoding the
-    // bucket). PK point lookups keep the bloom filters (exact membership
-    // per row group); what they give up is the pk-stat skip scan — choose
-    // the layout by the dominant read pattern. Same cost either way: the
-    // sort rides the bucket exchange.
-    val sortCols =
-      if (clusterCols.isEmpty) spec.pkCols else clusterCols ++ spec.pkCols
-    val writer = withBucket(df).repartition(col("_bucket"))
-      .sortWithinPartitions(col("_bucket") +: sortCols.map(col): _*)
-      .write.mode("overwrite").partitionBy("_bucket")
-    spec.pkCols.foldLeft(writer) { (w, c) =>
-        w.option(s"parquet.bloom.filter.enabled#$c", "true")
-      }
-      .parquet(staging.toString)
-    fs.mkdirs(dataPath)
-    val written = fs.listStatus(staging)
-      .filter(_.getPath.getName.startsWith("_bucket="))
-      .map { st =>
-        val b = st.getPath.getName.stripPrefix("_bucket=").toInt
-        val dir = s"$b-$token"
-        // A failed rename must abort the merge BEFORE the manifest commit:
-        // publishing a manifest entry for a directory that never moved into
-        // data/ would make every later snapshot of this bucket fail.
-        require(fs.rename(st.getPath, new Path(dataPath, dir)),
-          s"staging rename failed for bucket $b (${st.getPath} -> $dir)")
-        b -> dir
-      }.toMap
-    fs.delete(staging, true)
-    written
-  }
+  private def writeBucketDirs(df: DataFrame): Map[Int, Seq[String]] =
+    writeBuckets(df, clusterCols ++ spec.pkCols,
+      spec.pkCols.map(c => s"parquet.bloom.filter.enabled#$c" -> "true").toMap
+    )((b, token) => s"$b-$token").map { case (b, d) => b -> Seq(d) }
 
   private def readDirs(dirs: Seq[String]): DataFrame =
-    if (dirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], spec.schema)
-    else
-      spark.read.schema(spec.schema)
-        .parquet(dirs.map(d => new Path(dataPath, d).toString): _*)
-        .select(spec.dataCols.map(col): _*)
+    readParquet(dirs, spec.schema).select(spec.dataCols.map(col): _*)
 
-  /** Initial (full) load — same commit protocol as a merge. */
   def init(df: DataFrame): Unit = {
     gcUnreferenced(readManifest())
-    commitManifest(writeBucketDirs(df.select(spec.dataCols.map(col): _*)))
+    commit(writeBucketDirs(df.select(spec.dataCols.map(col): _*)))
   }
 
-  def snapshot(): DataFrame = readDirs(readManifest().values.toSeq)
+  def snapshot(): DataFrame = readDirs(readManifest().dirs.toSeq)
 
   /** Keyed readback that touches ONLY the buckets able to contain `keys` —
     * the read-side twin of merge's bucket pruning. A point lookup against a
@@ -678,14 +553,13 @@ final class ParquetTableStore(
     val keyDf = scope.own(keys.select(pk.map(col): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val perBucket = keyDf
-      .groupBy(bucketOf(pk.map(col)).as("_bucket")).count()
+      .groupBy(bucketCol.as("_bucket")).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1))
     val affected = perBucket.map(_._1).toSet
     val totalKeys = perBucket.map(_._2).sum
     val probe =
       if (totalKeys <= broadcastKeyLimit) keyDf.hint("broadcast") else keyDf
-    val manifest = readManifest()
-    val base = readDirs(manifest.filter(e => affected(e._1)).values.toSeq)
+    val base = readDirs(readManifest().dirsOf(affected))
     // Small key sets additionally push an In predicate on the LEADING key
     // column into the parquet scan: with bucket files PK-sorted (see
     // writeBucketDirs), the row-group stats turn the lookup into a skip
@@ -725,8 +599,8 @@ final class ParquetTableStore(
     */
   def fastCount(): Long = {
     val conf = hadoopConf
-    readManifest().values.toSeq.sortBy(identity).map { d =>
-      fs.listStatus(new Path(dataPath, d))
+    absolute(readManifest().dirs).map { d =>
+      fs.listStatus(new Path(d))
         .filter(_.getPath.getName.endsWith(".parquet"))
         .map { st =>
           val in = org.apache.parquet.hadoop.util.HadoopInputFile
@@ -735,40 +609,6 @@ final class ParquetTableStore(
           try r.getRecordCount finally r.close()
         }.sum
     }.sum
-  }
-
-  // ── ANALYZE-style per-column statistics, persisted per version ─────────
-
-  private def statsPath(v: Long) = new Path(tablePath, s"_stats_v$v")
-
-  /** Per-column statistics of the CURRENT version, persisted
-    * version-stamped (`_stats_v<seq>`, atomic rename) — computation and
-    * codec shared with the MOR store in [[TableStatsIO]].
-    */
-  def analyze(): TableStats = {
-    val ver = currentVersion
-    val (nRows, colStats) = TableStatsIO.compute(snapshotAt(ver), spec.dataCols)
-    val bytes = TableStatsIO.dataBytes(hadoopConf, dataDirsAt(ver))
-    AtomicFiles.write(hadoopConf, statsPath(ver),
-      TableStatsIO.render(ver, nRows, colStats, Some(bytes)))
-    TableStats(ver, nRows, colStats, staleBy = 0L, bytes = Some(bytes))
-  }
-
-  /** The newest persisted stats with their staleness against the current
-    * version; None before the first [[analyze]]. Bounded driver work (one
-    * directory listing + one small-file read).
-    */
-  def stats(): Option[TableStats] = {
-    if (!fs.exists(tablePath)) return None
-    val versions = fs.listStatus(tablePath).map(_.getPath.getName)
-      .filter(n => n.startsWith("_stats_v") && n.drop(8).forall(_.isDigit))
-      .map(_.drop(8).toLong)
-    if (versions.isEmpty) return None
-    val v = versions.max
-    val in = fs.open(statsPath(v))
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    Some(TableStatsIO.parse(body, v, staleBy = currentVersion - v))
   }
 
   /** Predicate delete — retention sweeps and right-to-be-forgotten
@@ -793,45 +633,23 @@ final class ParquetTableStore(
     * counted), matching SQL DELETE semantics where only true rows go.
     */
   def deleteWhere(cond: Column): Long = {
-    val (manifest, manifestBuckets) = readManifestFull()
-    manifestBuckets.foreach { b =>
-      require(b == numBuckets,
-        s"table ${spec.name} was written with $b buckets but this store " +
-          s"was constructed with $numBuckets — use the original count")
-    }
-    gcUnreferenced(manifest)
-    val pk = spec.pkCols
+    val manifest = openForWrite()
     val pred = coalesce(cond, lit(false))
     // bucket id is a pure function of the pk, so the probe needs no file
     // lineage — one pushed-filter aggregate over the store
-    val perBucket = readDirs(manifest.values.toSeq).filter(pred)
-      .groupBy(bucketOf(pk.map(col)).as("_bucket")).count()
+    val perBucket = readDirs(manifest.dirs.toSeq).filter(pred)
+      .groupBy(bucketCol.as("_bucket")).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1))
     val affected = perBucket.map(_._1).toSet
     if (affected.isEmpty) return 0L
-    val current = readDirs(manifest.filter(e => affected(e._1)).values.toSeq)
-    val rebuilt = writeBucketDirs(current.filter(!pred))
+    val rebuilt = writeBucketDirs(readDirs(manifest.dirsOf(affected)).filter(!pred))
     // a bucket emptied by the delete simply leaves the manifest
-    commitManifest((manifest -- affected) ++ rebuilt)
+    commit((manifest.stacks -- affected) ++ rebuilt)
     perBucket.map(_._2).sum
   }
 
   def merge(batch: CompactedBatch): Unit = {
-    val (manifest, manifestBuckets) = readManifestFull()
-    // A store reopened with a DIFFERENT bucket count maps keys to different
-    // bucket ids than the layout on disk: the anti-join would miss the key's
-    // true bucket and the merge would silently DUPLICATE updated rows (and
-    // strand deleted ones). Fail loudly instead. Pre-header manifests (no
-    // recorded count) can't be validated and adopt this count on commit.
-    manifestBuckets.foreach { b =>
-      require(b == numBuckets,
-        s"table ${spec.name} was written with $b buckets but this store " +
-          s"was constructed with $numBuckets — reopening with a different " +
-          "bucket count would corrupt the merge; use the original count " +
-          "(or rewrite the table via init)")
-    }
-    gcUnreferenced(manifest)
-
+    val manifest = openForWrite()
     val pk = spec.pkCols
     // Cached for the span of this merge only: the key set is consumed by TWO
     // jobs (the bucket/count probe below and the anti-join inside the bucket
@@ -845,7 +663,7 @@ final class ParquetTableStore(
       // (the broadcast guard). Bounded by numBuckets — this collect never
       // scales with data volume.
       val perBucket = changedKeys
-        .groupBy(bucketOf(pk.map(col)).as("_bucket")).count()
+        .groupBy(bucketCol.as("_bucket")).count()
         .collect().map(r => r.getInt(0) -> r.getLong(1))
       val affected = perBucket.map(_._1).toSet
       if (affected.isEmpty) return
@@ -858,15 +676,12 @@ final class ParquetTableStore(
         if (totalKeys <= broadcastKeyLimit) changedKeys.hint("broadcast")
         else changedKeys
 
-      val current = readDirs(manifest.filter(e => affected(e._1)).values.toSeq)
-      val merged = current
+      val merged = readDirs(manifest.dirsOf(affected))
         .join(antiKeys, pk, "left_anti")
         .unionByName(batch.upserts.select(spec.dataCols.map(col): _*))
 
-      val rebuilt = writeBucketDirs(merged)
       // A bucket whose rows were all deleted simply leaves the manifest.
-      val next = (manifest -- affected) ++ rebuilt
-      commitManifest(next)
+      commit((manifest.stacks -- affected) ++ writeBucketDirs(merged))
       // Replaced dirs are NOT deleted here: they stay on disk until the NEXT
       // merge's gcUnreferenced pass, so a snapshot DataFrame resolved against
       // the pre-merge manifest stays evaluable across this commit (readers

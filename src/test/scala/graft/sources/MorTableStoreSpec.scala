@@ -145,6 +145,29 @@ class MorTableStoreSpec extends SparkTestBase {
       .contains("_change"))
   }
 
+  test("a staging copy left by a killed merge or compaction is swept by the next write") {
+    val root = tmpDir("mor-staging")
+    val s = new MorTableStore(spark, root, spec, numBuckets = 4)
+    s.init(Seq((1, "a"), (2, "b")).toDF("id", "v"))
+    // a write killed between its parquet write and its staging cleanup
+    def plant(token: Int): java.io.File = {
+      val staging = new java.io.File(root, s"public_m/.staging_$token")
+      Seq((99, "GHOST", "u", 1L)).toDF("id", "v", "_op", "_seq")
+        .write.parquet(new java.io.File(staging, "_bucket=0").toString)
+      staging
+    }
+    val staging = plant(123)
+    assert(state(s) == Map(1 -> "a", 2 -> "b"))
+    s.merge(CompactedBatch(Seq(1).toDF("id"), Seq((3, "c")).toDF("id", "v")))
+    assert(!staging.exists(), "the next merge must sweep the staging copy")
+    assert(state(s) == Map(2 -> "b", 3 -> "c"))
+    // a compaction-only schedule sweeps too, even with nothing to fold
+    val again = plant(456)
+    assert(s.compact() == 0)
+    assert(!again.exists(), "the next compact must sweep the staging copy")
+    assert(state(s) == Map(2 -> "b", 3 -> "c"))
+  }
+
   test("reopening with a different bucket count fails loudly") {
     val root = tmpDir("mor-buckets")
     val s4 = new MorTableStore(spark, root, spec, numBuckets = 4)
@@ -155,6 +178,10 @@ class MorTableStoreSpec extends SparkTestBase {
         Seq((1, "a2")).toDF("id", "v")))
     }
     assert(e.getMessage.contains("bucket"))
+    // compact rewrites buckets too: under the wrong count it would fold
+    // rows into the wrong buckets
+    val c = intercept[IllegalArgumentException](s8.compact())
+    assert(c.getMessage.contains("bucket"))
   }
 
   // ── change feed from the delta stacks ────────────────────────────────────

@@ -117,28 +117,92 @@ class TableStoreSpec extends SparkTestBase {
   }
 
   test("crash leftovers before the pointer flip never surface to readers") {
-    val rootDir = tmpDir("store")
-    val s = new ParquetTableStore(spark, rootDir, spec, 8)
-    s.init(Seq((1, "a"), (2, "b")).toDF("id", "v"))
-    val before = state(s)
+    // both bucketed stores share one commit protocol and one sweep
+    val stores: Seq[String => BucketedStore] = Seq(
+      root => new ParquetTableStore(spark, root, spec, 8),
+      root => new MorTableStore(spark, root, spec, numBuckets = 8))
+    for (open <- stores) {
+      val rootDir = tmpDir("store")
+      val s = open(rootDir)
+      s.init(Seq((1, "a"), (2, "b")).toDF("id", "v"))
+      val before = state(s)
 
-    // Simulate a merge that staged new bucket dirs and died before the
-    // atomic manifest rename: unreferenced dirs + a stale manifest temp.
-    val data = new java.io.File(rootDir, "public_t/data")
-    val orphan = new java.io.File(data, "3-999999999")
-    orphan.mkdirs()
-    val leftoverParquet = Seq((99, "GHOST")).toDF("id", "v")
-    leftoverParquet.write.mode("overwrite").parquet(orphan.toString + "/inner")
-    java.nio.file.Files.writeString(
-      new java.io.File(rootDir, "public_t/_current.tmp.123").toPath, "3\t3-999999999")
+      // Simulate a merge that staged new bucket dirs and died before the
+      // atomic manifest rename: unreferenced dirs + stale manifest temps
+      // (the pre-AtomicFiles spelling and AtomicFiles' own).
+      val table = new java.io.File(rootDir, "public_t")
+      val data = new java.io.File(table, "data")
+      val orphan = new java.io.File(data, "3-999999999")
+      orphan.mkdirs()
+      val leftoverParquet = Seq((99, "GHOST")).toDF("id", "v")
+      leftoverParquet.write.mode("overwrite").parquet(orphan.toString + "/inner")
+      def plant(name: String): java.io.File = {
+        val f = new java.io.File(table, name)
+        java.nio.file.Files.writeString(f.toPath, "3\t3-999999999")
+        f
+      }
+      val legacyTmp = plant("_current.tmp.123")
+      val commitTmps = Seq("._current.tmp.456", "._v7.tmp.456", "._spec.tmp.456")
+        .map(plant)
+      // analyze() may run outside the writer: its temp is not the sweep's
+      val statsTmp = plant("._stats_v1.tmp.456")
 
-    // Readers still see exactly the committed state.
-    assert(state(s) == before)
+      // Readers still see exactly the committed state.
+      assert(state(s) == before)
 
-    // The next merge garbage-collects the orphan and commits atomically.
-    s.merge(CompactedBatch(Seq(1).toDF("id"), Seq((4, "d")).toDF("id", "v")))
-    assert(state(s) == Map(2 -> "b", 4 -> "d"))
-    assert(!orphan.exists())
+      // The next merge garbage-collects the orphan and commits atomically.
+      s.merge(CompactedBatch(Seq(1).toDF("id"), Seq((4, "d")).toDF("id", "v")))
+      assert(state(s) == Map(2 -> "b", 4 -> "d"))
+      assert(!orphan.exists())
+      assert((legacyTmp +: commitTmps).forall(!_.exists()),
+        s"${s.getClass.getSimpleName}: commit temps survived the merge's gc")
+      assert(statsTmp.exists())
+    }
+  }
+
+  test("manifests without the newer headers open, merge and take the headers on commit") {
+    def write(f: java.io.File, body: String): Unit = {
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.writeString(f.toPath, body)
+    }
+    def firstLines(f: java.io.File, n: Int): Seq[String] =
+      java.nio.file.Files.readAllLines(f.toPath).toArray.toSeq.map(_.toString).take(n)
+
+    // CoW: `_current` and `_v1` with no `#buckets` / `#ts` headers
+    val cowRoot = tmpDir("legacy-cow")
+    val cowTable = new java.io.File(cowRoot, "public_t")
+    Seq((1, "a"), (2, "b")).toDF("id", "v").coalesce(1)
+      .write.parquet(new java.io.File(cowTable, "data/0-100").toString)
+    Seq("_current", "_v1").foreach(n => write(new java.io.File(cowTable, n), "0\t0-100\n"))
+    val cow = new ParquetTableStore(spark, cowRoot, spec, numBuckets = 1)
+    assert(state(cow) == Map(1 -> "a", 2 -> "b"))
+    assert(cow.history() == Seq(1L) && cow.versionTimestamp(1L).isEmpty)
+    assert(cow.snapshotAt(1L).count() == 2)
+    cow.merge(CompactedBatch(Seq(1).toDF("id"), Seq((3, "c")).toDF("id", "v")))
+    assert(state(cow) == Map(2 -> "b", 3 -> "c"))
+    assert(cow.currentVersion == 2L && cow.versionTimestamp(2L).isDefined)
+    val cowHead = firstLines(new java.io.File(cowTable, "_current"), 2)
+    assert(cowHead.head == "#buckets=1" && cowHead(1).startsWith("#ts="), cowHead)
+
+    // MOR: `_current` with no `#feedfloor` — a stack whose base carries
+    // seq 2 (a compacted base), so the estimated floor is 2
+    val morRoot = tmpDir("legacy-mor")
+    val morTable = new java.io.File(morRoot, "public_t")
+    def delta(dir: String, rows: (Int, String, String, Long)*): Unit =
+      rows.toDF("id", "v", "_op", "_seq").coalesce(1)
+        .write.parquet(new java.io.File(morTable, s"data/$dir").toString)
+    delta("0-2-100", (1, "a", "u", 2L), (2, "b", "u", 2L))
+    delta("0-3-101", (2, null, "d", 3L), (3, "c", "u", 3L))
+    write(new java.io.File(morTable, "_current"), "#buckets=1\n0\t0-2-100,0-3-101\n")
+    val mor = new MorTableStore(spark, morRoot, spec, numBuckets = 1)
+    assert(state(mor) == Map(1 -> "a", 3 -> "c"))
+    assert(mor.history() == Seq(2L, 3L) && mor.feedFloor == 2L)
+    assert(mor.snapshotAt(2L).count() == 2)
+    mor.merge(CompactedBatch(Seq(1).toDF("id"), Seq((4, "d")).toDF("id", "v")))
+    assert(state(mor) == Map(3 -> "c", 4 -> "d"))
+    assert(mor.history() == Seq(2L, 3L, 4L))
+    assert(firstLines(new java.io.File(morTable, "_current"), 2) ==
+      Seq("#buckets=1", "#feedfloor=2"))
   }
 
   test("a snapshot resolved before a merge stays readable across that merge (1-generation retention)") {
