@@ -8,10 +8,11 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
   * identity records, the catalog boundaries, stats records and the MV
   * state files all commit through [[write]]: the rename IS the commit
   * point, so a reader never observes a half-flushed record and a crash
-  * mid-write leaves only an orphaned temp file (swept by the single
-  * writer, see [[BucketedStore.sweep]]). Duplicating this block per call
-  * site is how one of them (the catalog's boundary history) shipped
-  * without it — keep the atomicity contract in exactly one place.
+  * mid-write leaves only an orphaned temp file (a table's writer sweeps
+  * the temps of its own files, see [[BucketedStore.sweep]]). Duplicating
+  * this block per call site is how one of them (the catalog's boundary
+  * history) shipped without it — keep the atomicity contract in exactly
+  * one place.
   */
 object AtomicFiles {
 
