@@ -5,9 +5,13 @@ Run from the repository root:
 
     python3 dev/cdcpairs.py --workload drain_mor_mv --pairs 6 --seed0 21
 
-The change side is the working tree at the repository root; the parent
-side is `git archive <--parent>` extracted into a temp dir (default HEAD,
-the commit an uncommitted change sits on; pass HEAD~1 once it is committed).
+Both sides run from sibling trees under one work dir (`--workdir`, default
+a temp dir removed at the end), so neither side gets the repository root's
+placement: `parent/` is `git archive <--parent>` (default HEAD, the commit
+an uncommitted change sits on; pass HEAD~1 once it is committed), and
+`change/` holds the working tree's tracked and untracked, non-ignored files.
+An existing `parent/` is reused with its build; `change/` is extracted
+afresh on every invocation, so it always builds from the current sources.
 Pair i runs seed `seed0 + i` on both sides, one run at a time (the runs
 share the host's cores), and alternates which side runs first: parent
 first on even pairs, change first on odd ones. Each run is
@@ -45,6 +49,18 @@ def extract_parent(rev, into):
     subprocess.run(["tar", "-x", "-C", into], input=archive, check=True)
 
 
+def extract_change(into):
+    """Copy the working tree's tracked and untracked, non-ignored files."""
+    listed = subprocess.run(["git", "ls-files", "-z", "-co", "--exclude-standard"],
+                            cwd=ROOT, check=True, stdout=subprocess.PIPE).stdout
+    # a tracked file deleted in the working tree is still listed
+    present = b"\0".join(f for f in listed.split(b"\0")
+                         if f and os.path.lexists(os.path.join(ROOT, os.fsdecode(f))))
+    archive = subprocess.run(["tar", "-c", "--null", "-T", "-"], cwd=ROOT, check=True,
+                             input=present, stdout=subprocess.PIPE).stdout
+    subprocess.run(["tar", "-x", "-C", into], input=archive, check=True)
+
+
 def run_side(tree, a, seed):
     """One cdcbench run in `tree`; returns (result dict or None, stderr tail)."""
     cmd = [sys.executable, "cdcbench/run.py", "--workload", a.workload,
@@ -71,20 +87,23 @@ def main():
     ap.add_argument("--parent", default="HEAD",
                     help="git revision of the parent side (default HEAD)")
     ap.add_argument("--workdir",
-                    help="where to extract the parent tree (default: a temp dir, "
-                         "removed at the end); an existing tree there is reused")
+                    help="where to extract the parent/ and change/ trees (default: "
+                         "a temp dir, removed at the end); an existing parent/ is reused")
     ap.add_argument("--json", help="also write every run's result to this file")
     a = ap.parse_args()
 
     temp = a.workdir is None
-    parent = a.workdir or tempfile.mkdtemp(prefix="cdcpairs_")
-    if not os.path.isdir(os.path.join(parent, "cdcbench")):
-        os.makedirs(parent, exist_ok=True)
-        extract_parent(a.parent, parent)
-    sides = {"parent": parent, "change": ROOT}
+    work = a.workdir or tempfile.mkdtemp(prefix="cdcpairs_")
+    sides = {side: os.path.join(work, side) for side in ("parent", "change")}
     runs = {"parent": [], "change": []}
     ok = True
     try:
+        if not os.path.isdir(os.path.join(sides["parent"], "cdcbench")):
+            os.makedirs(sides["parent"], exist_ok=True)
+            extract_parent(a.parent, sides["parent"])
+        shutil.rmtree(sides["change"], ignore_errors=True)
+        os.makedirs(sides["change"])
+        extract_change(sides["change"])
         for i in range(a.pairs):
             seed = a.seed0 + i
             order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
@@ -103,7 +122,7 @@ def main():
                 runs[side].append(res)
     finally:
         if temp:
-            shutil.rmtree(parent, ignore_errors=True)
+            shutil.rmtree(work, ignore_errors=True)
 
     if a.json:
         with open(a.json, "w") as f:

@@ -4,6 +4,7 @@ import java.io.{File, FileInputStream, InputStreamReader}
 import java.util.Properties
 
 import graft.model.TableRegistry
+import graft.obs.PipelineMetrics
 import graft.sources.TableStore
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -239,9 +240,10 @@ object GraftBoot {
   /** Start one source's stream: the configured Kafka connection, or — when
     * `<name>.replay.dir` is set — the file-replay twin over archived Maxwell
     * JSON (offline-testable, and the disaster-recovery path). Either way
-    * `loader.conn_pool.size` caps the tables a batch merges at once. Kafka
-    * needs the spark-sql-kafka connector and a reachable broker — see the
-    * Kafka verification boundary note in SURVEY.md §8.
+    * `loader.conn_pool.size` caps the tables a batch merges at once, and
+    * `driftMetrics` (the source's listener) counts the data keys no mapped
+    * spec covers. Kafka needs the spark-sql-kafka connector and a reachable
+    * broker — see the Kafka verification boundary note in SURVEY.md §8.
     */
   def startSource(
       spark: SparkSession,
@@ -249,19 +251,22 @@ object GraftBoot {
       source: SourceConfig,
       registry: TableRegistry,
       stores: Map[String, TableStore],
-      checkpointDir: String): StreamingQuery = source.replayDir match {
+      checkpointDir: String,
+      driftMetrics: Option[PipelineMetrics] = None): StreamingQuery = source.replayDir match {
     case Some(dir) =>
       graft.streaming.CdcPipeline.fileMaxwellStream(
         spark, dir, registry, stores, checkpointDir, cfg.trigger,
-        loaders = cfg.loaderConnSize)
-    case None => startKafka(spark, cfg, source, registry, stores, checkpointDir)
+        driftMetrics = driftMetrics, loaders = cfg.loaderConnSize)
+    case None =>
+      startKafka(spark, cfg, source, registry, stores, checkpointDir, driftMetrics)
   }
 
   /** Start the configured Kafka stream for one source (the deployment path;
     * requires the spark-sql-kafka connector and a reachable broker — see the
     * Kafka verification boundary note in SURVEY.md §8). `merge.interval`
     * becomes the micro-batch trigger, `merge.batch.size` the
-    * `maxOffsetsPerTrigger` cap, `loader.conn_pool.size` the loader cap.
+    * `maxOffsetsPerTrigger` cap, `loader.conn_pool.size` the loader cap;
+    * `driftMetrics` counts schema drift as in [[startSource]].
     */
   def startKafka(
       spark: SparkSession,
@@ -269,18 +274,20 @@ object GraftBoot {
       source: SourceConfig,
       registry: TableRegistry,
       stores: Map[String, TableStore],
-      checkpointDir: String): StreamingQuery = source.tpe match {
+      checkpointDir: String,
+      driftMetrics: Option[PipelineMetrics] = None): StreamingQuery = source.tpe match {
     case SourceType.Maxwell =>
       graft.streaming.CdcPipeline.kafkaMaxwellStream(
         spark, source.kafkaServer, source.topic, registry, stores,
         checkpointDir, cfg.trigger, cfg.batchSize.toLong,
-        loaders = cfg.loaderConnSize)
+        driftMetrics = driftMetrics, loaders = cfg.loaderConnSize)
     case SourceType.Debezium =>
       graft.streaming.CdcPipeline.kafkaDebeziumStream(
         spark, source.kafkaServer, s"${java.util.regex.Pattern.quote(source.topic)}\\..+",
         registry, stores, checkpointDir, cfg.trigger, cfg.batchSize.toLong,
         // the exact namespace, so a dotted topic.prefix still routes (the
         // parser's default first-segment strip would mis-key every event)
-        namespace = Some(source.topic), loaders = cfg.loaderConnSize)
+        namespace = Some(source.topic), driftMetrics = driftMetrics,
+        loaders = cfg.loaderConnSize)
   }
 }

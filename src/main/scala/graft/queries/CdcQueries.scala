@@ -197,8 +197,8 @@ object CdcQueries {
   /** Fresh per-invocation store dir under [[QueryScratch]], inheriting its
     * `GRAFT_SCRATCH_DIR` override, crash-orphan sweep, shutdown hook, and
     * the documented single-node `java.io.tmpdir` contract (a multi-node
-    * deployment must point the override at shared storage — same contract
-    * as [[graft.streaming.CdcPipeline.applyBatch]]'s staging dir).
+    * deployment must point the override at shared storage — the contract
+    * Spark sets for a streaming query's checkpoint location).
     */
   private def tempRoot(): String =
     QueryScratch.dir(s"cdc_${java.util.UUID.randomUUID()}")

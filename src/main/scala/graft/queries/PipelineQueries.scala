@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   * reclaimed, while any plausibly-live concurrent session (younger than a
   * day) is left alone. `GRAFT_SCRATCH_DIR` overrides the base; the
   * `java.io.tmpdir` default is DRIVER-LOCAL and therefore correct only on
-  * local[*] (the same shared-filesystem contract
-  * [[graft.streaming.CdcPipeline.applyBatch]] documents for its staging
-  * dir) — a multi-node deployment must point this at shared storage.
+  * local[*] (the same shared-filesystem contract Spark sets for a
+  * streaming query's checkpoint location) — a multi-node deployment must
+  * point this at shared storage.
   */
 private[queries] object QueryScratch {
   private lazy val base: java.io.File = {

@@ -221,10 +221,11 @@ private[sources] object BucketedStore {
   }
 
   /** Files only the table's writer commits — their temps are dead once
-    * the writer runs again. `_stats_v<n>` is absent on purpose: `analyze()`
-    * may run outside the writer, so its temp may be in flight.
+    * the writer runs again (`_zones_current` is [[AppendLog]]'s zone
+    * index). `_stats_v<n>` is absent on purpose: `analyze()` may run
+    * outside the writer, so its temp may be in flight.
     */
-  private val WriterFile = raw"_current|_spec|_v\d+".r
+  private val WriterFile = raw"_current|_spec|_v\d+|_zones_current".r
 
   /** The single-writer sweep run at the start of every write to a table
     * dir: a `.staging_*` copy (a write killed between its parquet write

@@ -28,78 +28,45 @@ object CdcPipeline {
   val DefaultLoaders = 10
 
   /** Apply one micro-batch of normalized events to every mapped table:
-    * typed projection → per-PK compaction → merge. The groupBy inside
-    * compaction shuffles each table's slice independently, and each table's
-    * merge is its own atomic, idempotent commit, so the tables load
-    * concurrently — up to `loaders` at once, like the reference's per-table
-    * ChangeLoaders on a pool of `loader.conn_pool.size` (reference:
-    * Context.java:86-95). A replay re-applies every table whatever order
-    * they finished in. See [[runLoaders]] for the thread contract.
-    *
-    * Few tables (< `stagingThreshold`): the batch is persisted and computed
-    * once, before the loaders start, and each table filters the cached rows.
-    * Many tables (bireme-scale maps run hundreds, Config.java:242-272):
-    * per-table filters would launch hundreds of jobs over the full batch, so
-    * instead ONE pass writes the batch to a `mappedTable`-partitioned staging
-    * dir and every table's merge reads only its own partition directory
-    * (Catalyst prunes the scan to `mappedTable=<target>`).
+    * typed projection → per-PK compaction → merge. The batch is persisted
+    * and computed once ([[materialize]]), checked for schema drift when a
+    * `driftHook` is given, and then every table filters the cached rows —
+    * one pass over the (possibly Kafka-backed) source, however many tables
+    * the registry maps. The groupBy inside compaction shuffles each table's
+    * slice independently, and each table's merge is its own atomic,
+    * idempotent commit, so the tables load concurrently — up to `loaders`
+    * at once, like the reference's per-table ChangeLoaders on a pool of
+    * `loader.conn_pool.size` (reference: Context.java:86-95). A replay
+    * re-applies every table whatever order they finished in. See
+    * [[runLoaders]] for the thread contract.
     */
   def applyBatch(
       events: DataFrame,
       registry: TableRegistry,
       stores: Map[String, TableStore],
       flavor: Projection.Flavor = Projection.Maxwell,
-      stagingThreshold: Int = 8,
-      stagingDir: Option[String] = None,
       driftHook: Option[(String, String, Long) => Unit] = None,
       loaders: Int = DefaultLoaders): Unit = {
     require(loaders >= 1, s"loaders must be positive, got $loaders")
-    val targets = registry.targets
-    val spark = events.sparkSession
-    def load(df: DataFrame): Unit =
-      runLoaders(spark.sparkContext, targets, loaders)(applyTo(df, _))
-    def applyTo(df: DataFrame, target: String): Unit = {
-      // the merge consumes the compacted batch in several jobs; cache the
-      // per-key aggregate for the span of this table's merge
-      val scope = new graft.operators.CacheScope
-      try stores(target).merge(
-        Compaction.compact(Projection.typed(df, stores(target).spec, flavor), scope))
-      finally scope.release()
-    }
-    // mid-stream DDL detection (see [[graft.parse.SchemaDrift]]): one tiny
-    // aggregate over the already-pinned batch; the collect is bounded by
-    // tables × drifted columns, never by rows
-    def detectDrift(df: DataFrame): Unit = driftHook.foreach { hook =>
-      graft.parse.SchemaDrift.detect(df, registry).collect()
-        .foreach(r => hook(r.getString(0), r.getString(1), r.getLong(2)))
-    }
-
-    if (targets.size < stagingThreshold) {
-      // One pass over the (possibly Kafka-backed) batch feeds every table.
-      events.persist()
-      try { materialize(events); detectDrift(events); load(events) }
-      finally events.unpersist()
-    } else {
-      // Staging must live on a SHARED filesystem: a driver-local java.io
-      // temp dir only works single-node (executors would each write their
-      // own node-local copy and the read-back would silently see a partial
-      // batch). Streaming callers pass a checkpoint-adjacent dir — shared
-      // by definition; the local default serves local[*] and tests.
-      val staging = stagingDir
-        .map(d => s"$d/batch_${System.nanoTime()}")
-        .getOrElse(java.nio.file.Files.createTempDirectory("graft_batch_").toString)
-      events.write.mode("overwrite").partitionBy("mappedTable").parquet(staging)
-      try {
-        // Explicit schema: keeps an all-empty batch readable and pins the
-        // partition column's type.
-        val staged = spark.read.schema(events.schema).parquet(staging)
-        detectDrift(staged)
-        load(staged)
-      } finally {
-        val p = new org.apache.hadoop.fs.Path(staging)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    events.persist()
+    try {
+      materialize(events)
+      // mid-stream DDL detection (see [[graft.parse.SchemaDrift]]): one tiny
+      // aggregate over the pinned batch; the collect is bounded by
+      // tables × drifted columns, never by rows
+      driftHook.foreach { hook =>
+        graft.parse.SchemaDrift.detect(events, registry).collect()
+          .foreach(r => hook(r.getString(0), r.getString(1), r.getLong(2)))
       }
-    }
+      runLoaders(events.sparkSession.sparkContext, registry.targets, loaders) { target =>
+        // the merge consumes the compacted batch in several jobs; cache the
+        // per-key aggregate for the span of this table's merge
+        val scope = new graft.operators.CacheScope
+        try stores(target).merge(
+          Compaction.compact(Projection.typed(events, stores(target).spec, flavor), scope))
+        finally scope.release()
+      }
+    } finally events.unpersist()
   }
 
   /** Compute a persisted DataFrame's cache in ONE job. The first query over
@@ -165,18 +132,43 @@ object CdcPipeline {
     }
   }
 
-  /** Sweep staging left by a driver crash mid-batch: `batch_<nanoTime>` dirs
-    * under the checkpoint-adjacent staging root are deleted in a `finally`
-    * on the happy path, but a crash between write and delete orphans them
-    * forever (no other GC pass covers this root). Called once per stream
-    * START — safe under the single-writer-per-checkpoint contract: no other
-    * query can be mid-batch against the same checkpoint's staging root.
+  /** The one stream runner behind [[kafkaMaxwellStream]],
+    * [[fileMaxwellStream]] and [[kafkaDebeziumStream]]: every micro-batch
+    * of `source` runs `body` — the entry point's parse and [[applyBatch]],
+    * given the drift hook of `driftMetrics` — and then `postBatch`.
+    *
+    * `postBatch` runs AFTER every table's merge committed, INSIDE the batch
+    * (a failure there fails the batch, and the replay re-runs both the
+    * idempotent merges and the hook): where a SnapshotCatalog commits its
+    * cross-table boundary and an MvMaintainer syncs its summary — both are
+    * themselves crash-safe re-run targets.
     */
-  private def sweepStaging(spark: SparkSession, checkpointDir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(s"$checkpointDir/_graft_batch_staging")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) { fs.delete(root, true); () }
+  private def runStream(source: DataFrame, checkpointDir: String, trigger: Trigger,
+      driftMetrics: Option[graft.obs.PipelineMetrics], postBatch: Option[Long => Unit])(
+      body: (DataFrame, Long, Option[(String, String, Long) => Unit]) => Unit)
+      : StreamingQuery = {
+    val driftHook = driftMetrics.map(m => m.recordDrift _)
+    source.writeStream
+      .trigger(trigger)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        body(batch, batchId, driftHook)
+        postBatch.foreach(_(batchId))
+      }
+      .start()
   }
+
+  /** The reader both Kafka streams share: from the earliest offset
+    * (reference: KafkaPipeLine.java:198-208), at most `maxOffsetsPerTrigger`
+    * records a batch — the `merge.batch.size` back-pressure; without it an
+    * existing topic backlog arrives as ONE giant first batch.
+    */
+  private def kafka(spark: SparkSession, bootstrapServers: String,
+      maxOffsetsPerTrigger: Long) =
+    spark.readStream.format("kafka")
+      .option("kafka.bootstrap.servers", bootstrapServers)
+      .option("startingOffsets", "earliest")
+      .option("maxOffsetsPerTrigger", maxOffsetsPerTrigger)
 
   /** The exact per-micro-batch body the Maxwell Kafka stream runs
     * (parse with the Kafka offset as seq, then apply) — factored out so
@@ -189,11 +181,10 @@ object CdcPipeline {
       batch: DataFrame,
       registry: TableRegistry,
       stores: Map[String, TableStore],
-      stagingDir: Option[String] = None,
       driftHook: Option[(String, String, Long) => Unit] = None,
       loaders: Int = DefaultLoaders): Unit =
     applyBatch(MaxwellParser.events(batch, registry, col("offset")), registry, stores,
-      stagingDir = stagingDir, driftHook = driftHook, loaders = loaders)
+      driftHook = driftHook, loaders = loaders)
 
   /** Debezium twin of [[applyMaxwellKafkaBatch]]: topic supplies routing.
     * `namespace` (when known) strips the exact — possibly dotted — topic
@@ -203,14 +194,13 @@ object CdcPipeline {
       batch: DataFrame,
       registry: TableRegistry,
       stores: Map[String, TableStore],
-      stagingDir: Option[String] = None,
       namespace: Option[String] = None,
+      driftHook: Option[(String, String, Long) => Unit] = None,
       loaders: Int = DefaultLoaders): Unit =
     applyBatch(
       DebeziumParser.events(batch, registry, col("offset"), col("topic"),
         namespace = namespace),
-      registry, stores, Projection.Debezium, stagingDir = stagingDir,
-      loaders = loaders)
+      registry, stores, Projection.Debezium, driftHook, loaders)
 
   /** Maxwell-over-Kafka sync, the reference's primary deployment
     * (reference: Bireme.java:188-218). `seq = offset` gives per-key total
@@ -235,26 +225,15 @@ object CdcPipeline {
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
       maxOffsetsPerTrigger: Long = 50000L,
+      driftMetrics: Option[graft.obs.PipelineMetrics] = None,
       postBatch: Option[Long => Unit] = None,
-      loaders: Int = DefaultLoaders): StreamingQuery = {
-    sweepStaging(spark, checkpointDir)
-    val raw = spark.readStream.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrapServers)
-      .option("subscribe", topic)
-      .option("startingOffsets", "earliest") // reference: KafkaPipeLine.java:198-208
-      .option("maxOffsetsPerTrigger", maxOffsetsPerTrigger)
-      .load()
-      .select(col("value").cast("string").as("value"), col("offset"))
-    raw.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMaxwellKafkaBatch(batch, registry, stores,
-          stagingDir = Some(s"$checkpointDir/_graft_batch_staging"), loaders = loaders)
-        postBatch.foreach(_(batchId)) // see fileMaxwellStream's hook contract
-      }
-      .start()
-  }
+      loaders: Int = DefaultLoaders): StreamingQuery =
+    runStream(kafka(spark, bootstrapServers, maxOffsetsPerTrigger)
+        .option("subscribe", topic).load()
+        .select(col("value").cast("string").as("value"), col("offset")),
+      checkpointDir, trigger, driftMetrics, postBatch) { (batch, _, driftHook) =>
+      applyMaxwellKafkaBatch(batch, registry, stores, driftHook, loaders)
+    }
 
   /** File-backed Maxwell sync: JSON-lines dropped into `inputDir` are merged
     * continuously. Used by tests (no broker in CI) and as a bulk-replay path.
@@ -266,13 +245,15 @@ object CdcPipeline {
     * would flip last-write-wins whenever a later-written file sorts earlier
     * lexicographically (e.g. `b0.json` written before `a1.json`, both picked
     * up in one batch); the name breaks mtime ties deterministically.
-    * GRANULARITY CONTRACT: on filesystems with coarse mtime resolution
-    * (1-2 s), two files written within one tick tie on mtime and order by
-    * NAME — a producer emitting multiple files per tick must embed a
-    * monotonic sequence in its file names (as every producer in this repo
-    * does); the Kafka path has no such ambiguity. The mtime map covers only
-    * THIS batch's files (one distinct-scan of the batch, one getFileStatus
-    * per file) — a literal listing the replay dir's full history would grow
+    * GRANULARITY CONTRACT: the name breaks mtime ties only WITHIN one batch.
+    * Across `maxFilesPerTrigger` batches the built-in file source admits
+    * files by mtime alone, so files that share an mtime can reach batches
+    * out of name order (pinned by cdcbench's `MtimeTieSpec`) — a producer
+    * must give each file a strictly later mtime than the one before (on a
+    * filesystem with coarse 1-2 s mtime resolution, one file per tick).
+    * The Kafka path has no such ambiguity. The mtime map covers only THIS
+    * batch's files (one distinct-scan of the batch, one getFileStatus per
+    * file) — a literal listing the replay dir's full history would grow
     * with every batch.
     * `monotonically_increasing_id` alone is NOT usable directly: it encodes
     * `partitionId << 33 | row`, so a batch with ≥128 partitions would bleed
@@ -308,36 +289,20 @@ object CdcPipeline {
       maxFilesPerTrigger: Int = 1000,
       driftMetrics: Option[graft.obs.PipelineMetrics] = None,
       postBatch: Option[Long => Unit] = None,
-      loaders: Int = DefaultLoaders): StreamingQuery = {
-    sweepStaging(spark, checkpointDir)
+      loaders: Int = DefaultLoaders): StreamingQuery =
     // Back-pressure for the bulk-replay case, the file twin of the Kafka
     // paths' maxOffsetsPerTrigger: without a cap a replay dir's ENTIRE
-    // history arrives as one giant first micro-batch — one enormous staged
+    // history arrives as one giant first micro-batch — one enormous cache
     // write, a per-file driver array over the full history, and hours of
     // work whose mid-batch failure restarts from zero.
-    val raw = spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .text(inputDir)
-    raw.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val scope = new graft.operators.CacheScope
-        try {
-          val ordered = sequenceReplayBatch(batch, batchId, scope)
-          applyBatch(MaxwellParser.events(ordered, registry, col("_seq")), registry, stores,
-            stagingDir = Some(s"$checkpointDir/_graft_batch_staging"),
-            driftHook = driftMetrics.map(m => m.recordDrift _), loaders = loaders)
-          // runs AFTER every table's merge committed, INSIDE the batch (a
-          // failure here fails the batch, and the replay re-runs both the
-          // idempotent merges and the hook): where a SnapshotCatalog
-          // commits its cross-table boundary and an MvMaintainer syncs its
-          // summary — both are themselves crash-safe re-run targets.
-          postBatch.foreach(_(batchId))
-        } finally scope.release()
-      }
-      .start()
-  }
+    runStream(spark.readStream.option("maxFilesPerTrigger", maxFilesPerTrigger).text(inputDir),
+      checkpointDir, trigger, driftMetrics, postBatch) { (batch, batchId, driftHook) =>
+      val scope = new graft.operators.CacheScope
+      try applyBatch(
+        MaxwellParser.events(sequenceReplayBatch(batch, batchId, scope), registry, col("_seq")),
+        registry, stores, driftHook = driftHook, loaders = loaders)
+      finally scope.release()
+    }
 
   /** Stamp a replay micro-batch with its `_seq` ordinal (see
     * [[fileMaxwellStream]]'s sequencing contract) — factored out so tests
@@ -380,16 +345,16 @@ object CdcPipeline {
           fs.getFileStatus(p).getModificationTime, n)
       }
     // GRANULARITY CONTRACT enforcement: two files in one batch sharing
-    // an mtime tick fall back to NAME order — correct only when the
-    // producer embeds a monotonic sequence in its file names. That is a
-    // silent wrong-final-state hazard (a stale value can win last-write-
-    // wins), so make the fallback LOUD.
+    // an mtime tick fall back to NAME order, and the same tie split across
+    // batches has no fallback at all — the producer broke the contract.
+    // That is a silent wrong-final-state hazard (a stale value can win
+    // last-write-wins), so make the fallback LOUD.
     val ties = perFile.groupBy(_._2).filter(_._2.size > 1)
     if (ties.nonEmpty)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         "file replay batch {} has {} mtime tie group(s) (e.g. {}); " +
-          "ordering falls back to file NAME within a tie — the producer " +
-          "must embed a monotonic sequence in file names (see " +
+          "ordering falls back to file NAME within this batch only — the " +
+          "producer must give each file a strictly later mtime (see " +
           "fileMaxwellStream's granularity contract)",
         batchId.toString, ties.size.toString,
         ties.head._2.map(_._1).sorted.mkString(", "))
@@ -426,27 +391,13 @@ object CdcPipeline {
       trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
       maxOffsetsPerTrigger: Long = 50000L,
       namespace: Option[String] = None,
+      driftMetrics: Option[graft.obs.PipelineMetrics] = None,
       postBatch: Option[Long => Unit] = None,
-      loaders: Int = DefaultLoaders): StreamingQuery = {
-    sweepStaging(spark, checkpointDir)
-    val raw = spark.readStream.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrapServers)
-      .option("subscribePattern", topicPattern)
-      .option("startingOffsets", "earliest")
-      // same merge.batch.size back-pressure as the Maxwell path — without
-      // it an existing topic backlog arrives as ONE giant first batch
-      .option("maxOffsetsPerTrigger", maxOffsetsPerTrigger)
-      .load()
-      .select(col("value").cast("string").as("value"), col("offset"), col("topic"))
-    raw.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDebeziumKafkaBatch(batch, registry, stores,
-          stagingDir = Some(s"$checkpointDir/_graft_batch_staging"),
-          namespace = namespace, loaders = loaders)
-        postBatch.foreach(_(batchId)) // see fileMaxwellStream's hook contract
-      }
-      .start()
-  }
+      loaders: Int = DefaultLoaders): StreamingQuery =
+    runStream(kafka(spark, bootstrapServers, maxOffsetsPerTrigger)
+        .option("subscribePattern", topicPattern).load()
+        .select(col("value").cast("string").as("value"), col("offset"), col("topic")),
+      checkpointDir, trigger, driftMetrics, postBatch) { (batch, _, driftHook) =>
+      applyDebeziumKafkaBatch(batch, registry, stores, namespace, driftHook, loaders)
+    }
 }

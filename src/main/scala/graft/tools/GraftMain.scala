@@ -72,7 +72,7 @@ object GraftMain {
         spark.streams.addListener(metrics)
         val supervised = new SupervisedQuery(
           () => GraftBoot.startSource(spark, cfg, source, registry, stores,
-            s"$workDir/ckpt-${source.name}"),
+            s"$workDir/ckpt-${source.name}", Some(metrics)),
           maxRestarts).start()
         // listener registration is session-global: restrict each source's
         // listener to its own query so a multi-source deployment's routes

@@ -307,6 +307,29 @@ class AppendLogSpec extends SparkTestBase {
     assert(log3.scanWhere(pred).count() == 3)
   }
 
+  test("a crashed zone-index commit temp is swept by the next append; the rewritten index prunes") {
+    val rootDir = tmpDir("alog-ztmp")
+    val log = new AppendLog(spark, rootDir, "public.zt", schema, Seq("ts"))
+    (1 to 3).foreach(d => log.append(day(d, 3)))
+    val base = new org.apache.hadoop.fs.Path(rootDir, "public_zt")
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a commit killed between the index temp's write and its rename
+    val temp = new org.apache.hadoop.fs.Path(base, "._zones_current.tmp.123")
+    fs.create(temp).close()
+    log.append(day(4, 3))
+    assert(!fs.exists(temp), "the index commit temp survived the next append")
+    // prune from a fresh instance with every sidecar gone: its zones can
+    // only come from the index this append rewrote
+    fs.listStatus(new org.apache.hadoop.fs.Path(base, "_zones"))
+      .foreach(st => fs.delete(st.getPath, false))
+    val fresh = new AppendLog(spark, rootDir, "public.zt", schema, Seq("ts"))
+    val pred = col("ts") >= lit(ts("2024-03-04 00:00:00")) &&
+      col("ts") < lit(ts("2024-03-05 00:00:00"))
+    val (kept, total) = fresh.zonePrune(pred)
+    assert(total == 4 && kept.size == 1, s"kept $kept of $total")
+    assert(fresh.scanWhere(pred).count() == 3)
+  }
+
   test("reclusterRange repairs pruning after out-of-order ingest") {
     val log = newLog(Seq("ts"))
     // interleaved ingest: each batch spans the WHOLE month -> every zone

@@ -125,7 +125,7 @@ class CdcLoaderSpec extends SparkTestBase {
     val stores = p.wrap(parquetStores("once")) { _ =>
       latch.countDown(); latch.await(60, TimeUnit.SECONDS); ()
     }
-    // 2 tables < stagingThreshold: both loaders filter the persisted batch
+    // both loaders filter the one persisted batch
     CdcPipeline.applyBatch(MaxwellParser.events(counted, registry, col("seq0")),
       registry, stores)
     assert(p.peak.get == 2)
@@ -239,6 +239,49 @@ class CdcLoaderSpec extends SparkTestBase {
     assert((e2 +: e2.getSuppressed.toSeq).map(_.getMessage).toSet ==
       tables.map(t => s"merge of $t failed").toSet)
     assert(loaderThreads.isEmpty)
+  }
+
+  test("a registry wider than the loader cap streams to convergence; nothing but Spark's files is left") {
+    val n = 9
+    val wide = (0 until n).map(i => s"public.w$i")
+    val wideRegistry = TableRegistry((0 until n).map(i => s"demo.w$i" -> s"public.w$i").toMap,
+      wide.map(t => t -> specs("public.a").copy(name = t)).toMap)
+    def line(i: Int, tpe: String, id: Int, name: String, old: String = "") =
+      s"""{"database":"demo","table":"w$i","type":"$tpe","ts":1,"data":{"id":$id,"name":"$name"}$old}"""
+    val in = tmpDir("wide-in")
+    val ckpt = tmpDir("wide-ckpt")
+    // two files, two batches (maxFilesPerTrigger = 1); each file gets a
+    // strictly later mtime, as the file source's ordering contract asks
+    val now = System.currentTimeMillis()
+    Seq(
+      "b0.json" -> (0 until n).flatMap(i => (0 until 4).map(id => line(i, "insert", id, s"v$id"))),
+      "b1.json" -> (0 until n).flatMap(i => Seq(
+        line(i, "update", 0, "u0", ""","old":{"name":"v0"}"""), line(i, "delete", 1, "v1"))))
+      .zipWithIndex.foreach { case ((name, ls), k) =>
+        val p = Files.write(Paths.get(in, name), ls.mkString("\n").getBytes("UTF-8"))
+        Files.setLastModifiedTime(p,
+          java.nio.file.attribute.FileTime.fromMillis(now - 2000 + 1000 * k))
+      }
+    val p = new Probe
+    val stores = p.wrap(wide.map(t => t ->
+      (new ParquetTableStore(spark, tmpDir(s"wide-$t"), wideRegistry.specFor(t), 2): TableStore))
+      .toMap)(_ => ())
+    val q = CdcPipeline.fileMaxwellStream(spark, in, wideRegistry, stores, ckpt,
+      Trigger.ProcessingTime("1 second"), maxFilesPerTrigger = 1, loaders = 3)
+    try q.processAllAvailable() finally q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) == 2)
+    assert(contents(stores) == wide.map(_ -> Map(0 -> "u0", 2 -> "v2", 3 -> "v3")).toMap)
+    // 2 batches × 9 tables merged on at most 3 loaders, so loaders took
+    // several tables each
+    val merged = p.threads.asScala.toSeq
+    assert(merged.size == 2 * n)
+    assert(merged.toSet.subsetOf(Set("graft-loader-0", "graft-loader-1", "graft-loader-2")),
+      merged.distinct)
+    assert(p.peak.get <= 3)
+    assert(loaderThreads.isEmpty, loaderThreads.map(_.getName))
+    val left = new java.io.File(ckpt).list().toSet
+    assert(left.subsetOf(Set("commits", "offsets", "sources", "metadata", ".metadata.crc")),
+      s"the checkpoint dir holds more than Spark's own files: $left")
   }
 
   test("stopping the query mid-batch leaves no loader thread and commits nothing") {

@@ -192,7 +192,7 @@ class CdcPipelineSpec extends SparkTestBase {
     }
 
     // An accumulator on the source proves the batch is computed exactly once
-    // (the partitioned-staging write), not once per target table.
+    // (the one cached batch every loader filters), not once per target table.
     val scans = spark.sparkContext.longAccumulator("sourceRows")
     val lines = (0 until 100).map { k =>
       s"""{"database":"demo","table":"t${k % n}","type":"insert","ts":1,"data":{"id":$k,"name":"v$k"}}"""
@@ -203,7 +203,7 @@ class CdcPipelineSpec extends SparkTestBase {
       .withColumn("seq0", monotonically_increasing_id())
     val events = MaxwellParser.events(counted, wideRegistry, col("seq0"))
 
-    CdcPipeline.applyBatch(events, wideRegistry, stores) // 20 ≥ stagingThreshold
+    CdcPipeline.applyBatch(events, wideRegistry, stores) // 20 tables, 10 loaders
     assert(scans.value == 100L,
       s"batch source computed ${scans.value} rows; 20 per-table filter passes would read 2000")
     (0 until n).foreach { i =>
@@ -246,10 +246,9 @@ class CdcPipelineSpec extends SparkTestBase {
     val ckpt = tmpDir("cdc-ckpt5")
     val store = new ParquetTableStore(spark, tmpDir("cdc-store5"), spec, 4)
 
-    // The producer contract: same-mtime files carry a monotonic sequence in
-    // their NAMES. Pin both files to the SAME mtime (a coarse-resolution
-    // filesystem tick) and require the name sequence to decide — the stale
-    // value must not resurrect.
+    // Inside ONE batch, name order breaks an mtime tie. Pin both files to
+    // the SAME mtime (a coarse-resolution filesystem tick) and require the
+    // name sequence to decide — the stale value must not resurrect.
     val tick = (System.currentTimeMillis() / 1000) * 1000 - 30000
     def write(name: String, lines: String*): Unit = {
       val p = Paths.get(in, name)

@@ -38,7 +38,8 @@ class GraftMainSpec extends SparkTestBase {
     Files.write(Paths.get(in, "b0.json"), Seq(
       """{"database":"demo","table":"test","type":"insert","ts":1,"data":{"id":1,"name":"a"}}""",
       """{"database":"demo","table":"test","type":"insert","ts":2,"data":{"id":2,"name":"b"}}""",
-      """{"database":"demo","table":"test","type":"update","ts":3,"data":{"id":1,"name":"a2"},"old":{"name":"a"}}""")
+      // `extra` is no column of the target: the source's listener counts it
+      """{"database":"demo","table":"test","type":"update","ts":3,"data":{"id":1,"name":"a2","extra":"x"},"old":{"name":"a"}}""")
       .mkString("\n").getBytes("UTF-8"))
 
     val cfg = GraftConfig.load(Paths.get(dir, "config.properties").toString)
@@ -69,6 +70,8 @@ class GraftMainSpec extends SparkTestBase {
       }
       assert(body.contains("\"source_name\": \"maxwell1\""))
       assert(body.contains("\"state\": \"NORMAL\""))
+      assert(body.contains(
+        """"schema_drift": [{"table": "public.test", "column": "extra", "rows": 1}]"""), body)
     } finally running.stop()
     assert(running.sources("maxwell1").state == "STOPPED")
     // stop() deregistered the listener — repeated boot/stop must not
